@@ -1,0 +1,7 @@
+"""The benchmark's modules import each other by bare name, as they do
+when ``perfbench/run.py`` runs as a script."""
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
