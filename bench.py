@@ -307,6 +307,32 @@ SF1_SKIP = {
 }
 
 
+def _artifact_path() -> str | None:
+    """Where a full run writes its per-query artifact, or None with the
+    reason on stderr. The round comes only from SPARK_GRAFT_ROUND
+    (inferring it from the files present once wrote a stray round),
+    and an existing artifact is never overwritten."""
+    rnd = os.environ.get("SPARK_GRAFT_ROUND")
+    if rnd is None:
+        print(
+            "# no bench_results artifact will be written: "
+            "set SPARK_GRAFT_ROUND=<round> to write one",
+            file=sys.stderr,
+        )
+        return None
+    root = os.path.dirname(os.path.abspath(__file__))
+    path = os.path.join(root, f"bench_results_r{int(rnd):02d}.json")
+    if os.path.exists(path):
+        print(
+            f"# no bench_results artifact will be written: {path} "
+            "exists and is never overwritten (pick another "
+            "SPARK_GRAFT_ROUND)",
+            file=sys.stderr,
+        )
+        return None
+    return path
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -334,6 +360,7 @@ def main() -> int:
             print(f"# BENCH_ONLY: not registered: {sorted(unknown)}", file=sys.stderr)
     else:
         headline = all_names
+    artifact_file = None if only else _artifact_path()
     if not only:
         # Pre-touch every input table (full scan into the OS page
         # cache): the first query to read a cold multi-MB table
@@ -717,9 +744,8 @@ def main() -> int:
     # the driver's BENCH tail caps at 2000 chars, so only the last ~70
     # of 226 per-query timings survived — round-over-round regression
     # diffs need ALL of them). Written to the repo root as
-    # bench_results_r{n}.json; n = 1 + the highest existing BENCH_r
-    # artifact (the driver writes those per round), overridable via
-    # SPARK_GRAFT_ROUND. Smoke subsets (BENCH_ONLY) never clobber it.
+    # bench_results_r{n}.json, n = SPARK_GRAFT_ROUND (_artifact_path).
+    # Smoke subsets (BENCH_ONLY) never write it.
     # Prefix-filter effectiveness counters for the two lossless
     # set-similarity joins — the slowest sf1 rows (round-6 verdict ask
     # #4: "lossless by design" is only a defensible cost while the
@@ -756,17 +782,10 @@ def main() -> int:
         out["filter_stats"] = filter_stats
 
     if not only:
-        root = os.path.dirname(os.path.abspath(__file__))
-        rnd = os.environ.get("SPARK_GRAFT_ROUND")
-        if rnd is None:
-            seen = [
-                int(m.group(1))
-                for f in os.listdir(root)
-                if (m := re.match(r"BENCH_r(\d+)\.json$", f))
-            ]
-            rnd = str(max(seen, default=0) + 1)
+        weather("end")
+    if artifact_file:
         artifact = {
-            "round": int(rnd),
+            "round": int(os.environ["SPARK_GRAFT_ROUND"]),
             "sf": sf,
             "queries": timings,
             # EVERY observation per query, in run order (pass 0, pass
@@ -850,11 +869,9 @@ def main() -> int:
             artifact["sf1_weather_ok"] = sf1_weather_ok
         if filter_stats:
             artifact["filter_stats"] = filter_stats
-        weather("end")
-        path = os.path.join(root, f"bench_results_r{int(rnd):02d}.json")
-        with open(path, "w") as f:
+        with open(artifact_file, "w") as f:
             json.dump(artifact, f, indent=1, sort_keys=True)
-        print(f"# wrote {path}", file=sys.stderr)
+        print(f"# wrote {artifact_file}", file=sys.stderr)
 
     # Run-level weather verdict (r10, additions-only fields): median
     # fresh-touch bandwidth over every probe of the run, plus how many

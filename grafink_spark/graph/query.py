@@ -52,8 +52,10 @@ class GraphQuery:
         )
 
     def value_map(self, vertex_id: int) -> dict:
-        """valueMap(true) — all properties of one vertex."""
-        rows = self.store.vertices().where(F.col("id") == vertex_id).limit(1).collect()
+        """valueMap(true) — all properties of one vertex. Ids are unique,
+        so a plain filtered collect (one job) replaces ``limit(1)``,
+        whose incremental take can run a second job."""
+        rows = self.store.vertices().where(F.col("id") == vertex_id).collect()
         return rows[0].asDict() if rows else {}
 
     # -------------------------------------------------------- edge side

@@ -16,15 +16,35 @@ Vertices and edges are managed parquet tables:
 Edge writes repartition by ``src`` with the reference's parallelism
 formula (EdgeProcessor.scala:141-149) — co-locates a vertex's out-edges,
 which at 100 TB keeps per-vertex neighborhood reads to one partition.
+
+Tables are opened through :func:`open_table`. ``spark.read.parquet``
+runs a Spark job on every call just to read a footer for the schema,
+which costs more than a point lookup's own scan. ``open_table``
+remembers, per table path, the schema it last inferred together with
+the exact set of data files it inferred it from. Each open reads with
+that schema (``spark.read.schema(...)``: the driver lists the files, no
+job runs) and compares the listed files with the remembered set. Equal
+sets return that frame; any difference (an append, a delete rewrite, a
+swap, a table emptied or recreated by another process) re-infers and
+replaces the entry. Spark names every data file it writes uniquely per
+write job, so an equal file set means equal files, and the same files
+give the same inference: reads return exactly what
+``spark.read.parquet`` returns. Writers need no invalidation hook and
+there is no knob. The memo is process-wide (the job, the shell and the
+API share it), locked for the API's serving thread, and holds at most
+:data:`OPEN_MEMO_ENTRIES` tables, least recently opened evicted first.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from grafink_spark.graph.sink import GraphSink
 from grafink_spark.rules.base import DST, PROP_VAL, SRC, ClassifierRule
@@ -38,6 +58,33 @@ def get_parallelism(edge_count: int, task_size: int, parallelism: int) -> int:
     if edge_count < task_size:
         return parallelism
     return max(edge_count // task_size + 1, parallelism)
+
+
+OPEN_MEMO_ENTRIES = 64
+_open_memo: OrderedDict[str, tuple[frozenset[str], StructType]] = OrderedDict()
+_open_lock = threading.Lock()
+
+
+def open_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job
+    while the table's files are the ones last inferred from (module
+    docstring). Raises what ``spark.read.parquet`` raises."""
+    with _open_lock:
+        hit = _open_memo.get(path)
+        if hit is not None:
+            _open_memo.move_to_end(path)
+    if hit is not None:
+        files, schema = hit
+        df = spark.read.schema(schema).parquet(path)
+        if frozenset(df.inputFiles()) == files:
+            return df
+    df = spark.read.parquet(path)
+    with _open_lock:
+        _open_memo[path] = (frozenset(df.inputFiles()), df.schema)
+        _open_memo.move_to_end(path)  # newest last; eviction pops the front
+        while len(_open_memo) > OPEN_MEMO_ENTRIES:
+            _open_memo.popitem(last=False)
+    return df
 
 
 @dataclass
@@ -62,6 +109,10 @@ class GraphStore:
     @property
     def edge_path(self) -> str:
         return os.path.join(self.root, "edges")
+
+    @property
+    def fixed_vertex_path(self) -> str:
+        return os.path.join(self.root, "fixed_vertices")
 
     # ------------------------------------------------------------ write
 
@@ -104,14 +155,14 @@ class GraphStore:
         df = self.spark.createDataFrame(
             rows, "id long, label string, recipe string, equals string"
         )
-        df.write.mode("append").parquet(os.path.join(self.root, "fixed_vertices"))
+        df.write.mode("append").parquet(self.fixed_vertex_path)
 
     def _fixed_already_loaded(self, first_id: int) -> bool:
-        p = os.path.join(self.root, "fixed_vertices")
+        p = self.fixed_vertex_path
         if "://" not in p and not os.path.exists(p):
             return False
         try:
-            df = self.spark.read.parquet(p)
+            df = self.fixed_vertices()
         except Exception as e:
             from grafink_spark.id_manager import _is_path_empty_error
 
@@ -166,12 +217,12 @@ class GraphStore:
 
     def vertices(self) -> DataFrame:
         self._recover_swap(self.vertex_path)
-        return self.spark.read.parquet(self.vertex_path)
+        return open_table(self.spark, self.vertex_path)
 
     def edges(self) -> DataFrame:
         self._recover_swap(self.edge_path)
         try:
-            return self.spark.read.parquet(self.edge_path)
+            return open_table(self.spark, self.edge_path)
         except Exception as e:
             from grafink_spark.id_manager import _is_path_empty_error
 
@@ -182,7 +233,7 @@ class GraphStore:
             raise  # unreadable ≠ empty: surface corrupt stores
 
     def fixed_vertices(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "fixed_vertices"))
+        return open_table(self.spark, self.fixed_vertex_path)
 
     # ----------------------------------------------------------- delete
 

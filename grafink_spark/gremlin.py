@@ -201,6 +201,9 @@ def parse(query: str) -> list[Step]:
 
 
 _EDGE_PROP = {"value": "propVal"}  # reference edge property → column
+# steps that, straight after g.V(<one id>), read by that id alone and
+# never touch the vertex frame
+_BY_ID_STEPS = {"valueMap", "out", "in", "both", "outE", "inE", "bothE"}
 
 
 class GremlinExecutor:
@@ -213,20 +216,21 @@ class GremlinExecutor:
         steps = parse(query)
         if steps[0].name != "V":
             raise GremlinParseError("traversal must start with g.V(...)")
-        df = self.g.store.vertices()
         mode = "vertices"
         # explicit restriction tracking (NOT plan sniffing): set by
         # V(ids...), has() on vertices, and limit() on vertices — outE
         # must semi-join whenever the upstream vertex set is narrowed
-        restricted = False
-        vertex_id = None  # single-id fast path (src pushdown, valueMap)
         ids = [self._vid(a) for a in steps[0].args]
-        if ids:
-            restricted = True
-            if len(ids) == 1:
-                vertex_id = ids[0]
+        restricted = bool(ids)
+        # single-id fast path (src pushdown, valueMap)
+        vertex_id = ids[0] if len(ids) == 1 else None
+        if vertex_id is not None and steps[1:2] and steps[1].name in _BY_ID_STEPS:
+            df = None  # the next step reads by id alone: skip the open
+        else:
+            df = self.g.store.vertices()
+            if vertex_id is not None:
                 df = df.where(F.col("id") == vertex_id)
-            else:
+            elif ids:
                 df = df.where(F.col("id").isin(ids))
         done = None  # set once a terminal materializes a python value
         it = iter(steps[1:])

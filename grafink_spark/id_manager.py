@@ -34,7 +34,7 @@ so ids follow the key order globally.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,7 +118,20 @@ def zip_with_index(
     id_col: str = "id",
     order_by: list[str] | None = None,
 ) -> DataFrame:
-    """Assign consecutive Long ids offset+1 .. offset+count.
+    """Assign consecutive Long ids offset+1 .. offset+count
+    (:func:`assign_ids` without the count)."""
+    return assign_ids(df, offset, id_col, order_by)[0]
+
+
+def assign_ids(
+    df: DataFrame,
+    offset: int = 0,
+    id_col: str = "id",
+    order_by: list[str] | None = None,
+) -> tuple[DataFrame, int]:
+    """Assign consecutive Long ids offset+1 .. offset+count; returns the
+    frame with ids and the count (summed from the per-partition counts
+    the offsets need, so it costs no extra job).
 
     order_by=None: ids follow Spark's current partition layout (fastest —
     no shuffle beyond what the input already has; matches the reference's
@@ -173,7 +186,7 @@ def zip_with_index(
         )
         .select(id_col, *original_cols)  # id first (IDManagerSparkService.scala:116)
     )
-    return out
+    return out, running
 
 
 @dataclass
@@ -183,6 +196,8 @@ class IDManager:
 
     spark: SparkSession
     config: IDManagerConfig
+    # rows the last process() call assigned ids to
+    assigned: int = field(default=0, init=False)
 
     def read_all(self, schema: T.StructType) -> DataFrame:
         """Full store scan; missing/never-written path → empty DF with
@@ -238,7 +253,9 @@ class IDManager:
         """
         loaded = self.read_all(current.schema)
         offset = self.fetch_max_id(loaded)
-        with_id = zip_with_index(current, offset=offset, order_by=order_by)
+        with_id, self.assigned = assign_ids(
+            current, offset=offset, order_by=order_by
+        )
         with_id = with_id.cache()  # reused by every edge rule + the write
         writer = with_id.write.mode("append")
         parts = [c for c in PARTITION_COLUMNS if c in with_id.columns]

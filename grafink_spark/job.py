@@ -16,6 +16,7 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass
 from datetime import date
+from functools import cached_property
 
 from pyspark.sql import SparkSession
 
@@ -53,10 +54,13 @@ class Job:
         )
         self.catalog = GraphCatalog(config.graph.storagePath)
 
-    def _build_rules(self) -> list[ClassifierRule]:
+    @cached_property
+    def rules(self) -> list[ClassifierRule]:
         """Rule registry + dispatch (Job.scala:106-113); fixed vertices
         are read only when twoModeClassifier is configured
-        (Job.scala:91-101)."""
+        (Job.scala:91-101). Built on the first ``process`` call and
+        kept: the fixed-vertex CSV and the store's fixed-vertex check
+        run once per Job, not once per night."""
         el = self.config.edgeLoader
         rules: list[ClassifierRule] = []
         for name in el.rulesToApply:
@@ -87,16 +91,17 @@ class Job:
         label = self.config.graph.vertexLabel
         self.catalog.create_vertex_label(label, df=current)
         self.store.write_vertices(current, label=label)
-        n_vertices = current.count()
 
         edge_counts: dict[str, int] = {}
-        for rule in self._build_rules():
+        for rule in self.rules:
             self.catalog.create_edge_label(rule.edge_label, rule.property_key, "String")
             edges = ClassifierRule.validate(rule.classify(loaded, current))
             written = self.store.write_edges(edges, rule)
             edge_counts[rule.edge_label] = written
             log.info("rule %s wrote %d edge rows", rule.name, written)
-        return JobResult(vertices_loaded=n_vertices, edge_counts=edge_counts)
+        return JobResult(
+            vertices_loaded=self.id_manager.assigned, edge_counts=edge_counts
+        )
 
     def delete(self, start_date: date, duration: int = 1) -> int:
         """Delete job (Job.scala:117-134): unpadded partition manager."""

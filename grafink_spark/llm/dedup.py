@@ -1917,9 +1917,19 @@ def _apss_bcast_dot(bc):
             ib = pdf["id_b"].to_numpy()
             n = len(pdf)
             # candidate ids come from prefix ⊂ tc, so every id is
-            # present in uids and searchsorted is an exact lookup
+            # present in uids and searchsorted is an exact lookup; an
+            # absent id would dot against its neighbour's vector, so
+            # the invariant is checked, not trusted
             pa = np.searchsorted(uids, ia)
             pb = np.searchsorted(uids, ib)
+            for pos, ids in ((pa, ia), (pb, ib)):
+                found = pos < len(uids)
+                found[found] = uids[pos[found]] == ids[found]
+                if not found.all():
+                    raise ValueError(
+                        "APSS broadcast kernel: candidate ids missing "
+                        f"from the vector table: {ids[~found][:5].tolist()}"
+                    )
             sa, ea = offs[pa], offs[pa + 1]
             sb, eb = offs[pb], offs[pb + 1]
             dot = np.zeros(n, dtype=np.int64)

@@ -73,7 +73,7 @@ AUDIT: dict[tuple[str, str, str], str] = {
     ("benchqueries.py", "q_user_overlap", "exact"): "ONE_ROW exact-count fold (estimator comparison)",
     ("benchqueries.py", "q_woe_encoding", "tot"): "ONE_ROW global good/bad totals fold",
     ("cdc.py", "merge_changes", "anti_keys"): "GATED broadcast_keys flag; docstring names broadcast_keys=False for changesets too large",
-    ("id_manager.py", "zip_with_index", "off_df"): "DRIVER per-partition offset rows (numPartitions rows, just collected)",
+    ("id_manager.py", "assign_ids", "off_df"): "DRIVER per-partition offset rows (numPartitions rows, just collected)",
     ("llm/classify.py", "nb_classify", "classes"): "GROUP per-class token stats (class-label domain x vocabulary cap)",
     ("llm/corpus.py", "contamination", "bgrams"): "GATED broadcast_benchmark flag; docstring names broadcast_benchmark=False escape",
     ("llm/corpus.py", "dsir_scores", "log_ratio"): "GROUP per-hash-bucket log-ratio (fixed bucket count)",

@@ -62,3 +62,21 @@ def test_bench_artifact_partitions_registry():
         f"missing={sorted(set(QUERIES) - benched)} "
         f"stale={sorted(benched - set(QUERIES))}"
     )
+
+
+def test_bench_artifact_needs_round_and_never_overwrites(monkeypatch, capsys):
+    """A full bench run writes bench_results_r{n}.json only for an
+    explicit SPARK_GRAFT_ROUND, and never over an existing artifact."""
+    import bench
+
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+    assert bench._artifact_path() is None
+    assert "set SPARK_GRAFT_ROUND" in capsys.readouterr().err
+
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "10")
+    assert (ROOT / "bench_results_r10.json").exists()
+    assert bench._artifact_path() is None
+    assert "never overwritten" in capsys.readouterr().err
+
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
+    assert bench._artifact_path() == str(ROOT / "bench_results_r99.json")

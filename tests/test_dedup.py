@@ -822,3 +822,30 @@ def test_semantic_contamination_ivf_zero_norm_guard(spark):
         corpus, test, nlist=2, nprobe=2, threshold=0.5
     ).collect()
     assert all(r.max_sim == r.max_sim for r in got)  # no NaN
+
+
+def test_apss_bcast_kernel_rejects_missing_id():
+    """The flat-broadcast APSS kernel looks ids up with searchsorted; an
+    id absent from its vector table must raise, not dot against the
+    neighbouring document's vector (below, between and past the ids)."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pandas as pd
+
+    table = (
+        np.array([1, 3], dtype=np.int64),  # doc ids
+        np.array([0, 1, 2], dtype=np.int64),  # offset fences
+        np.array([7, 7], dtype=np.int64),  # term keys
+        np.array([2, 3], dtype=np.int64),  # term counts
+    )
+    kernel = dd._apss_bcast_dot(SimpleNamespace(value=table))
+
+    def run(ia, ib):
+        batch = pd.DataFrame({"id_a": [ia], "id_b": [ib]})
+        return next(kernel(iter([batch])))["dot"].tolist()
+
+    assert run(1, 3) == [6]
+    for ia, ib in ((0, 3), (2, 3), (1, 4)):
+        with pytest.raises(ValueError, match="missing"):
+            run(ia, ib)

@@ -170,3 +170,103 @@ def test_fixed_vertex_csv(tmp_path):
     assert vs[3].prop("equals") == 9.8
     assert vs[4].prop("equals") is False
     assert vs[5].prop("equals") == "weird"
+
+
+# ------------------------------------------------ table-open schema memo
+
+
+def _jobs_submitted(spark, fn):
+    """(fn(), Spark jobs fn submitted), counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"open-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts land async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_same_table(df, path):
+    fresh = df.sparkSession.read.parquet(path)
+    assert df.schema == fresh.schema  # column order + partition types
+    assert sorted(df.collect()) == sorted(fresh.collect())
+
+
+def _fixed(tmp_path):
+    csv = tmp_path / "fixed.csv"
+    csv.write_text(
+        '1,"similarity","recipe","string","supernova"\n'
+        '2,"similarity","recipe","string","catalog","equals","string","WD*"\n'
+    )
+    return read_fixed_vertices(str(csv), reserved_id_space=10)
+
+
+def test_open_memo_reads_what_spark_reads(spark, store, alerts_df, tmp_path):
+    _load_graph(store, alerts_df)
+    store.write_fixed_vertices(_fixed(tmp_path))
+    opens = [
+        (store.vertices, store.vertex_path),
+        (store.edges, store.edge_path),
+        (store.fixed_vertices, store.fixed_vertex_path),
+    ]
+    for open_, path in opens:
+        first, n_first = _jobs_submitted(spark, open_)
+        again, n_again = _jobs_submitted(spark, open_)
+        assert n_first >= 1  # the inference job, so the count is live
+        assert n_again == 0
+        _assert_same_table(first, path)
+        _assert_same_table(again, path)
+    # vertices partitioned by date: year/month/day keep the inferred
+    # int type and trail the data columns
+    assert store.vertices().columns[-3:] == ["year", "month", "day"]
+    assert dict(store.vertices().dtypes)["day"] == "int"
+
+
+def test_open_memo_sees_appends_deletes_and_rewrites(spark, store, alerts_df):
+    _load_graph(store, alerts_df)
+    assert store.vertices().count() == 3
+    store.write_vertices(
+        alerts_df([alert(4, "obj4", 0.5, 0.5, 1, 0.0, "WD*", None, None)])
+    )
+    v = store.vertices()
+    assert sorted(r.id for r in v.collect()) == [1, 2, 3, 4]
+    _assert_same_table(v, store.vertex_path)
+
+    store.delete_vertices(spark.createDataFrame([(1,)], "id long"))
+    v = store.vertices()
+    assert sorted(r.id for r in v.collect()) == [2, 3, 4]
+    _assert_same_table(v, store.vertex_path)
+
+    # another writer replaces the table with a different column set
+    spark.createDataFrame([(7, "x")], "id long, note string").write.mode(
+        "overwrite"
+    ).parquet(store.vertex_path)
+    v = store.vertices()
+    assert v.columns == ["id", "note"]
+    assert [tuple(r) for r in v.collect()] == [(7, "x")]
+
+
+def test_open_memo_emptied_and_missing_tables(spark, store, alerts_df):
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    _load_graph(store, alerts_df)
+    assert store.edges().count() == 2  # remembered
+    # deleting both ends of the only edge empties the edge table:
+    # the canonical empty frame, as before
+    store.delete_vertices(spark.createDataFrame([(1,), (3,)], "id long"))
+    e = store.edges()
+    assert e.count() == 0
+    assert e.columns == ["src", "dst", "propVal", "property_key", "label"]
+
+    assert store.vertices().count() == 1  # remembered
+    shutil.rmtree(store.vertex_path)
+    shutil.rmtree(store.edge_path)
+    with pytest.raises(AnalysisException):
+        store.vertices()
+    assert store.edges().count() == 0

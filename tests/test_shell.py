@@ -354,3 +354,36 @@ def test_gremlin_widened_steps(spark, tmp_path):
         gremlin(g, 'g.V().has("rfscore", regex("x"))')
     with pytest.raises(GremlinParseError):
         gremlin(g, "g.V().order()")
+
+
+def test_gremlin_by_id_steps_skip_vertex_open(spark, tmp_path, monkeypatch):
+    """Straight after g.V(<id>), valueMap/out/outE read by the id alone:
+    the executor opens the vertex table only where a step reads it."""
+    from grafink_spark.graph.query import GraphQuery
+    from grafink_spark.gremlin import gremlin
+
+    store = GraphStore(spark, str(tmp_path / "graph"), task_size=100, parallelism=2)
+    store.write_vertices(
+        spark.createDataFrame([(11, "ZTFa"), (12, "ZTFb")], "id long, objectId string")
+    )
+    store.write_edges(
+        spark.createDataFrame([(12, 11, 2)], "src long, dst long, propVal int"),
+        _FakeRule(),
+    )
+    g = GraphQuery(store)
+    opens = []
+    vertices = GraphStore.vertices
+    monkeypatch.setattr(
+        GraphStore, "vertices", lambda self: opens.append(1) or vertices(self)
+    )
+
+    assert gremlin(g, "g.V(11).valueMap(true)")["objectId"] == "ZTFa"
+    assert gremlin(g, "g.V(99).valueMap(true)") == {}
+    assert len(opens) == 2  # value_map's own read, once per traversal
+    opens.clear()
+    assert [r.neighbor_id for r in gremlin(g, 'g.V(12).out("similarity")').collect()] == [11]
+    assert gremlin(g, "g.V(12).outE().count()") == 1
+    assert opens == []
+    # a step that filters the vertex frame still opens it
+    assert gremlin(g, 'g.V(12).has("objectId", "ZTFb").count()') == 1
+    assert opens == [1]
