@@ -4979,7 +4979,7 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _embedding_pca_sql(dim: int = 64, iters: int = 8) -> str:
     """Round-for-round replay of llm/pca.py: decimal covariance sums,
     then each power-iteration round as join + ordered list_reduce —
-    the same left fold (starting at +0.0) the Spark side computes."""
+    the same left fold (starting at +0.0) the driver-side loop computes."""
     v0 = repr(1.0 / float(dim) ** 0.5)
     blocks = []
     for t in range(1, iters + 1):
@@ -5302,7 +5302,8 @@ def q_pca_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pca_power_chain(cov: str, pfx: str, dim: int, iters: int) -> str:
     """The 8-round power-iteration CTE chain over covariance table
-    ``cov``, CTE names prefixed ``pfx`` — mirrors llm/pca.py::_power."""
+    ``cov``, CTE names prefixed ``pfx`` — the same ascending-index folds,
+    sqrt and division as the driver-side loop in llm/pca.py::_power."""
     v0 = repr(1.0 / float(dim) ** 0.5)
     blocks = [
         f"{pfx}v0 AS (SELECT CAST(r.range AS INT) AS j, {v0} AS v"
@@ -5755,17 +5756,15 @@ def q_incremental_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle and must hash-match it bit-for-bit."""
     from grafink_spark.llm.pca import (
         covariance_from_partials,
-        covariance_partials,
+        covariance_sums,
         power_iteration,
     )
 
     emb = ensure_min_partitions(load_table(spark, sf_dir, "embeddings"))
     b1 = emb.where(F.col("vec_id") % 2 == 0)
     b2 = emb.where(F.col("vec_id") % 2 == 1)
-    cov = covariance_from_partials(
-        [covariance_partials(b1), covariance_partials(b2)]
-    )
-    out = power_iteration(cov, dim=64, iters=8)
+    cov = covariance_from_partials([covariance_sums(b1), covariance_sums(b2)])
+    out = power_iteration(spark, cov, iters=8)
     return out.select(
         F.col("i").cast("long").alias("i"),
         F.round("loading", 6).alias("loading"),

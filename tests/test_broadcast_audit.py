@@ -80,10 +80,6 @@ AUDIT: dict[tuple[str, str, str], str] = {
     ("llm/corpus.py", "dsir_scores", "totals"): "ONE_ROW model totals fold",
     ("llm/corpus.py", "mixture_sample", "rates"): "GROUP per-source sampling rates (source domain)",
     ("llm/dedup.py", "semantic_contamination", "t"): "QUERY test/benchmark vectors (decontamination contract: benchmark << corpus)",
-    ("llm/pca.py", "pca_components", "lam"): "ONE_ROW eigenvalue fold (d-bounded, d = embedding dim)",
-    ("llm/pca.py", "pca_components", "tr"): "ONE_ROW trace scalar",
-    ("llm/pca.py", "power_iteration", "lam"): "ONE_ROW eigenvalue fold (d-bounded, d = embedding dim)",
-    ("llm/pca.py", "power_iteration", "tr"): "ONE_ROW trace scalar",
     ("llm/search.py", "bm25_search", "stats"): "ONE_ROW BM25 corpus stats (N, avgdl)",
     ("llm/simsearch.py", "_ivf_query_probes", "_centroid_matrix"): "FIXED IVF centroid matrix (1 row, nlist x dim parameter not data)",
     ("llm/simsearch.py", "_probe_and_rerank", "q"): "GATED behind would_broadcast (same size gate as maybe_broadcast, split out so the non-broadcast branch can salt its shuffle keys); over-limit query sides take the salted partitioned equi join",

@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -99,10 +100,11 @@ def test_arrow_covariance_agrees_with_exact(spark):
 
 
 def test_covariance_ignores_null_and_empty_vectors(spark):
-    """Rows whose vector is NULL or empty never reach the sums (explode
-    drops them), so n must not count them either — otherwise every
-    covariance cell and mean deflates by the bad-row fraction."""
-    from grafink_spark.llm.pca import covariance_matrix
+    """Rows whose vector is NULL or empty never reach the sums, so n
+    must not count them either — otherwise every covariance cell and
+    mean deflates by the bad-row fraction. The arrow path skips them
+    the same way (np.stack used to fail on them)."""
+    from grafink_spark.llm.pca import covariance_matrix, covariance_matrix_arrow
 
     good = [(i, [float(i % 3), 1.0]) for i in range(30)]
     dirty = good + [(100, None), (101, [])]
@@ -113,3 +115,83 @@ def test_covariance_ignores_null_and_empty_vectors(spark):
         spark.createDataFrame(dirty, "vec_id long, embedding array<float>")
     ).collect()}
     assert c_good == c_dirty
+    a_good = {(r.i, r.j): r.c for r in covariance_matrix_arrow(
+        spark.createDataFrame(good, "vec_id long, embedding array<float>").coalesce(1)
+    ).collect()}
+    a_dirty = {(r.i, r.j): r.c for r in covariance_matrix_arrow(
+        spark.createDataFrame(dirty, "vec_id long, embedding array<float>").coalesce(1)
+    ).collect()}
+    assert set(a_good) == set(a_dirty) == set(c_good)
+    assert max(abs(a_good[k] - a_dirty[k]) for k in a_good) < 1e-12
+    assert max(abs(a_good[k] - c_good[k]) for k in a_good) < 1e-12
+
+
+def test_ragged_vectors_raise(spark):
+    """Vectors of different lengths have no covariance matrix: the
+    length markers in the sums make the merge refuse them."""
+    from grafink_spark.llm.pca import embedding_pca
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [3.0, 6.0, 1.0]), (2, [5.0, 10.0])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="differ in length"):
+        embedding_pca(emb)
+
+
+def _random_embeddings(spark, n=300, d=6, seed=7):
+    import random
+
+    rnd = random.Random(seed)
+    data = [(i, [rnd.uniform(-1, 1) for _ in range(d)]) for i in range(n)]
+    return spark.createDataFrame(data, "vec_id long, embedding array<float>")
+
+
+def test_embedding_pca_partition_invariant(spark):
+    """Loadings, eigenvalue and variance share: same bits at 1 and 13
+    partitions."""
+    from grafink_spark.llm.pca import embedding_pca
+
+    emb = _random_embeddings(spark)
+    one = sorted(embedding_pca(emb.coalesce(1)).collect())
+    thirteen = sorted(embedding_pca(emb.repartition(13)).collect())
+    assert one == thirteen  # bitwise, not approximate
+
+
+def test_incremental_pca_equals_full_pass(spark):
+    """Merged batch sums give the full-pass model bit for bit."""
+    from grafink_spark.llm.pca import (
+        covariance_from_partials,
+        covariance_sums,
+        embedding_pca,
+        power_iteration,
+    )
+
+    emb = _random_embeddings(spark)
+    parts = [
+        covariance_sums(emb.where(F.col("vec_id") % 3 == r)) for r in range(3)
+    ]
+    merged = power_iteration(spark, covariance_from_partials(parts))
+    assert sorted(merged.collect()) == sorted(embedding_pca(emb).collect())
+
+
+def test_embedding_pca_job_budget(spark):
+    """Build plus collect submits at most 4 Spark jobs: the input
+    shuffle, the aggregate's map and result stages, and the literal
+    output frame (a power iteration run as Spark joins took 46)."""
+    import uuid
+
+    from grafink_spark.llm.pca import embedding_pca
+
+    emb = _random_embeddings(spark, d=64).repartition(4)
+    sc = spark.sparkContext
+    group = f"pca-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = embedding_pca(emb).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts land async
+    assert len(rows) == 64
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 4, jobs

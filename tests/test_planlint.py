@@ -68,7 +68,6 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "embedding_ivf_topk": ({"bnlj"}, _CENTROID + "; " + _QUERYK),
     "pq_topk": ({"bnlj"}, "1-row PQ codebook matrix; " + _QUERYK),
     "ivfpq_topk": ({"bnlj"}, _CENTROID + "; 1-row PQ codebook matrix; " + _QUERYK),
-    "embedding_pca": ({"bnlj", "single-part"}, _SCALAR + " (d×d covariance fold)"),
     "embedding_topk": ({"bnlj", "single-part"}, _QUERYK),
     "forecast_revenue": ({"single-part"}, _TOPK + " (1-row Q6 revenue)"),
     "funnel": ({"single-part"}, _TOPK + " (stage fold)"),
@@ -76,7 +75,6 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "hist_quantile_sketch": ({"bnlj", "single-part"}, _SCALAR + " (bounds + registers)"),
     "hybrid_rrf": ({"bnlj", "single-part"}, _SCALAR + " (BM25 stats) + top-k"),
     "important_stock": ({"bnlj", "single-part"}, _SCALAR + " (Q11 total threshold)"),
-    "incremental_pca": ({"bnlj", "single-part"}, _SCALAR + " (d×d covariance fold)"),
     "join_size_estimate": ({"bnlj", "single-part"}, _SCALAR + " (KMV sketches)"),
     "label_noise": ({"bnlj"}, _QUAD + " (label-blocked all-pairs kNN)"),
     "label_noise_ivf": ({"bnlj"}, _CENTROID + "; probe join is a size-gated equi join"),
@@ -115,7 +113,6 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "nb_classify": ({"bnlj"}, _SCALAR + " (vocabulary-bounded class stats)"),
     "pareto_parts": ({"single-part"}, _TOPK + " (frontier fold)"),
     "pareto_suppliers": ({"bnlj"}, _SCALAR + " (frontier verify join)"),
-    "pca_components": ({"bnlj", "single-part"}, _SCALAR + " (d×d covariance fold)"),
     "promo_revenue": ({"single-part"}, _TOPK + " (1-row Q14 share)"),
     "quality_deciles": ({"bnlj", "single-part"}, _SCALAR + " (decile edges)"),
     "quantile_filter": ({"bnlj", "single-part"}, _SCALAR + " (1-row quantile bound)"),

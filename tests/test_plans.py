@@ -454,13 +454,13 @@ def test_pca_covariance_hash_aggregates(spark):
     """The d² covariance explode must partial-aggregate as a
     HashAggregate (decimal buffers are hash-aggregable) — never a
     sort-based aggregate over the exploded pairs."""
-    from grafink_spark.llm.pca import covariance_matrix
+    from grafink_spark.llm.pca import covariance_sums
 
     emb = spark.createDataFrame(
         [(i, [float(i), 2.0 * i, 0.5 * i]) for i in range(50)],
         "vec_id long, embedding array<float>",
     )
-    plan = physical_plan(covariance_matrix(emb))
+    plan = physical_plan(covariance_sums(emb))
     assert "HashAggregate" in plan
     assert "SortAggregate" not in plan
     assert "pythonUDF" not in plan and "BatchEvalPython" not in plan
