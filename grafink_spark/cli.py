@@ -10,6 +10,7 @@ Defaults: startdate = yesterday, duration = 1; duration validated 1..7
 from __future__ import annotations
 
 import argparse
+import logging
 import sys
 from datetime import date, datetime, timedelta
 
@@ -40,6 +41,9 @@ def main(argv: list[str] | None = None) -> int:
         args = parse_args(argv if argv is not None else sys.argv[1:])
         config = GrafinkConfig.load(args.config)
         start = datetime.strptime(args.startdate, "%Y-%m-%d").date()
+        # the job's per-night phase record (job.py) goes to stderr
+        logging.basicConfig(format="%(message)s")
+        logging.getLogger("grafink_spark").setLevel(logging.INFO)
         spark = get_spark("grafink-spark-job", extra_conf=config.spark)
         apply_runtime_conf(spark, config.spark)
         job = Job(spark, config)

@@ -16,6 +16,14 @@ Vertices and edges are managed parquet tables:
 Edge writes repartition by ``src`` with the reference's parallelism
 formula (EdgeProcessor.scala:141-149) — co-locates a vertex's out-edges,
 which at 100 TB keeps per-vertex neighborhood reads to one partition.
+The formula needs the rule's edge count before the write, so
+``write_edges`` persists the rule's edge set first: the count
+materialises it (the classify joins, one of them over the whole id
+store, run once), the doubled, sorted write reads the cached rows, and
+the edge set is released after the write, also when the write raises.
+``persist`` rather than a lineage-cutting pin: a lost block is
+recomputed, nothing goes to the reliable checkpoint directory, and
+``unpersist`` frees it at once.
 
 Tables are opened through :func:`open_table`. ``spark.read.parquet``
 runs a Spark job on every call just to read a footer for the schema,
@@ -180,10 +188,27 @@ class GraphStore:
         """Materialize both directions, tag label/property key, write
         partitioned by label. ``tags`` adds literal bookkeeping columns
         (e.g. the streaming ingest's batch id) to every written row.
-        Returns edge-row count written."""
+        Returns edge-row count written.
+
+        The edge set is persisted before the sizing count, so the count
+        materialises it and the doubled write, built on the same frame,
+        reads the cached rows (module docstring)."""
         ClassifierRule.validate(edges)
-        edges = edges.select(SRC, DST, PROP_VAL)
-        n = edges.count()  # sizes the repartition (EdgeProcessor.scala:166)
+        edges = edges.select(SRC, DST, PROP_VAL).persist()
+        try:
+            n = edges.count()  # sizes the repartition (EdgeProcessor.scala:166)
+            self._write_both_directions(edges, n, rule, tags)
+        finally:
+            edges.unpersist()
+        return 2 * n
+
+    def _write_both_directions(
+        self,
+        edges: DataFrame,
+        n: int,
+        rule: ClassifierRule,
+        tags: dict[str, object] | None,
+    ) -> None:
         nparts = get_parallelism(n, self.task_size, self.parallelism)
         both = edges.unionByName(
             edges.select(
@@ -205,9 +230,8 @@ class GraphStore:
         )
         if self.sink is not None:
             self.sink.write_edges(out, rule.edge_label)
-            return 2 * n
+            return
         out.write.mode("append").partitionBy("label").parquet(self.edge_path)
-        return 2 * n
 
     # ------------------------------------------------------------- read
 

@@ -9,20 +9,26 @@ Reference lifecycle (core/Job.scala:71-134, SURVEY §3.1):
 and the delete mode (``--delete``): read the id store for the window,
 anti-join vertices/edges, optionally drop the id-store partitions
 (``clearOnDelete``).
+
+Everything after the read is :func:`load_batch`, shared with the
+streaming microbatch (streaming/graph_ingest.py). ``Job.process`` logs
+one JSON record per night with each phase's seconds and rows.
 """
 
 from __future__ import annotations
 
+import json
 import logging
+import time
 from dataclasses import dataclass
 from datetime import date
 from functools import cached_property
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from grafink_spark.config import GrafinkConfig
 from grafink_spark.graph.catalog import GraphCatalog
-from grafink_spark.graph.storage import GraphStore
+from grafink_spark.graph.storage import GraphStore, get_parallelism
 from grafink_spark.id_manager import IDManager
 from grafink_spark.rules.base import ClassifierRule
 from grafink_spark.rules.samevalue import SameValueClassifier
@@ -39,6 +45,55 @@ log = logging.getLogger(__name__)
 class JobResult:
     vertices_loaded: int
     edge_counts: dict[str, int]
+
+
+def _since(t0: float) -> float:
+    return round(time.perf_counter() - t0, 3)
+
+
+def load_batch(
+    batch: DataFrame,
+    id_manager: IDManager,
+    store: GraphStore,
+    catalog: GraphCatalog,
+    rules: list[ClassifierRule],
+    vertex_label: str,
+    tags: dict[str, object] | None = None,
+) -> dict:
+    """Load one batch into the graph (Job.scala:71-115), shared by the
+    daily job and the streaming microbatch: assign ids, write vertices,
+    then per rule create the catalog label, classify, validate and
+    write edges (``tags`` go on every edge row). The id-assigned batch
+    stays cached for the rules and is released in the ``finally``, so
+    a long run holds at most one night's batch.
+
+    Returns the phase record: seconds for id assignment, the vertex
+    write and each rule, the ids assigned, and per edge label the edge
+    rows written and the write's partition count."""
+    t0 = time.perf_counter()
+    loaded, current = id_manager.process(batch)
+    try:
+        record: dict = {"ids_s": _since(t0), "ids_assigned": id_manager.assigned}
+        t0 = time.perf_counter()
+        catalog.create_vertex_label(vertex_label, df=current)
+        store.write_vertices(current, label=vertex_label)
+        record["vertices_s"] = _since(t0)
+        record["rules"] = {}
+        for rule in rules:
+            t0 = time.perf_counter()
+            catalog.create_edge_label(rule.edge_label, rule.property_key, "String")
+            edges = ClassifierRule.validate(rule.classify(loaded, current))
+            written = store.write_edges(edges, rule, tags=tags)
+            record["rules"][rule.edge_label] = {
+                "s": _since(t0),
+                "edge_rows": written,
+                "nparts": get_parallelism(
+                    written // 2, store.task_size, store.parallelism
+                ),
+            }
+    finally:
+        current.unpersist()
+    return record
 
 
 class Job:
@@ -82,25 +137,38 @@ class Job:
         return rules
 
     def process(self, start_date: date, duration: int = 1) -> JobResult:
+        """One night: read the window, then :func:`load_batch`. Logs one
+        JSON record per night (``load_batch``'s phases plus the read)."""
+        t0 = time.perf_counter()
         pm = PartitionManager(start_date, duration, padded=True)
         reader = Reader(self.spark, self.config.reader)
         batch = reader.read_and_process(pm)
-
-        loaded, current = self.id_manager.process(batch)
-
-        label = self.config.graph.vertexLabel
-        self.catalog.create_vertex_label(label, df=current)
-        self.store.write_vertices(current, label=label)
-
-        edge_counts: dict[str, int] = {}
-        for rule in self.rules:
-            self.catalog.create_edge_label(rule.edge_label, rule.property_key, "String")
-            edges = ClassifierRule.validate(rule.classify(loaded, current))
-            written = self.store.write_edges(edges, rule)
-            edge_counts[rule.edge_label] = written
-            log.info("rule %s wrote %d edge rows", rule.name, written)
+        read_s = _since(t0)
+        phases = load_batch(
+            batch,
+            self.id_manager,
+            self.store,
+            self.catalog,
+            self.rules,
+            self.config.graph.vertexLabel,
+        )
+        log.info(
+            "%s",
+            json.dumps(
+                {
+                    "event": "ingest",
+                    "start_date": start_date.isoformat(),
+                    "duration": duration,
+                    "read_s": read_s,
+                    **phases,
+                }
+            ),
+        )
         return JobResult(
-            vertices_loaded=self.id_manager.assigned, edge_counts=edge_counts
+            vertices_loaded=phases["ids_assigned"],
+            edge_counts={
+                label: r["edge_rows"] for label, r in phases["rules"].items()
+            },
         )
 
     def delete(self, start_date: date, duration: int = 1) -> int:

@@ -407,6 +407,9 @@ def rouge_overlap(
     floor = (
         ROUGE_MAP_CLIP_MIN_PAIRS if raw_floor is None else int(raw_floor)
     )
+    # both backends clip each distinct pair once; the final left join
+    # fans the clip back out to every copy of a pair listed twice
+    uniq = pairs.select(ref_col, cand_col).distinct()
     if pairs.count() >= floor:
         vecs = g.groupBy("_doc").agg(
             F.map_from_entries(F.collect_list(F.struct("g", "c"))).alias(
@@ -427,7 +430,7 @@ def rouge_overlap(
             lambda acc, v: acc + v,
         )
         ov = (
-            pairs.join(
+            uniq.join(
                 vecs.select(
                     F.col("_doc").alias(ref_col), F.col("_m").alias("_ma")
                 ),
@@ -443,7 +446,7 @@ def rouge_overlap(
         )
     else:
         ov = (
-            pairs.join(
+            uniq.join(
                 g.select(
                     F.col("_doc").alias(ref_col), "g", F.col("c").alias("_ca")
                 ),

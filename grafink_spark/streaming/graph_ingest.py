@@ -43,6 +43,7 @@ from grafink_spark import fsutil
 from grafink_spark.graph.catalog import GraphCatalog
 from grafink_spark.graph.storage import GraphStore
 from grafink_spark.id_manager import IDManager
+from grafink_spark.job import load_batch
 from grafink_spark.rules.base import ClassifierRule
 from grafink_spark.streaming.exactly_once import BATCH_COL, purge_batch_rows
 
@@ -95,15 +96,15 @@ def ingest_batch(
         return  # batch fully committed on a previous attempt
     _purge_batch(id_manager, store, batch_id)  # clear partial leftovers
 
-    catalog = GraphCatalog(store.root)
-    tagged = batch_df.withColumn(BATCH_COL, F.lit(batch_id))
-    loaded, current = id_manager.process(tagged)
-    catalog.create_vertex_label(vertex_label, df=current)
-    store.write_vertices(current, label=vertex_label)
-    for rule in rules:
-        catalog.create_edge_label(rule.edge_label, rule.property_key, "String")
-        edges = ClassifierRule.validate(rule.classify(loaded, current))
-        store.write_edges(edges, rule, tags={BATCH_COL: batch_id})
+    load_batch(
+        batch_df.withColumn(BATCH_COL, F.lit(batch_id)),
+        id_manager,
+        store,
+        GraphCatalog(store.root),
+        rules,
+        vertex_label,
+        tags={BATCH_COL: batch_id},
+    )
     fsutil.touch(spark, marker)
 
 

@@ -65,3 +65,8 @@ def alerts_df(spark):
 
 def edge_set(df) -> set[tuple]:
     return {tuple(r) for r in df.select("src", "dst", "propVal").collect()}
+
+
+def persisted_rdds(spark) -> set[int]:
+    """Ids of the RDDs Spark holds persisted right now."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())

@@ -12,6 +12,7 @@ from grafink_spark.graph.storage import GraphStore
 from grafink_spark.id_manager import IDManager
 from grafink_spark.rules.samevalue import SameValueClassifier
 from grafink_spark.streaming.graph_ingest import stream_to_graph
+from tests.conftest import persisted_rdds
 
 SCHEMA = T.StructType(
     [
@@ -178,3 +179,14 @@ def test_corrupt_id_store_raises_instead_of_restarting_ids(spark, tmp_path):
     )
     loaded = idm2.read_all(batch.schema)
     assert loaded.count() == 0 and "id" in loaded.columns
+
+
+def test_microbatches_leave_no_cached_batch(spark, tmp_path):
+    from grafink_spark.streaming.graph_ingest import ingest_batch
+
+    idm, store, rules = _setup(spark, tmp_path)
+    before = persisted_rdds(spark)
+    ingest_batch(spark.createDataFrame([("objA", 0.9)], SCHEMA), 0, idm, store, rules)
+    ingest_batch(spark.createDataFrame([("objA", 0.7)], SCHEMA), 1, idm, store, rules)
+    assert store.edges().count() == 2
+    assert persisted_rdds(spark) - before == set()

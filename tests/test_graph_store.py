@@ -9,7 +9,7 @@ from grafink_spark.graph.sink import CallbackSink
 from grafink_spark.graph.storage import GraphStore, get_parallelism
 from grafink_spark.rules.samevalue import SameValueClassifier
 from grafink_spark.sources.fixed_vertices import read_fixed_vertices
-from tests.conftest import alert
+from tests.conftest import alert, persisted_rdds
 
 
 def test_parallelism_formula():
@@ -270,3 +270,59 @@ def test_open_memo_emptied_and_missing_tables(spark, store, alerts_df):
     with pytest.raises(AnalysisException):
         store.vertices()
     assert store.edges().count() == 0
+
+
+def _counted_edges(spark, n):
+    """``n`` edge rows whose ``src`` goes through a Python UDF that adds
+    one to the returned accumulator per evaluated row."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def touch(x):
+        acc.add(1)
+        return x
+
+    bump = F.udf(touch, "long")
+    edges = spark.range(n).select(
+        bump(F.col("id")).alias("src"),
+        (F.col("id") + 100).alias("dst"),
+        F.lit("objectId").alias("propVal"),
+    )
+    return edges, acc
+
+
+def test_write_edges_evaluates_input_once(spark, store):
+    """The sizing count and the doubled write read one materialised
+    edge set: the input's plan runs once, not once per use."""
+    edges, acc = _counted_edges(spark, 7)
+    before = persisted_rdds(spark)
+    n = store.write_edges(edges, SameValueClassifier(["objectId"]))
+    assert acc.value == 7
+    assert n == 14
+    # the returned count is what landed on disk, both directions
+    on_disk = store.edges()
+    assert on_disk.count() == n
+    assert on_disk.where(F.col("src") >= 100).count() == 7
+    assert persisted_rdds(spark) - before == set()
+
+
+def test_write_edges_releases_edges_when_the_sink_raises(spark, tmp_path):
+    from grafink_spark.graph.sink import GraphSink
+
+    class FailingSink(GraphSink):
+        def write_vertices(self, df, label):
+            raise AssertionError("not called")
+
+        def write_edges(self, df, label):
+            assert df.count() == 6  # reads the persisted edge set
+            raise RuntimeError("sink down")
+
+    store = GraphStore(
+        spark, str(tmp_path / "graph"), task_size=2500, parallelism=4,
+        sink=FailingSink(),
+    )
+    edges, acc = _counted_edges(spark, 3)
+    before = persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="sink down"):
+        store.write_edges(edges, SameValueClassifier(["objectId"]))
+    assert acc.value == 3
+    assert persisted_rdds(spark) - before == set()

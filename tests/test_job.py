@@ -8,7 +8,7 @@ from grafink_spark.cli import main as cli_main
 from grafink_spark.config import GrafinkConfig
 from grafink_spark.graph.query import GraphQuery
 from grafink_spark.job import Job
-from tests.conftest import ALERT_SCHEMA, alert
+from tests.conftest import ALERT_SCHEMA, alert, persisted_rdds
 
 
 def _write_day(spark, base, rows):
@@ -87,3 +87,54 @@ def test_cli_exit_codes(tmp_path):
     cfg.write_text(json.dumps({"reader": {"basePath": "/nonexistent"}}))
     rc = cli_main(["--config", str(cfg), "--duration", "9"])
     assert rc == 2
+
+
+def test_nights_leave_no_cached_batch(spark, tmp_path):
+    """Each night's id-assigned batch is released after its edges are
+    written: a long run does not accumulate one cached batch per night."""
+    base = str(tmp_path / "alerts")
+    before = persisted_rdds(spark)
+    job = Job(spark, _config(tmp_path))
+    for day in (1, 2, 3):
+        rows = [alert(0, "obj1", 0.5 + day / 10, 0.2, 0, 0.5, "WD*", None, None)]
+        df = spark.createDataFrame(rows, ALERT_SCHEMA).drop("id")
+        df = df.withColumn("day", df.day + day - 1)
+        df.write.mode("append").partitionBy("year", "month", "day").parquet(base)
+        job.process(date(2019, 2, day), 1)
+    assert GraphQuery(job.store).vertex_count() == 3
+    assert persisted_rdds(spark) - before == set()
+
+
+def test_process_logs_one_phase_record_per_night(spark, tmp_path, caplog):
+    import logging
+
+    base = str(tmp_path / "alerts")
+    _write_day(
+        spark,
+        base,
+        [
+            alert(0, "obj1", 0.95, 0.2, 0, 0.5, "WD*", None, None),
+            alert(0, "obj1", 0.99, 0.2, 0, 0.5, "AGN", None, None),
+            alert(0, "obj2", 0.10, 0.2, 0, 0.5, "AGN", None, None),
+        ],
+    )
+    job = Job(spark, _config(tmp_path))
+    with caplog.at_level(logging.INFO, logger="grafink_spark.job"):
+        result = job.process(date(2019, 2, 1), 1)
+    records = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == "grafink_spark.job"
+    ]
+    assert len(records) == 1
+    rec = records[0]
+    assert rec["event"] == "ingest"
+    assert rec["start_date"] == "2019-02-01" and rec["duration"] == 1
+    assert rec["ids_assigned"] == 3 == result.vertices_loaded
+    for key in ("read_s", "ids_s", "vertices_s"):
+        assert rec[key] >= 0
+    assert set(rec["rules"]) == {"similarity", "exactmatch"}
+    for label, r in rec["rules"].items():
+        assert r["edge_rows"] == result.edge_counts[label]
+        assert r["s"] >= 0
+        assert r["nparts"] == 4  # parallelism: far below taskSize

@@ -182,7 +182,8 @@ def test_rouge_overlap_short_doc_no_grams(spark):
 def test_rouge_overlap_map_clip_backend_identical(spark):
     """The map-fold clip backend (forced via the session conf, the
     r10 pair-volume gate) returns the exact row set of the sparse
-    explode-join backend — including zero-overlap and no-gram pairs."""
+    explode-join backend — including zero-overlap and no-gram pairs,
+    and a pair listed twice (one output row per input row)."""
     from grafink_spark.llm.text import rouge_overlap
 
     docs = spark.createDataFrame(
@@ -195,7 +196,7 @@ def test_rouge_overlap_map_clip_backend_identical(spark):
         "doc_id long, text string",
     )
     pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3)], "id_a long, id_b long"
+        [(1, 2), (1, 3), (1, 4), (2, 3), (1, 2)], "id_a long, id_b long"
     )
     join_rows = sorted(
         rouge_overlap(docs, pairs, n=2).collect(), key=lambda r: (r.id_a, r.id_b)
@@ -209,6 +210,9 @@ def test_rouge_overlap_map_clip_backend_identical(spark):
     finally:
         spark.conf.unset("spark.grafink.rougeMapClipMinPairs")
     assert join_rows == map_rows
+    assert len(map_rows) == 5
+    # the repeated pair keeps its clip: min(2, 1) shared "a b" bigrams
+    assert [r.clip for r in map_rows if (r.id_a, r.id_b) == (1, 2)] == [1, 1]
     # the map path really computed clips (not all-zero degenerate)
     by = {(r.id_a, r.id_b): r for r in map_rows}
     assert by[(1, 2)].clip == 1 and by[(1, 4)].clip == 0
