@@ -284,26 +284,12 @@ SF1_SKIP = {
     # oracle replays it as a scalar subquery), so the candidate
     # volume is ~nprobe·N^1.5 — the round-6 pinned nlist=8 kept
     # n²/2 candidates and hung at this scale.
-    # the forced verify-backend twins exist to keep every APSS
-    # backend oracle-checked + sf0.1-timed; at sf1 the auto
-    # entry (apss_cosine) resolves to the ARROW backend (5.3M
-    # candidates ≥ the 500k floor, r9), so timing the
-    # forced-arrow twin here would measure the same plan
-    # twice, and the forced-map twin would pay ~40 s for a
-    # backend whose sf1 cost is already recorded (r8: 31.9 s)
-    # and whose certification lives at sf0.1.
-    "apss_cosine_map",
+    # the forced-arrow twin keeps the APSS scale backend
+    # oracle-checked + sf0.1-timed; at sf1 the auto entry
+    # (apss_cosine) resolves to the ARROW backend (5.3M
+    # candidates ≥ the 500k floor, r9), so timing the twin here
+    # would measure the same plan twice.
     "apss_cosine_arrow",
-    # ssjoin's expr verify (JVM array_intersect) BEATS the
-    # arrow kernel at sf1 under BOTH plumbings (same-session
-    # alternated A/B r9: expr 12.5-14.2 s vs arrow-bcast
-    # 18.0-19.3 s; join plumbing 18.8-24.8 s — intersection
-    # is already native, and at ssjoin's ~12.1M candidates
-    # the per-pair Python dispatch outweighs the Arrow-byte
-    # saving that wins for 5.3M-candidate APSS). expr stays
-    # the production path; the arrow twin stays
-    # oracle-certified at sf0.01 and A/B-timed at sf0.1.
-    "ssjoin_exact_arrow",
 }
 
 

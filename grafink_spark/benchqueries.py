@@ -8429,31 +8429,14 @@ WHERE len(list_intersect(a.ds, b.ds))::DOUBLE /
 """
 
 
-def q_ssjoin_exact_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`q_ssjoin_exact` with the verify backend FORCED to the
-    Arrow kernel (r9, shared with the APSS cosine sibling): sorted
-    60-bit key arrays joined to the candidate pairs, intersection
-    sizes via one numpy ``searchsorted`` per pair
-    (llm/dedup.py _ssjoin_arrow_sim). The Jaccard is the identical
-    IEEE division, so the full all-pairs oracle applies unchanged;
-    the expr row stays the anchor, this row is the backend A/B."""
-    docs = load_table(spark, sf_dir, "documents")
-    out = dd.set_similarity_join(docs, k=3, threshold=0.5, verify="arrow")
-    return out.select(
-        "id_a", "id_b", F.round("jaccard_sim", 6).alias("jaccard_sim")
-    )
-
-
 QUERIES.update(
     {
         "ssjoin_exact": q_ssjoin_exact,
-        "ssjoin_exact_arrow": q_ssjoin_exact_arrow,
     }
 )
 ORACLES.update(
     {
         "ssjoin_exact": SQL_SSJOIN_EXACT,
-        "ssjoin_exact_arrow": SQL_SSJOIN_EXACT,
     }
 )
 
@@ -8744,32 +8727,13 @@ JOIN tot tb ON tb.doc_id = d.id_b
 WHERE 100::HUGEINT * d.dot * d.dot >= 81::HUGEINT * ta.tt * tb.tt
 """
 
-def q_apss_cosine_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`q_apss_cosine` with the verify backend FORCED to the
-    map_zip_with path — the zero-Python fallback backend. The auto
-    gate picks join below ~500k candidates and (since round 9) the
-    Arrow kernel above; this row keeps the map backend
-    oracle-certified every round and, in the bench artifact, gives the
-    per-round backend A/B at sf0.1 (llm/dedup.py _apss_frames)."""
-    docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    out = dd.weighted_cosine_join(docs, threshold=(9, 10), k=3, verify="map")
-    return out.select(
-        "id_a",
-        "id_b",
-        F.col("dot").cast("long").alias("dot"),
-        F.col("t_a").cast("long").alias("t_a"),
-        F.col("t_b").cast("long").alias("t_b"),
-        F.round("cosine_sim", 6).alias("cosine_sim"),
-    )
-
-
 def q_apss_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`q_apss_cosine` with the verify backend FORCED to the
     Arrow kernel (r9 — the named lever since round 7): sorted 60-bit
     key/count arrays joined to the candidate pairs, dots computed
     per-pair as one numpy ``searchsorted`` + masked product-sum
     (llm/dedup.py _apss_arrow_dot). Integer-exact and bit-identical
-    to the expr backends, so the FULL all-pairs oracle applies
+    to the join backend, so the FULL all-pairs oracle applies
     unchanged — the row certifies the production scale backend, not a
     weaker rows-only check. At sf0.1 the auto entry resolves to the
     join backend (61k candidates < the 500k floor), so this forced
@@ -8792,14 +8756,12 @@ def q_apss_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES.update(
     {
         "apss_cosine": q_apss_cosine,
-        "apss_cosine_map": q_apss_cosine_map,
         "apss_cosine_arrow": q_apss_cosine_arrow,
     }
 )
 ORACLES.update(
     {
         "apss_cosine": SQL_APSS_COSINE,
-        "apss_cosine_map": SQL_APSS_COSINE,
         "apss_cosine_arrow": SQL_APSS_COSINE,
     }
 )

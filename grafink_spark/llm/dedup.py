@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from grafink_spark.llm.text import tokens
 from grafink_spark.util import (
+    broadcast_max_bytes,
     ensure_min_partitions,
     maybe_broadcast,
     pin,
@@ -1600,7 +1601,6 @@ def set_similarity_join(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
-    verify: str = "expr",
 ) -> DataFrame:
     """EXACT set-similarity self-join over distinct k-shingle sets —
     every pair with Jaccard ≥ ``threshold``, guaranteed (prefix
@@ -1630,24 +1630,14 @@ def set_similarity_join(
     only — never all-pairs). A boilerplate-heavy corpus shifts its
     common shingles out of every prefix automatically.
 
-    ``verify`` picks the set-intersection backend — identical row sets
-    (asserted by ``test_dedup.py``): ``"expr"`` (default, the oracle
-    anchor) verifies with Catalyst ``array_intersect``; ``"arrow"``
-    intersects sorted key arrays in numpy — size-gated plumbing like
-    the APSS sibling (family conf
-    ``spark.grafink.apssArrowBcastMaxEntries``): broadcast table +
-    bare-pair stream (:func:`_ssjoin_bcast_sim`) under the gate,
-    vectors-joined-to-pairs (:func:`_ssjoin_arrow_sim`) past it.
-    Unlike APSS — whose map backend folded in the Catalyst
-    INTERPRETER and gains 2-3× from the kernel — the native
-    ``array_intersect`` wins here under BOTH plumbings (same-session
-    alternated sf1 A/B r9: expr 12.5-14.2 s vs arrow-bcast
-    18.0-19.3 s; earlier join-plumbing A/B 17.0-17.5 vs 18.8-24.8;
-    sf0.1 par — ssjoin verifies ~12.1M sf1 candidates, so the
-    per-pair Python dispatch outweighs the Arrow-byte saving the
-    5.3M-candidate APSS enjoys), so expr stays the default at every
-    scale and arrow exists as the certified backend A/B."""
-    return _ssjoin_frames(df, text_col, id_col, k, threshold, verify)["out"]
+    Verify is Catalyst ``array_intersect`` over the hashed sets,
+    joined onto the candidate pairs. A numpy searchsorted kernel (the
+    APSS sibling's) was measured and dropped: the native intersect won
+    at sf1 under both broadcast and join plumbing (same-session
+    alternated A/B r9: 12.5-14.2 s vs 18.0-24.8 s) and at sf0.1 —
+    ssjoin verifies ~12.1M sf1 candidates, so per-pair Python dispatch
+    outweighs the Arrow-byte saving."""
+    return _ssjoin_frames(df, text_col, id_col, k, threshold)["out"]
 
 
 def _ssjoin_frames(
@@ -1656,7 +1646,6 @@ def _ssjoin_frames(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
-    verify: str = "expr",
 ) -> dict[str, DataFrame]:
     """:func:`set_similarity_join` staged: ``prefix_pairs`` (distinct
     pairs sharing a prefix token), ``candidates`` (after the PPJoin
@@ -1760,78 +1749,20 @@ def _ssjoin_frames(
         .select("id_a", "id_b")
         .distinct()
     )
-    if verify == "expr":
-        a = base.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))
-        b = base.select(F.col("_id").alias("id_b"), F.col("_s").alias("_sb"))
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        union = F.size("_sa") + F.size("_sb") - inter
-        out = (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (inter.cast("double") / union).alias("jaccard_sim"),
-            )
-            .where(F.col("jaccard_sim") >= threshold)
+    a = base.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))
+    b = base.select(F.col("_id").alias("id_b"), F.col("_s").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    union = F.size("_sa") + F.size("_sb") - inter
+    out = (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            (inter.cast("double") / union).alias("jaccard_sim"),
         )
-    elif verify == "arrow":
-        # batched verify (r9, shared with the APSS sibling): sorted
-        # key arrays feeding a numpy intersection kernel, with the
-        # same size-gated plumbing as APSS (family-wide conf
-        # ``spark.grafink.apssArrowBcastMaxEntries``): while the
-        # hashed shingle-set table fits one executor it is BROADCAST
-        # once per worker and only bare (id_a, id_b) pairs stream
-        # through Arrow (:func:`_ssjoin_bcast_sim` — for ssjoin the
-        # verify joins otherwise copy both sets onto each of ~12.1M
-        # sf1 candidates, ~2 orders of magnitude more fresh bytes);
-        # past the gate the candidate-bounded join plumbing runs.
-        # The Jaccard is the identical IEEE division (int64 sizes
-        # are exactly representable), so the row set is bit-identical
-        # either way.
-        sorted_sets = base.select("_id", F.array_sort("_s").alias("_ss"))
-        raw_bc = df.sparkSession.conf.get(_APSS_BCAST_CONF_KEY, None)
-        bcast_floor = (
-            APSS_ARROW_BCAST_MAX_ENTRIES if raw_bc is None else int(raw_bc)
-        )
-        n_entries = sorted_sets.select(
-            F.sum(F.size("_ss"))
-        ).collect()[0][0]
-        if (n_entries or 0) <= bcast_floor:
-            import numpy as np
-
-            # toPandas, not collect: columnar Arrow transfer of the
-            # list column (see the APSS sibling)
-            spdf = sorted_sets.toPandas()
-            ids = spdf["_id"].to_numpy()
-            sss = spdf["_ss"].to_numpy()
-            sets = {
-                int(ids[i]): np.asarray(sss[i], dtype=np.int64)
-                for i in range(len(spdf))
-            }
-            bc = df.sparkSession.sparkContext.broadcast(sets)
-            out = cand.mapInPandas(
-                _ssjoin_bcast_sim(bc),
-                schema="id_a long, id_b long, jaccard_sim double",
-            ).where(F.col("jaccard_sim") >= threshold)
-        else:
-            a = sorted_sets.select(
-                F.col("_id").alias("id_a"), F.col("_ss").alias("_ka")
-            )
-            b = sorted_sets.select(
-                F.col("_id").alias("id_b"), F.col("_ss").alias("_kb")
-            )
-            out = (
-                cand.join(a, "id_a")
-                .join(b, "id_b")
-                .mapInPandas(
-                    _ssjoin_arrow_sim,
-                    schema="id_a long, id_b long, jaccard_sim double",
-                )
-                .where(F.col("jaccard_sim") >= threshold)
-            )
-    else:
-        raise ValueError(f"verify must be expr|arrow, got {verify!r}")
+        .where(F.col("jaccard_sim") >= threshold)
+    )
     return {"prefix_pairs": prefix_pairs, "candidates": cand, "out": out}
 
 
@@ -1865,20 +1796,32 @@ def ssjoin_filter_stats(
 
 # ------------------------------------------ Arrow verify kernels (r9)
 #
-# The exact-verify family's scale bottleneck was never candidate
-# generation (prefix-filtered, measured per round via filter_stats) but
-# the per-pair verify: the map backend's map_zip_with fold runs in
-# Catalyst's interpreter at ~µs/entry. These kernels do the same
-# integer-exact work in numpy over Arrow-shipped sorted 60-bit key
-# arrays: per pair, ONE C-level ``searchsorted`` of the a-side keys
-# into the b-side (both ascending-sorted and distinct by
-# construction) plus a masked product-sum — ~10 µs/pair of Python
-# dispatch around C array ops, versus the interpreter's per-ENTRY
-# dispatch. Measured on a 10k-pair × 300-entry batch: 0.10 s/batch
-# (a batch-global dense-rank composite + one searchsorted variant
-# benched 0.75 s — the global sort over every flattened entry costs
-# more than the per-row loop it saves; with ~300-entry sides the
-# Python overhead is already amortized by the row's C work).
+# The APSS verify's scale cost is the per-pair dot product, not
+# candidate generation (prefix-filtered, measured per round via
+# filter_stats). Catalyst's map fold ran it in the interpreter at
+# ~µs/entry; these kernels do the same integer-exact work in numpy over
+# Arrow-shipped sorted 60-bit key arrays — per pair, ONE C-level
+# ``searchsorted`` plus a masked product-sum (:func:`_sparse_dot`),
+# ~10 µs/pair of Python dispatch around C array ops. Measured on a
+# 10k-pair × 300-entry batch: 0.10 s/batch (a batch-global dense-rank
+# composite + one searchsorted variant benched 0.75 s — the global sort
+# over every flattened entry costs more than the per-row loop it saves;
+# with ~300-entry sides the Python overhead is already amortized by the
+# row's C work).
+
+
+def _sparse_dot(ka, ca, kb, cb) -> int:
+    """Σ ca·cb over the keys two sparse vectors share: ``ka``/``kb``
+    are ascending, distinct int64 key arrays and ``ca``/``cb`` their
+    int64 counts. Integer-exact (int64 products and sum, never float
+    accumulation), so every caller's rows are bit-identical to the join
+    backend's."""
+    if not len(ka) or not len(kb):
+        return 0
+    idx = kb.searchsorted(ka)
+    idx[idx == len(kb)] = len(kb) - 1
+    m = kb[idx] == ka
+    return int((ca[m] * cb[idx[m]]).sum())
 
 
 def _apss_bcast_dot(bc):
@@ -1887,8 +1830,8 @@ def _apss_bcast_dot(bc):
     the mapInPandas input is the bare candidate frame (id_a, id_b) —
     16 bytes/pair through Arrow instead of two full vector copies per
     pair (~50x fewer fresh Arrow/JVM bytes at sf1: 85 MB vs ~9.5 GB
-    for 5.3 M candidates x ~53 terms). Same integer-exact searchsorted
-    dot as :func:`_apss_arrow_dot`, so the row set is bit-identical.
+    for 5.3 M candidates x ~53 terms). Same :func:`_sparse_dot` as
+    :func:`_apss_arrow_dot`, so the row set is bit-identical.
 
     ``bc`` holds FOUR flat int64 arrays ``(uids, offs, keys, counts)``
     — doc ids ascending, per-doc offset fences, and the concatenated
@@ -1901,8 +1844,8 @@ def _apss_bcast_dot(bc):
     id→row lookup is one vectorized searchsorted per batch.
 
     Size-gated by the caller: broadcast plumbing only while the whole
-    vector table fits comfortably in one executor (conf
-    ``spark.grafink.apssArrowBcastMaxEntries``); past the gate the
+    vector table fits the engine-wide broadcast bound
+    (``spark.grafink.broadcastMaxBytes``); past it the
     candidate-bounded join plumbing runs instead — at the 100 TB
     design point (10^9+ docs) the table cannot ship whole, and
     pair-bounded joins are the scale path."""
@@ -1915,7 +1858,6 @@ def _apss_bcast_dot(bc):
         for pdf in batches:
             ia = pdf["id_a"].to_numpy()
             ib = pdf["id_b"].to_numpy()
-            n = len(pdf)
             # candidate ids come from prefix ⊂ tc, so every id is
             # present in uids and searchsorted is an exact lookup; an
             # absent id would dot against its neighbour's vector, so
@@ -1932,126 +1874,50 @@ def _apss_bcast_dot(bc):
                     )
             sa, ea = offs[pa], offs[pa + 1]
             sb, eb = offs[pb], offs[pb + 1]
-            dot = np.zeros(n, dtype=np.int64)
-            for i in range(n):
-                ka = keys[sa[i]:ea[i]]
-                kb = keys[sb[i]:eb[i]]
-                if not len(ka) or not len(kb):
-                    continue
-                idx = np.searchsorted(kb, ka)
-                idx[idx == len(kb)] = len(kb) - 1
-                m = kb[idx] == ka
-                if m.any():
-                    dot[i] = int(
-                        (counts[sa[i]:ea[i]][m]
-                         * counts[sb[i]:eb[i]][idx[m]]).sum()
+            dot = np.array(
+                [
+                    _sparse_dot(
+                        keys[sa[i]:ea[i]],
+                        counts[sa[i]:ea[i]],
+                        keys[sb[i]:eb[i]],
+                        counts[sb[i]:eb[i]],
                     )
+                    for i in range(len(pdf))
+                ],
+                dtype=np.int64,
+            )
             yield pd.DataFrame({"id_a": ia, "id_b": ib, "dot": dot})
 
     return gen
 
 
-def _ssjoin_bcast_sim(bc):
-    """Factory for the BROADCAST variant of the ssjoin arrow kernel:
-    per-doc sorted 60-bit shingle-key arrays ride to every worker once
-    via ``bc`` ({id: np sorted keys}) and the mapInPandas input is the
-    bare candidate frame (id_a, id_b). Same exact integer
-    intersection + single IEEE division as :func:`_ssjoin_arrow_sim`,
-    so the row set is bit-identical; same size gate as the APSS
-    sibling (family conf ``spark.grafink.apssArrowBcastMaxEntries``)
-    — past it the candidate-bounded join plumbing runs, the 100 TB
-    path."""
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        sets = bc.value
-        for pdf in batches:
-            ia = pdf["id_a"].to_numpy()
-            ib = pdf["id_b"].to_numpy()
-            n = len(pdf)
-            jac = np.zeros(n, dtype=np.float64)
-            for i in range(n):
-                a = sets[ia[i]]
-                b = sets[ib[i]]
-                if not len(a) or not len(b):
-                    continue
-                idx = np.searchsorted(b, a)
-                idx[idx == len(b)] = len(b) - 1
-                inter = int((b[idx] == a).sum())
-                union = len(a) + len(b) - inter
-                if union > 0:
-                    jac[i] = inter / union
-            yield pd.DataFrame(
-                {"id_a": ia, "id_b": ib, "jaccard_sim": jac}
-            )
-
-    return gen
-
-
 def _apss_arrow_dot(batches):
-    """mapInPandas kernel for the APSS ``verify="arrow"`` backend:
-    rows (id_a, id_b, _ka, _ca, _kb, _cb) → (id_a, id_b, dot) with
-    dot = Σ c_a·c_b over shared keys — integer-exact (int64 products
-    and sums, never float accumulation), so the output is
-    bit-identical to the map/join backends."""
+    """mapInPandas kernel for the APSS ``verify="arrow"`` join
+    plumbing: rows (id_a, id_b, _ka, _ca, _kb, _cb) → (id_a, id_b,
+    dot) with dot = :func:`_sparse_dot` of the two vectors."""
     import numpy as np
     import pandas as pd
 
     for pdf in batches:
-        n = len(pdf)
-        kas, cas = pdf["_ka"].to_numpy(), pdf["_ca"].to_numpy()
-        kbs, cbs = pdf["_kb"].to_numpy(), pdf["_cb"].to_numpy()
-        dot = np.zeros(n, dtype=np.int64)
-        for i in range(n):
-            a, b = np.asarray(kas[i]), np.asarray(kbs[i])
-            if not len(a) or not len(b):
-                continue
-            idx = np.searchsorted(b, a)
-            idx[idx == len(b)] = len(b) - 1
-            m = b[idx] == a
-            if m.any():
-                ca = np.asarray(cas[i], dtype=np.int64)
-                cb = np.asarray(cbs[i], dtype=np.int64)
-                dot[i] = int((ca[m] * cb[idx[m]]).sum())
+        dot = np.array(
+            [
+                _sparse_dot(
+                    np.asarray(ka),
+                    np.asarray(ca, dtype=np.int64),
+                    np.asarray(kb),
+                    np.asarray(cb, dtype=np.int64),
+                )
+                for ka, ca, kb, cb in zip(
+                    pdf["_ka"], pdf["_ca"], pdf["_kb"], pdf["_cb"]
+                )
+            ],
+            dtype=np.int64,
+        )
         yield pd.DataFrame(
             {
                 "id_a": pdf["id_a"].to_numpy(),
                 "id_b": pdf["id_b"].to_numpy(),
                 "dot": dot,
-            }
-        )
-
-
-def _ssjoin_arrow_sim(batches):
-    """mapInPandas kernel for the PPJoin ``verify="arrow"`` backend:
-    rows (id_a, id_b, _ka, _kb) → (id_a, id_b, jaccard_sim).
-    Intersection sizes are exact integers; the Jaccard is the same
-    single IEEE division the expr backend computes (int64 set sizes
-    are exactly representable), so the row set is bit-identical."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        n = len(pdf)
-        kas, kbs = pdf["_ka"].to_numpy(), pdf["_kb"].to_numpy()
-        jac = np.zeros(n, dtype=np.float64)
-        for i in range(n):
-            a, b = np.asarray(kas[i]), np.asarray(kbs[i])
-            if not len(a) or not len(b):
-                continue
-            idx = np.searchsorted(b, a)
-            idx[idx == len(b)] = len(b) - 1
-            inter = int((b[idx] == a).sum())
-            union = len(a) + len(b) - inter
-            if union > 0:
-                jac[i] = inter / union
-        yield pd.DataFrame(
-            {
-                "id_a": pdf["id_a"].to_numpy(),
-                "id_b": pdf["id_b"].to_numpy(),
-                "jaccard_sim": jac,
             }
         )
 
@@ -2099,33 +1965,26 @@ def weighted_cosine_join(
     so ubiquitous terms leave every prefix as soon as the rare head
     carries ≥ (1−t²) of the norm.
 
-    ``verify`` picks the dot-product backend — all three produce
-    identical integer-exact rows (asserted by ``test_dedup.py``):
+    ``verify`` picks the dot-product backend — both produce identical
+    integer-exact rows (asserted by ``test_dedup.py``):
 
     - ``"join"``: explode the candidate pairs against the per-term
       count table and sum products. Cost ∝ |candidates|·terms-per-doc
       rows through one shuffle — cheapest while candidates are sparse.
-    - ``"map"``: join per-doc term→count MAPS to the pairs and fold
-      ``map_zip_with`` row-locally. Cost ∝ corpus rows to build the
-      maps + |candidates| union-sized row-local folds — bounded like
-      arrow but the fold runs in Catalyst's interpreter (measured
-      sf0.1: 9.2 s map vs 2.7 s join on 61 k candidates; sf1: 38 s
-      map vs 44 s join on 5.3 M).
-    - ``"arrow"``: numpy searchsorted dots over Arrow batches, with
-      size-gated plumbing (conf
-      ``spark.grafink.apssArrowBcastMaxEntries``): while the per-doc
-      sorted key/count vector table fits one executor it is
-      BROADCAST once per worker and only the bare (id_a, id_b) pairs
-      stream through Arrow (:func:`_apss_bcast_dot` — ~50x fewer
-      freshly allocated bytes than attaching vectors to every pair);
-      past the gate the vectors join onto the candidate pairs
-      (:func:`_apss_arrow_dot` — candidate-bounded movement, never
-      |candidates|·terms exploded rows). The 100 TB verify backend.
+    - ``"arrow"``: numpy searchsorted dots over Arrow batches. While the
+      per-doc sorted key/count vector table (16 bytes per entry) fits
+      the engine-wide broadcast bound (``spark.grafink.broadcastMaxBytes``,
+      :func:`util.broadcast_max_bytes`) it is BROADCAST once per worker
+      and only the bare (id_a, id_b) pairs stream through Arrow
+      (:func:`_apss_bcast_dot` — ~50x fewer freshly allocated bytes
+      than attaching vectors to every pair); past the bound the vectors
+      join onto the candidate pairs (:func:`_apss_arrow_dot` —
+      candidate-bounded movement, never |candidates|·terms exploded
+      rows). The 100 TB verify backend.
     - ``"auto"`` (default): pin the candidate frame, count it, and
-      gate on :data:`APSS_MAP_VERIFY_MIN_CANDIDATES` (session conf
-      ``spark.grafink.apssMapVerifyMinCandidates`` overrides) —
-      ``"join"`` below the floor, ``"arrow"`` above it. The count is
-      not wasted work — the pin means candidate generation runs once
+      gate on :data:`APSS_ARROW_VERIFY_MIN_CANDIDATES` — ``"join"``
+      below the floor, ``"arrow"`` at or above it. The count is not
+      wasted work — the pin means candidate generation runs once
       either way, and at the design point where counting anything is
       expensive the gate resolves to the batched backend exactly
       because the count is large. NOTE the pin makes auto-mode
@@ -2136,22 +1995,17 @@ def weighted_cosine_join(
     return _apss_frames(df, text_col, id_col, threshold, k, verify)["out"]
 
 
-# Crossover between the two APSS verify backends, in candidate pairs.
-# Measured on the sf0.1/sf1 documents corpora (see weighted_cosine_join
-# docstring): join verify wins at 61k candidates (2.7 vs 9.2 s), map
-# verify wins at 5.3M (38 vs 44 s); the geometric midpoint ~5e5 splits
-# the measured regimes with ~order-of-magnitude margin on each side.
-APSS_MAP_VERIFY_MIN_CANDIDATES = 500_000
-_APSS_VERIFY_CONF_KEY = "spark.grafink.apssMapVerifyMinCandidates"
-
-# Broadcast gate for the arrow verify's plumbing, in (doc, term)
-# entries of the per-doc vector table. 16M entries ≈ 256 MB of key+
-# count payload — comfortable to ship once per executor; past it the
-# candidate-bounded join plumbing runs (the 100 TB path). Session conf
-# overrides (0 forces join plumbing — used by the parametrized
-# losslessness tests to cover both).
-APSS_ARROW_BCAST_MAX_ENTRIES = 16_000_000
-_APSS_BCAST_CONF_KEY = "spark.grafink.apssArrowBcastMaxEntries"
+# Candidate-pair floor at which auto verify switches from join to
+# arrow. Join moves |candidates|·terms-per-doc exploded rows, arrow
+# |candidates| pairs plus a per-worker vector table, so join wins while
+# candidates are few. Alternated same-session A/B of apss_cosine (auto,
+# resolves to join) vs apss_cosine_arrow, 4-core host, median of reps
+# 2-7: sf0.01 (25 candidates) 2.16 vs 2.39 s, join faster in 6/6
+# pairs; sf0.1 (61k) 4.46 vs 4.38 s, arrow faster in 4/6 — a tie. At
+# sf1 (5.3M candidates) arrow is the production path (r9). The floor
+# sits above the measured tie with an order of magnitude to spare
+# below sf1.
+APSS_ARROW_VERIFY_MIN_CANDIDATES = 500_000
 
 
 def _apss_frames(
@@ -2193,7 +2047,7 @@ def _apss_frames(
     # Jaccard sibling's 32-bit shingle hashes, 2^28× more headroom):
     # every downstream stage — the term-count shuffle, the df join,
     # the rarity-order window sort, the prefix×prefix candidate join,
-    # and the verify maps shipped twice per candidate pair — keys on
+    # and the verify's per-pair vectors — keys on
     # an 8-byte long instead of a shingle string (measured sf1
     # alternating A/B, best-of-2: 44.9 → 39.7 s, ~11%). Colliding
     # terms MERGE into one feature identically in both engines (the
@@ -2218,9 +2072,9 @@ def _apss_frames(
     # already pays: _df = count over the _term partition, _tt = sum
     # over the _id partition the running-sum window sorts anyway. Two
     # Exchanges of tc total instead of four — measured sf1 alternated
-    # A/B (tools/apss_ab.py, min of 4): candidates 6.72 → 5.26 s; the
-    # candidate set is row-identical at sf0.1 and sf1 (long-integer
-    # counts/sums — bit-exact under any grouping).
+    # A/B (min of 4): candidates 6.72 → 5.26 s; the candidate set is
+    # row-identical at sf0.1 and sf1 (long-integer counts/sums —
+    # bit-exact under any grouping).
     wi = Window.partitionBy("_id").orderBy(
         F.col("_df").asc(), F.col("_term").asc()
     )
@@ -2284,13 +2138,11 @@ def _apss_frames(
         .select("id_a", "id_b")
         .distinct()
     )
-    # Verification backend (see weighted_cosine_join docstring for the
-    # measured crossover). All are integer-exact in any order, so the
-    # all-pairs SQL oracle is untouched by the choice.
-    if verify not in ("auto", "map", "join", "arrow"):
-        raise ValueError(
-            f"verify must be auto|map|join|arrow, got {verify!r}"
-        )
+    # Verification backend (see weighted_cosine_join docstring). Both
+    # are integer-exact in any order, so the all-pairs SQL oracle is
+    # untouched by the choice.
+    if verify not in ("auto", "join", "arrow"):
+        raise ValueError(f"verify must be auto|join|arrow, got {verify!r}")
     if verify == "auto":
         # pin so candidate generation (the prefix pipeline — the
         # expensive subtree) runs ONCE: the gate's count materializes
@@ -2299,12 +2151,11 @@ def _apss_frames(
         # time, like the IVF family's count-derived nlist); callers
         # that only want a plan should pass an explicit backend.
         cand = cand.transform(pin_lazy)
-        raw = df.sparkSession.conf.get(_APSS_VERIFY_CONF_KEY, None)
-        # a MALFORMED conf value must raise, not silently fall back
-        floor = (
-            APSS_MAP_VERIFY_MIN_CANDIDATES if raw is None else int(raw)
+        verify = (
+            "arrow"
+            if cand.count() >= APSS_ARROW_VERIFY_MIN_CANDIDATES
+            else "join"
         )
-        verify = "arrow" if cand.count() >= floor else "join"
     if verify == "join":
         # sparse-candidate backend: explode the pairs against the
         # per-term count table, sum products through one shuffle —
@@ -2333,9 +2184,9 @@ def _apss_frames(
         # batched scale backend (r9): per-doc SORTED (key array, count
         # array) vectors feeding a numpy searchsorted dot kernel. Two
         # plumbings, one kernel family, identical int64 rows:
-        #   - BROADCAST (vector table ≤ apssArrowBcastMaxEntries
-        #     entries): ship the whole table to each worker once and
-        #     stream only (id_a, id_b) through Arrow
+        #   - BROADCAST (16 bytes per key+count entry, within the
+        #     engine-wide broadcast bound): ship the whole table to
+        #     each worker once and stream only (id_a, id_b) through Arrow
         #     (:func:`_apss_bcast_dot`) — ~50x fewer freshly
         #     allocated Arrow/JVM bytes than joining vectors onto
         #     pairs (measured mechanism: this box's first-touch page
@@ -2346,13 +2197,9 @@ def _apss_frames(
         #     (:func:`_apss_arrow_dot`) — candidate-bounded data
         #     movement, never |cand|·terms exploded rows; the 100 TB
         #     path where no vector table fits one executor.
-        raw_bc = df.sparkSession.conf.get(_APSS_BCAST_CONF_KEY, None)
-        bcast_floor = (
-            APSS_ARROW_BCAST_MAX_ENTRIES if raw_bc is None else int(raw_bc)
-        )
         # tc is pinned (and already materialized on the auto path), so
         # this count is a cached-scan aggregate, not a recompute
-        if tc.count() <= bcast_floor:
+        if 16 * tc.count() <= broadcast_max_bytes(df.sparkSession):
             import numpy as np
 
             # FLAT vector table (r10): skip the per-doc collect_list
@@ -2424,41 +2271,6 @@ def _apss_frames(
                 )
                 .where(F.col("dot") > 0)
             )
-    else:
-        # map backend: per-doc term-count MAPS joined to the pairs,
-        # dot product as a row-local map_zip_with fold. The explode
-        # join above would ship |pairs|·terms-per-doc rows through a
-        # shuffle (~1B rows at sf1 — measured 38 s of the query's
-        # 44 s); this keeps the verify at |pairs| rows with union-sized
-        # per-row work (sf1: 44 → ~12 s). Kept selectable (and
-        # oracle-pinned via the apss_cosine_map registry row) as the
-        # zero-Python fallback for clusters without Arrow.
-        vecs = tc.groupBy("_id").agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("_term", "_c"))
-            ).alias("_m")
-        )
-        a = vecs.select(F.col("_id").alias("id_a"), F.col("_m").alias("_ma"))
-        b = vecs.select(F.col("_id").alias("id_b"), F.col("_m").alias("_mb"))
-        dot_col = F.aggregate(
-            F.map_values(
-                F.map_zip_with(
-                    "_ma",
-                    "_mb",
-                    lambda k, x, y: F.when(
-                        x.isNotNull() & y.isNotNull(), x * y
-                    ).otherwise(F.lit(0).cast("long")),
-                )
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        dots = (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .select("id_a", "id_b", dot_col.alias("dot"))
-            .where(F.col("dot") > 0)
-        )
     out = (
         dots.join(
             tot.select(F.col("_id").alias("id_a"), F.col("_tt").alias("t_a")),

@@ -305,15 +305,13 @@ def ngram_multiset(col: Column | str, n: int = 2) -> Column:
 
 
 # Crossover between rouge_overlap's two clip backends, in candidate
-# pairs (the APSS_MAP_VERIFY_MIN_CANDIDATES convention): the explode
+# pairs (the APSS_ARROW_VERIFY_MIN_CANDIDATES convention): the explode
 # join wins at sf0.1's ~25k pairs (2.66 vs 2.94 s), the row-local map
 # fold wins at sf1's 249k (9.5 vs 11.2 s, every alternated rep) — the
 # geometric midpoint ~80k splits the measured regimes; 100k keeps a
 # round number with margin on the join side, where the absolute stakes
-# are sub-second. Session conf overrides (0 forces the map path — used
-# by tests to pin both backends).
+# are sub-second.
 ROUGE_MAP_CLIP_MIN_PAIRS = 100_000
-_ROUGE_CLIP_CONF_KEY = "spark.grafink.rougeMapClipMinPairs"
 
 
 def rouge_overlap(
@@ -393,24 +391,19 @@ def rouge_overlap(
     # per-doc rows — 75M at sf1 for 249k pairs) and shuffles that for
     # the cand-side equi-join; the map form attaches per-doc gram-count
     # MAPS to the pairs (|pairs| rows at any scale; row size bounded by
-    # the doc's distinct grams — the same trade the APSS map verify
-    # documents) and folds min(c_a, c_b) row-locally. Both are exact
-    # integer arithmetic in any order, so the row sets are bit-
-    # identical (proved: 248,979 sf1 rows equal). Measured crossover
+    # the doc's distinct grams) and folds min(c_a, c_b) row-locally.
+    # Both are exact integer arithmetic in any order, so the row sets
+    # are bit-identical (proved: 248,979 sf1 rows equal). Measured crossover
     # (alternated same-session A/B): at sf1's 249k pairs the map form
     # wins every paired rep (11.2 → 9.5 s on rouge_pairs); at sf0.1's
     # ~25k pairs the per-doc map build costs more than the small
     # explode saves (2.66 → 2.94 s) — so the map engages above
     # ROUGE_MAP_CLIP_MIN_PAIRS. The count is a cached-scan aggregate
     # (pairs is pinned above, its checkpoint already materialized).
-    raw_floor = docs.sparkSession.conf.get(_ROUGE_CLIP_CONF_KEY, None)
-    floor = (
-        ROUGE_MAP_CLIP_MIN_PAIRS if raw_floor is None else int(raw_floor)
-    )
     # both backends clip each distinct pair once; the final left join
     # fans the clip back out to every copy of a pair listed twice
     uniq = pairs.select(ref_col, cand_col).distinct()
-    if pairs.count() >= floor:
+    if pairs.count() >= ROUGE_MAP_CLIP_MIN_PAIRS:
         vecs = g.groupBy("_doc").agg(
             F.map_from_entries(F.collect_list(F.struct("g", "c"))).alias(
                 "_m"

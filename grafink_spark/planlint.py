@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from grafink_spark.util import BROADCAST_MAX_BYTES
+from grafink_spark.util import broadcast_max_bytes
 
 ERROR_CODES = frozenset({"cartesian", "row-udf", "oversized-broadcast"})
 WARNING_CODES = frozenset({"bnlj", "single-part"})
@@ -71,14 +71,9 @@ def oversized_broadcasts(
     same numbers :func:`util.plan_size_bytes` gates on). Unknown-size
     sentinels are skipped — no estimate, no verdict."""
     if max_bytes is None:
-        # honor the same session override maybe_broadcast gates on, so
-        # "the maybe_broadcast ceiling" is literally one number
-        try:
-            max_bytes = int(
-                df.sparkSession.conf.get("spark.grafink.broadcastMaxBytes")
-            )
-        except Exception:
-            max_bytes = BROADCAST_MAX_BYTES
+        # the same bound maybe_broadcast gates on, so "the
+        # maybe_broadcast ceiling" is literally one number
+        max_bytes = broadcast_max_bytes(df.sparkSession)
     too_big: list[int] = []
     try:
         jplan = df._jdf.queryExecution().optimizedPlan()

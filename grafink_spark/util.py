@@ -14,6 +14,14 @@ BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 _BROADCAST_CONF_KEY = "spark.grafink.broadcastMaxBytes"
 
 
+def broadcast_max_bytes(spark) -> int:
+    """The engine-wide broadcast bound in bytes: the session's
+    ``spark.grafink.broadcastMaxBytes`` conf, else
+    :data:`BROADCAST_MAX_BYTES`. A malformed conf value raises."""
+    raw = spark.conf.get(_BROADCAST_CONF_KEY, None)
+    return BROADCAST_MAX_BYTES if raw is None else int(raw)
+
+
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for a DataFrame, in bytes, without
     running a job.
@@ -89,10 +97,7 @@ def would_broadcast(
     broadcast: salting a broadcast join would just replicate the
     build side for nothing)."""
     if max_bytes is None:
-        try:
-            max_bytes = int(df.sparkSession.conf.get(_BROADCAST_CONF_KEY))
-        except Exception:
-            max_bytes = BROADCAST_MAX_BYTES
+        max_bytes = broadcast_max_bytes(df.sparkSession)
     size = plan_size_bytes(size_proxy if size_proxy is not None else df)
     return size is not None and size * proxy_scale <= max_bytes
 

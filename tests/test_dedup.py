@@ -549,8 +549,7 @@ def test_dedup_provenance_verdict_precedence(spark):
     assert set(out) == {1, 2, 3, 4, 5}
 
 
-@pytest.mark.parametrize("verify", ["expr", "arrow", "arrow_joinplumb"])
-def test_set_similarity_join_is_lossless_vs_brute_force(spark, verify):
+def test_set_similarity_join_is_lossless_vs_brute_force(spark):
     import itertools
 
     from grafink_spark.llm.dedup import set_similarity_join
@@ -561,23 +560,15 @@ def test_set_similarity_join_is_lossless_vs_brute_force(spark, verify):
         # overlapping sliding vocab windows → a dense near-dup band
         words = [vocab[(i + j) % len(vocab)] for j in range(5)] * 3
         rows.append((i, " ".join(words)))
+    # an empty document (no shingles, never paired) and an exact
+    # duplicate text under a new id (Jaccard 1 with its original)
+    rows += [(40, ""), (41, rows[3][1])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    # a tiny corpus takes arrow's BROADCAST plumbing by default;
-    # arrow_joinplumb zeroes the family bcast gate conf to push the
-    # join plumbing (the 100 TB path) through the same assertions
-    if verify == "arrow_joinplumb":
-        verify = "arrow"
-        spark.conf.set("spark.grafink.apssArrowBcastMaxEntries", "0")
-    try:
-        got = {
-            (r.id_a, r.id_b): r.jaccard_sim
-            for r in set_similarity_join(
-                df, k=3, threshold=0.4, verify=verify
-            ).collect()
-        }
-    finally:
-        spark.conf.unset("spark.grafink.apssArrowBcastMaxEntries")
+    got = {
+        (r.id_a, r.id_b): r.jaccard_sim
+        for r in set_similarity_join(df, k=3, threshold=0.4).collect()
+    }
 
     # brute force ground truth on distinct 3-shingle sets
     def shset(text):
@@ -591,6 +582,7 @@ def test_set_similarity_join_is_lossless_vs_brute_force(spark, verify):
         j = inter / (len(sets[a]) + len(sets[b]) - inter)
         if j >= 0.4:
             expect[(a, b)] = j
+    assert expect[(3, 41)] == 1.0
     assert got.keys() == expect.keys()
     for p, j in expect.items():
         assert abs(got[p] - j) < 1e-12
@@ -662,15 +654,13 @@ def test_normalized_duplicates(spark):
     assert out[0].keeper_id == 1 and out[0].dup_count == 3
 
 
-@pytest.mark.parametrize(
-    "verify", ["auto", "map", "join", "arrow", "arrow_joinplumb"]
-)
+@pytest.mark.parametrize("verify", ["auto", "join", "arrow", "arrow_joinplumb"])
 def test_weighted_cosine_join_is_lossless_vs_brute_force(spark, verify):
-    """All three verify backends (and the size gate that picks between
+    """Both verify backends (and the size gate that picks between
     them) produce the identical integer-exact row set. arrow runs
     twice: a tiny corpus takes its BROADCAST plumbing by default, so
-    arrow_joinplumb zeroes the bcast gate conf to force the join
-    plumbing (the 100 TB path) through the same assertions."""
+    arrow_joinplumb zeroes the engine-wide broadcast bound to force the
+    join plumbing (the 100 TB path) through the same assertions."""
     import itertools
     import math
     from collections import Counter
@@ -683,11 +673,14 @@ def test_weighted_cosine_join_is_lossless_vs_brute_force(spark, verify):
         # repeated sliding windows → graded count-vector overlap
         words = [vocab[(i + j) % len(vocab)] for j in range(3)] * (2 + i % 3)
         rows.append((i, " ".join(words)))
+    # an empty document (zero vector, never paired) and an exact
+    # duplicate text under a new id (cosine 1 with its original)
+    rows += [(30, ""), (31, rows[4][1])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     if verify == "arrow_joinplumb":
         verify = "arrow"
-        spark.conf.set("spark.grafink.apssArrowBcastMaxEntries", "0")
+        spark.conf.set("spark.grafink.broadcastMaxBytes", "0")
     try:
         got = {
             (r.id_a, r.id_b): (r.dot, r.t_a, r.t_b)
@@ -696,7 +689,7 @@ def test_weighted_cosine_join_is_lossless_vs_brute_force(spark, verify):
             ).collect()
         }
     finally:
-        spark.conf.unset("spark.grafink.apssArrowBcastMaxEntries")
+        spark.conf.unset("spark.grafink.broadcastMaxBytes")
 
     cnt = {i: Counter(t.split()) for i, t in rows}
     expect = {}
@@ -704,8 +697,10 @@ def test_weighted_cosine_join_is_lossless_vs_brute_force(spark, verify):
         dot = sum(cnt[a][w] * cnt[b][w] for w in cnt[a])
         ta = sum(v * v for v in cnt[a].values())
         tb = sum(v * v for v in cnt[b].values())
-        if 100 * dot * dot >= 49 * ta * tb:
+        # a zero vector has no cosine: the empty document pairs with none
+        if dot and 100 * dot * dot >= 49 * ta * tb:
             expect[(a, b)] = (dot, ta, tb)
+    assert expect[(4, 31)][0] == expect[(4, 31)][1] == expect[(4, 31)][2]
     assert got == expect
     assert len(expect) > 0
     # and the reported cosine is the plain IEEE expression
@@ -715,42 +710,36 @@ def test_weighted_cosine_join_is_lossless_vs_brute_force(spark, verify):
         ) < 1e-15
 
 
-def test_weighted_cosine_join_verify_gate(spark):
+def test_weighted_cosine_join_verify_gate(spark, monkeypatch):
     """The auto gate picks the join backend under the candidate floor
-    (tiny corpus), honors the session-conf override, and rejects
-    unknown backends."""
-    from grafink_spark.llm.dedup import _APSS_VERIFY_CONF_KEY, weighted_cosine_join
+    (tiny corpus), the arrow backend at a floor of 0, and rejects
+    unknown backends (the deleted map backend included)."""
+    from grafink_spark.llm.dedup import weighted_cosine_join
 
     df = spark.createDataFrame(
         [(i, f"w{i} w{i+1} w{i+2}") for i in range(10)],
         "doc_id long, text string",
     )
-    with pytest.raises(ValueError, match="verify must be"):
-        weighted_cosine_join(df, verify="bogus")
-    # conf floor of 0 forces the batched scale backend even on a tiny
-    # corpus — visible as the Arrow python-eval node in the plan
-    old = spark.conf.get(_APSS_VERIFY_CONF_KEY, None)
-    try:
-        spark.conf.set(_APSS_VERIFY_CONF_KEY, "0")
-        plan = (
-            weighted_cosine_join(df, verify="auto")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "MapInPandas" in plan
-    finally:
-        if old is None:
-            spark.conf.unset(_APSS_VERIFY_CONF_KEY)
-        else:
-            spark.conf.set(_APSS_VERIFY_CONF_KEY, old)
+    for bad in ("bogus", "map"):
+        with pytest.raises(ValueError, match="verify must be"):
+            weighted_cosine_join(df, verify=bad)
     # default floor (500k): tiny corpus -> join backend, no python
     plan = (
         weighted_cosine_join(df, verify="auto")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" not in plan and "map_zip_with" not in plan
+    # a floor of 0 picks the batched scale backend even on a tiny
+    # corpus — visible as the Arrow python-eval node in the plan
+    monkeypatch.setattr(dd, "APSS_ARROW_VERIFY_MIN_CANDIDATES", 0)
+    plan = (
+        weighted_cosine_join(df, verify="auto")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "MapInPandas" in plan
 
 
-@pytest.mark.parametrize("verify", ["join", "map", "arrow"])
+@pytest.mark.parametrize("verify", ["join", "arrow"])
 def test_weighted_cosine_join_plan_has_no_cartesian(spark, verify):
     """Explicit backends, NOT auto: auto pins the candidate frame (a
     localCheckpoint), which hides the prefix self-join — the only
@@ -849,3 +838,63 @@ def test_apss_bcast_kernel_rejects_missing_id():
     for ia, ib in ((0, 3), (2, 3), (1, 4)):
         with pytest.raises(ValueError, match="missing"):
             run(ia, ib)
+
+
+def test_apss_kernels_agree_on_one_batch():
+    """The broadcast and join-plumbing APSS kernels return the same dot
+    column for one batch: shared keys, no shared key, and an empty
+    vector on either side."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pandas as pd
+
+    vecs = {  # doc id -> (ascending keys, counts)
+        1: ([3, 5, 9], [1, 2, 3]),
+        2: ([5, 9, 11], [4, 1, 2]),
+        3: ([1, 2], [7, 7]),
+        4: ([], []),
+    }
+    ids = sorted(vecs)
+    lens = [len(vecs[i][0]) for i in ids]
+    table = tuple(
+        np.array(a, dtype=np.int64)
+        for a in (
+            ids,
+            np.concatenate(([0], np.cumsum(lens))),
+            [k for i in ids for k in vecs[i][0]],
+            [c for i in ids for c in vecs[i][1]],
+        )
+    )
+    pairs = [(1, 2), (2, 1), (1, 3), (2, 3), (1, 4), (4, 2)]
+    ia, ib = (np.array(side, dtype=np.int64) for side in zip(*pairs))
+
+    def vec_col(side, j):
+        return [np.array(vecs[i][j], dtype=np.int64) for i in side]
+
+    bcast = next(
+        dd._apss_bcast_dot(SimpleNamespace(value=table))(
+            iter([pd.DataFrame({"id_a": ia, "id_b": ib})])
+        )
+    )
+    joined = next(
+        dd._apss_arrow_dot(
+            iter(
+                [
+                    pd.DataFrame(
+                        {
+                            "id_a": ia,
+                            "id_b": ib,
+                            "_ka": vec_col(ia, 0),
+                            "_ca": vec_col(ia, 1),
+                            "_kb": vec_col(ib, 0),
+                            "_cb": vec_col(ib, 1),
+                        }
+                    )
+                ]
+            )
+        )
+    )
+    # 1·2: keys 5 and 9 shared → 2·4 + 3·1
+    assert bcast["dot"].tolist() == [11, 11, 0, 0, 0, 0]
+    assert joined["dot"].tolist() == bcast["dot"].tolist()

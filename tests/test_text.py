@@ -179,9 +179,9 @@ def test_rouge_overlap_short_doc_no_grams(spark):
     assert (r.precision, r.recall, r.f1) == (0.0, 0.0, 0.0)
 
 
-def test_rouge_overlap_map_clip_backend_identical(spark):
-    """The map-fold clip backend (forced via the session conf, the
-    r10 pair-volume gate) returns the exact row set of the sparse
+def test_rouge_overlap_map_clip_backend_identical(spark, monkeypatch):
+    """The map-fold clip backend (forced by zeroing the r10
+    pair-volume gate) returns the exact row set of the sparse
     explode-join backend — including zero-overlap and no-gram pairs,
     and a pair listed twice (one output row per input row)."""
     from grafink_spark.llm.text import rouge_overlap
@@ -201,14 +201,11 @@ def test_rouge_overlap_map_clip_backend_identical(spark):
     join_rows = sorted(
         rouge_overlap(docs, pairs, n=2).collect(), key=lambda r: (r.id_a, r.id_b)
     )
-    spark.conf.set("spark.grafink.rougeMapClipMinPairs", "0")
-    try:
-        map_rows = sorted(
-            rouge_overlap(docs, pairs, n=2).collect(),
-            key=lambda r: (r.id_a, r.id_b),
-        )
-    finally:
-        spark.conf.unset("spark.grafink.rougeMapClipMinPairs")
+    monkeypatch.setattr(tx, "ROUGE_MAP_CLIP_MIN_PAIRS", 0)
+    map_rows = sorted(
+        rouge_overlap(docs, pairs, n=2).collect(),
+        key=lambda r: (r.id_a, r.id_b),
+    )
     assert join_rows == map_rows
     assert len(map_rows) == 5
     # the repeated pair keeps its clip: min(2, 1) shared "a b" bigrams
