@@ -1,15 +1,21 @@
-"""Benchmark harness: runs the engine's headline queries at
+"""Benchmark harness: runs every registered query
+(``grafink_spark.benchqueries.REGISTRY``, in registration order) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": <float>}
 
-Timing is per-query wall time of plan + execute, best of
-$SPARK_GRAFT_BENCH_ITERS runs (default 2 — steady-state, JIT/cache
-warm); results are drained via collect (aggregates) or a noop-format
-write (large row sets) so the full plan executes without driver-side
-materialization.
+Timing is per-query wall time of plan + execute, the min over
+$SPARK_GRAFT_BENCH_ITERS pass-separated sweeps (default 2) plus the
+re-runs of :func:`sweep`. Each query is drained as its registry entry
+says: ``collect``, or a noop-format write for large row sets, so the
+full plan executes without driver-side materialization.
+
+Other settings: SPARK_GRAFT_BENCH_ONLY=q1,q2 (smoke subset, no
+artifact), SPARK_GRAFT_STRESS=0 / SPARK_GRAFT_STRESS_SCALE (scale-stress
+section), SPARK_GRAFT_SF1=0 / SPARK_GRAFT_SF1_DIR (sf1 section) and
+SPARK_GRAFT_ROUND (artifact, see ``_artifact_path``).
 """
 
 from __future__ import annotations
@@ -22,275 +28,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from grafink_spark.benchqueries import QUERIES  # noqa: E402
+from grafink_spark.benchqueries import REGISTRY  # noqa: E402
 from grafink_spark.session import get_spark  # noqa: E402
 
-# Headline set: grafink's core operator pipeline (similarity theta-join is
-# the documented bottleneck — docs/Benchmarks.md §3), the graph read
-# surface, plus the LLM-pipeline operators that dominate 100 TB work
-# (dedup, similarity search, text analysis).
-HEADLINE = [
-    "similarity_edges",
-    "similarity_multi",
-    "similarity_histogram",
-    "samevalue_clique",
-    "samevalue_new_old",
-    "twomode_direct",
-    "assign_ids",
-    "edge_degree",
-    "pricing_summary",
-    "shipping_priority",
-    "hourly_windows",
-    "user_sessions",
-    "asof_join",
-    "range_join",
-    "exact_dedup",
-    "minhash_signature",
-    "lsh_candidates",
-    "ssjoin_exact",
-    "simhash",
-    "embedding_topk",
-    "text_stats",
-    "repetition_signals",
-    "contamination",
-    "semantic_dedup",
-    # NOTE: semantic_dedup_auto times the ORACLE-PINNED expr pair
-    # backend (slow by declaration - bit-replayable in SQL); the
-    # PRODUCTION default (arrow) is the semantic_dedup_arrow /
-    # semantic_dedup_auto_arrow entries - read those as the
-    # production cost. (bench_results notes carry the same caveat.)
-    "semantic_dedup_auto",
-    "semantic_dedup_arrow",
-    "bm25_search",
-    "pagerank",
-    "chunk_dedup",
-    "lm_score",
-    "triangle_count",
-    "grouped_topk",
-    "sliding_windows",
-    "resample_ffill",
-    "doc_chunks",
-    "edit_distance_pairs",
-    "k_core",
-    "merge_upsert",
-    "approx_distinct",
-    "dup_ngram_spans",
-    "strip_dup_spans",
-    "dedup_provenance",
-    "bfs_distances",
-    "adamic_adar",
-    "shortest_paths",
-    "salted_join",
-    "local_supplier_volume",
-    "zorder_curve",
-    "token_budget_sample",
-    "dsir_select",
-    "semantic_contamination",
-    "bitext_mine",
-    "best_match",
-    "incremental_agg",
-    "weighted_sample",
-    "doc_keywords",
-    "bigram_pmi",
-    "session_windows",
-    "dataset_split",
-    "normalized_dedup",
-    "label_propagation",
-    "nb_classify",
-    "embedding_pca",
-    "hilbert_curve",
-    "per_group_cap",
-    "promo_revenue",
-    "disjunctive_revenue",
-    "returned_items",
-    "pca_components",
-    "scd2_lookup",
-    "asof_join_forward",
-    "graph_components",
-    "lang_quality_filter",
-    "ann_recall",
-    "phrase_merge",
-    "join_size_estimate",
-    "bloom_prefilter",
-    "priority_exists",
-    "kfold_assign",
-    "pack_sequences",
-    "seasonal_decompose",
-    "personalized_pagerank",
-    "betweenness",
-    "pareto_parts",
-    "pareto_suppliers",
-    "frequent_sequences",
-    "holt_trend",
-    "variant_dedup",
-    "ccnet_bucket_filter",
-    "rouge_pairs",
-    "bpe_apply",
-    "apss_cosine",
-    "cms_heavy_hitters",
-    "group_kfold",
-    "hard_triplets",
-    "length_batching",
-    "winsorize",
-    "hist_quantile_sketch",
-    "psi_drift",
-    "snapshot_diff",
-    "graph_modularity",
-    "semantic_contamination_ivf",
-    "gopher_filter",
-    "corpus_diversity",
-    "forecast_revenue",
-    "katz_centrality",
-    "woe_encoding",
-    "large_orders",
-    "order_count_distribution",
-    "top_supplier",
-    "zipf_fit",
-    "rolling_median",
-    "linear_attribution",
-    "quantized_topk",
-    "containment_pairs",
-    "minhash_estimate",
-    "hits_scores",
-    "drop_near_dups_best",
-    "event_transitions",
-    "readability",
-    "exact_median",
-    "mmr_topk",
-    "cusum_anomalies",
-    "hybrid_rrf",
-    "benford_audit",
-    "k_anonymity",
-    "ewma_daily",
-    "ranking_agreement",
-    "corpus_datasheet",
-    "label_noise",
-    "quantile_transform",
-    "vertex_jaccard",
-    "ewma_recursive",
-    "target_encoding",
-    "entropy_profile",
-    "neighbor_features",
-    "negative_edges",
-    "normalized_adjacency",
-]
-
-# Every registered query not in the curated HEADLINE ordering above is
-# benched too (round-3 ask: no registered query without a recorded
-# timing) — appended in sorted order so BENCH_r{N} covers the FULL
-# registry. Computed at import so newly registered queries can't be
-# silently dropped from the bench.
-EXTENDED = sorted(set(QUERIES) - set(HEADLINE))
-
-# Queries whose full row set is large: drain with a `noop`-format write
-# instead of .collect() — executes the complete plan (no column pruning
-# of the result, unlike count()) without materializing on the driver.
-NOOP_DRAIN = {
-    "user_sessions",
-    "asof_join",
-    "range_join",
-    "similarity_edges",
-    "similarity_multi",
-    "samevalue_clique",
-    "samevalue_new_old",
-    "twomode_direct",
-    "assign_ids",
-    "exact_dedup",
-    "minhash_signature",
-    "lsh_candidates",
-    "ssjoin_exact",
-    "repetition_signals",
-    "semantic_dedup",
-    "semantic_dedup_auto",
-    "semantic_dedup_arrow",
-    "simhash",
-    "text_stats",
-    "pagerank",
-    "chunk_dedup",
-    "lm_score",
-    "triangle_count",
-    "grouped_topk",
-    "sliding_windows",
-    "resample_ffill",
-    "doc_chunks",
-    "edit_distance_pairs",
-    "k_core",
-    "merge_upsert",
-    "dup_ngram_spans",
-    "strip_dup_spans",
-    "dedup_provenance",
-    "bfs_distances",
-    "adamic_adar",
-    "shortest_paths",
-    "salted_join",
-    "zorder_curve",
-    "token_budget_sample",
-    "best_match",
-    "doc_keywords",
-    "bigram_pmi",
-    "session_windows",
-    "normalized_dedup",
-    "label_propagation",
-    "nb_classify",
-    "hilbert_curve",
-    "per_group_cap",
-    "scd2_lookup",
-    "asof_join_forward",
-    "graph_components",
-    "lang_quality_filter",
-    "phrase_merge",
-    "bloom_prefilter",
-    "pack_sequences",
-    "personalized_pagerank",
-    "betweenness",
-    "rolling_median",
-    "containment_pairs",
-    "minhash_estimate",
-    "drop_near_dups_best",
-    "event_transitions",
-    "readability",
-    "ewma_daily",
-    "cusum_anomalies",
-    "label_noise",
-    "quantile_transform",
-    "vertex_jaccard",
-    "ewma_recursive",
-    "target_encoding",
-    "entropy_profile",
-    "neighbor_features",
-    "negative_edges",
-    "normalized_adjacency",
-}
-
-
-# Queries excluded from the sf1 section (module-level so the sf1
-# scaling harness, tools/sf1scale.py, times the identical set):
-# quadratic-by-semantics entries — similarity_multi's OUTPUT,
-# semantic_dedup's pinned-nlist pair space (the count-derived
-# semantic_dedup_auto runs in its dedicated block instead), and
-# label_noise's all-pairs kNN (O(n^2) cosines — the scale path is the
-# IVF/LSH ANN family, measured separately).
-SF1_SKIP = {
-    "similarity_multi",
-    "semantic_dedup",
-    "semantic_dedup_auto",  # timed by main()'s dedicated block
-    "label_noise",
-    # label-blocked ALL-PAIRS cosine: blocks grow linearly with
-    # sf, so within-block pair work is quadratic-by-semantics —
-    # the scale path is the LSH/IVF ANN family, timed above
-    "embedding_near_pairs",
-    # label_noise_ivf / bitext_mine_ivf run here since round 7:
-    # their nlist is COUNT-DERIVED (max(8, ceil(sqrt(N))), the
-    # oracle replays it as a scalar subquery), so the candidate
-    # volume is ~nprobe·N^1.5 — the round-6 pinned nlist=8 kept
-    # n²/2 candidates and hung at this scale.
-    # the forced-arrow twin keeps the APSS scale backend
-    # oracle-checked + sf0.1-timed; at sf1 the auto entry
-    # (apss_cosine) resolves to the ARROW backend (5.3M
-    # candidates ≥ the 500k floor, r9), so timing the twin here
-    # would measure the same plan twice.
-    "apss_cosine_arrow",
-}
+# Re-run budgets of sweep(): after the passes, the slowest N queries run
+# once more (slow-tail rerun), then up to M queries whose every sample
+# sat near a collapsed weather probe (weather rerun). sf0.1 / sf1.
+SF_RERUN, WEATHER_RERUN = 25, 60
+SF1_RERUN, SF1_WEATHER_RERUN = 20, 30
+# A probe with first-touch bandwidth below this (GB/s) is the documented
+# collapse signature: healthy probes read ~1-2 GB/s on the VM hosts
+# measured in r9-r10, degraded windows 0.01-0.05. Samples near such a
+# probe are weather-suspect.
+WEATHER_FRESH_MIN = 0.5
 
 
 def _artifact_path() -> str | None:
@@ -319,6 +69,152 @@ def _artifact_path() -> str | None:
     return path
 
 
+def loadavg1() -> float:
+    """1-min loadavg at query start: the per-query contention marker.
+    On the r9 bench VM's kernel it read 20+ while vmstat showed 100%
+    idle, so read it together with :func:`memweather`."""
+    try:
+        return round(os.getloadavg()[0], 1)
+    except OSError:
+        return -1.0
+
+
+def memweather() -> dict:
+    """Host memory "weather" probe (r9). Measured on the r9 bench VM:
+    copies between pre-touched buffers ran a stable ~16 GB/s, while
+    first-touch of freshly mmapped pages intermittently collapsed
+    30-100x (the host demand-allocates guest pages). Anything that grows memory mid-query
+    (JVM heap, Arrow/netty buffers, shuffle maps, Python-worker arenas)
+    can then run 2-10x slow with zero code cause.
+
+    fresh_gbps: bandwidth of faulting and writing a fresh 64 MB mapping
+    (numpy frees >128 KB blocks via munmap, so every call faults fresh
+    pages). touched_gbps: copy bandwidth between those now-touched
+    buffers. Healthy is about 1-2 / ~16."""
+    import numpy as np
+
+    sz = 1 << 26  # 64 MB
+    t0 = time.perf_counter()
+    a = np.ones(sz, dtype=np.uint8)
+    fresh = sz / max(time.perf_counter() - t0, 1e-9) / 1e9
+    b = np.ones(sz, dtype=np.uint8)
+    t0 = time.perf_counter()
+    np.copyto(b, a)
+    touched = sz / max(time.perf_counter() - t0, 1e-9) / 1e9
+    del a, b
+    return {"fresh_gbps": round(fresh, 2), "touched_gbps": round(touched, 1)}
+
+
+def probe(memw: list[dict], phase: str) -> float:
+    """Take one weather probe, record it in ``memw`` under ``phase`` and
+    return its fresh_gbps."""
+    w = memweather()
+    w["phase"] = phase
+    memw.append(w)
+    print(f"# memweather {phase}: {w}", file=sys.stderr)
+    return w["fresh_gbps"]
+
+
+def pretouch(spark, dir_: str) -> None:
+    """Full-scan every input table under ``dir_`` into the OS page
+    cache, so the first query over a cold table does not pay its IO and
+    per-query numbers do not depend on run order."""
+    from grafink_spark.sources.tables import TABLES, load_table
+
+    for t in TABLES:
+        try:
+            load_table(spark, dir_, t).write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass  # missing table at this sf: first query pays IO
+
+
+def run_once(spark, name: str, dir_: str) -> float:
+    q = REGISTRY[name]
+    t0 = time.perf_counter()
+    df = q.fn(spark, dir_)
+    if q.drain == "noop":
+        df.write.format("noop").mode("overwrite").save()
+    else:
+        df.collect()
+    return round(time.perf_counter() - t0, 3)
+
+
+def sweep(
+    spark,
+    dir_: str,
+    names: list[str],
+    memw: list[dict],
+    *,
+    passes: int,
+    rerun_n: int,
+    weather_cap: int,
+    tag: str,
+) -> tuple[dict, dict, dict, dict]:
+    """Time ``names`` at ``dir_``: ``passes`` pass-separated sweeps, a
+    re-run of the ``rerun_n`` slowest, then a re-run of up to
+    ``weather_cap`` queries whose every sample sat near a collapsed
+    weather probe. A weather probe (recorded in ``memw``) runs every 25
+    queries of a pass and every 10 re-runs.
+
+    Passes are separated (round-7 verdict): back-to-back iterations put
+    both samples of a query in one wall-clock window, so one burst of
+    external load poisoned both. The slow tail dominates the total, so
+    per second of re-run budget it is where residual contention distorts
+    a round-over-round diff most. A query whose every sample is
+    weather-suspect has an uninterpretable min until one sample lands in
+    a healthy window; that re-run is capped, slowest first, so a fully
+    degraded run cannot double the wall clock.
+
+    Returns ``(timings, samples, loadavgs, fresh)``: the per-query min,
+    every sample in run order, the loadavg at each sample's start and
+    the fresh_gbps of the probe before each sample (all index-aligned)."""
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    loadavgs: dict[str, list[float]] = {n: [] for n in names}
+    fresh: dict[str, list[float]] = {n: [] for n in names}
+    now = 0.0
+
+    def sample(name: str) -> float:
+        loadavgs[name].append(loadavg1())
+        fresh[name].append(now)
+        samples[name].append(run_once(spark, name, dir_))
+        return samples[name][-1]
+
+    for p in range(passes):
+        for i, name in enumerate(names):
+            if i % 25 == 0:
+                now = probe(memw, f"{tag} pass{p}@{i}")
+            t = sample(name)
+            print(f"# {tag} pass{p} {name}: {t:.3f}s", file=sys.stderr, flush=True)
+    timings = {n: min(s) for n, s in samples.items()}
+    now = probe(memw, f"{tag}_rerun")
+    slowest = sorted(timings, key=timings.get, reverse=True)
+    rerun = slowest[:rerun_n]
+    suspects = [
+        n
+        for n in slowest
+        if n not in rerun and all(f < WEATHER_FRESH_MIN for f in fresh[n])
+    ][:weather_cap]
+    if suspects:
+        print(f"# {tag} weather rerun: {len(suspects)} suspect queries", file=sys.stderr)
+    for j, name in enumerate(rerun + suspects):
+        if j and j % 10 == 0:
+            now = probe(memw, f"{tag}_rerun@{j}")
+        again = sample(name)
+        if again < timings[name]:
+            print(
+                f"# {tag} rerun {name}: {timings[name]:.3f}s -> {again:.3f}s",
+                file=sys.stderr,
+            )
+            timings[name] = again
+    return timings, samples, loadavgs, fresh
+
+
+def weather_ok(fresh: dict[str, list[float]]) -> dict[str, bool]:
+    """Per query: at least one sample was taken near a healthy probe.
+    False means every number for that query is weather-band."""
+    return {n: any(f >= WEATHER_FRESH_MIN for f in fs) for n, fs in fresh.items()}
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -329,201 +225,39 @@ def main() -> int:
 
     # Warm the JVM/parquet footers once so per-query numbers measure the
     # queries, not session startup.
-    QUERIES["max_id"](spark, sf_dir).collect()
+    REGISTRY["max_id"].fn(spark, sf_dir).collect()
 
     # floor of 1: zero iterations would leave every sample list empty
     # and min() would crash after the warm-up scans already ran
     iters = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "2")))
-    # Smoke-run subset: SPARK_GRAFT_BENCH_ONLY=q1,q2 limits the headline
-    # set (local iteration / CI smoke); unset = full headline set.
-    all_names = HEADLINE + EXTENDED
+    # Smoke-run subset: SPARK_GRAFT_BENCH_ONLY=q1,q2 limits the run to
+    # those queries (local iteration / CI smoke); unset = full registry.
+    names = list(REGISTRY)
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:
         wanted = {n.strip() for n in only.split(",") if n.strip()}
-        headline = [q for q in all_names if q in wanted]
-        unknown = wanted - set(all_names)
+        unknown = wanted - set(names)
+        names = [q for q in names if q in wanted]
         if unknown:
             print(f"# BENCH_ONLY: not registered: {sorted(unknown)}", file=sys.stderr)
-    else:
-        headline = all_names
     artifact_file = None if only else _artifact_path()
     if not only:
-        # Pre-touch every input table (full scan into the OS page
-        # cache): the first query to read a cold multi-MB table
-        # otherwise pays its IO, so per-query numbers would depend on
-        # bench ORDER — the apss_cosine driver-vs-builder gap in round
-        # 3 was exactly this first-touch effect inside the driver's
-        # single-session sweep. Skipped for BENCH_ONLY smoke subsets
-        # (10 full scans would dominate a 1-query run; best-of-iters
-        # absorbs the first-touch there).
-        from grafink_spark.sources.tables import TABLES, load_table  # noqa: E402
-
-        for t in TABLES:
-            try:
-                load_table(spark, sf_dir, t).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass  # missing table at this sf: first query pays IO
-    def loadavg1() -> float:
-        # 1-min loadavg at query start: the per-query contention marker
-        # (round-5 verdict ask #5 — ~66 s of that round's driver
-        # headline was machine noise diagnosable only by hand). On a
-        # 32-core box, loadavg >> 32 while a query runs means OTHER
-        # processes were competing for the cores. CAVEAT (measured r9):
-        # on this VM's kernel loadavg reads 20+ while vmstat shows 100%
-        # idle and zero D-state threads — it decays over ~15 min and
-        # cannot adjudicate contention alone; read it together with the
-        # memweather probe below.
-        try:
-            return round(os.getloadavg()[0], 1)
-        except OSError:
-            return -1.0
-
-    def memweather() -> dict:
-        # Host memory "weather" probe (r9). Measured on this VM:
-        # copies between PRE-TOUCHED buffers run a rock-stable
-        # ~16 GB/s, while FIRST-TOUCH of freshly mmapped pages
-        # intermittently collapses 30-100x (a 256 MB first-touch copy
-        # swung 0.37 s - 11.7 s across consecutive minutes on an idle
-        # guest) — the host demand-allocates guest pages and its fault
-        # path is sometimes pathologically slow. Anything that grows
-        # memory mid-query (JVM heap expansion, Arrow/netty buffers,
-        # shuffle maps, fresh Python-worker arenas) can therefore run
-        # 2-10x slow with zero code cause; identical queries measured
-        # 16.6 / 29.6 / 34 / 68 / 107 s across idle same-code sessions
-        # while a cache-resident CPU loop stayed within 10%. This is
-        # the measured mechanism behind the r7 "contention stretch",
-        # r8's cms_heavy_hitters flag, and the skew-pair bimodality.
-        # fresh_gbps: MB/ms of faulting+writing a fresh 64 MB mapping
-        # (numpy frees >128 KB blocks via munmap, so every probe call
-        # faults genuinely fresh pages). touched_gbps: copy bandwidth
-        # between those now-touched buffers. Healthy ≈ 1-2 / ~16;
-        # fresh_gbps << 0.5 = bad weather for every sample near it.
-        import numpy as np
-
-        sz = 1 << 26  # 64 MB
-        t0 = time.perf_counter()
-        a = np.ones(sz, dtype=np.uint8)
-        fresh = sz / max(time.perf_counter() - t0, 1e-9) / 1e9
-        b = np.ones(sz, dtype=np.uint8)
-        t0 = time.perf_counter()
-        np.copyto(b, a)
-        touched = sz / max(time.perf_counter() - t0, 1e-9) / 1e9
-        del a, b
-        return {
-            "fresh_gbps": round(fresh, 2),
-            "touched_gbps": round(touched, 1),
-        }
+        # Skipped for BENCH_ONLY smoke subsets: 10 full scans would
+        # dominate a 1-query run, and best-of-iters absorbs first-touch.
+        pretouch(spark, sf_dir)
 
     memw: list[dict] = []
-    # fresh_gbps of the most recent probe: every sample taken after a
-    # probe is tagged with it, so the artifact can tell "this number
-    # was measured inside a degraded-bandwidth window" mechanically
-    # instead of by hand (r9 verdict ask #1 — three rounds of
-    # adjudication were spent reconstructing exactly this by eye).
-    last_fresh = [0.0]
-    # a probe below this is the documented collapse signature (healthy
-    # first-touch is ~1-2 GB/s on this VM; degraded windows read
-    # 0.01-0.05). Samples near such a probe are weather-suspect.
-    WEATHER_FRESH_MIN = float(
-        os.environ.get("SPARK_GRAFT_WEATHER_FRESH_MIN", "0.5")
+    timings, samples, loadavgs, sample_fresh = sweep(
+        spark,
+        sf_dir,
+        names,
+        memw,
+        passes=iters,
+        rerun_n=SF_RERUN,
+        weather_cap=WEATHER_RERUN,
+        tag="sf",
     )
-
-    def weather(phase: str) -> float:
-        w = memweather()
-        w["phase"] = phase
-        memw.append(w)
-        last_fresh[0] = w["fresh_gbps"]
-        print(f"# memweather {phase}: {w}", file=sys.stderr)
-        return last_fresh[0]
-
-    def run_once(name: str, dir_: str) -> float:
-        fn = QUERIES[name]
-        t0 = time.perf_counter()
-        df = fn(spark, dir_)
-        # EXTENDED entries drain via noop too: executes the full
-        # plan with zero driver-side materialization regardless of
-        # result size.
-        if name in NOOP_DRAIN or name in EXTENDED:
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.collect()
-        return round(time.perf_counter() - t0, 3)
-
-    # Pass-SEPARATED iterations (round-7 verdict Missing #1): the old
-    # per-query back-to-back best-of-2 put both samples of a query
-    # inside the same wall-clock window, so one multi-minute burst of
-    # external load poisoned BOTH iterations of every query it
-    # overlapped — bench_diff's own detector flagged 36 spurious r07
-    # "regressions" in one contiguous run-order stretch. Running each
-    # iteration as its own full sweep puts the whole suite's duration
-    # between a query's samples; a contention window would have to
-    # recur at the same run-order position to survive the min. Same
-    # total work as before — the iterations are reordered, not added.
-    samples: dict[str, list[float]] = {name: [] for name in headline}
-    loadavgs: dict[str, list[float]] = {name: [] for name in headline}
-    # fresh_gbps of the probe nearest (before) each sample, index-
-    # aligned with samples[q] — the per-sample weather tag (r10)
-    sample_fresh: dict[str, list[float]] = {name: [] for name in headline}
-    for p in range(iters):
-        for i, name in enumerate(headline):
-            if i % 25 == 0:
-                weather(f"pass{p}@{i}")
-            loadavgs[name].append(loadavg1())
-            sample_fresh[name].append(last_fresh[0])
-            t = run_once(name, sf_dir)
-            samples[name].append(t)
-            print(f"# pass{p} {name}: {t:.3f}s", file=sys.stderr)
-    timings = {n: round(min(s), 3) for n, s in samples.items()}
-    # Third safeguard, mirroring the sf1 loop: one extra run of the
-    # slowest N — they dominate the headline total, so per second of
-    # re-run budget they are where residual contention distorts the
-    # round-over-round diff most. Every observation stays in `samples`
-    # (the artifact records them all; `queries` is the per-query min).
-    rerun_n = int(os.environ.get("SPARK_GRAFT_SF_RERUN", "25"))
-    weather("sf_rerun")
-    rerun = sorted(timings, key=timings.get, reverse=True)[:rerun_n]
-    # Weather gate (r10, r9 verdict ask #1): any query whose EVERY
-    # sample so far was taken near a collapsed probe
-    # (fresh < WEATHER_FRESH_MIN) gets a re-run slot too — its min is
-    # uninterpretable until at least one sample lands in an OK window.
-    # Capped (slowest first, they dominate the total) so a fully
-    # degraded run cannot double the driver's wall clock.
-    wcap = int(os.environ.get("SPARK_GRAFT_WEATHER_RERUN", "60"))
-    suspects = [
-        n
-        for n in sorted(timings, key=timings.get, reverse=True)
-        if n not in rerun
-        and all(f < WEATHER_FRESH_MIN for f in sample_fresh[n])
-    ][:wcap]
-    if suspects:
-        print(
-            f"# weather rerun: {len(suspects)} suspect queries",
-            file=sys.stderr,
-        )
-    for j, name in enumerate(rerun + suspects):
-        # loadavg recorded for the re-run too: samples[q] and
-        # loadavgs[q] stay index-aligned, so a reader can tell which
-        # load was behind whichever sample became the kept min
-        if j and j % 10 == 0:
-            weather(f"sf_rerun@{j}")
-        loadavgs[name].append(loadavg1())
-        sample_fresh[name].append(last_fresh[0])
-        again = run_once(name, sf_dir)
-        samples[name].append(again)
-        if again < timings[name]:
-            print(
-                f"# rerun {name}: {timings[name]:.3f}s -> {again:.3f}s",
-                file=sys.stderr,
-            )
-            timings[name] = again
-    # per-query verdict: at least one sample was taken near a healthy
-    # probe. False means every number for this query is weather-band.
-    weather_ok = {
-        n: any(f >= WEATHER_FRESH_MIN for f in sample_fresh[n])
-        for n in headline
-    }
+    sf_weather_ok = weather_ok(sample_fresh)
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -554,7 +288,7 @@ def main() -> int:
             "pagerank_double": 0.25 * stress_scale,
         }
         # Two pass-separated sweeps, min kept (same rationale as the
-        # headline loop): stress entries were single-shot, and both
+        # registry sweep): stress entries were single-shot, and both
         # r07 and r08 artifacts carried a contended skew-pair number
         # that needed a hand re-run to explain. All samples recorded,
         # each with its loadavg (r9 — the skew-pair "bimodality" the
@@ -567,7 +301,7 @@ def main() -> int:
         stress: dict[str, float] = {}
         stress_samples: dict[str, list[float]] = {n: [] for n in STRESS}
         stress_loadavg: dict[str, list[float]] = {n: [] for n in STRESS}
-        weather("stress")
+        probe(memw, "stress")
 
         def stress_once(name: str, fn) -> None:
             stress_loadavg[name].append(loadavg1())
@@ -602,98 +336,31 @@ def main() -> int:
         out["scale_stress_samples"] = stress_samples
         out["scale_stress_loadavg"] = stress_loadavg
 
-    # sf1 section: the headline set at 10× the default scale, over data
-    # synthesized from sf0.1 by key-offset replication (sfgen.py,
+    # sf1 section: every sf1=True query at 10× the default scale, over
+    # data synthesized from sf0.1 by key-offset replication (sfgen.py,
     # generated once and cached in-repo) — catches operators whose
-    # constants hide at small scale. One iteration (throughput check,
-    # not a steady-state microbenchmark). Excluded: similarity_multi
-    # (threshold-branch OUTPUT is quadratic in sf — the query's
-    # semantics) and semantic_dedup (its oracle pins nlist=8, so the
-    # per-cluster pair space grows quadratically with the corpus; the
-    # count-derived-nlist default is timed separately below as
-    # semantic_dedup_auto). SPARK_GRAFT_SF1=0 skips.
+    # constants hide at small scale. One pass (throughput check, not a
+    # steady-state microbenchmark); the registry's sf1=False entries are
+    # quadratic by semantics. semantic_dedup's count-derived-nlist
+    # default is timed separately below as semantic_dedup_auto.
+    # SPARK_GRAFT_SF1=0 skips.
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
         from grafink_spark.sfgen import ensure  # noqa: E402
 
         sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR") or ensure()
         if not only:
-            # pre-touch sf1 tables into the OS page cache (mirrors the
-            # sf0.1 loop): three rounds running, the biggest "sf1
-            # regressions" were first-touch IO + machine noise in
-            # whichever queries ran first over a cold table
-            from grafink_spark.sources.tables import TABLES, load_table
-
-            for t in TABLES:
-                try:
-                    load_table(spark, sf1_dir, t).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception:
-                    pass
-        sf1_timings: dict[str, float] = {}
-        weather("sf1")
-        sf1_skip = SF1_SKIP
-        sf1_samples: dict[str, list[float]] = {}
-        sf1_loadavgs: dict[str, list[float]] = {}
-        sf1_fresh: dict[str, list[float]] = {}
-        for i, name in enumerate([q for q in headline if q not in sf1_skip]):
-            if i and i % 25 == 0:
-                weather(f"sf1@{i}")
-            sf1_loadavgs[name] = [loadavg1()]
-            sf1_fresh[name] = [last_fresh[0]]
-            # run_once drains EXTENDED via noop here too — mirrors the
-            # sf0.1 loop, so the two sections time the same work and a
-            # wide-result EXTENDED query can't OOM the driver at sf1
-            sf1_timings[name] = run_once(name, sf1_dir)
-            sf1_samples[name] = [sf1_timings[name]]
-            print(f"# sf1 {name}: {sf1_timings[name]:.3f}s", file=sys.stderr)
-        # Single-iteration sf1 numbers are noisy (round-6 verdict ask
-        # #5: spurious 2-4x "regressions" in untouched code every
-        # round). Re-run the slowest N once and keep the min — the
-        # slow tail is where one contended iteration distorts the
-        # round-over-round diff the most per second of re-run budget.
-        # BOTH observations land in the artifact's sf1_samples (the
-        # round-7 advisor flagged that silently keeping the min both
-        # hides the policy from cross-round comparisons and can mask
-        # real contention); sf1 stays the per-query min.
-        rerun_n = int(os.environ.get("SPARK_GRAFT_SF1_RERUN", "20"))
-        weather("sf1_rerun")
-        sf1_rerun = sorted(
-            sf1_timings, key=sf1_timings.get, reverse=True
-        )[:rerun_n]
-        # weather gate, mirroring the sf0.1 pass: single-sample sf1
-        # rows whose one observation sits in a collapsed window get a
-        # second chance (slowest first, capped)
-        wcap1 = int(os.environ.get("SPARK_GRAFT_SF1_WEATHER_RERUN", "30"))
-        sf1_suspects = [
-            n
-            for n in sorted(sf1_timings, key=sf1_timings.get, reverse=True)
-            if n not in sf1_rerun
-            and all(f < WEATHER_FRESH_MIN for f in sf1_fresh[n])
-        ][:wcap1]
-        if sf1_suspects:
-            print(
-                f"# sf1 weather rerun: {len(sf1_suspects)} suspect queries",
-                file=sys.stderr,
-            )
-        for j, name in enumerate(sf1_rerun + sf1_suspects):
-            if j and j % 10 == 0:
-                weather(f"sf1_rerun@{j}")
-            sf1_loadavgs[name].append(loadavg1())
-            sf1_fresh[name].append(last_fresh[0])
-            again = run_once(name, sf1_dir)
-            sf1_samples[name].append(again)
-            if again < sf1_timings[name]:
-                print(
-                    f"# sf1 rerun {name}: {sf1_timings[name]:.3f}s -> "
-                    f"{again:.3f}s",
-                    file=sys.stderr,
-                )
-                sf1_timings[name] = again
-        sf1_weather_ok = {
-            n: any(f >= WEATHER_FRESH_MIN for f in fs)
-            for n, fs in sf1_fresh.items()
-        }
+            pretouch(spark, sf1_dir)
+        sf1_timings, sf1_samples, sf1_loadavgs, sf1_fresh = sweep(
+            spark,
+            sf1_dir,
+            [q for q in names if REGISTRY[q].sf1],
+            memw,
+            passes=1,
+            rerun_n=SF1_RERUN,
+            weather_cap=SF1_WEATHER_RERUN,
+            tag="sf1",
+        )
+        sf1_weather_ok = weather_ok(sf1_fresh)
         # semantic dedup at the API default: count-derived nlist
         # (max(8, ceil(N/target_per_list)) — per-vector pair work
         # constant as the corpus grows)
@@ -737,9 +404,9 @@ def main() -> int:
     # #4: "lossless by design" is only a defensible cost while the
     # prefix filter discriminates, and timings alone can't show that).
     # Diagnostics pass OUTSIDE the timed loops; skipped for smoke
-    # subsets. SPARK_GRAFT_FILTER_STATS=0 skips.
+    # subsets.
     filter_stats: dict[str, dict] = {}
-    if not only and os.environ.get("SPARK_GRAFT_FILTER_STATS", "1") != "0":
+    if not only:
         from grafink_spark.llm.dedup import (  # noqa: E402
             apss_filter_stats,
             ssjoin_filter_stats,
@@ -768,7 +435,7 @@ def main() -> int:
         out["filter_stats"] = filter_stats
 
     if not only:
-        weather("end")
+        probe(memw, "end")
     if artifact_file:
         artifact = {
             "round": int(os.environ["SPARK_GRAFT_ROUND"]),
@@ -791,8 +458,8 @@ def main() -> int:
             # taken inside a collapsed-bandwidth window and its number
             # is weather-band, not steady state
             "sample_fresh": sample_fresh,
-            "weather_ok": weather_ok,
-            "run_order": headline,
+            "weather_ok": sf_weather_ok,
+            "run_order": names,
             "notes": {
                 "methodology": (
                     "since round 8 the sf0.1 iterations run as "
@@ -822,7 +489,7 @@ def main() -> int:
                     "r10: sample_fresh tags every sample with the "
                     "nearest probe's fresh_gbps; queries whose every "
                     "sample sat near a probe under "
-                    "SPARK_GRAFT_WEATHER_FRESH_MIN (default 0.5) are "
+                    "WEATHER_FRESH_MIN (0.5) are "
                     "re-run in the slow-tail pass (capped, slowest "
                     "first) and flagged weather_ok=false if still "
                     "unconfirmed; the one-line JSON adds weather_ok / "
@@ -867,7 +534,7 @@ def main() -> int:
     # collapse" mechanically.
     fresh_all = sorted(w["fresh_gbps"] for w in memw)
     fresh_median = fresh_all[len(fresh_all) // 2] if fresh_all else -1.0
-    n_suspect = sum(1 for v in weather_ok.values() if not v)
+    n_suspect = sum(1 for v in sf_weather_ok.values() if not v)
     if "sf1" in out:
         n_suspect += sum(1 for v in sf1_weather_ok.values() if not v)
     out["weather_ok"] = fresh_median >= WEATHER_FRESH_MIN

@@ -1,12 +1,14 @@
 """The engine's declared query inventory — one entry per operator from
 SURVEY §2 plus the LLM-pipeline operators — with ANSI-SQL oracles.
 
-Every entry is a pair:
+Every entry is one :func:`register` call that declares:
 
 - a Spark callable ``(spark, sf_dir) -> DataFrame`` exercising the real
   engine code path (classifier rules, dedup operators, …) over the
-  driver's test tables, and
-- a DuckDB oracle SQL string computing the same result.
+  driver's test tables;
+- a DuckDB oracle SQL string computing the same result;
+- how ``bench.py`` drains it (``noop`` write or ``collect``) and
+  whether its sf1 section runs it.
 
 Parity rules used throughout (both engines must produce identical
 value hashes):
@@ -23,6 +25,7 @@ value hashes):
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -57,6 +60,40 @@ from grafink_spark.streaming.sessionize import sessionize_batch
 from grafink_spark.util import ensure_min_partitions, maybe_broadcast, pin
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+@dataclass(frozen=True)
+class Query:
+    """One registered query. ``drain`` is how ``bench.py`` executes the
+    full plan: ``noop`` writes to the noop sink (no driver-side rows,
+    for large results), ``collect`` collects. ``sf1=False`` keeps it
+    out of the sf1 sweep (quadratic-by-semantics pair spaces)."""
+
+    fn: QueryFn
+    oracle: str
+    drain: str
+    sf1: bool
+
+
+# Filled only by register(), in registration order (= bench run order).
+REGISTRY: dict[str, Query] = {}
+QUERIES: dict[str, QueryFn] = {}
+ORACLES: dict[str, str] = {}
+
+
+def register(
+    name: str, fn: QueryFn, oracle: str, *, drain: str = "noop", sf1: bool = True
+) -> None:
+    """Declare query ``name``: its Spark callable, its DuckDB oracle and
+    its bench metadata (see :class:`Query`)."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} registered twice")
+    if drain not in ("noop", "collect"):
+        raise ValueError(f"query {name!r}: drain must be noop or collect, not {drain!r}")
+    REGISTRY[name] = Query(fn, oracle, drain, sf1)
+    QUERIES[name] = fn
+    ORACLES[name] = oracle
+
 
 # ----------------------------------------------------------------- helpers
 
@@ -3132,185 +3169,108 @@ FROM j WHERE edit_ratio <= 0.2
 # registry
 # =================================================================
 
-QUERIES: dict[str, QueryFn] = {
-    "project_derive": q_project_derive,
-    "partition_prune": q_partition_prune,
-    "assign_ids": q_assign_ids,
-    "max_id": q_max_id,
-    "samevalue_clique": q_samevalue_clique,
-    "samevalue_new_old": q_samevalue_new_old,
-    "similarity_edges": q_similarity_edges,
-    "similarity_multi": q_similarity_multi,
-    "similarity_histogram": q_similarity_histogram,
-    "twomode_direct": q_twomode_direct,
-    "twomode_catalog": q_twomode_catalog,
-    "edge_degree": q_edge_degree,
-    "delete_antijoin": q_delete_antijoin,
-    "count_by_label": q_count_by_label,
-    "point_lookup": q_point_lookup,
-    "top_docs": q_top_docs,
-    "pricing_summary": q_pricing_summary,
-    "segment_revenue": q_segment_revenue,
-    "shipping_priority": q_shipping_priority,
-    "hourly_windows": q_hourly_windows,
-    "asof_join": q_asof_join,
-    "range_join": q_range_join,
-    "user_sessions": q_user_sessions,
-    "exact_dedup": q_exact_dedup,
-    "fingerprint_dups": q_fingerprint_dups,
-    "minhash_signature": q_minhash_signature,
-    "lsh_candidates": q_lsh_candidates,
-    "jaccard_pairs": q_jaccard_pairs,
-    "containment_pairs": q_containment_pairs,
-    "minhash_estimate": q_minhash_estimate,
-    "drop_near_dups_best": q_drop_near_dups_best,
-    "event_transitions": q_event_transitions,
-    "readability": q_readability,
-    "exact_median": q_exact_median,
-    "near_dup_components": q_near_dup_components,
-    "drop_near_dups": q_drop_near_dups,
-    "simhash": q_simhash,
-    "simhash_near_dups": q_simhash_near_dups,
-    "embedding_topk": q_embedding_topk,
-    "embedding_near_pairs": q_embedding_near_pairs,
-    "text_stats": q_text_stats,
-    "word_token_stats": q_word_token_stats,
-    "lang_id": q_lang_id,
-    "prepare_corpus": q_prepare_corpus,
-    "shard_packing": q_shard_packing,
-    "stratified_sample": q_stratified_sample,
-    "media_features": q_media_features,
-    "audio_features": q_audio_features,
-    "embedding_lsh_topk": q_embedding_lsh_topk,
-    "embedding_ivf_topk": q_embedding_ivf_topk,
-    "embedding_ivf_indexed": q_embedding_ivf_indexed,
-    "repetition_signals": q_repetition_signals,
-    "pii_redact": q_pii_redact,
-    "semantic_dedup": q_semantic_dedup,
-    "contamination": q_contamination,
-    "bm25_search": q_bm25_search,
-    "prepare_corpus_full": q_prepare_corpus_full,
-    "video_frames": q_video_frames,
-    "top_bigrams": q_top_bigrams,
-    "incremental_dedup": q_incremental_dedup,
-    "pagerank": q_pagerank,
-    "auto_stopwords": q_auto_stopwords,
-    "chunk_dedup": q_chunk_dedup,
-    "triangle_count": q_triangle_count,
-    "lm_score": q_lm_score,
-    "grouped_topk": q_grouped_topk,
-    "zscore_outliers": q_zscore_outliers,
-    "quantile_filter": q_quantile_filter,
-    "column_profile": q_column_profile,
-    "mixture_sample": q_mixture_sample,
-    "rollup_summary": q_rollup_summary,
-    "group_percentiles": q_group_percentiles,
-    "value_histogram": q_value_histogram,
-    "latest_by_key": q_latest_by_key,
-    "inverted_index": q_inverted_index,
-    "sliding_windows": q_sliding_windows,
-    "resample_ffill": q_resample_ffill,
-    "funnel": q_funnel,
-    "cohort_retention": q_cohort_retention,
-    "doc_chunks": q_doc_chunks,
-    "edit_distance_pairs": q_edit_distance_pairs,
-    "k_core": q_k_core,
-    "props_extract": q_props_extract,
-    "interval_join": q_interval_join,
-    "rolling_avg": q_rolling_avg,
-    "quality_deciles": q_quality_deciles,
-}
-
-ORACLES: dict[str, str] = {
-    "project_derive": SQL_PROJECT_DERIVE,
-    "partition_prune": SQL_PARTITION_PRUNE,
-    "assign_ids": SQL_ASSIGN_IDS,
-    "max_id": SQL_MAX_ID,
-    "samevalue_clique": SQL_SAMEVALUE_CLIQUE,
-    "samevalue_new_old": SQL_SAMEVALUE_NEW_OLD,
-    "similarity_edges": SQL_SIMILARITY_EDGES,
-    "similarity_multi": SQL_SIMILARITY_MULTI,
-    "similarity_histogram": SQL_SIMILARITY_HISTOGRAM,
-    "twomode_direct": SQL_TWOMODE_DIRECT,
-    "twomode_catalog": SQL_TWOMODE_CATALOG,
-    "edge_degree": SQL_EDGE_DEGREE,
-    "delete_antijoin": SQL_DELETE_ANTIJOIN,
-    "count_by_label": SQL_COUNT_BY_LABEL,
-    "point_lookup": SQL_POINT_LOOKUP,
-    "top_docs": SQL_TOP_DOCS,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "segment_revenue": SQL_SEGMENT_REVENUE,
-    "shipping_priority": SQL_SHIPPING_PRIORITY,
-    "hourly_windows": SQL_HOURLY_WINDOWS,
-    "asof_join": SQL_ASOF_JOIN,
-    "range_join": SQL_RANGE_JOIN,
-    "user_sessions": SQL_USER_SESSIONS,
-    "exact_dedup": SQL_EXACT_DEDUP,
-    "fingerprint_dups": SQL_FINGERPRINT_DUPS,
-    "minhash_signature": SQL_MINHASH_SIGNATURE,
-    "lsh_candidates": SQL_LSH_CANDIDATES,
-    "jaccard_pairs": SQL_JACCARD_PAIRS,
-    "containment_pairs": SQL_CONTAINMENT_PAIRS,
-    "minhash_estimate": SQL_MINHASH_ESTIMATE,
-    "drop_near_dups_best": SQL_DROP_NEAR_DUPS_BEST,
-    "event_transitions": SQL_EVENT_TRANSITIONS,
-    "readability": SQL_READABILITY,
-    "exact_median": SQL_EXACT_MEDIAN,
-    "near_dup_components": SQL_NEAR_DUP_COMPONENTS,
-    "drop_near_dups": SQL_DROP_NEAR_DUPS,
-    "simhash": SQL_SIMHASH,
-    "simhash_near_dups": SQL_SIMHASH_NEAR_DUPS,
-    "embedding_topk": SQL_EMBEDDING_TOPK,
-    "embedding_near_pairs": SQL_EMBEDDING_NEAR_PAIRS,
-    "text_stats": SQL_TEXT_STATS,
-    "word_token_stats": SQL_WORD_TOKEN_STATS,
-    "lang_id": SQL_LANG_ID,
-    "prepare_corpus": SQL_PREPARE_CORPUS,
-    "shard_packing": SQL_SHARD_PACKING,
-    "stratified_sample": SQL_STRATIFIED_SAMPLE,
-    "media_features": SQL_MEDIA_FEATURES,
-    "audio_features": SQL_AUDIO_FEATURES,
-    "embedding_lsh_topk": SQL_EMBEDDING_LSH_TOPK,
-    "embedding_ivf_topk": SQL_EMBEDDING_IVF_TOPK,
-    # the persisted-index search is exact w.r.t. the inline IVF with the
-    # same parameters, so it shares the same SQL replay oracle
-    "embedding_ivf_indexed": SQL_EMBEDDING_IVF_TOPK,
-    "repetition_signals": SQL_REPETITION_SIGNALS,
-    "pii_redact": SQL_PII_REDACT,
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "contamination": SQL_CONTAMINATION,
-    "bm25_search": SQL_BM25_SEARCH,
-    "prepare_corpus_full": SQL_PREPARE_CORPUS_FULL,
-    "video_frames": SQL_VIDEO_FRAMES,
-    "top_bigrams": SQL_TOP_BIGRAMS,
-    "incremental_dedup": SQL_INCREMENTAL_DEDUP,
-    "pagerank": SQL_PAGERANK,
-    "auto_stopwords": SQL_AUTO_STOPWORDS,
-    "chunk_dedup": SQL_CHUNK_DEDUP,
-    "triangle_count": SQL_TRIANGLE_COUNT,
-    "lm_score": SQL_LM_SCORE,
-    "grouped_topk": SQL_GROUPED_TOPK,
-    "zscore_outliers": SQL_ZSCORE_OUTLIERS,
-    "quantile_filter": SQL_QUANTILE_FILTER,
-    "column_profile": SQL_COLUMN_PROFILE,
-    "mixture_sample": SQL_MIXTURE_SAMPLE,
-    "rollup_summary": SQL_ROLLUP_SUMMARY,
-    "group_percentiles": SQL_GROUP_PERCENTILES,
-    "value_histogram": SQL_VALUE_HISTOGRAM,
-    "latest_by_key": SQL_LATEST_BY_KEY,
-    "inverted_index": SQL_INVERTED_INDEX,
-    "sliding_windows": SQL_SLIDING_WINDOWS,
-    "resample_ffill": SQL_RESAMPLE_FFILL,
-    "funnel": SQL_FUNNEL,
-    "cohort_retention": SQL_COHORT_RETENTION,
-    "doc_chunks": SQL_DOC_CHUNKS,
-    "edit_distance_pairs": SQL_EDIT_DISTANCE_PAIRS,
-    "k_core": SQL_K_CORE,
-    "props_extract": SQL_PROPS_EXTRACT,
-    "interval_join": SQL_INTERVAL_JOIN,
-    "rolling_avg": SQL_ROLLING_AVG,
-    "quality_deciles": SQL_QUALITY_DECILES,
-}
+register("project_derive", q_project_derive, SQL_PROJECT_DERIVE)
+register("partition_prune", q_partition_prune, SQL_PARTITION_PRUNE)
+register("assign_ids", q_assign_ids, SQL_ASSIGN_IDS)
+register("max_id", q_max_id, SQL_MAX_ID)
+register("samevalue_clique", q_samevalue_clique, SQL_SAMEVALUE_CLIQUE)
+register("samevalue_new_old", q_samevalue_new_old, SQL_SAMEVALUE_NEW_OLD)
+register("similarity_edges", q_similarity_edges, SQL_SIMILARITY_EDGES)
+# not at sf1: the threshold-branch OUTPUT is quadratic in sf
+register("similarity_multi", q_similarity_multi, SQL_SIMILARITY_MULTI, sf1=False)
+register(
+    "similarity_histogram",
+    q_similarity_histogram,
+    SQL_SIMILARITY_HISTOGRAM,
+    drain="collect",
+)
+register("twomode_direct", q_twomode_direct, SQL_TWOMODE_DIRECT)
+register("twomode_catalog", q_twomode_catalog, SQL_TWOMODE_CATALOG)
+register("edge_degree", q_edge_degree, SQL_EDGE_DEGREE, drain="collect")
+register("delete_antijoin", q_delete_antijoin, SQL_DELETE_ANTIJOIN)
+register("count_by_label", q_count_by_label, SQL_COUNT_BY_LABEL)
+register("point_lookup", q_point_lookup, SQL_POINT_LOOKUP)
+register("top_docs", q_top_docs, SQL_TOP_DOCS)
+register("pricing_summary", q_pricing_summary, SQL_PRICING_SUMMARY, drain="collect")
+register("segment_revenue", q_segment_revenue, SQL_SEGMENT_REVENUE)
+register(
+    "shipping_priority", q_shipping_priority, SQL_SHIPPING_PRIORITY, drain="collect"
+)
+register("hourly_windows", q_hourly_windows, SQL_HOURLY_WINDOWS, drain="collect")
+register("asof_join", q_asof_join, SQL_ASOF_JOIN)
+register("range_join", q_range_join, SQL_RANGE_JOIN)
+register("user_sessions", q_user_sessions, SQL_USER_SESSIONS)
+register("exact_dedup", q_exact_dedup, SQL_EXACT_DEDUP)
+register("fingerprint_dups", q_fingerprint_dups, SQL_FINGERPRINT_DUPS)
+register("minhash_signature", q_minhash_signature, SQL_MINHASH_SIGNATURE)
+register("lsh_candidates", q_lsh_candidates, SQL_LSH_CANDIDATES)
+register("jaccard_pairs", q_jaccard_pairs, SQL_JACCARD_PAIRS)
+register("containment_pairs", q_containment_pairs, SQL_CONTAINMENT_PAIRS)
+register("minhash_estimate", q_minhash_estimate, SQL_MINHASH_ESTIMATE)
+register("drop_near_dups_best", q_drop_near_dups_best, SQL_DROP_NEAR_DUPS_BEST)
+register("event_transitions", q_event_transitions, SQL_EVENT_TRANSITIONS)
+register("readability", q_readability, SQL_READABILITY)
+register("exact_median", q_exact_median, SQL_EXACT_MEDIAN, drain="collect")
+register("near_dup_components", q_near_dup_components, SQL_NEAR_DUP_COMPONENTS)
+register("drop_near_dups", q_drop_near_dups, SQL_DROP_NEAR_DUPS)
+register("simhash", q_simhash, SQL_SIMHASH)
+register("simhash_near_dups", q_simhash_near_dups, SQL_SIMHASH_NEAR_DUPS)
+register("embedding_topk", q_embedding_topk, SQL_EMBEDDING_TOPK, drain="collect")
+# not at sf1: label-blocked all-pairs cosine, blocks grow linearly with
+# sf (the scale path is the LSH/IVF ANN family)
+register(
+    "embedding_near_pairs", q_embedding_near_pairs, SQL_EMBEDDING_NEAR_PAIRS, sf1=False
+)
+register("text_stats", q_text_stats, SQL_TEXT_STATS)
+register("word_token_stats", q_word_token_stats, SQL_WORD_TOKEN_STATS)
+register("lang_id", q_lang_id, SQL_LANG_ID)
+register("prepare_corpus", q_prepare_corpus, SQL_PREPARE_CORPUS)
+register("shard_packing", q_shard_packing, SQL_SHARD_PACKING)
+register("stratified_sample", q_stratified_sample, SQL_STRATIFIED_SAMPLE)
+register("media_features", q_media_features, SQL_MEDIA_FEATURES)
+register("audio_features", q_audio_features, SQL_AUDIO_FEATURES)
+register("embedding_lsh_topk", q_embedding_lsh_topk, SQL_EMBEDDING_LSH_TOPK)
+register("embedding_ivf_topk", q_embedding_ivf_topk, SQL_EMBEDDING_IVF_TOPK)
+# the persisted-index search is exact w.r.t. the inline IVF with the
+# same parameters, so it shares the same SQL replay oracle
+register("embedding_ivf_indexed", q_embedding_ivf_indexed, SQL_EMBEDDING_IVF_TOPK)
+register("repetition_signals", q_repetition_signals, SQL_REPETITION_SIGNALS)
+register("pii_redact", q_pii_redact, SQL_PII_REDACT)
+# not at sf1: the pinned nlist=8 makes the per-cluster pair space
+# quadratic in the corpus
+register("semantic_dedup", q_semantic_dedup, SQL_SEMANTIC_DEDUP, sf1=False)
+register("contamination", q_contamination, SQL_CONTAMINATION, drain="collect")
+register("bm25_search", q_bm25_search, SQL_BM25_SEARCH, drain="collect")
+register("prepare_corpus_full", q_prepare_corpus_full, SQL_PREPARE_CORPUS_FULL)
+register("video_frames", q_video_frames, SQL_VIDEO_FRAMES)
+register("top_bigrams", q_top_bigrams, SQL_TOP_BIGRAMS)
+register("incremental_dedup", q_incremental_dedup, SQL_INCREMENTAL_DEDUP)
+register("pagerank", q_pagerank, SQL_PAGERANK)
+register("auto_stopwords", q_auto_stopwords, SQL_AUTO_STOPWORDS)
+register("chunk_dedup", q_chunk_dedup, SQL_CHUNK_DEDUP)
+register("triangle_count", q_triangle_count, SQL_TRIANGLE_COUNT)
+register("lm_score", q_lm_score, SQL_LM_SCORE)
+register("grouped_topk", q_grouped_topk, SQL_GROUPED_TOPK)
+register("zscore_outliers", q_zscore_outliers, SQL_ZSCORE_OUTLIERS)
+register("quantile_filter", q_quantile_filter, SQL_QUANTILE_FILTER)
+register("column_profile", q_column_profile, SQL_COLUMN_PROFILE)
+register("mixture_sample", q_mixture_sample, SQL_MIXTURE_SAMPLE)
+register("rollup_summary", q_rollup_summary, SQL_ROLLUP_SUMMARY)
+register("group_percentiles", q_group_percentiles, SQL_GROUP_PERCENTILES)
+register("value_histogram", q_value_histogram, SQL_VALUE_HISTOGRAM)
+register("latest_by_key", q_latest_by_key, SQL_LATEST_BY_KEY)
+register("inverted_index", q_inverted_index, SQL_INVERTED_INDEX)
+register("sliding_windows", q_sliding_windows, SQL_SLIDING_WINDOWS)
+register("resample_ffill", q_resample_ffill, SQL_RESAMPLE_FFILL)
+register("funnel", q_funnel, SQL_FUNNEL)
+register("cohort_retention", q_cohort_retention, SQL_COHORT_RETENTION)
+register("doc_chunks", q_doc_chunks, SQL_DOC_CHUNKS)
+register("edit_distance_pairs", q_edit_distance_pairs, SQL_EDIT_DISTANCE_PAIRS)
+register("k_core", q_k_core, SQL_K_CORE)
+register("props_extract", q_props_extract, SQL_PROPS_EXTRACT)
+register("interval_join", q_interval_join, SQL_INTERVAL_JOIN)
+register("rolling_avg", q_rolling_avg, SQL_ROLLING_AVG)
+register("quality_deciles", q_quality_deciles, SQL_QUALITY_DECILES)
 
 
 # =================================================================
@@ -3601,29 +3561,13 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 """
 
 
-QUERIES.update(
-    {
-        "merge_upsert": q_merge_upsert,
-        "scd2_ranges": q_scd2_ranges,
-        "approx_distinct": q_approx_distinct,
-        "bfs_distances": q_bfs_distances,
-        "adamic_adar": q_adamic_adar,
-        "dup_ngram_spans": q_dup_ngram_spans,
-        "cube_summary": q_cube_summary,
-    }
-)
-
-ORACLES.update(
-    {
-        "merge_upsert": SQL_MERGE_UPSERT,
-        "scd2_ranges": SQL_SCD2_RANGES,
-        "approx_distinct": SQL_APPROX_DISTINCT,
-        "bfs_distances": SQL_BFS_DISTANCES,
-        "adamic_adar": SQL_ADAMIC_ADAR,
-        "dup_ngram_spans": SQL_DUP_NGRAM_SPANS,
-        "cube_summary": SQL_CUBE_SUMMARY,
-    }
-)
+register("merge_upsert", q_merge_upsert, SQL_MERGE_UPSERT)
+register("scd2_ranges", q_scd2_ranges, SQL_SCD2_RANGES)
+register("approx_distinct", q_approx_distinct, SQL_APPROX_DISTINCT, drain="collect")
+register("bfs_distances", q_bfs_distances, SQL_BFS_DISTANCES)
+register("adamic_adar", q_adamic_adar, SQL_ADAMIC_ADAR)
+register("dup_ngram_spans", q_dup_ngram_spans, SQL_DUP_NGRAM_SPANS)
+register("cube_summary", q_cube_summary, SQL_CUBE_SUMMARY)
 
 
 # =================================================================
@@ -3752,22 +3696,14 @@ FROM events e JOIN stats s USING (event_type)
 """
 
 
-QUERIES.update(
-    {
-        "approx_distinct_incremental": q_approx_distinct_incremental,
-        "shortest_paths": q_shortest_paths,
-        "salted_join": q_salted_join,
-    }
+# register merge is exact → the full-pass estimate IS the oracle
+register(
+    "approx_distinct_incremental",
+    q_approx_distinct_incremental,
+    f"WITH {_hll_ctes()} SELECT event_type, hll_est FROM hll",
 )
-
-ORACLES.update(
-    {
-        # register merge is exact → the full-pass estimate IS the oracle
-        "approx_distinct_incremental": f"WITH {_hll_ctes()} SELECT event_type, hll_est FROM hll",
-        "shortest_paths": SQL_SHORTEST_PATHS,
-        "salted_join": SQL_SALTED_JOIN,
-    }
-)
+register("shortest_paths", q_shortest_paths, SQL_SHORTEST_PATHS)
+register("salted_join", q_salted_join, SQL_SALTED_JOIN)
 
 
 # =================================================================
@@ -3874,19 +3810,13 @@ SELECT doc_id, source, n_chars FROM b WHERE before_sum < budget
 """
 
 
-QUERIES.update(
-    {
-        "local_supplier_volume": q_local_supplier_volume,
-        "token_budget_sample": q_token_budget_sample,
-    }
+register(
+    "local_supplier_volume",
+    q_local_supplier_volume,
+    SQL_LOCAL_SUPPLIER_VOLUME,
+    drain="collect",
 )
-
-ORACLES.update(
-    {
-        "local_supplier_volume": SQL_LOCAL_SUPPLIER_VOLUME,
-        "token_budget_sample": SQL_TOKEN_BUDGET_SAMPLE,
-    }
-)
+register("token_budget_sample", q_token_budget_sample, SQL_TOKEN_BUDGET_SAMPLE)
 
 
 def q_zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3922,8 +3852,7 @@ def _zorder_sql(bits: int = 10) -> str:
 
 SQL_ZORDER_CURVE = _zorder_sql()
 
-QUERIES.update({"zorder_curve": q_zorder_curve})
-ORACLES.update({"zorder_curve": SQL_ZORDER_CURVE})
+register("zorder_curve", q_zorder_curve, SQL_ZORDER_CURVE)
 
 
 def q_embedding_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3945,8 +3874,9 @@ def q_embedding_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_EMBEDDING_LSH_MULTIPROBE = _lsh_oracle_sql(bits=6, tables=2, probes=6)
 
-QUERIES.update({"embedding_lsh_multiprobe": q_embedding_lsh_multiprobe})
-ORACLES.update({"embedding_lsh_multiprobe": SQL_EMBEDDING_LSH_MULTIPROBE})
+register(
+    "embedding_lsh_multiprobe", q_embedding_lsh_multiprobe, SQL_EMBEDDING_LSH_MULTIPROBE
+)
 
 
 def q_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3988,8 +3918,7 @@ LEFT JOIN (SELECT event_id, user_id, ts FROM events
  AND c.ts >= p.ts - INTERVAL '1 hour' AND c.ts <= p.ts
 """
 
-QUERIES.update({"interval_join_left": q_interval_join_left})
-ORACLES.update({"interval_join_left": SQL_INTERVAL_JOIN_LEFT})
+register("interval_join_left", q_interval_join_left, SQL_INTERVAL_JOIN_LEFT)
 
 
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4020,8 +3949,7 @@ SELECT label, pos, round(avg(v), 6) AS centroid_val
 FROM px GROUP BY 1, 2
 """
 
-QUERIES.update({"label_centroids": q_label_centroids})
-ORACLES.update({"label_centroids": SQL_LABEL_CENTROIDS})
+register("label_centroids", q_label_centroids, SQL_LABEL_CENTROIDS)
 
 
 def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4137,20 +4065,9 @@ FROM events, m, d
 WHERE abs(value - med) > 3 * mad
 """
 
-QUERIES.update(
-    {
-        "pivot_status": q_pivot_status,
-        "unpivot_profile": q_unpivot_profile,
-        "mad_outliers": q_mad_outliers,
-    }
-)
-ORACLES.update(
-    {
-        "pivot_status": SQL_PIVOT_STATUS,
-        "unpivot_profile": SQL_UNPIVOT_PROFILE,
-        "mad_outliers": SQL_MAD_OUTLIERS,
-    }
-)
+register("pivot_status", q_pivot_status, SQL_PIVOT_STATUS)
+register("unpivot_profile", q_unpivot_profile, SQL_UNPIVOT_PROFILE)
+register("mad_outliers", q_mad_outliers, SQL_MAD_OUTLIERS)
 
 
 def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4186,8 +4103,7 @@ SELECT length(bin(d)) - 1 AS log2_degree, count(*) AS n_vertices,
 FROM deg GROUP BY 1
 """.format(sim=SQL_SIMILARITY_EDGES)
 
-QUERIES.update({"degree_distribution": q_degree_distribution})
-ORACLES.update({"degree_distribution": SQL_DEGREE_DISTRIBUTION})
+register("degree_distribution", q_degree_distribution, SQL_DEGREE_DISTRIBUTION)
 
 
 def q_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4275,12 +4191,8 @@ SELECT left_id, right_id, round(score, 2) AS score
 FROM ranked WHERE rl = 1 AND rr = 1
 """
 
-QUERIES.update(
-    {"best_match": q_best_match, "best_match_pairs": q_best_match_pairs}
-)
-ORACLES.update(
-    {"best_match": SQL_BEST_MATCH, "best_match_pairs": SQL_BEST_MATCH}
-)
+register("best_match", q_best_match, SQL_BEST_MATCH)
+register("best_match_pairs", q_best_match_pairs, SQL_BEST_MATCH)
 
 
 def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4445,20 +4357,9 @@ WHERE c_ab >= 5
 ORDER BY pmi DESC, gram LIMIT 20
 """
 
-QUERIES.update(
-    {
-        "sliding_distinct_users": q_sliding_distinct_users,
-        "clustering_coefficient": q_clustering_coefficient,
-        "bigram_pmi": q_bigram_pmi,
-    }
-)
-ORACLES.update(
-    {
-        "sliding_distinct_users": SQL_SLIDING_DISTINCT_USERS,
-        "clustering_coefficient": SQL_CLUSTERING_COEFFICIENT,
-        "bigram_pmi": SQL_BIGRAM_PMI,
-    }
-)
+register("sliding_distinct_users", q_sliding_distinct_users, SQL_SLIDING_DISTINCT_USERS)
+register("clustering_coefficient", q_clustering_coefficient, SQL_CLUSTERING_COEFFICIENT)
+register("bigram_pmi", q_bigram_pmi, SQL_BIGRAM_PMI)
 
 
 def q_semi_anti_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4498,8 +4399,7 @@ SELECT
                          EXCEPT SELECT DISTINCT user_id FROM buyers)) AS n_except
 """
 
-QUERIES.update({"semi_anti_sets": q_semi_anti_sets})
-ORACLES.update({"semi_anti_sets": SQL_SEMI_ANTI_SETS})
+register("semi_anti_sets", q_semi_anti_sets, SQL_SEMI_ANTI_SETS)
 
 
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4525,8 +4425,7 @@ SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
 FROM events GROUP BY 1
 """
 
-QUERIES.update({"incremental_agg": q_incremental_agg})
-ORACLES.update({"incremental_agg": SQL_INCREMENTAL_AGG})
+register("incremental_agg", q_incremental_agg, SQL_INCREMENTAL_AGG, drain="collect")
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4614,18 +4513,8 @@ SELECT event_type, n,
 FROM agg
 """
 
-QUERIES.update(
-    {
-        "weighted_sample": q_weighted_sample,
-        "groupwise_regression": q_groupwise_regression,
-    }
-)
-ORACLES.update(
-    {
-        "weighted_sample": SQL_WEIGHTED_SAMPLE,
-        "groupwise_regression": SQL_GROUPWISE_REGRESSION,
-    }
-)
+register("weighted_sample", q_weighted_sample, SQL_WEIGHTED_SAMPLE, drain="collect")
+register("groupwise_regression", q_groupwise_regression, SQL_GROUPWISE_REGRESSION)
 
 
 def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4683,8 +4572,7 @@ SELECT doc_id, term, round(tfidf, 6) AS tfidf, rank
 FROM ranked WHERE rank <= 3
 """
 
-QUERIES.update({"doc_keywords": q_doc_keywords})
-ORACLES.update({"doc_keywords": SQL_DOC_KEYWORDS})
+register("doc_keywords", q_doc_keywords, SQL_DOC_KEYWORDS)
 
 
 def q_impute_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4726,8 +4614,7 @@ SELECT event_id, ev.event_type,
 FROM ev JOIN med USING (event_type)
 """
 
-QUERIES.update({"impute_missing": q_impute_missing})
-ORACLES.update({"impute_missing": SQL_IMPUTE_MISSING})
+register("impute_missing", q_impute_missing, SQL_IMPUTE_MISSING)
 
 
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4774,8 +4661,7 @@ SELECT user_id,
 FROM s GROUP BY user_id, seq
 """
 
-QUERIES.update({"session_windows": q_session_windows})
-ORACLES.update({"session_windows": SQL_SESSION_WINDOWS})
+register("session_windows", q_session_windows, SQL_SESSION_WINDOWS)
 
 
 def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4816,8 +4702,7 @@ SELECT split, count(*) AS n_docs,
 FROM s GROUP BY split
 """
 
-QUERIES.update({"dataset_split": q_dataset_split})
-ORACLES.update({"dataset_split": SQL_DATASET_SPLIT})
+register("dataset_split", q_dataset_split, SQL_DATASET_SPLIT, drain="collect")
 
 
 def q_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4853,8 +4738,7 @@ SELECT norm_hash, min(doc_id) AS keep_id, count(*) AS n_docs
 FROM n GROUP BY norm_hash
 """
 
-QUERIES.update({"normalized_dedup": q_normalized_dedup})
-ORACLES.update({"normalized_dedup": SQL_NORMALIZED_DEDUP})
+register("normalized_dedup", q_normalized_dedup, SQL_NORMALIZED_DEDUP)
 
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4900,8 +4784,7 @@ SELECT id, label FROM l{iters}
 
 SQL_LABEL_PROPAGATION = _label_propagation_sql()
 
-QUERIES.update({"label_propagation": q_label_propagation})
-ORACLES.update({"label_propagation": SQL_LABEL_PROPAGATION})
+register("label_propagation", q_label_propagation, SQL_LABEL_PROPAGATION)
 
 
 def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4955,8 +4838,7 @@ r AS (
 SELECT doc_id, c AS pred, round(score, 6) AS score FROM r WHERE rn = 1
 """
 
-QUERIES.update({"nb_classify": q_nb_classify})
-ORACLES.update({"nb_classify": SQL_NB_CLASSIFY})
+register("nb_classify", q_nb_classify, SQL_NB_CLASSIFY)
 
 
 def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5040,8 +4922,7 @@ FROM v{iters} v CROSS JOIN lam CROSS JOIN tr
 
 SQL_EMBEDDING_PCA = _embedding_pca_sql()
 
-QUERIES.update({"embedding_pca": q_embedding_pca})
-ORACLES.update({"embedding_pca": SQL_EMBEDDING_PCA})
+register("embedding_pca", q_embedding_pca, SQL_EMBEDDING_PCA, drain="collect")
 
 
 def q_per_group_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5126,12 +5007,8 @@ SELECT l_orderkey, l_linenumber, hd AS hval FROM r{bits}
 
 SQL_HILBERT_CURVE = _hilbert_sql()
 
-QUERIES.update(
-    {"per_group_cap": q_per_group_cap, "hilbert_curve": q_hilbert_curve}
-)
-ORACLES.update(
-    {"per_group_cap": SQL_PER_GROUP_CAP, "hilbert_curve": SQL_HILBERT_CURVE}
-)
+register("per_group_cap", q_per_group_cap, SQL_PER_GROUP_CAP)
+register("hilbert_curve", q_hilbert_curve, SQL_HILBERT_CURVE)
 
 
 def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5267,20 +5144,14 @@ ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
 """
 
-QUERIES.update(
-    {
-        "promo_revenue": q_promo_revenue,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "returned_items": q_returned_items,
-    }
+register("promo_revenue", q_promo_revenue, SQL_PROMO_REVENUE, drain="collect")
+register(
+    "disjunctive_revenue",
+    q_disjunctive_revenue,
+    SQL_DISJUNCTIVE_REVENUE,
+    drain="collect",
 )
-ORACLES.update(
-    {
-        "promo_revenue": SQL_PROMO_REVENUE,
-        "disjunctive_revenue": SQL_DISJUNCTIVE_REVENUE,
-        "returned_items": SQL_RETURNED_ITEMS,
-    }
-)
+register("returned_items", q_returned_items, SQL_RETURNED_ITEMS, drain="collect")
 
 
 def q_pca_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5386,8 +5257,7 @@ FROM bv{iters} v CROSS JOIN blam CROSS JOIN tr
 
 SQL_PCA_COMPONENTS = _pca_components_sql()
 
-QUERIES.update({"pca_components": q_pca_components})
-ORACLES.update({"pca_components": SQL_PCA_COMPONENTS})
+register("pca_components", q_pca_components, SQL_PCA_COMPONENTS, drain="collect")
 
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5425,8 +5295,7 @@ LEFT JOIN ({SQL_EMBEDDING_TOPK}) e
 GROUP BY a.query_id
 """
 
-QUERIES.update({"ann_recall": q_ann_recall})
-ORACLES.update({"ann_recall": SQL_ANN_RECALL})
+register("ann_recall", q_ann_recall, SQL_ANN_RECALL, drain="collect")
 
 
 def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5462,8 +5331,7 @@ SELECT a AS vertex_id, LEAST(a, MIN(b)) AS component_id
 FROM reach GROUP BY a
 """
 
-QUERIES.update({"graph_components": q_graph_components})
-ORACLES.update({"graph_components": SQL_GRAPH_COMPONENTS})
+register("graph_components", q_graph_components, SQL_GRAPH_COMPONENTS)
 
 
 def q_lang_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5490,8 +5358,7 @@ FROM documents d JOIN thr ON d.lang = thr.lang
 WHERE n_chars >= thr.t
 """
 
-QUERIES.update({"lang_quality_filter": q_lang_quality_filter})
-ORACLES.update({"lang_quality_filter": SQL_LANG_QUALITY_FILTER})
+register("lang_quality_filter", q_lang_quality_filter, SQL_LANG_QUALITY_FILTER)
 
 
 def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5542,8 +5409,7 @@ SELECT event_id,
 FROM ranked WHERE rn = 1
 """
 
-QUERIES.update({"asof_join_forward": q_asof_join_forward})
-ORACLES.update({"asof_join_forward": SQL_ASOF_JOIN_FORWARD})
+register("asof_join_forward", q_asof_join_forward, SQL_ASOF_JOIN_FORWARD)
 
 
 def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5606,8 +5472,7 @@ SELECT o_custkey,
 FROM ranked WHERE rn = 1
 """
 
-QUERIES.update({"scd2_lookup": q_scd2_lookup})
-ORACLES.update({"scd2_lookup": SQL_SCD2_LOOKUP})
+register("scd2_lookup", q_scd2_lookup, SQL_SCD2_LOOKUP)
 
 
 def q_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5628,8 +5493,7 @@ SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::INT % 5 AS fold,
 FROM documents GROUP BY 1
 """
 
-QUERIES.update({"kfold_assign": q_kfold_assign})
-ORACLES.update({"kfold_assign": SQL_KFOLD_ASSIGN})
+register("kfold_assign", q_kfold_assign, SQL_KFOLD_ASSIGN, drain="collect")
 
 
 def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5691,8 +5555,9 @@ FROM e
 
 SQL_JOIN_SIZE_ESTIMATE = _join_size_sql()
 
-QUERIES.update({"join_size_estimate": q_join_size_estimate})
-ORACLES.update({"join_size_estimate": SQL_JOIN_SIZE_ESTIMATE})
+register(
+    "join_size_estimate", q_join_size_estimate, SQL_JOIN_SIZE_ESTIMATE, drain="collect"
+)
 
 
 def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5745,8 +5610,7 @@ WHERE {checks}
 
 SQL_BLOOM_PREFILTER = _bloom_sql()
 
-QUERIES.update({"bloom_prefilter": q_bloom_prefilter})
-ORACLES.update({"bloom_prefilter": SQL_BLOOM_PREFILTER})
+register("bloom_prefilter", q_bloom_prefilter, SQL_BLOOM_PREFILTER)
 
 
 def q_incremental_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5773,8 +5637,7 @@ def q_incremental_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update({"incremental_pca": q_incremental_pca})
-ORACLES.update({"incremental_pca": SQL_EMBEDDING_PCA})
+register("incremental_pca", q_incremental_pca, SQL_EMBEDDING_PCA)
 
 
 def q_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5813,8 +5676,7 @@ WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1996-04-01'
 GROUP BY o_orderpriority
 """
 
-QUERIES.update({"priority_exists": q_priority_exists})
-ORACLES.update({"priority_exists": SQL_PRIORITY_EXISTS})
+register("priority_exists", q_priority_exists, SQL_PRIORITY_EXISTS, drain="collect")
 
 
 def q_phrase_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5868,8 +5730,7 @@ FROM r{rounds}
 
 SQL_PHRASE_MERGE = _phrase_merge_sql()
 
-QUERIES.update({"phrase_merge": q_phrase_merge})
-ORACLES.update({"phrase_merge": SQL_PHRASE_MERGE})
+register("phrase_merge", q_phrase_merge, SQL_PHRASE_MERGE)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5908,8 +5769,7 @@ SELECT doc_id, n_tokens, seq_id,
 FROM x
 """
 
-QUERIES.update({"pack_sequences": q_pack_sequences})
-ORACLES.update({"pack_sequences": SQL_PACK_SEQUENCES})
+register("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES)
 
 
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5958,8 +5818,9 @@ SELECT strftime(det.bucket, '%Y-%m-%d') AS bucket,
 FROM det JOIN seas USING (pos) CROSS JOIN sm
 """
 
-QUERIES.update({"seasonal_decompose": q_seasonal_decompose})
-ORACLES.update({"seasonal_decompose": SQL_SEASONAL_DECOMPOSE})
+register(
+    "seasonal_decompose", q_seasonal_decompose, SQL_SEASONAL_DECOMPOSE, drain="collect"
+)
 
 
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6014,8 +5875,7 @@ SELECT id, round(rank, 6) AS rank FROM pr{iters}
 
 SQL_PERSONALIZED_PAGERANK = _ppr_sql()
 
-QUERIES.update({"personalized_pagerank": q_personalized_pagerank})
-ORACLES.update({"personalized_pagerank": SQL_PERSONALIZED_PAGERANK})
+register("personalized_pagerank", q_personalized_pagerank, SQL_PERSONALIZED_PAGERANK)
 
 
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6082,8 +5942,7 @@ FROM h{iters} h JOIN a{iters} a ON a.id = h.id CROSS JOIN nrm
 
 SQL_HITS = _hits_scores_sql()
 
-QUERIES.update({"hits_scores": q_hits})
-ORACLES.update({"hits_scores": SQL_HITS})
+register("hits_scores", q_hits, SQL_HITS, drain="collect")
 
 
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6131,8 +5990,7 @@ SELECT round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
 FROM m
 """
 
-QUERIES.update({"zipf_fit": q_zipf_fit})
-ORACLES.update({"zipf_fit": SQL_ZIPF_FIT})
+register("zipf_fit", q_zipf_fit, SQL_ZIPF_FIT, drain="collect")
 
 
 def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6162,8 +6020,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
              RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
 """
 
-QUERIES.update({"rolling_median": q_rolling_median})
-ORACLES.update({"rolling_median": SQL_ROLLING_MEDIAN})
+register("rolling_median", q_rolling_median, SQL_ROLLING_MEDIAN)
 
 
 def q_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6207,8 +6064,9 @@ SELECT tid AS event_id,
 FROM shares GROUP BY tid
 """
 
-QUERIES.update({"linear_attribution": q_linear_attribution})
-ORACLES.update({"linear_attribution": SQL_LINEAR_ATTRIBUTION})
+register(
+    "linear_attribution", q_linear_attribution, SQL_LINEAR_ATTRIBUTION, drain="collect"
+)
 
 
 def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6273,8 +6131,7 @@ SELECT query_id, neighbor_id, round(qcos, 6) AS qcos, rank
 FROM ranked WHERE rank <= 3
 """
 
-QUERIES.update({"quantized_topk": q_quantized_topk})
-ORACLES.update({"quantized_topk": SQL_QUANTIZED_TOPK})
+register("quantized_topk", q_quantized_topk, SQL_QUANTIZED_TOPK, drain="collect")
 
 
 def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6329,8 +6186,7 @@ SELECT tid AS event_id,
 FROM ranked WHERE rn = 1 GROUP BY tid
 """
 
-QUERIES.update({"last_touch_attribution": q_last_touch_attribution})
-ORACLES.update({"last_touch_attribution": SQL_LAST_TOUCH_ATTRIBUTION})
+register("last_touch_attribution", q_last_touch_attribution, SQL_LAST_TOUCH_ATTRIBUTION)
 
 
 def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6382,8 +6238,7 @@ FROM dec CROSS JOIN mom
 WHERE abs(residual) > 1.5 * sqrt((ss - s * s / n) / n)
 """
 
-QUERIES.update({"seasonal_anomalies": q_seasonal_anomalies})
-ORACLES.update({"seasonal_anomalies": SQL_SEASONAL_ANOMALIES})
+register("seasonal_anomalies", q_seasonal_anomalies, SQL_SEASONAL_ANOMALIES)
 
 
 def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6431,8 +6286,7 @@ SELECT seed, count(*) + 1 AS n_reached,
 FROM d WHERE dist > 0 GROUP BY seed
 """
 
-QUERIES.update({"closeness_centrality": q_closeness_centrality})
-ORACLES.update({"closeness_centrality": SQL_CLOSENESS_CENTRALITY})
+register("closeness_centrality", q_closeness_centrality, SQL_CLOSENESS_CENTRALITY)
 
 
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6498,8 +6352,7 @@ SELECT round((n * sxy - sx * sy)
 FROM m
 """
 
-QUERIES.update({"degree_assortativity": q_degree_assortativity})
-ORACLES.update({"degree_assortativity": SQL_DEGREE_ASSORTATIVITY})
+register("degree_assortativity", q_degree_assortativity, SQL_DEGREE_ASSORTATIVITY)
 
 
 def q_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6574,8 +6427,7 @@ FROM per CROSS JOIN tot
 WHERE vol >= 50
 """
 
-QUERIES.update({"community_conductance": q_community_conductance})
-ORACLES.update({"community_conductance": SQL_COMMUNITY_CONDUCTANCE})
+register("community_conductance", q_community_conductance, SQL_COMMUNITY_CONDUCTANCE)
 
 
 def q_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6659,8 +6511,7 @@ FROM ({final})
 
 SQL_MMR_TOPK = _mmr_sql()
 
-QUERIES.update({"mmr_topk": q_mmr_topk})
-ORACLES.update({"mmr_topk": SQL_MMR_TOPK})
+register("mmr_topk", q_mmr_topk, SQL_MMR_TOPK, drain="collect")
 
 
 def q_cusum_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6719,8 +6570,7 @@ SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
 FROM c
 """
 
-QUERIES.update({"cusum_anomalies": q_cusum_anomalies})
-ORACLES.update({"cusum_anomalies": SQL_CUSUM_ANOMALIES})
+register("cusum_anomalies", q_cusum_anomalies, SQL_CUSUM_ANOMALIES)
 
 
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6769,8 +6619,7 @@ SELECT doc_id, round(rrf_score, 9) AS rrf_score,
 FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 10
 """
 
-QUERIES.update({"hybrid_rrf": q_hybrid_rrf})
-ORACLES.update({"hybrid_rrf": SQL_HYBRID_RRF})
+register("hybrid_rrf", q_hybrid_rrf, SQL_HYBRID_RRF, drain="collect")
 
 
 def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6833,8 +6682,7 @@ SELECT digit, n,
 FROM c CROSS JOIN t
 """
 
-QUERIES.update({"benford_audit": q_benford_audit})
-ORACLES.update({"benford_audit": SQL_BENFORD_AUDIT})
+register("benford_audit", q_benford_audit, SQL_BENFORD_AUDIT, drain="collect")
 
 
 def q_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6880,8 +6728,7 @@ SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
 FROM e
 """
 
-QUERIES.update({"ewma_daily": q_ewma_daily})
-ORACLES.update({"ewma_daily": SQL_EWMA_DAILY})
+register("ewma_daily", q_ewma_daily, SQL_EWMA_DAILY)
 
 
 def q_ranking_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6957,8 +6804,9 @@ SELECT count(*) AS n_pairs,
 FROM p
 """
 
-QUERIES.update({"ranking_agreement": q_ranking_agreement})
-ORACLES.update({"ranking_agreement": SQL_RANKING_AGREEMENT})
+register(
+    "ranking_agreement", q_ranking_agreement, SQL_RANKING_AGREEMENT, drain="collect"
+)
 
 
 def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7030,8 +6878,7 @@ SELECT source,
 FROM q GROUP BY source
 """
 
-QUERIES.update({"corpus_datasheet": q_corpus_datasheet})
-ORACLES.update({"corpus_datasheet": SQL_CORPUS_DATASHEET})
+register("corpus_datasheet", q_corpus_datasheet, SQL_CORPUS_DATASHEET, drain="collect")
 
 
 def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7085,8 +6932,9 @@ SELECT query_id AS vec_id, lbl_q AS label, n_disagree,
 FROM a WHERE n_disagree * 2 > k
 """
 
-QUERIES.update({"label_noise": q_label_noise})
-ORACLES.update({"label_noise": SQL_LABEL_NOISE})
+# not at sf1: all-pairs kNN, O(n^2) cosines (label_noise_ivf is the
+# scale path)
+register("label_noise", q_label_noise, SQL_LABEL_NOISE, sf1=False)
 
 
 def _disagree_rate(nn: DataFrame, labels: DataFrame) -> DataFrame:
@@ -7222,8 +7070,7 @@ SQL_LABEL_NOISE_IVF = _label_noise_ivf_sql(
     train_src=TRAIN_64X_SQL.format(src="embeddings"),
 )
 
-QUERIES.update({"label_noise_ivf": q_label_noise_ivf})
-ORACLES.update({"label_noise_ivf": SQL_LABEL_NOISE_IVF})
+register("label_noise_ivf", q_label_noise_ivf, SQL_LABEL_NOISE_IVF)
 
 
 def q_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7266,8 +7113,7 @@ SELECT o_orderkey, c_mktsegment, o_totalprice::DOUBLE AS price,
 FROM j
 """
 
-QUERIES.update({"quantile_transform": q_quantile_transform})
-ORACLES.update({"quantile_transform": SQL_QUANTILE_TRANSFORM})
+register("quantile_transform", q_quantile_transform, SQL_QUANTILE_TRANSFORM)
 
 
 def q_vertex_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7329,8 +7175,7 @@ JOIN deg dv ON dv.src = v
 WHERE c::DOUBLE / (du.d + dv.d - c)::DOUBLE >= 0.5
 """
 
-QUERIES.update({"vertex_jaccard": q_vertex_jaccard})
-ORACLES.update({"vertex_jaccard": SQL_VERTEX_JACCARD})
+register("vertex_jaccard", q_vertex_jaccard, SQL_VERTEX_JACCARD)
 
 
 def q_ewma_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7372,8 +7217,7 @@ SELECT event_type, strftime(day, '%Y-%m-%d') AS day,
 FROM r
 """
 
-QUERIES.update({"ewma_recursive": q_ewma_recursive})
-ORACLES.update({"ewma_recursive": SQL_EWMA_RECURSIVE})
+register("ewma_recursive", q_ewma_recursive, SQL_EWMA_RECURSIVE)
 
 
 def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7428,8 +7272,7 @@ SELECT j.o_orderkey, j.c_mktsegment,
 FROM j JOIN seg USING (c_mktsegment)
 """
 
-QUERIES.update({"target_encoding": q_target_encoding})
-ORACLES.update({"target_encoding": SQL_TARGET_ENCODING})
+register("target_encoding", q_target_encoding, SQL_TARGET_ENCODING)
 
 
 def q_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7483,8 +7326,7 @@ SELECT user_id, total AS n_events, len(cs) AS n_types,
 FROM u
 """
 
-QUERIES.update({"entropy_profile": q_entropy_profile})
-ORACLES.update({"entropy_profile": SQL_ENTROPY_PROFILE})
+register("entropy_profile", q_entropy_profile, SQL_ENTROPY_PROFILE)
 
 
 def q_neighbor_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7574,8 +7416,7 @@ SELECT h1.src AS id, h1.deg,
 FROM h1 LEFT JOIN h2 ON h2.a_id = h1.src
 """
 
-QUERIES.update({"neighbor_features": q_neighbor_features})
-ORACLES.update({"neighbor_features": SQL_NEIGHBOR_FEATURES})
+register("neighbor_features", q_neighbor_features, SQL_NEIGHBOR_FEATURES)
 
 
 def q_negative_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7660,8 +7501,7 @@ LEFT JOIN e ON e.src = p.src AND e.dst = p.dst
 WHERE e.src IS NULL
 """
 
-QUERIES.update({"negative_edges": q_negative_edges})
-ORACLES.update({"negative_edges": SQL_NEGATIVE_EDGES})
+register("negative_edges", q_negative_edges, SQL_NEGATIVE_EDGES)
 
 
 def q_normalized_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7704,11 +7544,12 @@ JOIN deg du ON du.src = e.src
 JOIN deg dv ON dv.src = e.dst
 """
 
-QUERIES.update({"normalized_adjacency": q_normalized_adjacency})
-ORACLES.update({"normalized_adjacency": SQL_NORMALIZED_ADJACENCY})
+register("normalized_adjacency", q_normalized_adjacency, SQL_NORMALIZED_ADJACENCY)
 
-QUERIES.update({"semantic_dedup_auto": q_semantic_dedup_auto})
-ORACLES.update({"semantic_dedup_auto": SQL_SEMANTIC_DEDUP_AUTO})
+# bench.py times this at sf1 in its own block, with both pair backends
+register(
+    "semantic_dedup_auto", q_semantic_dedup_auto, SQL_SEMANTIC_DEDUP_AUTO, sf1=False
+)
 
 
 def q_semantic_dedup_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7728,8 +7569,7 @@ def q_semantic_dedup_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update({"semantic_dedup_arrow": q_semantic_dedup_arrow})
-ORACLES.update({"semantic_dedup_arrow": SQL_SEMANTIC_DEDUP_AUTO})
+register("semantic_dedup_arrow", q_semantic_dedup_arrow, SQL_SEMANTIC_DEDUP_AUTO)
 
 
 
@@ -7799,8 +7639,7 @@ ORDER BY COALESCE(s, 0.0) DESC, r.doc_id ASC
 LIMIT 100
 """
 
-QUERIES.update({"dsir_select": q_dsir_select})
-ORACLES.update({"dsir_select": SQL_DSIR_SELECT})
+register("dsir_select", q_dsir_select, SQL_DSIR_SELECT, drain="collect")
 
 
 def q_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7832,8 +7671,12 @@ SELECT vec_id, count(*) AS n_hits, round(max(cs), 6) AS max_sim
 FROM pairs GROUP BY 1
 """
 
-QUERIES.update({"semantic_contamination": q_semantic_contamination})
-ORACLES.update({"semantic_contamination": SQL_SEMANTIC_CONTAMINATION})
+register(
+    "semantic_contamination",
+    q_semantic_contamination,
+    SQL_SEMANTIC_CONTAMINATION,
+    drain="collect",
+)
 
 
 def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7924,8 +7767,7 @@ SELECT id,
 FROM alld GROUP BY 1
 """.format(sim=SQL_SIMILARITY_EDGES)
 
-QUERIES.update({"betweenness": q_betweenness})
-ORACLES.update({"betweenness": SQL_BETWEENNESS})
+register("betweenness", q_betweenness, SQL_BETWEENNESS)
 
 
 # ------------------------------------------------- round-3 second batch:
@@ -8020,18 +7862,8 @@ AND NOT EXISTS (
 """
 
 
-QUERIES.update(
-    {
-        "pareto_parts": q_pareto_parts,
-        "pareto_suppliers": q_pareto_suppliers,
-    }
-)
-ORACLES.update(
-    {
-        "pareto_parts": SQL_PARETO_PARTS,
-        "pareto_suppliers": SQL_PARETO_SUPPLIERS,
-    }
-)
+register("pareto_parts", q_pareto_parts, SQL_PARETO_PARTS, drain="collect")
+register("pareto_suppliers", q_pareto_suppliers, SQL_PARETO_SUPPLIERS, drain="collect")
 
 
 # ---------------------------------------- round-3 second batch: sequences
@@ -8112,18 +7944,10 @@ FROM r
 """
 
 
-QUERIES.update(
-    {
-        "frequent_sequences": q_frequent_sequences,
-        "holt_trend": q_holt_trend,
-    }
+register(
+    "frequent_sequences", q_frequent_sequences, SQL_FREQUENT_SEQUENCES, drain="collect"
 )
-ORACLES.update(
-    {
-        "frequent_sequences": SQL_FREQUENT_SEQUENCES,
-        "holt_trend": SQL_HOLT_TREND,
-    }
-)
+register("holt_trend", q_holt_trend, SQL_HOLT_TREND, drain="collect")
 
 
 def q_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8165,8 +7989,7 @@ FROM t LEFT JOIN covs USING (doc_id)
 """
 
 
-QUERIES.update({"strip_dup_spans": q_strip_dup_spans})
-ORACLES.update({"strip_dup_spans": SQL_STRIP_DUP_SPANS})
+register("strip_dup_spans", q_strip_dup_spans, SQL_STRIP_DUP_SPANS)
 
 
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8197,8 +8020,7 @@ GROUP BY 1, 2
 """
 
 
-QUERIES.update({"k_anonymity": q_k_anonymity})
-ORACLES.update({"k_anonymity": SQL_K_ANONYMITY})
+register("k_anonymity", q_k_anonymity, SQL_K_ANONYMITY, drain="collect")
 
 
 def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8262,8 +8084,7 @@ FROM best WHERE rk = 1 AND margin >= 1.0
 """
 
 
-QUERIES.update({"bitext_mine": q_bitext_mine})
-ORACLES.update({"bitext_mine": SQL_BITEXT_MINE})
+register("bitext_mine", q_bitext_mine, SQL_BITEXT_MINE, drain="collect")
 
 
 def q_bitext_mine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8357,8 +8178,7 @@ SQL_BITEXT_MINE_IVF = _bitext_ivf_sql(
     ),
 )
 
-QUERIES.update({"bitext_mine_ivf": q_bitext_mine_ivf})
-ORACLES.update({"bitext_mine_ivf": SQL_BITEXT_MINE_IVF})
+register("bitext_mine_ivf", q_bitext_mine_ivf, SQL_BITEXT_MINE_IVF)
 
 
 def q_dedup_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8392,8 +8212,7 @@ LEFT JOIN spans s ON s.id = d.doc_id
 """.format(comp=SQL_NEAR_DUP_COMPONENTS, spans=SQL_DUP_NGRAM_SPANS)
 
 
-QUERIES.update({"dedup_provenance": q_dedup_provenance})
-ORACLES.update({"dedup_provenance": SQL_DEDUP_PROVENANCE})
+register("dedup_provenance", q_dedup_provenance, SQL_DEDUP_PROVENANCE)
 
 
 def q_ssjoin_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8429,16 +8248,7 @@ WHERE len(list_intersect(a.ds, b.ds))::DOUBLE /
 """
 
 
-QUERIES.update(
-    {
-        "ssjoin_exact": q_ssjoin_exact,
-    }
-)
-ORACLES.update(
-    {
-        "ssjoin_exact": SQL_SSJOIN_EXACT,
-    }
-)
+register("ssjoin_exact", q_ssjoin_exact, SQL_SSJOIN_EXACT)
 
 
 # ---------------------------------------------- round-3 third batch
@@ -8478,8 +8288,7 @@ SELECT norm_hash, min(doc_id) AS keeper_id, count(*) AS dup_count
 FROM nf GROUP BY 1 HAVING count(*) > 1
 """
 
-QUERIES.update({"variant_dedup": q_variant_dedup})
-ORACLES.update({"variant_dedup": SQL_VARIANT_DEDUP})
+register("variant_dedup", q_variant_dedup, SQL_VARIANT_DEDUP, drain="collect")
 
 
 def q_ccnet_bucket_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8530,8 +8339,12 @@ SELECT doc_id, lang, avg_logp, bucket::BIGINT AS bucket
 FROM b WHERE bucket <= 2
 """
 
-QUERIES.update({"ccnet_bucket_filter": q_ccnet_bucket_filter})
-ORACLES.update({"ccnet_bucket_filter": SQL_CCNET_BUCKET_FILTER})
+register(
+    "ccnet_bucket_filter",
+    q_ccnet_bucket_filter,
+    SQL_CCNET_BUCKET_FILTER,
+    drain="collect",
+)
 
 
 def q_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8602,8 +8415,7 @@ SELECT id_a, id_b, clip::BIGINT AS clip,
 FROM m
 """
 
-QUERIES.update({"rouge_pairs": q_rouge_pairs})
-ORACLES.update({"rouge_pairs": SQL_ROUGE_PAIRS})
+register("rouge_pairs", q_rouge_pairs, SQL_ROUGE_PAIRS, drain="collect")
 
 
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8674,8 +8486,7 @@ FROM a{rounds}
 
 SQL_BPE_APPLY = _bpe_apply_sql()
 
-QUERIES.update({"bpe_apply": q_bpe_apply})
-ORACLES.update({"bpe_apply": SQL_BPE_APPLY})
+register("bpe_apply", q_bpe_apply, SQL_BPE_APPLY, drain="collect")
 
 
 def q_apss_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8753,18 +8564,10 @@ def q_apss_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update(
-    {
-        "apss_cosine": q_apss_cosine,
-        "apss_cosine_arrow": q_apss_cosine_arrow,
-    }
-)
-ORACLES.update(
-    {
-        "apss_cosine": SQL_APSS_COSINE,
-        "apss_cosine_arrow": SQL_APSS_COSINE,
-    }
-)
+register("apss_cosine", q_apss_cosine, SQL_APSS_COSINE, drain="collect")
+# not at sf1: there apss_cosine's gate already picks the arrow backend
+# (5.3M candidates, r9), so this twin would time the same plan twice
+register("apss_cosine_arrow", q_apss_cosine_arrow, SQL_APSS_COSINE, sf1=False)
 
 
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8817,8 +8620,9 @@ FROM est e JOIN dist d USING (token)
 WHERE 100 * e.cms_est >= (SELECT n FROM total)
 """
 
-QUERIES.update({"cms_heavy_hitters": q_cms_heavy_hitters})
-ORACLES.update({"cms_heavy_hitters": SQL_CMS_HEAVY_HITTERS})
+register(
+    "cms_heavy_hitters", q_cms_heavy_hitters, SQL_CMS_HEAVY_HITTERS, drain="collect"
+)
 
 
 def q_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8844,8 +8648,7 @@ SELECT ('0x' || substr(md5(source), 1, 4))::INT % 5 AS fold,
 FROM documents GROUP BY 1, 2
 """
 
-QUERIES.update({"group_kfold": q_group_kfold})
-ORACLES.update({"group_kfold": SQL_GROUP_KFOLD})
+register("group_kfold", q_group_kfold, SQL_GROUP_KFOLD, drain="collect")
 
 
 def q_hard_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8899,8 +8702,7 @@ SELECT p.anchor_id, p.pos_id, round(p.pos_cos, 6) AS pos_cos,
 FROM pos p JOIN neg n USING (anchor_id)
 """
 
-QUERIES.update({"hard_triplets": q_hard_triplets})
-ORACLES.update({"hard_triplets": SQL_HARD_TRIPLETS})
+register("hard_triplets", q_hard_triplets, SQL_HARD_TRIPLETS, drain="collect")
 
 
 def q_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8959,8 +8761,7 @@ SELECT (pos - 1) // 32 AS batch_id,
 FROM idx GROUP BY 1
 """
 
-QUERIES.update({"length_batching": q_length_batching})
-ORACLES.update({"length_batching": SQL_LENGTH_BATCHING})
+register("length_batching", q_length_batching, SQL_LENGTH_BATCHING, drain="collect")
 
 
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8989,8 +8790,7 @@ SELECT e.event_id, e.event_type,
 FROM events e JOIN b USING (event_type)
 """
 
-QUERIES.update({"winsorize": q_winsorize})
-ORACLES.update({"winsorize": SQL_WINSORIZE})
+register("winsorize", q_winsorize, SQL_WINSORIZE, drain="collect")
 
 
 def q_hist_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9036,8 +8836,12 @@ SELECT q, round(s.lo + ((s.hi - s.lo) / 256)
 FROM picked, s, n WHERE r = 1
 """
 
-QUERIES.update({"hist_quantile_sketch": q_hist_quantile_sketch})
-ORACLES.update({"hist_quantile_sketch": SQL_HIST_QUANTILE_SKETCH})
+register(
+    "hist_quantile_sketch",
+    q_hist_quantile_sketch,
+    SQL_HIST_QUANTILE_SKETCH,
+    drain="collect",
+)
 
 
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9097,8 +8901,7 @@ FROM j JOIN tot t USING (event_type)
 GROUP BY 1, round(0, 0)
 """
 
-QUERIES.update({"psi_drift": q_psi_drift})
-ORACLES.update({"psi_drift": SQL_PSI_DRIFT})
+register("psi_drift", q_psi_drift, SQL_PSI_DRIFT, drain="collect")
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9160,8 +8963,7 @@ SELECT CASE WHEN ho IS NULL THEN 'added'
 FROM j GROUP BY 1
 """
 
-QUERIES.update({"snapshot_diff": q_snapshot_diff})
-ORACLES.update({"snapshot_diff": SQL_SNAPSHOT_DIFF})
+register("snapshot_diff", q_snapshot_diff, SQL_SNAPSHOT_DIFF, drain="collect")
 
 
 def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9238,8 +9040,7 @@ SQL_GRAPH_MODULARITY = SQL_GRAPH_MODULARITY.format(
     SQL_SIMILARITY_EDGES=SQL_SIMILARITY_EDGES,
 )
 
-QUERIES.update({"graph_modularity": q_graph_modularity})
-ORACLES.update({"graph_modularity": SQL_GRAPH_MODULARITY})
+register("graph_modularity", q_graph_modularity, SQL_GRAPH_MODULARITY, drain="collect")
 
 
 def q_semantic_contamination_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9290,8 +9091,12 @@ FROM pairs GROUP BY 1
 
 SQL_SEMANTIC_CONTAMINATION_IVF = _ivf_contam_sql()
 
-QUERIES.update({"semantic_contamination_ivf": q_semantic_contamination_ivf})
-ORACLES.update({"semantic_contamination_ivf": SQL_SEMANTIC_CONTAMINATION_IVF})
+register(
+    "semantic_contamination_ivf",
+    q_semantic_contamination_ivf,
+    SQL_SEMANTIC_CONTAMINATION_IVF,
+    drain="collect",
+)
 
 
 def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9359,8 +9164,7 @@ WHERE n_tokens >= 10 AND n_tokens <= 100000
   AND ellipsis_line_fraction <= 0.3
 """
 
-QUERIES.update({"gopher_filter": q_gopher_filter})
-ORACLES.update({"gopher_filter": SQL_GOPHER_FILTER})
+register("gopher_filter", q_gopher_filter, SQL_GOPHER_FILTER, drain="collect")
 
 
 def q_corpus_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9471,8 +9275,7 @@ SELECT source, count(*) AS n_pairs,
 FROM f GROUP BY 1
 """
 
-QUERIES.update({"corpus_diversity": q_corpus_diversity})
-ORACLES.update({"corpus_diversity": SQL_CORPUS_DIVERSITY})
+register("corpus_diversity", q_corpus_diversity, SQL_CORPUS_DIVERSITY, drain="collect")
 
 
 def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9510,8 +9313,7 @@ WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
   AND l_quantity < 24
 """
 
-QUERIES.update({"forecast_revenue": q_forecast_revenue})
-ORACLES.update({"forecast_revenue": SQL_FORECAST_REVENUE})
+register("forecast_revenue", q_forecast_revenue, SQL_FORECAST_REVENUE, drain="collect")
 
 
 def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9556,8 +9358,7 @@ SELECT id, round(katz, 6) AS katz FROM k{iters}
 
 SQL_KATZ_CENTRALITY = _katz_sql()
 
-QUERIES.update({"katz_centrality": q_katz_centrality})
-ORACLES.update({"katz_centrality": SQL_KATZ_CENTRALITY})
+register("katz_centrality", q_katz_centrality, SQL_KATZ_CENTRALITY, drain="collect")
 
 
 def q_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9616,8 +9417,7 @@ SELECT event_type, n_pos, n_neg,
 FROM r
 """
 
-QUERIES.update({"woe_encoding": q_woe_encoding})
-ORACLES.update({"woe_encoding": SQL_WOE_ENCODING})
+register("woe_encoding", q_woe_encoding, SQL_WOE_ENCODING, drain="collect")
 
 
 def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9671,8 +9471,7 @@ WHERE o.o_orderkey IN (
 GROUP BY 1, 2, 3, 4
 """
 
-QUERIES.update({"large_orders": q_large_orders})
-ORACLES.update({"large_orders": SQL_LARGE_ORDERS})
+register("large_orders", q_large_orders, SQL_LARGE_ORDERS, drain="collect")
 
 
 def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9703,8 +9502,12 @@ SELECT c_count, count(*) AS custdist FROM (
 ) GROUP BY 1
 """
 
-QUERIES.update({"order_count_distribution": q_order_count_distribution})
-ORACLES.update({"order_count_distribution": SQL_ORDER_COUNT_DISTRIBUTION})
+register(
+    "order_count_distribution",
+    q_order_count_distribution,
+    SQL_ORDER_COUNT_DISTRIBUTION,
+    drain="collect",
+)
 
 
 def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9750,8 +9553,7 @@ FROM per p JOIN supplier s ON s.s_suppkey = p.l_suppkey
 WHERE p.total_rev = (SELECT max(total_rev) FROM per)
 """
 
-QUERIES.update({"top_supplier": q_top_supplier})
-ORACLES.update({"top_supplier": SQL_TOP_SUPPLIER})
+register("top_supplier", q_top_supplier, SQL_TOP_SUPPLIER, drain="collect")
 
 
 def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9809,8 +9611,7 @@ JOIN pa ON pa.l_partkey = l.l_partkey
 WHERE 5 * l.l_quantity::DECIMAL(21,6) * pa._c < pa._sq
 """
 
-QUERIES.update({"small_quantity_revenue": q_small_quantity_revenue})
-ORACLES.update({"small_quantity_revenue": SQL_SMALL_QUANTITY_REVENUE})
+register("small_quantity_revenue", q_small_quantity_revenue, SQL_SMALL_QUANTITY_REVENUE)
 
 
 def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9879,8 +9680,7 @@ WHERE EXISTS (SELECT 1 FROM lineitem l2
 GROUP BY 1, 2
 """
 
-QUERIES.update({"waiting_suppliers": q_waiting_suppliers})
-ORACLES.update({"waiting_suppliers": SQL_WAITING_SUPPLIERS})
+register("waiting_suppliers", q_waiting_suppliers, SQL_WAITING_SUPPLIERS)
 
 
 _Q22_NATIONS = (1, 3, 5, 7, 9, 11, 13)
@@ -9940,8 +9740,7 @@ WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
 GROUP BY 1
 """
 
-QUERIES.update({"dormant_customers": q_dormant_customers})
-ORACLES.update({"dormant_customers": SQL_DORMANT_CUSTOMERS})
+register("dormant_customers", q_dormant_customers, SQL_DORMANT_CUSTOMERS)
 
 
 def q_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10001,8 +9800,7 @@ WHERE s_suppkey IN (
 AND s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
 """
 
-QUERIES.update({"excess_suppliers": q_excess_suppliers})
-ORACLES.update({"excess_suppliers": SQL_EXCESS_SUPPLIERS})
+register("excess_suppliers", q_excess_suppliers, SQL_EXCESS_SUPPLIERS)
 
 
 # --- round-4 batch: TPC-H family completion (Q2/Q7/Q8/Q9/Q11/Q12/Q16) ---
@@ -10433,28 +10231,13 @@ WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
 GROUP BY 1, 2, 3
 """
 
-QUERIES.update(
-    {
-        "min_cost_supplier": q_min_cost_supplier,
-        "nation_volume_shipping": q_nation_volume_shipping,
-        "market_share": q_market_share,
-        "product_profit": q_product_profit,
-        "important_stock": q_important_stock,
-        "late_shipment_priority": q_late_shipment_priority,
-        "part_supplier_counts": q_part_supplier_counts,
-    }
-)
-ORACLES.update(
-    {
-        "min_cost_supplier": SQL_MIN_COST_SUPPLIER,
-        "nation_volume_shipping": SQL_NATION_VOLUME_SHIPPING,
-        "market_share": SQL_MARKET_SHARE,
-        "product_profit": SQL_PRODUCT_PROFIT,
-        "important_stock": SQL_IMPORTANT_STOCK,
-        "late_shipment_priority": SQL_LATE_SHIPMENT_PRIORITY,
-        "part_supplier_counts": SQL_PART_SUPPLIER_COUNTS,
-    }
-)
+register("min_cost_supplier", q_min_cost_supplier, SQL_MIN_COST_SUPPLIER)
+register("nation_volume_shipping", q_nation_volume_shipping, SQL_NATION_VOLUME_SHIPPING)
+register("market_share", q_market_share, SQL_MARKET_SHARE)
+register("product_profit", q_product_profit, SQL_PRODUCT_PROFIT)
+register("important_stock", q_important_stock, SQL_IMPORTANT_STOCK)
+register("late_shipment_priority", q_late_shipment_priority, SQL_LATE_SHIPMENT_PRIORITY)
+register("part_supplier_counts", q_part_supplier_counts, SQL_PART_SUPPLIER_COUNTS)
 
 
 def q_quantile_transform_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10488,8 +10271,9 @@ def q_quantile_transform_scalable(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-QUERIES.update({"quantile_transform_scalable": q_quantile_transform_scalable})
-ORACLES.update({"quantile_transform_scalable": SQL_QUANTILE_TRANSFORM})
+register(
+    "quantile_transform_scalable", q_quantile_transform_scalable, SQL_QUANTILE_TRANSFORM
+)
 
 
 def q_corpus_diversity_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10542,8 +10326,7 @@ def q_corpus_diversity_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update({"corpus_diversity_scalable": q_corpus_diversity_scalable})
-ORACLES.update({"corpus_diversity_scalable": SQL_CORPUS_DIVERSITY})
+register("corpus_diversity_scalable", q_corpus_diversity_scalable, SQL_CORPUS_DIVERSITY)
 
 
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10571,8 +10354,7 @@ ORDER BY n DESC, event_type
 LIMIT 10
 """
 
-QUERIES.update({"skew_report": q_skew_report})
-ORACLES.update({"skew_report": SQL_SKEW_REPORT})
+register("skew_report", q_skew_report, SQL_SKEW_REPORT)
 
 
 # --- round-4 batch: sketch-family completion + grouped NTILE ---
@@ -10769,20 +10551,9 @@ SELECT c_mktsegment, decile, count(*) AS n,
 FROM t GROUP BY 1, 2
 """
 
-QUERIES.update(
-    {
-        "behavior_jaccard": q_behavior_jaccard,
-        "user_overlap": q_user_overlap,
-        "segment_deciles": q_segment_deciles,
-    }
-)
-ORACLES.update(
-    {
-        "behavior_jaccard": SQL_BEHAVIOR_JACCARD,
-        "user_overlap": SQL_USER_OVERLAP,
-        "segment_deciles": SQL_SEGMENT_DECILES,
-    }
-)
+register("behavior_jaccard", q_behavior_jaccard, SQL_BEHAVIOR_JACCARD)
+register("user_overlap", q_user_overlap, SQL_USER_OVERLAP)
+register("segment_deciles", q_segment_deciles, SQL_SEGMENT_DECILES)
 
 
 def q_best_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10874,8 +10645,7 @@ SELECT day, gain, left_mean, right_mean
 FROM scored ORDER BY gain DESC, day LIMIT 1
 """
 
-QUERIES.update({"best_changepoint": q_best_changepoint})
-ORACLES.update({"best_changepoint": SQL_BEST_CHANGEPOINT})
+register("best_changepoint", q_best_changepoint, SQL_BEST_CHANGEPOINT)
 
 
 def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10963,8 +10733,7 @@ FROM sizes s JOIN ps ON ps.component_id = s.component_id
 WHERE s.n_members > 1
 """
 
-QUERIES.update({"er_clusters": q_er_clusters})
-ORACLES.update({"er_clusters": SQL_ER_CLUSTERS})
+register("er_clusters", q_er_clusters, SQL_ER_CLUSTERS)
 
 
 def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11035,8 +10804,7 @@ FROM cum, tot
 ORDER BY ks_d DESC, at_value LIMIT 1
 """
 
-QUERIES.update({"ks_drift": q_ks_drift})
-ORACLES.update({"ks_drift": SQL_KS_DRIFT})
+register("ks_drift", q_ks_drift, SQL_KS_DRIFT)
 
 
 def q_video_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11086,8 +10854,7 @@ SELECT doc_id, frame_idx::INT AS frame_idx,
 FROM f
 """
 
-QUERIES.update({"video_mjpeg_frames": q_video_mjpeg_frames})
-ORACLES.update({"video_mjpeg_frames": SQL_VIDEO_MJPEG_FRAMES})
+register("video_mjpeg_frames", q_video_mjpeg_frames, SQL_VIDEO_MJPEG_FRAMES)
 
 
 def q_media_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11122,8 +10889,7 @@ SELECT doc_id, 16 AS width, 16 AS height,
 FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 50)
 """
 
-QUERIES.update({"media_progressive": q_media_progressive})
-ORACLES.update({"media_progressive": SQL_MEDIA_PROGRESSIVE})
+register("media_progressive", q_media_progressive, SQL_MEDIA_PROGRESSIVE)
 
 
 def q_video_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11175,8 +10941,7 @@ SELECT doc_id, frame_idx::INT AS frame_idx,
 FROM f
 """
 
-QUERIES.update({"video_mp4_frames": q_video_mp4_frames})
-ORACLES.update({"video_mp4_frames": SQL_VIDEO_MP4_FRAMES})
+register("video_mp4_frames", q_video_mp4_frames, SQL_VIDEO_MP4_FRAMES)
 
 
 # =================================================================
@@ -11351,8 +11116,8 @@ SELECT query_id, neighbor_id, round(dist, 6) AS adc_dist, rnk AS rank
 FROM ranked WHERE rnk <= 3
 """
 
-QUERIES.update({"pq_topk": q_pq_topk, "ivfpq_topk": q_ivfpq_topk})
-ORACLES.update({"pq_topk": SQL_PQ_TOPK, "ivfpq_topk": SQL_IVFPQ_TOPK})
+register("pq_topk", q_pq_topk, SQL_PQ_TOPK)
+register("ivfpq_topk", q_ivfpq_topk, SQL_IVFPQ_TOPK)
 
 
 def q_media_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11397,8 +11162,7 @@ SELECT doc_id, 16 AS width, 16 AS height,
 FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 50)
 """
 
-QUERIES.update({"media_gif": q_media_gif})
-ORACLES.update({"media_gif": SQL_MEDIA_GIF})
+register("media_gif", q_media_gif, SQL_MEDIA_GIF)
 
 
 def q_media_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11437,8 +11201,7 @@ SELECT doc_id, 16 AS width, 16 AS height,
 FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 50)
 """
 
-QUERIES.update({"media_tiff": q_media_tiff})
-ORACLES.update({"media_tiff": SQL_MEDIA_TIFF})
+register("media_tiff", q_media_tiff, SQL_MEDIA_TIFF)
 
 
 def q_media_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11474,8 +11237,7 @@ FROM ids, generate_series(0, 15) g(y)
 GROUP BY doc_id
 """
 
-QUERIES.update({"media_bmp": q_media_bmp})
-ORACLES.update({"media_bmp": SQL_MEDIA_BMP})
+register("media_bmp", q_media_bmp, SQL_MEDIA_BMP)
 
 
 # =================================================================
@@ -11612,12 +11374,8 @@ SELECT doc_id, text_chars,
 FROM sig
 """
 
-QUERIES.update(
-    {"html_strip": q_html_strip, "html_boilerplate": q_html_boilerplate}
-)
-ORACLES.update(
-    {"html_strip": SQL_HTML_STRIP, "html_boilerplate": SQL_HTML_BOILERPLATE}
-)
+register("html_strip", q_html_strip, SQL_HTML_STRIP)
+register("html_boilerplate", q_html_boilerplate, SQL_HTML_BOILERPLATE)
 
 
 def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11716,8 +11474,7 @@ SELECT doc_id, record_idx::INT AS record_idx, url,
 FROM pages
 """
 
-QUERIES.update({"warc_extract": q_warc_extract})
-ORACLES.update({"warc_extract": SQL_WARC_EXTRACT})
+register("warc_extract", q_warc_extract, SQL_WARC_EXTRACT)
 
 
 # Driver-side collect bound for q_gremlin_edges: one nation's clique is
@@ -11802,8 +11559,7 @@ both_dirs AS (
 SELECT src, dst, 'nkey' AS propVal FROM both_dirs
 """
 
-QUERIES.update({"gremlin_edges": q_gremlin_edges})
-ORACLES.update({"gremlin_edges": SQL_GREMLIN_EDGES})
+register("gremlin_edges", q_gremlin_edges, SQL_GREMLIN_EDGES)
 
 
 def q_gremlin_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11914,15 +11670,5 @@ FROM supplier WHERE s_suppkey = 1
 """
 
 
-QUERIES.update(
-    {
-        "gremlin_degree": q_gremlin_degree,
-        "gremlin_valuemap": q_gremlin_valuemap,
-    }
-)
-ORACLES.update(
-    {
-        "gremlin_degree": SQL_GREMLIN_DEGREE,
-        "gremlin_valuemap": SQL_GREMLIN_VALUEMAP,
-    }
-)
+register("gremlin_degree", q_gremlin_degree, SQL_GREMLIN_DEGREE)
+register("gremlin_valuemap", q_gremlin_valuemap, SQL_GREMLIN_VALUEMAP)

@@ -223,9 +223,12 @@ class GraphStore:
             .withColumn(PROP_VAL, F.col(PROP_VAL).cast("string"))
             .repartition(nparts, SRC)
             # sorted files give parquet row-group min/max stats on (src,
-            # propVal): point lookups and vertex-centric property filters
-            # skip row groups — the engine's answer to the reference's
-            # vertex-centric edge index (SchemaLoader.scala:177-185)
+            # propVal), the engine's answer to the reference's
+            # vertex-centric edge index (SchemaLoader.scala:177-185).
+            # Point lookups and property filters skip row groups only in
+            # a file larger than one parquet row group; at bench sizes
+            # each hash-partitioned file is one row group spanning every
+            # src, so nothing is skipped
             .sortWithinPartitions(SRC, PROP_VAL)
         )
         if self.sink is not None:

@@ -34,6 +34,8 @@ back, so the replay assigns the same ids the crashed attempt did.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 
 from pyspark.sql import DataFrame
@@ -46,6 +48,9 @@ from grafink_spark.id_manager import IDManager
 from grafink_spark.job import load_batch
 from grafink_spark.rules.base import ClassifierRule
 from grafink_spark.streaming.exactly_once import BATCH_COL, purge_batch_rows
+
+
+log = logging.getLogger(__name__)
 
 
 def _commit_marker(store: GraphStore, batch_id: int) -> str:
@@ -87,7 +92,9 @@ def ingest_batch(
 ) -> None:
     """Process one microbatch exactly once (idempotent under replay).
     Exposed separately from the stream wiring so crash/replay behavior
-    is directly testable."""
+    is directly testable. Logs ``load_batch``'s phase record as one
+    JSON line per committed batch; an empty batch, or a replay of an
+    already committed one, logs nothing."""
     if not batch_df.take(1):
         return
     spark = store.spark
@@ -96,7 +103,7 @@ def ingest_batch(
         return  # batch fully committed on a previous attempt
     _purge_batch(id_manager, store, batch_id)  # clear partial leftovers
 
-    load_batch(
+    phases = load_batch(
         batch_df.withColumn(BATCH_COL, F.lit(batch_id)),
         id_manager,
         store,
@@ -106,6 +113,9 @@ def ingest_batch(
         tags={BATCH_COL: batch_id},
     )
     fsutil.touch(spark, marker)
+    log.info(
+        "%s", json.dumps({"event": "ingest_batch", "batch_id": batch_id, **phases})
+    )
 
 
 def stream_to_graph(

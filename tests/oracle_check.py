@@ -4,6 +4,11 @@ Runs every ``queries()`` entry through Spark AND its ``oracle_sql()``
 twin through DuckDB at a given sf dir, compares row counts, column
 names, and order-insensitive values (floats to 9 significant digits).
 
+Each oracle runs under a cap: DuckDB's memory limit is ORACLE_MEMORY and
+an oracle still running after ORACLE_TIMEOUT_S seconds is interrupted.
+A capped query is reported as CAPPED, apart from value failures, and
+also makes the exit status nonzero.
+
     python tests/oracle_check.py [sf_dir] [query ...]
 """
 
@@ -11,6 +16,7 @@ from __future__ import annotations
 
 import math
 import sys
+import threading
 
 import duckdb
 
@@ -19,6 +25,9 @@ sys.path.insert(0, ".")
 import __spark_entry__ as entry_mod  # noqa: E402
 from grafink_spark.session import get_spark  # noqa: E402
 from grafink_spark.sources.tables import TABLES  # noqa: E402
+
+ORACLE_MEMORY = "3GB"
+ORACLE_TIMEOUT_S = 120.0
 
 
 def normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
@@ -44,6 +53,7 @@ def main() -> int:
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
+    con.execute(f"SET memory_limit='{ORACLE_MEMORY}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
@@ -51,7 +61,7 @@ def main() -> int:
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = []
+    failures, capped = [], []
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -61,9 +71,18 @@ def main() -> int:
         if name not in oracles:
             print(f"{name:24s} rows-only: {len(srows)} rows ✓")
             continue
-        res = con.execute(oracles[name])
-        ocols = [d[0] for d in res.description]
-        orows = res.fetchall()
+        timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+        timer.start()
+        try:
+            res = con.execute(oracles[name])
+            ocols = [d[0] for d in res.description]
+            orows = res.fetchall()
+        except (duckdb.InterruptException, duckdb.OutOfMemoryException) as e:
+            capped.append(name)
+            print(f"{name:24s} CAPPED {type(e).__name__}: {str(e)[:120]}")
+            continue
+        finally:
+            timer.cancel()
         status = []
         if sorted(scols) != sorted(ocols):
             status.append(f"SCHEMA spark={sorted(scols)} oracle={sorted(ocols)}")
@@ -84,6 +103,11 @@ def main() -> int:
     print()
     if failures:
         print(f"FAILED: {failures}")
+    if capped:
+        print(
+            f"CAPPED ({ORACLE_TIMEOUT_S:.0f} s / {ORACLE_MEMORY}): {capped}"
+        )
+    if failures or capped:
         return 1
     print("all queries match")
     return 0

@@ -1,5 +1,6 @@
 """Docs can't drift from the registry: the query counts printed in
-COVERAGE.md and README.md must equal the live registry sizes."""
+COVERAGE.md and README.md must equal the live registry sizes, and the
+registry is the one place a query's facts are declared."""
 
 from __future__ import annotations
 
@@ -33,15 +34,55 @@ def test_readme_counts_match_registry():
         assert int(n) == len(QUERIES), f"README.md says {n}, registry has {len(QUERIES)}"
 
 
-def test_bench_covers_full_registry():
-    """Every registered query gets a recorded timing: HEADLINE (curated
-    ordering) + EXTENDED (everything else, sorted) must partition the
-    registry exactly."""
-    import bench
+# The 64 queries bench.py drains with collect(); every other one drains
+# through a noop write. Changing a drain mode changes what the bench times.
+COLLECT = {
+    "ann_recall", "approx_distinct", "apss_cosine", "benford_audit",
+    "bitext_mine", "bm25_search", "bpe_apply", "ccnet_bucket_filter",
+    "cms_heavy_hitters", "contamination", "corpus_datasheet",
+    "corpus_diversity", "dataset_split", "disjunctive_revenue",
+    "dsir_select", "edge_degree", "embedding_pca", "embedding_topk",
+    "exact_median", "forecast_revenue", "frequent_sequences",
+    "gopher_filter", "graph_modularity", "group_kfold", "hard_triplets",
+    "hist_quantile_sketch", "hits_scores", "holt_trend", "hourly_windows",
+    "hybrid_rrf", "incremental_agg", "join_size_estimate", "k_anonymity",
+    "katz_centrality", "kfold_assign", "large_orders", "length_batching",
+    "linear_attribution", "local_supplier_volume", "mmr_topk",
+    "order_count_distribution", "pareto_parts", "pareto_suppliers",
+    "pca_components", "pricing_summary", "priority_exists", "promo_revenue",
+    "psi_drift", "quantized_topk", "ranking_agreement", "returned_items",
+    "rouge_pairs", "seasonal_decompose", "semantic_contamination",
+    "semantic_contamination_ivf", "shipping_priority", "similarity_histogram",
+    "snapshot_diff", "top_supplier", "variant_dedup", "weighted_sample",
+    "winsorize", "woe_encoding", "zipf_fit",
+}
+NOT_SF1 = {
+    "apss_cosine_arrow", "embedding_near_pairs", "label_noise",
+    "semantic_dedup", "semantic_dedup_auto", "similarity_multi",
+}
 
-    assert set(bench.HEADLINE) | set(bench.EXTENDED) == set(QUERIES)
-    assert not set(bench.HEADLINE) & set(bench.EXTENDED)
-    assert len(bench.HEADLINE) + len(bench.EXTENDED) == len(QUERIES)
+
+def test_registry_is_the_only_declaration():
+    """QUERIES and ORACLES are views of REGISTRY (same keys, same order,
+    the same oracle object), the drain modes and sf1 membership are the
+    bench's, and register() refuses a duplicate or an unknown drain."""
+    import pytest
+
+    from grafink_spark.benchqueries import REGISTRY, register
+
+    assert list(REGISTRY) == list(QUERIES) == list(ORACLES)
+    for n, q in REGISTRY.items():
+        assert QUERIES[n] is q.fn and ORACLES[n] is q.oracle
+    assert {n for n, q in REGISTRY.items() if q.drain == "collect"} == COLLECT
+    assert {q.drain for q in REGISTRY.values()} == {"noop", "collect"}
+    assert {n for n, q in REGISTRY.items() if not q.sf1} == NOT_SF1
+
+    q = REGISTRY["max_id"]
+    with pytest.raises(ValueError, match="twice"):
+        register("max_id", q.fn, q.oracle)
+    with pytest.raises(ValueError, match="drain"):
+        register("max_id_collect_all", q.fn, q.oracle, drain="count")
+    assert "max_id_collect_all" not in REGISTRY
 
 
 def test_bench_artifact_partitions_registry():

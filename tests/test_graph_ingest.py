@@ -2,6 +2,8 @@
 sequential daily batch runs — consecutive ids across batches, new×old
 edges to previously loaded vertices."""
 
+import json
+import logging
 import os
 
 from pyspark.sql import functions as F
@@ -83,19 +85,32 @@ def _setup(spark, tmp_path):
     return idm, store, rules
 
 
-def test_replay_of_committed_batch_is_skipped(spark, tmp_path):
+def test_replay_of_committed_batch_is_skipped(spark, tmp_path, caplog):
     """Exactly-once case 1: batch crashed AFTER commit marker but before
-    the streaming checkpoint advanced → the replay must be a no-op."""
+    the streaming checkpoint advanced → the replay must be a no-op, and
+    only the committed run logs its phase record."""
     from grafink_spark.streaming.graph_ingest import ingest_batch
+
+    logger = "grafink_spark.streaming.graph_ingest"
+    caplog.set_level(logging.INFO, logger=logger)
+
+    def logged():
+        return [json.loads(r.getMessage()) for r in caplog.records if r.name == logger]
 
     idm, store, rules = _setup(spark, tmp_path)
     batch = spark.createDataFrame([("objA", 0.9), ("objA", 0.8)], SCHEMA)
     ingest_batch(batch, 0, idm, store, rules)
+    (rec,) = logged()
+    assert rec["event"] == "ingest_batch" and rec["batch_id"] == 0
+    assert rec["ids_assigned"] == 2
+    assert rec["rules"]["exactmatch"]["edge_rows"] == 2
     v = sorted(r.id for r in store.vertices().select("id").collect())
     e = store.edges().count()
     assert v == [11, 12] and e == 2  # objA pair, both directions
 
+    caplog.clear()
     ingest_batch(batch, 0, idm, store, rules)  # full replay
+    assert logged() == []
     assert sorted(r.id for r in store.vertices().select("id").collect()) == v
     assert store.edges().count() == e
     # and the id store did not double-append either

@@ -1,16 +1,17 @@
-"""sf1 scaling harness (r10, r9 verdict ask #6): time the bench's sf1
-section once at the CURRENT core count (`SPARK_GRAFT_CPUS`, the same
-env the bench honors) and write the per-query timings + weather probes
-to a JSON file. Run it twice — e.g. SPARK_GRAFT_CPUS=32 and =8 — and
-compare the files for per-query scaling ratios; the sf0.1 section
-cannot show parallelism (per-query work is seconds over megabytes, so
-scheduling overhead ≈ the parallelism win), the sf1 section can.
+"""sf1 scaling harness: time bench.py's sf1 sweep once at the current
+core count (`SPARK_GRAFT_CPUS`, the same env the bench honors) and write
+the per-query timings and weather probes to a JSON file. Run it twice,
+e.g. SPARK_GRAFT_CPUS=4 and =2, and compare the files for per-query
+scaling ratios; the sf0.1 section cannot show parallelism (per-query
+work is seconds over megabytes, so scheduling overhead ≈ the
+parallelism win), the sf1 section can.
 
-Times the IDENTICAL query set and methodology as bench.py's sf1
-section (same skip set, same noop drain, same pre-touch). Measurement
-tool only — not part of the bench contract.
+It calls bench.py's own `pretouch` and `sweep` on the registry's
+sf1=True queries, so the query set, drain modes, re-runs and weather
+gate are the sf1 section's. `--rerun` overrides the slow-tail re-run
+count. Measurement tool only — not part of the bench contract.
 
-Usage: SPARK_GRAFT_CPUS=N python tools/sf1scale.py OUT.json [--rerun M]
+Usage: SPARK_GRAFT_CPUS=N python tools/sf1scale.py OUT.json [--rerun M] [--only q1,q2]
 """
 
 from __future__ import annotations
@@ -19,34 +20,18 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np  # noqa: E402
-
-from bench import EXTENDED, HEADLINE, NOOP_DRAIN, SF1_SKIP  # noqa: E402
-from grafink_spark.benchqueries import QUERIES  # noqa: E402
+from bench import SF1_RERUN, SF1_WEATHER_RERUN, pretouch, sweep  # noqa: E402
+from grafink_spark.benchqueries import REGISTRY  # noqa: E402
 from grafink_spark.session import get_spark  # noqa: E402
-
-
-def memweather() -> dict:
-    sz = 1 << 26
-    t0 = time.perf_counter()
-    a = np.ones(sz, dtype=np.uint8)
-    fresh = sz / max(time.perf_counter() - t0, 1e-9) / 1e9
-    b = np.ones(sz, dtype=np.uint8)
-    t0 = time.perf_counter()
-    np.copyto(b, a)
-    touched = sz / max(time.perf_counter() - t0, 1e-9) / 1e9
-    del a, b
-    return {"fresh_gbps": round(fresh, 2), "touched_gbps": round(touched, 1)}
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("out")
-    ap.add_argument("--rerun", type=int, default=10)
+    ap.add_argument("--rerun", type=int, default=SF1_RERUN)
     ap.add_argument(
         "--only",
         default="",
@@ -60,49 +45,26 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from grafink_spark.sfgen import ensure
-    from grafink_spark.sources.tables import TABLES, load_table
 
     sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR") or ensure()
-    for t in TABLES:
-        try:
-            load_table(spark, sf1_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
+    pretouch(spark, sf1_dir)
 
-    names = [q for q in HEADLINE + EXTENDED if q not in SF1_SKIP]
+    names = [n for n, q in REGISTRY.items() if q.sf1]
     if args.only:
         wanted = {n.strip() for n in args.only.split(",") if n.strip()}
         names = [q for q in names if q in wanted]
 
-    def run_once(name: str) -> float:
-        fn = QUERIES[name]
-        t0 = time.perf_counter()
-        df = fn(spark, sf1_dir)
-        if name in NOOP_DRAIN or name in EXTENDED:
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.collect()
-        return round(time.perf_counter() - t0, 3)
-
     memw: list[dict] = []
-    timings: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
-    for i, name in enumerate(names):
-        if i % 25 == 0:
-            w = memweather()
-            w["at"] = i
-            memw.append(w)
-            print(f"# weather {w}", file=sys.stderr)
-        timings[name] = run_once(name)
-        samples[name] = [timings[name]]
-        print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr, flush=True)
-    # slow-tail second sample, min kept (bench methodology)
-    for name in sorted(timings, key=timings.get, reverse=True)[: args.rerun]:
-        again = run_once(name)
-        samples[name].append(again)
-        timings[name] = min(timings[name], again)
+    timings, samples, _, _ = sweep(
+        spark,
+        sf1_dir,
+        names,
+        memw,
+        passes=1,
+        rerun_n=args.rerun,
+        weather_cap=SF1_WEATHER_RERUN,
+        tag="sf1",
+    )
     out = {
         "cpus": cpus,
         "sf1_dir": sf1_dir,
