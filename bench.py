@@ -43,6 +43,14 @@ SF1_RERUN, SF1_WEATHER_RERUN = 20, 30
 WEATHER_FRESH_MIN = 0.5
 
 
+def _dir_tag(d: str) -> str:
+    """A data directory as ``filter_stats`` keys name it: its basename
+    (``sf0.1``, ``sf0.01``, ...), and ``sf1`` for the ``.sf1data``
+    directory ``sfgen.ensure()`` generates."""
+    name = os.path.basename(os.path.normpath(d))
+    return "sf1" if name == ".sf1data" else name
+
+
 def _artifact_path() -> str | None:
     """Where a full run writes its per-query artifact, or None with the
     reason on stderr. The round comes only from SPARK_GRAFT_ROUND
@@ -414,9 +422,9 @@ def main() -> int:
         from grafink_spark.sources.tables import load_table  # noqa: E402
         from grafink_spark.util import ensure_min_partitions  # noqa: E402
 
-        stat_dirs = {"sf0.1": sf_dir}
+        stat_dirs = {_dir_tag(sf_dir): sf_dir}
         if "sf1" in out:
-            stat_dirs["sf1"] = sf1_dir
+            stat_dirs[_dir_tag(sf1_dir)] = sf1_dir
         for tag, d in stat_dirs.items():
             docs = ensure_min_partitions(load_table(spark, d, "documents"))
             t0 = time.perf_counter()

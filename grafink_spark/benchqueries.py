@@ -2717,25 +2717,25 @@ def _kcore_sql(k: int = 3, rounds: int = 4) -> str:
     """Unrolled replay of graph.algorithms.k_core — same normalization,
     same per-round drop rule, same round count."""
     blocks = [
-        f"""e0 AS (
+        f"""e0 AS MATERIALIZED (
   SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
   FROM pairs WHERE src <> dst
 )"""
     ]
     for i in range(1, rounds + 1):
         p = i - 1
-        blocks.append(f"""d{i} AS (
+        blocks.append(f"""d{i} AS MATERIALIZED (
   SELECT id, count(*) AS c FROM (
     SELECT u AS id FROM e{p} UNION ALL SELECT v FROM e{p})
   GROUP BY 1
 ),
-k{i} AS (SELECT id FROM d{i} WHERE c >= {k}),
-e{i} AS (
+k{i} AS MATERIALIZED (SELECT id FROM d{i} WHERE c >= {k}),
+e{i} AS MATERIALIZED (
   SELECT u, v FROM e{p}
   WHERE u IN (SELECT id FROM k{i}) AND v IN (SELECT id FROM k{i})
 )""")
     return f"""
-WITH pairs AS ({SQL_SIMILARITY_EDGES}),
+WITH pairs AS MATERIALIZED ({SQL_SIMILARITY_EDGES}),
 {",".join(blocks)}
 SELECT id, count(*) AS core_degree FROM (
   SELECT u AS id FROM e{rounds} UNION ALL SELECT v FROM e{rounds})
@@ -7697,33 +7697,33 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_BETWEENNESS = f"""
-WITH pairs AS ({{sim}}),
-e0 AS (
+WITH pairs AS MATERIALIZED ({{sim}}),
+e0 AS MATERIALIZED (
   SELECT src, dst FROM pairs
   UNION ALL
   SELECT dst AS src, src AS dst FROM pairs
 ),
-e AS (SELECT DISTINCT src, dst FROM e0),
-s AS (
+e AS MATERIALIZED (SELECT DISTINCT src, dst FROM e0),
+s AS MATERIALIZED (
   SELECT v AS seed FROM (
     SELECT src AS v FROM e UNION SELECT dst AS v FROM e
   ) GROUP BY 1 ORDER BY 1 LIMIT 3
 ),
-l0 AS (SELECT seed, seed AS id, 1::BIGINT AS sigma FROM s),
-l1 AS (
+l0 AS MATERIALIZED (SELECT seed, seed AS id, 1::BIGINT AS sigma FROM s),
+l1 AS MATERIALIZED (
   SELECT l0.seed, e.dst AS id, sum(l0.sigma) AS sigma
   FROM l0 JOIN e ON e.src = l0.id
   WHERE e.dst <> l0.seed
   GROUP BY 1, 2
 ),
-l2 AS (
+l2 AS MATERIALIZED (
   SELECT l1.seed, e.dst AS id, sum(l1.sigma) AS sigma
   FROM l1 JOIN e ON e.src = l1.id
   WHERE NOT EXISTS (SELECT 1 FROM l0 WHERE l0.seed = l1.seed AND l0.id = e.dst)
     AND NOT EXISTS (SELECT 1 FROM l1 x WHERE x.seed = l1.seed AND x.id = e.dst)
   GROUP BY 1, 2
 ),
-l3 AS (
+l3 AS MATERIALIZED (
   SELECT l2.seed, e.dst AS id, sum(l2.sigma) AS sigma
   FROM l2 JOIN e ON e.src = l2.id
   WHERE NOT EXISTS (SELECT 1 FROM l0 WHERE l0.seed = l2.seed AND l0.id = e.dst)
@@ -7731,7 +7731,7 @@ l3 AS (
     AND NOT EXISTS (SELECT 1 FROM l2 x WHERE x.seed = l2.seed AND x.id = e.dst)
   GROUP BY 1, 2
 ),
-d2 AS (
+d2 AS MATERIALIZED (
   SELECT l2.seed, l2.id,
          CAST(sum(CAST((l2.sigma::DOUBLE / l3.sigma::DOUBLE) * 1.0
                        AS DECIMAL(38,18))) AS DOUBLE) AS delta
@@ -7739,11 +7739,11 @@ d2 AS (
        JOIN l3 ON l3.seed = l2.seed AND l3.id = e.dst
   GROUP BY 1, 2
 ),
-d2f AS (
+d2f AS MATERIALIZED (
   SELECT l2.seed, l2.id, COALESCE(d2.delta, 0.0) AS delta
   FROM l2 LEFT JOIN d2 ON d2.seed = l2.seed AND d2.id = l2.id
 ),
-d1 AS (
+d1 AS MATERIALIZED (
   SELECT l1.seed, l1.id,
          CAST(sum(CAST((l1.sigma::DOUBLE / l2.sigma::DOUBLE)
                        * (1.0 + d2f.delta) AS DECIMAL(38,18))) AS DOUBLE) AS delta
@@ -7752,11 +7752,11 @@ d1 AS (
        JOIN d2f ON d2f.seed = l2.seed AND d2f.id = l2.id
   GROUP BY 1, 2
 ),
-d1f AS (
+d1f AS MATERIALIZED (
   SELECT l1.seed, l1.id, COALESCE(d1.delta, 0.0) AS delta
   FROM l1 LEFT JOIN d1 ON d1.seed = l1.seed AND d1.id = l1.id
 ),
-alld AS (
+alld AS MATERIALIZED (
   SELECT * FROM d1f
   UNION ALL SELECT * FROM d2f
   UNION ALL SELECT seed, id, 0.0 AS delta FROM l3
@@ -11530,7 +11530,7 @@ def q_gremlin_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = SameValueClassifier(["nkey"]).classify(sup.limit(0), sup)
     root = tempfile.mkdtemp(prefix="grafink_gremlin_")
     try:
-        store = GraphStore(spark, root, task_size=2500, parallelism=4)
+        store = GraphStore(spark, root)
         store.write_vertices(sup, label="alert")
         store.write_edges(edges, SameValueClassifier(["nkey"]))
         out = GremlinExecutor(GraphQuery(store)).run(
@@ -11601,7 +11601,7 @@ def q_gremlin_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = SameValueClassifier(["nkey"]).classify(sup.limit(0), sup)
     root = tempfile.mkdtemp(prefix="grafink_gremlin_deg_")
     try:
-        store = GraphStore(spark, root, task_size=2500, parallelism=4)
+        store = GraphStore(spark, root)
         store.write_vertices(sup, label="alert")
         store.write_edges(edges, SameValueClassifier(["nkey"]))
         n = GremlinExecutor(GraphQuery(store)).run(
@@ -11652,7 +11652,7 @@ def q_gremlin_valuemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = tempfile.mkdtemp(prefix="grafink_gremlin_vm_")
     try:
-        store = GraphStore(spark, root, task_size=2500, parallelism=4)
+        store = GraphStore(spark, root)
         store.write_vertices(sup, label="alert")
         vm = GremlinExecutor(GraphQuery(store)).run("g.V(1).valueMap(true)")
         return spark.createDataFrame(

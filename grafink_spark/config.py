@@ -103,7 +103,10 @@ class EdgePropertyConfig:
 
 @dataclass
 class EdgeLoaderConfig:
-    """edgeLoader (Config.scala:36-56)."""
+    """edgeLoader (Config.scala:36-56). ``batchSize``, ``parallelism``
+    and ``taskSize`` are parsed so reference configs load, and nothing
+    reads them: they sized the reference's JanusGraph commit batches and
+    loader tasks, while edge files here are sized by AQE."""
 
     batchSize: int = 100
     parallelism: int = 100

@@ -24,6 +24,14 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def qualified_path(spark: SparkSession, path: str) -> str:
+    """The decoded path part of ``path`` made absolute by its
+    filesystem (``/data/ids`` for ``ids`` run from ``/data`` or for
+    ``hdfs://nn/data/ids``), without a trailing slash."""
+    fs, p, _ = _fs_and_path(spark, path)
+    return str(fs.makeQualified(p).toUri().getPath()).rstrip("/")
+
+
 def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     """Delete a file or directory tree. Returns True if something was
     removed, False if the path did not exist."""

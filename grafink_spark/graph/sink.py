@@ -18,10 +18,11 @@ touching the load pipeline:
   serialized to executors, so open connections lazily *inside* the
   partition callback, never in ``__init__``.
 
-At 100 TB the write parallelism knobs stay in ``GraphStore`` (edge
-repartition count from the reference's taskSize formula), so a
-connector sees the same bounded-size, src-co-located partitions the
-parquet sink writes.
+A connector receives each edge label's rows rebalanced on ``src`` by
+AQE and sorted on (src, propVal), the partitions the parquet sink
+writes. ``GraphStore`` counts a sink's edges from a persisted edge set
+rather than an ``Observation``: observed metrics are never reported
+for a ``foreachPartition`` action.
 """
 
 from __future__ import annotations
@@ -38,7 +39,8 @@ class GraphSink(ABC):
     ``write_vertices`` receives one row per vertex (id, label +
     property columns); ``write_edges`` receives edge rows with both
     directions already materialized (src, dst, propVal, label,
-    property_key + any bookkeeping tags), repartitioned by src."""
+    property_key + any bookkeeping tags), one label per call,
+    rebalanced on src."""
 
     @abstractmethod
     def write_vertices(self, df: DataFrame, label: str) -> None: ...

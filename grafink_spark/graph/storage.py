@@ -13,17 +13,17 @@ Vertices and edges are managed parquet tables:
   on the store see Gremlin ``outE`` semantics while rule outputs remain
   deduplicated (SURVEY §7 risk: keep the two layers distinct).
 
-Edge writes repartition by ``src`` with the reference's parallelism
-formula (EdgeProcessor.scala:141-149) — co-locates a vertex's out-edges,
-which at 100 TB keeps per-vertex neighborhood reads to one partition.
-The formula needs the rule's edge count before the write, so
-``write_edges`` persists the rule's edge set first: the count
-materialises it (the classify joins, one of them over the whole id
-store, run once), the doubled, sorted write reads the cached rows, and
-the edge set is released after the write, also when the write raises.
-``persist`` rather than a lineage-cutting pin: a lost block is
-recomputed, nothing goes to the reliable checkpoint directory, and
-``unpersist`` frees it at once.
+All rules' edges for a batch go out in one write
+(:meth:`GraphStore.write_edge_sets`): each rule's set is tagged with its
+label and property key, the sets are unioned, both directions come
+from one ``explode`` (each classify plan runs once, so nothing is
+persisted), and the ``rebalance`` hint on ``src`` lets AQE size the
+output partitions while co-locating a vertex's out-edges. The
+reference sized its JanusGraph loader tasks from the edge count
+(taskSize/parallelism, EdgeProcessor.scala:141-149); a parquet layout
+does not need that count before the write. The rows written per label
+come from an ``Observation`` on the written frame, so the write is also
+the count.
 
 Tables are opened through :func:`open_table`. ``spark.read.parquet``
 runs a Spark job on every call just to read a footer for the schema,
@@ -49,23 +49,14 @@ import os
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from grafink_spark.graph.sink import GraphSink
 from grafink_spark.rules.base import DST, PROP_VAL, SRC, ClassifierRule
-
-
-def get_parallelism(edge_count: int, task_size: int, parallelism: int) -> int:
-    """#output partitions for an edge batch: n < taskSize → parallelism,
-    else max(n // taskSize + 1, parallelism) (EdgeProcessor.scala:141-149).
-    Golden values (EdgeProcessorSpec.scala:31-60, taskSize=2500,
-    parallelism=10): 3,000 edges → 10 partitions; 300,000 → 121."""
-    if edge_count < task_size:
-        return parallelism
-    return max(edge_count // task_size + 1, parallelism)
 
 
 OPEN_MEMO_ENTRIES = 64
@@ -106,8 +97,6 @@ class GraphStore:
 
     spark: SparkSession
     root: str
-    task_size: int = 25000
-    parallelism: int = 100
     sink: GraphSink | None = None
 
     @property
@@ -185,56 +174,101 @@ class GraphStore:
         rule: ClassifierRule,
         tags: dict[str, object] | None = None,
     ) -> int:
-        """Materialize both directions, tag label/property key, write
-        partitioned by label. ``tags`` adds literal bookkeeping columns
-        (e.g. the streaming ingest's batch id) to every written row.
-        Returns edge-row count written.
+        """One rule's edges through :meth:`write_edge_sets`; returns the
+        edge rows written (both directions)."""
+        return self.write_edge_sets([(edges, rule)], tags)[rule.edge_label]
 
-        The edge set is persisted before the sizing count, so the count
-        materialises it and the doubled write, built on the same frame,
-        reads the cached rows (module docstring)."""
-        ClassifierRule.validate(edges)
-        edges = edges.select(SRC, DST, PROP_VAL).persist()
-        try:
-            n = edges.count()  # sizes the repartition (EdgeProcessor.scala:166)
-            self._write_both_directions(edges, n, rule, tags)
-        finally:
-            edges.unpersist()
-        return 2 * n
-
-    def _write_both_directions(
+    def write_edge_sets(
         self,
-        edges: DataFrame,
-        n: int,
-        rule: ClassifierRule,
-        tags: dict[str, object] | None,
-    ) -> None:
-        nparts = get_parallelism(n, self.task_size, self.parallelism)
-        both = edges.unionByName(
-            edges.select(
-                F.col(DST).alias(SRC), F.col(SRC).alias(DST), F.col(PROP_VAL)
-            )
-        )
-        for name, value in (tags or {}).items():
-            both = both.withColumn(name, F.lit(value))
-        out = (
-            both.withColumn("label", F.lit(rule.edge_label))
-            .withColumn("property_key", F.lit(rule.property_key))
-            .withColumn(PROP_VAL, F.col(PROP_VAL).cast("string"))
-            .repartition(nparts, SRC)
+        sets: list[tuple[DataFrame, ClassifierRule]],
+        tags: dict[str, object] | None = None,
+    ) -> dict[str, int]:
+        """Write a batch's edges for every rule in one write: both
+        directions, tagged with label/property key, partitioned by
+        label. ``tags`` adds literal bookkeeping columns (e.g. the
+        streaming ingest's batch id) to every written row. Returns the
+        edge rows written per label, 0 for a rule that found none."""
+        labels = list(dict.fromkeys(rule.edge_label for _, rule in sets))
+        if not labels:
+            return {}
+        both = self._both_directions(sets, tags)
+        if self.sink is not None:
+            return self._write_to_sink(both, labels)
+        written = Observation()
+        (
+            both.hint("rebalance", SRC)
             # sorted files give parquet row-group min/max stats on (src,
             # propVal), the engine's answer to the reference's
             # vertex-centric edge index (SchemaLoader.scala:177-185).
             # Point lookups and property filters skip row groups only in
-            # a file larger than one parquet row group; at bench sizes
-            # each hash-partitioned file is one row group spanning every
-            # src, so nothing is skipped
-            .sortWithinPartitions(SRC, PROP_VAL)
+            # a file larger than one parquet row group. ``label`` leads
+            # so the partitioned write needs no sort of its own
+            .sortWithinPartitions("label", SRC, PROP_VAL)
+            .observe(
+                written,
+                *(F.count(F.when(F.col("label") == x, 1)).alias(x) for x in labels),
+            )
+            .write.mode("append")
+            .partitionBy("label")
+            .parquet(self.edge_path)
         )
-        if self.sink is not None:
-            self.sink.write_edges(out, rule.edge_label)
-            return
-        out.write.mode("append").partitionBy("label").parquet(self.edge_path)
+        # the write succeeded. AQE can replace a plan whose shuffle came
+        # out empty and drop its metrics; ``Observation.get`` then fails
+        # on the empty map, so read the map itself and take {} as no rows
+        rows = dict(written._jo.getAsJava())
+        return {x: int(rows[x]) if rows else 0 for x in labels}
+
+    @staticmethod
+    def _both_directions(
+        sets: list[tuple[DataFrame, ClassifierRule]],
+        tags: dict[str, object] | None,
+    ) -> DataFrame:
+        tagged = [
+            ClassifierRule.validate(edges).select(
+                SRC,
+                DST,
+                F.col(PROP_VAL).cast("string").alias(PROP_VAL),
+                F.lit(rule.edge_label).alias("label"),
+                F.lit(rule.property_key).alias("property_key"),
+            )
+            for edges, rule in sets
+        ]
+        edges = reduce(DataFrame.unionByName, tagged)
+        pair = F.explode(
+            F.array(
+                F.struct(F.col(SRC).alias(SRC), F.col(DST).alias(DST)),
+                F.struct(F.col(DST).alias(SRC), F.col(SRC).alias(DST)),
+            )
+        ).alias("_pair")
+        return edges.select(pair, PROP_VAL, "label", "property_key").select(
+            f"_pair.{SRC}",
+            f"_pair.{DST}",
+            PROP_VAL,
+            *(F.lit(value).alias(name) for name, value in (tags or {}).items()),
+            "label",
+            "property_key",
+        )
+
+    def _write_to_sink(self, both: DataFrame, labels: list[str]) -> dict[str, int]:
+        """Hand each label's edges to the sink. An ``Observation`` on a
+        frame consumed by ``foreachPartition`` never reports (its ``get``
+        blocks), so this path persists the edge set and counts it: the
+        classify plans still run once, and the sink reads cached rows."""
+        both = both.persist()
+        try:
+            rows = dict.fromkeys(labels, 0)
+            rows.update(both.groupBy("label").count().collect())
+            for label in labels:
+                if rows[label]:
+                    self.sink.write_edges(
+                        both.where(F.col("label") == label)
+                        .hint("rebalance", SRC)
+                        .sortWithinPartitions(SRC, PROP_VAL),
+                        label,
+                    )
+        finally:
+            both.unpersist()
+        return rows
 
     # ------------------------------------------------------------- read
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grafink_spark.config import GrafinkConfig
 from grafink_spark.graph.catalog import GraphCatalog
-from grafink_spark.graph.storage import GraphStore, get_parallelism
+from grafink_spark.graph.storage import GraphStore
 from grafink_spark.id_manager import IDManager
 from grafink_spark.rules.base import ClassifierRule
 from grafink_spark.rules.samevalue import SameValueClassifier
@@ -62,14 +62,15 @@ def load_batch(
 ) -> dict:
     """Load one batch into the graph (Job.scala:71-115), shared by the
     daily job and the streaming microbatch: assign ids, write vertices,
-    then per rule create the catalog label, classify, validate and
-    write edges (``tags`` go on every edge row). The id-assigned batch
-    stays cached for the rules and is released in the ``finally``, so
-    a long run holds at most one night's batch.
+    then create every rule's catalog label, classify and validate, and
+    write all rules' edges in one write (``tags`` go on every edge
+    row). The id-assigned batch stays cached for the rules and is
+    released in the ``finally``, so a long run holds at most one
+    night's batch.
 
     Returns the phase record: seconds for id assignment, the vertex
-    write and each rule, the ids assigned, and per edge label the edge
-    rows written and the write's partition count."""
+    write and the edges (classify and write), the ids assigned, and
+    per edge label the edge rows written."""
     t0 = time.perf_counter()
     loaded, current = id_manager.process(batch)
     try:
@@ -78,19 +79,14 @@ def load_batch(
         catalog.create_vertex_label(vertex_label, df=current)
         store.write_vertices(current, label=vertex_label)
         record["vertices_s"] = _since(t0)
-        record["rules"] = {}
+        t0 = time.perf_counter()
+        edge_sets = []
         for rule in rules:
-            t0 = time.perf_counter()
             catalog.create_edge_label(rule.edge_label, rule.property_key, "String")
             edges = ClassifierRule.validate(rule.classify(loaded, current))
-            written = store.write_edges(edges, rule, tags=tags)
-            record["rules"][rule.edge_label] = {
-                "s": _since(t0),
-                "edge_rows": written,
-                "nparts": get_parallelism(
-                    written // 2, store.task_size, store.parallelism
-                ),
-            }
+            edge_sets.append((edges, rule))
+        record["edge_rows"] = store.write_edge_sets(edge_sets, tags=tags)
+        record["edges_s"] = _since(t0)
     finally:
         current.unpersist()
     return record
@@ -101,12 +97,7 @@ class Job:
         self.spark = spark
         self.config = config
         self.id_manager = IDManager(spark, config.idManager)
-        self.store = GraphStore(
-            spark,
-            config.graph.storagePath,
-            task_size=config.edgeLoader.taskSize,
-            parallelism=config.edgeLoader.parallelism,
-        )
+        self.store = GraphStore(spark, config.graph.storagePath)
         self.catalog = GraphCatalog(config.graph.storagePath)
 
     @cached_property
@@ -166,9 +157,7 @@ class Job:
         )
         return JobResult(
             vertices_loaded=phases["ids_assigned"],
-            edge_counts={
-                label: r["edge_rows"] for label, r in phases["rules"].items()
-            },
+            edge_counts=phases["edge_rows"],
         )
 
     def delete(self, start_date: date, duration: int = 1) -> int:

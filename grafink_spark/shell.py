@@ -27,12 +27,7 @@ from grafink_spark.session import get_spark
 def build_bindings(config: GrafinkConfig, spark=None) -> dict[str, Any]:
     """The shell's namespace; also usable programmatically/by tests."""
     spark = spark or get_spark("grafink-spark-shell")
-    store = GraphStore(
-        spark,
-        config.graph.storagePath,
-        task_size=config.edgeLoader.taskSize,
-        parallelism=config.edgeLoader.parallelism,
-    )
+    store = GraphStore(spark, config.graph.storagePath)
     g = GraphQuery(store)
     g.register_views()
 

@@ -17,17 +17,22 @@ Delivery is **exactly-once** on top of plain parquet appends:
 
 1. every row written by a batch (id store, vertices, edges) carries an
    ``_ingest_batch_id`` column;
-2. a commit marker file ``<graph root>/_ingest_commits/<batch_id>`` is
-   written strictly *after* all appends succeed;
-3. on entry, a batch whose marker already exists is skipped outright
-   (the retry of a batch that crashed after commit but before
-   checkpoint advance), and a batch with *no* marker first purges any
-   rows tagged with its batch_id (the retry of a batch that crashed
-   mid-append), then re-runs cleanly.
+2. a start marker ``<graph root>/_ingest_commits/<batch_id>.started``
+   is written strictly *before* the first append, and a commit marker
+   ``<graph root>/_ingest_commits/<batch_id>`` strictly *after* all
+   appends succeed (the start marker is then removed);
+3. on entry, a batch whose commit marker already exists is skipped
+   outright (the retry of a batch that crashed after commit but before
+   checkpoint advance), and a batch with a start marker but no commit
+   marker first purges any rows tagged with its batch_id (the retry of
+   a batch that crashed mid-append), then re-runs cleanly. A batch with
+   neither marker never appended anything, so it runs without a purge.
 
 The purge is a filter-and-swap rewrite — it only ever executes on
-crash recovery, never in the steady state, so its full-table cost is
-paid exactly when a batch actually failed half-written. Id continuity
+crash recovery, never in the steady state (where even probing the
+three stores for tagged rows would cost a schema-merge read and a
+count each), so its full-table cost is paid exactly when a batch
+actually failed half-written. Id continuity
 survives too: purging the failed batch's id-store rows rolls max(id)
 back, so the replay assigns the same ids the crashed attempt did.
 """
@@ -101,7 +106,11 @@ def ingest_batch(
     marker = _commit_marker(store, batch_id)
     if fsutil.exists(spark, marker):
         return  # batch fully committed on a previous attempt
-    _purge_batch(id_manager, store, batch_id)  # clear partial leftovers
+    started = marker + ".started"
+    if fsutil.exists(spark, started):
+        _purge_batch(id_manager, store, batch_id)  # clear partial leftovers
+    else:
+        fsutil.touch(spark, started)
 
     phases = load_batch(
         batch_df.withColumn(BATCH_COL, F.lit(batch_id)),
@@ -113,6 +122,7 @@ def ingest_batch(
         tags={BATCH_COL: batch_id},
     )
     fsutil.touch(spark, marker)
+    fsutil.delete(spark, started)
     log.info(
         "%s", json.dumps({"event": "ingest_batch", "batch_id": batch_id, **phases})
     )

@@ -70,3 +70,18 @@ def edge_set(df) -> set[tuple]:
 def persisted_rdds(spark) -> set[int]:
     """Ids of the RDDs Spark holds persisted right now."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def jobs_submitted(spark, fn):
+    """(fn(), Spark jobs fn submitted), counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts land async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

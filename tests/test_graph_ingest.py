@@ -14,7 +14,7 @@ from grafink_spark.graph.storage import GraphStore
 from grafink_spark.id_manager import IDManager
 from grafink_spark.rules.samevalue import SameValueClassifier
 from grafink_spark.streaming.graph_ingest import stream_to_graph
-from tests.conftest import persisted_rdds
+from tests.conftest import jobs_submitted, persisted_rdds
 
 SCHEMA = T.StructType(
     [
@@ -38,7 +38,7 @@ def test_streaming_ingest_matches_batch_semantics(spark, tmp_path):
     idm = IDManager(
         spark, IDManagerConfig(dataPath=str(tmp_path / "ids"), reservedIdSpace=10)
     )
-    store = GraphStore(spark, str(tmp_path / "graph"), task_size=100, parallelism=2)
+    store = GraphStore(spark, str(tmp_path / "graph"))
     rules = [SameValueClassifier(["objectId"])]
 
     def run():
@@ -80,7 +80,7 @@ def _setup(spark, tmp_path):
     idm = IDManager(
         spark, IDManagerConfig(dataPath=str(tmp_path / "ids"), reservedIdSpace=10)
     )
-    store = GraphStore(spark, str(tmp_path / "graph"), task_size=100, parallelism=2)
+    store = GraphStore(spark, str(tmp_path / "graph"))
     rules = [SameValueClassifier(["objectId"])]
     return idm, store, rules
 
@@ -103,7 +103,7 @@ def test_replay_of_committed_batch_is_skipped(spark, tmp_path, caplog):
     (rec,) = logged()
     assert rec["event"] == "ingest_batch" and rec["batch_id"] == 0
     assert rec["ids_assigned"] == 2
-    assert rec["rules"]["exactmatch"]["edge_rows"] == 2
+    assert rec["edge_rows"] == {"exactmatch": 2}
     v = sorted(r.id for r in store.vertices().select("id").collect())
     e = store.edges().count()
     assert v == [11, 12] and e == 2  # objA pair, both directions
@@ -128,14 +128,14 @@ def test_replay_of_half_written_batch_purges_then_reruns(spark, tmp_path):
     ingest_batch(b0, 0, idm, store, rules)  # committed predecessor
 
     b1 = spark.createDataFrame([("objA", 0.7), ("objB", 0.2)], SCHEMA)
-    real_write_edges = GraphStore.write_edges
+    real_write_edge_sets = GraphStore.write_edge_sets
     calls = {"n": 0}
 
-    def crashing_write_edges(self, edges, rule, tags=None):
+    def crashing_write_edge_sets(self, sets, tags=None):
         calls["n"] += 1
         raise RuntimeError("simulated executor loss mid-batch")
 
-    GraphStore.write_edges = crashing_write_edges
+    GraphStore.write_edge_sets = crashing_write_edge_sets
     try:
         try:
             ingest_batch(b1, 1, idm, store, rules)
@@ -143,7 +143,7 @@ def test_replay_of_half_written_batch_purges_then_reruns(spark, tmp_path):
         except RuntimeError:
             pass
     finally:
-        GraphStore.write_edges = real_write_edges
+        GraphStore.write_edge_sets = real_write_edge_sets
     assert calls["n"] == 1
     # partial state on disk: batch-1 vertices+ids appended, no edges
     assert store.vertices().count() == 3
@@ -205,3 +205,44 @@ def test_microbatches_leave_no_cached_batch(spark, tmp_path):
     ingest_batch(spark.createDataFrame([("objA", 0.7)], SCHEMA), 1, idm, store, rules)
     assert store.edges().count() == 2
     assert persisted_rdds(spark) - before == set()
+
+
+def test_microbatch_job_budget(spark, tmp_path, caplog):
+    """A microbatch after the first stays inside the nightly budget of
+    18 Spark jobs: the same load as ``Job.process`` plus the exactly-once
+    bookkeeping (empty check, purge probe, commit marker)."""
+    from grafink_spark.rules.similarity import SimilarityClassifier
+    from grafink_spark.streaming.graph_ingest import ingest_batch
+
+    logger = "grafink_spark.streaming.graph_ingest"
+    caplog.set_level(logging.INFO, logger=logger)
+    idm, store, _ = _setup(spark, tmp_path)
+    rules = [SimilarityClassifier("rfscore OR objectId"), SameValueClassifier(["objectId"])]
+    ingest_batch(
+        spark.createDataFrame([("objA", 0.95), ("objB", 0.5)], SCHEMA), 0, idm, store, rules
+    )
+    batch = spark.createDataFrame([("objA", 0.97), ("objC", 0.2)], SCHEMA)
+    _, jobs = jobs_submitted(spark, lambda: ingest_batch(batch, 1, idm, store, rules))
+    rec = json.loads(caplog.records[-1].getMessage())
+    assert rec["batch_id"] == 1
+    assert rec["edge_rows"] == {"similarity": 2, "exactmatch": 2}
+    assert jobs <= 18, jobs
+
+
+def test_microbatch_without_edges_writes_none(spark, tmp_path, caplog):
+    """A microbatch whose rules find no edge logs 0 for every label,
+    writes no edge file and commits."""
+    from grafink_spark.streaming.graph_ingest import ingest_batch
+
+    logger = "grafink_spark.streaming.graph_ingest"
+    caplog.set_level(logging.INFO, logger=logger)
+    idm, store, rules = _setup(spark, tmp_path)
+    ingest_batch(spark.createDataFrame([("objA", 0.9), ("objB", 0.8)], SCHEMA), 0, idm, store, rules)
+    ingest_batch(spark.createDataFrame([("objC", 0.9)], SCHEMA), 1, idm, store, rules)
+    recs = [json.loads(r.getMessage()) for r in caplog.records if r.name == logger]
+    assert [r["edge_rows"] for r in recs] == [{"exactmatch": 0}, {"exactmatch": 0}]
+    assert not any(
+        f.endswith(".parquet") for _, _, fs in os.walk(store.edge_path) for f in fs
+    )
+    assert store.edges().count() == 0
+    assert sorted(r.id for r in store.vertices().select("id").collect()) == [11, 12, 13]

@@ -6,22 +6,18 @@ from pyspark.sql import functions as F
 from grafink_spark.graph.catalog import GraphCatalog, property_class_for
 from grafink_spark.graph.query import GraphQuery
 from grafink_spark.graph.sink import CallbackSink
-from grafink_spark.graph.storage import GraphStore, get_parallelism
+from grafink_spark.graph.sink import GraphSink
+from grafink_spark.graph.storage import GraphStore
 from grafink_spark.rules.samevalue import SameValueClassifier
+from grafink_spark.rules.similarity import SimilarityClassifier
+from grafink_spark.rules.twomode import TwoModeClassifier
 from grafink_spark.sources.fixed_vertices import read_fixed_vertices
-from tests.conftest import alert, persisted_rdds
-
-
-def test_parallelism_formula():
-    # EdgeProcessorSpec.scala:31-60 goldens
-    assert get_parallelism(3000, 2500, 10) == 10
-    assert get_parallelism(300000, 2500, 10) == 121
-    assert get_parallelism(100, 2500, 10) == 10
+from tests.conftest import alert, edge_set, jobs_submitted, persisted_rdds
 
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return GraphStore(spark, str(tmp_path / "graph"), task_size=2500, parallelism=4)
+    return GraphStore(spark, str(tmp_path / "graph"))
 
 
 def _load_graph(store, alerts_df):
@@ -105,9 +101,7 @@ def test_pluggable_sink_receives_partitions(spark, tmp_path, alerts_df):
     sink = CallbackSink(
         lambda rows: _dump("v", rows), lambda rows: _dump("e", rows)
     )
-    store = GraphStore(
-        spark, str(tmp_path / "graph"), task_size=2500, parallelism=4, sink=sink
-    )
+    store = GraphStore(spark, str(tmp_path / "graph"), sink=sink)
     _load_graph(store, alerts_df)
 
     verts = _read_captured(str(capture), "v")
@@ -175,21 +169,6 @@ def test_fixed_vertex_csv(tmp_path):
 # ------------------------------------------------ table-open schema memo
 
 
-def _jobs_submitted(spark, fn):
-    """(fn(), Spark jobs fn submitted), counted under a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"open-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts land async
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _assert_same_table(df, path):
     fresh = df.sparkSession.read.parquet(path)
     assert df.schema == fresh.schema  # column order + partition types
@@ -214,8 +193,8 @@ def test_open_memo_reads_what_spark_reads(spark, store, alerts_df, tmp_path):
         (store.fixed_vertices, store.fixed_vertex_path),
     ]
     for open_, path in opens:
-        first, n_first = _jobs_submitted(spark, open_)
-        again, n_again = _jobs_submitted(spark, open_)
+        first, n_first = jobs_submitted(spark, open_)
+        again, n_again = jobs_submitted(spark, open_)
         assert n_first >= 1  # the inference job, so the count is live
         assert n_again == 0
         _assert_same_table(first, path)
@@ -291,8 +270,8 @@ def _counted_edges(spark, n):
 
 
 def test_write_edges_evaluates_input_once(spark, store):
-    """The sizing count and the doubled write read one materialised
-    edge set: the input's plan runs once, not once per use."""
+    """Both directions and the written-row count come from one pass
+    over the edge set: the input's plan runs once, not once per use."""
     edges, acc = _counted_edges(spark, 7)
     before = persisted_rdds(spark)
     n = store.write_edges(edges, SameValueClassifier(["objectId"]))
@@ -306,8 +285,6 @@ def test_write_edges_evaluates_input_once(spark, store):
 
 
 def test_write_edges_releases_edges_when_the_sink_raises(spark, tmp_path):
-    from grafink_spark.graph.sink import GraphSink
-
     class FailingSink(GraphSink):
         def write_vertices(self, df, label):
             raise AssertionError("not called")
@@ -316,13 +293,118 @@ def test_write_edges_releases_edges_when_the_sink_raises(spark, tmp_path):
             assert df.count() == 6  # reads the persisted edge set
             raise RuntimeError("sink down")
 
-    store = GraphStore(
-        spark, str(tmp_path / "graph"), task_size=2500, parallelism=4,
-        sink=FailingSink(),
-    )
+    store = GraphStore(spark, str(tmp_path / "graph"), sink=FailingSink())
     edges, acc = _counted_edges(spark, 3)
     before = persisted_rdds(spark)
     with pytest.raises(RuntimeError, match="sink down"):
         store.write_edges(edges, SameValueClassifier(["objectId"]))
     assert acc.value == 3
     assert persisted_rdds(spark) - before == set()
+
+
+# ------------------------------------------------ one edge write per batch
+
+SIMILARITY = SimilarityClassifier("rfscore OR objectId")
+EXACTMATCH = SameValueClassifier(["objectId"])
+SATR = TwoModeClassifier([], [])
+
+
+def _edge_sets(spark):
+    """Two pairs of similarity edges, three of exactmatch edges."""
+    sim = spark.createDataFrame(
+        [(1, 2, 2), (3, 4, 1)], "src long, dst long, propVal int"
+    )
+    same = spark.createDataFrame(
+        [(1, 5, "objectId"), (5, 9, "objectId"), (2, 7, "objectId")],
+        "src long, dst long, propVal string",
+    )
+    return [(sim, SIMILARITY), (same, EXACTMATCH)]
+
+
+def _no_edges(spark):
+    """An edge set that comes out empty only at runtime: a shuffled
+    join that matches nothing, the shape AQE rewrites once it sees the
+    empty shuffle."""
+    a = spark.range(50).withColumnRenamed("id", "k")
+    b = spark.range(100, 150).withColumnRenamed("id", "k")
+    return a.join(b.hint("shuffle_hash"), "k").select(
+        F.col("k").alias("src"), F.col("k").alias("dst"), F.lit("x").alias("propVal")
+    )
+
+
+def _parquet_files(path):
+    import os
+
+    return [f for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
+
+
+def _within(seconds, fn):
+    """fn() run in a daemon thread; fails the test if it has not
+    returned after ``seconds`` (a write waiting on metrics that never
+    come would otherwise hang the suite)."""
+    import threading
+
+    out = {}
+    t = threading.Thread(target=lambda: out.setdefault("v", fn()), daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds} s"
+    return out["v"]
+
+
+def test_write_edge_sets_counts_equal_rows_on_disk(spark, store):
+    counts = store.write_edge_sets(_edge_sets(spark))
+    assert counts == {"similarity": 4, "exactmatch": 6}
+    on_disk = store.edges()
+    assert dict(on_disk.groupBy("label").count().collect()) == counts
+    # both directions, propVal as string, each label's property key
+    assert edge_set(on_disk.where("label = 'similarity'")) == {
+        (1, 2, "2"), (2, 1, "2"), (3, 4, "1"), (4, 3, "1")
+    }
+    assert {
+        (r.label, r.property_key)
+        for r in on_disk.select("label", "property_key").distinct().collect()
+    } == {("similarity", "value"), ("exactmatch", "propertyname")}
+    # one write: one file per label at this size, sorted on (src, propVal)
+    import pyarrow.parquet as pq
+
+    for label in counts:
+        (f,) = _parquet_files(f"{store.edge_path}/label={label}")
+        t = pq.read_table(f"{store.edge_path}/label={label}/{f}")
+        keys = list(zip(t["src"].to_pylist(), t["propVal"].to_pylist()))
+        assert keys == sorted(keys)
+
+
+def test_write_edge_sets_with_no_edges_returns_zeros(spark, store):
+    counts = _within(
+        120,
+        lambda: store.write_edge_sets(
+            [(_no_edges(spark), SIMILARITY), (_no_edges(spark), EXACTMATCH)]
+        ),
+    )
+    assert counts == {"similarity": 0, "exactmatch": 0}
+    assert _parquet_files(store.edge_path) == []
+    assert store.edges().count() == 0
+
+
+def test_sink_counts_equal_parquet_counts(spark, tmp_path):
+    received = []
+
+    class CountingSink(GraphSink):
+        def write_vertices(self, df, label):
+            raise AssertionError("not called")
+
+        def write_edges(self, df, label):
+            received.append((label, df.count()))
+
+    def sets():
+        return [*_edge_sets(spark), (_no_edges(spark), SATR)]
+
+    sink = GraphStore(spark, str(tmp_path / "s"), sink=CountingSink())
+    parquet = GraphStore(spark, str(tmp_path / "p"))
+    counts = _within(120, lambda: sink.write_edge_sets(sets()))
+    assert counts == parquet.write_edge_sets(sets())
+    assert counts == {"similarity": 4, "exactmatch": 6, "satr": 0}
+    # the sink sees each label with rows once; the empty set sends nothing
+    assert sorted(received) == [("exactmatch", 6), ("similarity", 4)]
+    assert _parquet_files(str(tmp_path / "s")) == []

@@ -8,7 +8,7 @@ from grafink_spark.cli import main as cli_main
 from grafink_spark.config import GrafinkConfig
 from grafink_spark.graph.query import GraphQuery
 from grafink_spark.job import Job
-from tests.conftest import ALERT_SCHEMA, alert, persisted_rdds
+from tests.conftest import ALERT_SCHEMA, alert, jobs_submitted, persisted_rdds
 
 
 def _write_day(spark, base, rows):
@@ -133,8 +133,91 @@ def test_process_logs_one_phase_record_per_night(spark, tmp_path, caplog):
     assert rec["ids_assigned"] == 3 == result.vertices_loaded
     for key in ("read_s", "ids_s", "vertices_s"):
         assert rec[key] >= 0
-    assert set(rec["rules"]) == {"similarity", "exactmatch"}
-    for label, r in rec["rules"].items():
-        assert r["edge_rows"] == result.edge_counts[label]
-        assert r["s"] >= 0
-        assert r["nparts"] == 4  # parallelism: far below taskSize
+    assert set(rec["edge_rows"]) == {"similarity", "exactmatch"}
+    assert rec["edge_rows"] == result.edge_counts
+    assert rec["edges_s"] >= 0
+
+
+def _three_rule_config(tmp_path):
+    fixed = tmp_path / "fixed.csv"
+    fixed.write_text(
+        '1,"similarity","recipe","string","supernova"\n'
+        '2,"similarity","recipe","string","microlensing"\n'
+        '3,"similarity","recipe","string","asteroids"\n'
+    )
+    return GrafinkConfig.from_dict(
+        {
+            "reader": {"basePath": str(tmp_path / "alerts")},
+            "idManager": {"dataPath": str(tmp_path / "ids"), "reservedIdSpace": 7},
+            "edgeLoader": {
+                "rulesToApply": [
+                    "similarityClassifier",
+                    "sameValueClassifier",
+                    "twoModeClassifier",
+                ],
+                "similarityClassifer": {"similarityExp": "rfscore OR objectId"},
+                "sameValueClassifier": {"colsToConnect": ["objectId"]},
+                "twoModeClassifier": {
+                    "recipes": ["supernova", "microlensing", "asteroids"]
+                },
+            },
+            "fixedVertices": {"path": str(fixed)},
+            "graph": {"storagePath": str(tmp_path / "graph"), "vertexLabel": "alert"},
+        }
+    )
+
+
+def _night(day, tag):
+    """Alerts for one night that give every rule edges: a repeated
+    objectId with two high rfscores, a microlensing alert, an asteroid."""
+    rows = [
+        alert(0, f"obj{tag}", 0.95, 0.2, 0, 0.5, "WD*", None, None),
+        alert(0, f"obj{tag}", 0.99, 0.2, 0, 0.5, "AGN", "ML", "ML"),
+        alert(0, "objSame", 0.30, 0.2, 3, 0.5, "AGN", None, None),
+    ]
+    for r in rows:
+        r["day"] = day
+    return rows
+
+
+def test_night_job_budget(spark, tmp_path):
+    """A night after the first runs at most 18 Spark jobs for all three
+    rules: the read, id assignment and append, the vertex write, the
+    hot-key probes and one edge write. Counted with a job group around
+    ``Job.process``."""
+    base = str(tmp_path / "alerts")
+    job = Job(spark, _three_rule_config(tmp_path))
+    _write_day(spark, base, _night(1, "a"))
+    job.process(date(2019, 2, 1), 1)
+    _write_day(spark, base, _night(2, "b"))
+    result, jobs = jobs_submitted(spark, lambda: job.process(date(2019, 2, 2), 1))
+    assert all(result.edge_counts[label] > 0 for label in ("similarity", "exactmatch", "satr"))
+    assert jobs <= 18, jobs
+
+
+def test_night_without_edges_writes_none(spark, tmp_path):
+    """A night whose rules find no edge reports 0 for every label,
+    writes no edge file and does not wait on metrics that never come."""
+    import os
+
+    base = str(tmp_path / "alerts")
+    _write_day(
+        spark,
+        base,
+        [
+            alert(0, "obj1", 0.10, 0.2, 0, 0.5, "WD*", None, None),
+            alert(0, "obj2", 0.20, 0.2, 0, 0.5, "AGN", None, None),
+        ],
+    )
+    job = Job(spark, _config(tmp_path))
+    result = job.process(date(2019, 2, 1), 1)
+    assert result.vertices_loaded == 2
+    assert result.edge_counts == {"similarity": 0, "exactmatch": 0}
+    edge_files = [
+        f
+        for _, _, fs in os.walk(job.store.edge_path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert edge_files == []
+    assert job.store.edges().count() == 0

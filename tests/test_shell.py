@@ -28,7 +28,7 @@ class _FakeRule(ClassifierRule):
 
 def test_shell_bindings(spark, tmp_path):
     root = str(tmp_path / "graph")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame(
             [(1, "ZTFa"), (2, "ZTFb")], "id long, objectId string"
@@ -61,7 +61,7 @@ def test_neighborhood_multi_hop(spark, tmp_path):
     from grafink_spark.graph.query import GraphQuery
 
     root = str(tmp_path / "g2")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame([(i, f"v{i}") for i in range(1, 6)],
                               "id long, objectId string")
@@ -91,7 +91,7 @@ def test_neighborhood_deep_checkpointed(spark, tmp_path):
     from grafink_spark.graph.query import GraphQuery
 
     root = str(tmp_path / "g3")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame([(i, f"v{i}") for i in range(1, 16)],
                               "id long, objectId string")
@@ -129,7 +129,7 @@ def test_gremlin_string_surface(spark, tmp_path):
     from grafink_spark.shell import build_bindings
 
     root = str(tmp_path / "graph")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame(
             [(11, "ZTFa", None), (12, "ZTFb", None)],
@@ -202,7 +202,7 @@ def test_gremlin_edge_cases(spark, tmp_path):
     from grafink_spark.shell import build_bindings
 
     root = str(tmp_path / "graph")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame(
             [(11, "AT2019(bkz)"), (12, "ZTFb"), (13, "ZTFc")],
@@ -251,7 +251,7 @@ def test_gremlin_in_both_directions(spark, tmp_path):
     from grafink_spark.shell import build_bindings
 
     root = str(tmp_path / "graph")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame(
             [(21, "a"), (22, "b"), (23, "c")], "id long, objectId string"
@@ -286,7 +286,7 @@ def test_gremlin_widened_steps(spark, tmp_path):
     from grafink_spark.shell import build_bindings
 
     root = str(tmp_path / "graph")
-    store = GraphStore(spark, root, task_size=100, parallelism=2)
+    store = GraphStore(spark, root)
     store.write_vertices(
         spark.createDataFrame(
             [
@@ -362,7 +362,7 @@ def test_gremlin_by_id_steps_skip_vertex_open(spark, tmp_path, monkeypatch):
     from grafink_spark.graph.query import GraphQuery
     from grafink_spark.gremlin import gremlin
 
-    store = GraphStore(spark, str(tmp_path / "graph"), task_size=100, parallelism=2)
+    store = GraphStore(spark, str(tmp_path / "graph"))
     store.write_vertices(
         spark.createDataFrame([(11, "ZTFa"), (12, "ZTFb")], "id long, objectId string")
     )
