@@ -349,9 +349,7 @@ def main() -> int:
     # generated once and cached in-repo) — catches operators whose
     # constants hide at small scale. One pass (throughput check, not a
     # steady-state microbenchmark); the registry's sf1=False entries are
-    # quadratic by semantics. semantic_dedup's count-derived-nlist
-    # default is timed separately below as semantic_dedup_auto.
-    # SPARK_GRAFT_SF1=0 skips.
+    # quadratic by semantics. SPARK_GRAFT_SF1=0 skips.
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
         from grafink_spark.sfgen import ensure  # noqa: E402
 
@@ -369,33 +367,6 @@ def main() -> int:
             tag="sf1",
         )
         sf1_weather_ok = weather_ok(sf1_fresh)
-        # semantic dedup at the API default: count-derived nlist
-        # (max(8, ceil(N/target_per_list)) — per-vector pair work
-        # constant as the corpus grows)
-        if not only or "semantic_dedup_auto" in only:
-            from grafink_spark.llm.dedup import semantic_dedup  # noqa: E402
-            from grafink_spark.sources.tables import load_table  # noqa: E402
-
-            # both pair backends on the count-derived default: the expr
-            # path is the oracle-exact one, the arrow path is the BLAS
-            # production fast path (identical survivors, ~10x/pair)
-            for backend in ("expr", "arrow"):
-                key = (
-                    "semantic_dedup_auto"
-                    if backend == "expr"
-                    else "semantic_dedup_auto_arrow"
-                )
-                t0 = time.perf_counter()
-                semantic_dedup(
-                    load_table(spark, sf1_dir, "embeddings"),
-                    iters=1,
-                    threshold=0.3,
-                    pair_backend=backend,
-                ).write.format("noop").mode("overwrite").save()
-                sf1_timings[key] = round(time.perf_counter() - t0, 3)
-                print(
-                    f"# sf1 {key}: {sf1_timings[key]:.3f}s", file=sys.stderr
-                )
         out["sf1"] = {
             "total": round(sum(sf1_timings.values()), 3),
             "queries": sf1_timings,
@@ -476,11 +447,6 @@ def main() -> int:
                     "<= 7 were back-to-back best-of-2, so cross-round "
                     "diffs against r07 and earlier mix this policy "
                     "change with real movement"
-                ),
-                "semantic_dedup_auto": (
-                    "oracle-pinned expr pair backend; the PRODUCTION "
-                    "default (arrow) is timed as semantic_dedup_arrow / "
-                    "semantic_dedup_auto_arrow"
                 ),
                 "label_noise_ivf": (
                     "count-derived nlist (max(8, ceil(sqrt(N))), "

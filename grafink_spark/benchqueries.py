@@ -2071,9 +2071,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup survivors: IVF-cluster blocking, within-cluster cosine
     ≥ 0.3, keep the lowest-id representative per ε-ball."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = dd.semantic_dedup(
-        emb, nlist=8, iters=1, threshold=0.3, pair_backend="expr"
-    )
+    out = dd.semantic_dedup(emb, nlist=8, iters=1, threshold=0.3)
     return out.select(
         "vec_id", F.col("list_id").cast("long").alias("list_id")
     )
@@ -2111,9 +2109,7 @@ def q_semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-derived rule via a scalar-subquery LIMIT, so the row stays
     green at any sf."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = dd.semantic_dedup(
-        emb, iters=1, threshold=0.3, target_per_list=32, pair_backend="expr"
-    )
+    out = dd.semantic_dedup(emb, iters=1, threshold=0.3, target_per_list=32)
     return out.select(
         "vec_id", F.col("list_id").cast("long").alias("list_id")
     )
@@ -7375,18 +7371,21 @@ def q_neighbor_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = hop1.join(two, hop1["src"] == two["a"], "left")
+
+    def mean6(s: str, n: str):
+        # s/n rounded half-up to 6 decimals in integer arithmetic: s has
+        # scale 9, so the quotient is exact and both engines break a tie
+        # the same way (rounding the double quotient does not)
+        return F.expr(
+            f"(2 * CAST({s} * 1000000000 AS BIGINT) + 1000 * {n}) div (2000 * {n})"
+        ) / F.lit(1e6)
+
     return out.select(
         F.col("src").alias("id"),
         "deg",
-        # divide as DOUBLES: decimal/bigint quotient scale rules differ
-        # between Spark and DuckDB, skewing the 6th decimal
-        F.round(
-            F.col("_s1").cast("double") / F.col("deg").cast("double"), 6
-        ).alias("mean_1hop"),
+        mean6("_s1", "deg").alias("mean_1hop"),
         F.coalesce(F.col("n_paths"), F.lit(0)).alias("n_2hop_paths"),
-        F.round(
-            F.col("_s2").cast("double") / F.col("n_paths").cast("double"), 6
-        ).alias("mean_2hop"),
+        mean6("_s2", "n_paths").alias("mean_2hop"),
     )
 
 
@@ -7410,9 +7409,11 @@ h2 AS (
   GROUP BY 1
 )
 SELECT h1.src AS id, h1.deg,
-       round(h1.s1::DOUBLE / h1.deg::DOUBLE, 6) AS mean_1hop,
+       ((2 * CAST(h1.s1 * 1000000000 AS BIGINT) + 1000 * h1.deg)
+        // (2000 * h1.deg)) / 1e6 AS mean_1hop,
        coalesce(h2.n_paths, 0) AS n_2hop_paths,
-       round(h2.s2::DOUBLE / h2.n_paths::DOUBLE, 6) AS mean_2hop
+       ((2 * CAST(h2.s2 * 1000000000 AS BIGINT) + 1000 * h2.n_paths)
+        // (2000 * h2.n_paths)) / 1e6 AS mean_2hop
 FROM h1 LEFT JOIN h2 ON h2.a_id = h1.src
 """
 
@@ -7546,31 +7547,7 @@ JOIN deg dv ON dv.src = e.dst
 
 register("normalized_adjacency", q_normalized_adjacency, SQL_NORMALIZED_ADJACENCY)
 
-# bench.py times this at sf1 in its own block, with both pair backends
-register(
-    "semantic_dedup_auto", q_semantic_dedup_auto, SQL_SEMANTIC_DEDUP_AUTO, sf1=False
-)
-
-
-def q_semantic_dedup_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production fast path of semantic_dedup_auto: identical
-    count-derived blocking and survivor rule, but within-cluster
-    cosines as one numpy/BLAS gram matrix per cluster (applyInPandas,
-    row-blocked) instead of Catalyst folds — 8-10x at sf1. Sharing the
-    auto twin's oracle records that the backends agree bit-for-bit on
-    the driver gate, not just in pytest."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = dd.semantic_dedup(
-        emb, iters=1, threshold=0.3, target_per_list=32,
-        pair_backend="arrow",
-    )
-    return out.select(
-        "vec_id", F.col("list_id").cast("long").alias("list_id")
-    )
-
-
-register("semantic_dedup_arrow", q_semantic_dedup_arrow, SQL_SEMANTIC_DEDUP_AUTO)
-
+register("semantic_dedup_auto", q_semantic_dedup_auto, SQL_SEMANTIC_DEDUP_AUTO)
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8217,9 +8194,10 @@ register("dedup_provenance", q_dedup_provenance, SQL_DEDUP_PROVENANCE)
 
 def q_ssjoin_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT set-similarity self-join (PPJoin-style prefix filtering)
-    at Jaccard ≥ 0.5 over 3-shingle sets. The oracle is the FULL
-    all-pairs join, so a green row certifies the prefix filter lost
-    nothing (llm.dedup.set_similarity_join)."""
+    at Jaccard ≥ 0.5 over 3-shingle sets. The oracle scores every pair
+    that shares a shingle — the full all-pairs answer, since a pair
+    sharing none has Jaccard 0 — so a green row certifies the prefix
+    filter lost nothing (llm.dedup.set_similarity_join)."""
     docs = load_table(spark, sf_dir, "documents")
     out = dd.set_similarity_join(docs, k=3, threshold=0.5)
     return out.select(
@@ -8237,14 +8215,27 @@ WITH sh AS (
            list_transform(s, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)
          ) AS ds
   FROM ({_SHINGLES_SQL})
+),
+terms AS (SELECT doc_id, unnest(ds) AS term FROM sh),
+-- every pair that shares a shingle, with its intersection size. A pair
+-- sharing none has intersection 0, so its Jaccard is 0 (or undefined
+-- for two empty sets) and never >= 0.5: the term join drops no pair
+-- the full all-pairs join would keep, and the row still certifies
+-- that the prefix filter is lossless
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+  FROM terms a JOIN terms b ON a.term = b.term AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+),
+j AS (
+  SELECT x.id_a, x.id_b,
+         x.i::DOUBLE / (len(sa.ds) + len(sb.ds) - x.i) AS jaccard_sim
+  FROM inter x
+  JOIN sh sa ON sa.doc_id = x.id_a
+  JOIN sh sb ON sb.doc_id = x.id_b
 )
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_intersect(a.ds, b.ds))::DOUBLE /
-             (len(a.ds) + len(b.ds) - len(list_intersect(a.ds, b.ds))),
-             6) AS jaccard_sim
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE len(list_intersect(a.ds, b.ds))::DOUBLE /
-      (len(a.ds) + len(b.ds) - len(list_intersect(a.ds, b.ds))) >= 0.5
+SELECT id_a, id_b, round(jaccard_sim, 6) AS jaccard_sim
+FROM j WHERE jaccard_sim >= 0.5
 """
 
 
@@ -9175,17 +9166,15 @@ def q_corpus_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair order (sorted array aggregate), so the double accumulation is
     engine-identical.
 
-    Pairing goes through ops.adaptive_lead: a cardinality probe picks
-    the plain window when sources are plentiful and grouped_lead when
-    they are few — here |sources| is tiny, so the fact rows never
-    funnel into |sources| window tasks (the r4 verdict's last
-    low-cardinality-window site). corpus_diversity_scalable pins the
-    grouped_lead plan unconditionally."""
-    from grafink_spark.ops import adaptive_lead
+    Pairing goes through ops.grouped_lead: with five sources, a
+    Window.partitionBy(source) would funnel every document into five
+    reducer tasks; the balanced range partition plus rank join does
+    not."""
+    from grafink_spark.ops import grouped_lead
 
     docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     pairs = (
-        adaptive_lead(
+        grouped_lead(
             docs.select("doc_id", "source"),
             ["source"],
             ["doc_id"],
@@ -10238,95 +10227,6 @@ register("product_profit", q_product_profit, SQL_PRODUCT_PROFIT)
 register("important_stock", q_important_stock, SQL_IMPORTANT_STOCK)
 register("late_shipment_priority", q_late_shipment_priority, SQL_LATE_SHIPMENT_PRIORITY)
 register("part_supplier_counts", q_part_supplier_counts, SQL_PART_SUPPLIER_COUNTS)
-
-
-def q_quantile_transform_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`quantile_transform` re-planned for the 100-TB point: the plain
-    version's Window.partitionBy(c_mktsegment) hashes ALL orders into
-    5 reducer tasks (one per segment) — fine at bench scale, a
-    single-task multi-billion-row sort at sf100k. This variant uses
-    ops.grouped_rank: range-partition on (segment, price, orderkey) so
-    one segment spans many balanced partitions, per-(partition,
-    segment) offsets from a driver-bounded stats pass, broadcast
-    joined back. Same oracle as quantile_transform — value-identical,
-    different (scale-safe) plan."""
-    from grafink_spark.ops import grouped_rank
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    j = orders.join(maybe_broadcast(cust), "o_custkey").select(
-        "o_orderkey", "c_mktsegment", "o_totalprice"
-    )
-    r = grouped_rank(j, ["c_mktsegment"], ["o_totalprice", "o_orderkey"])
-    return r.select(
-        "o_orderkey",
-        "c_mktsegment",
-        F.col("o_totalprice").cast("double").alias("price"),
-        F.round(
-            (F.col("rank") - 1).cast("double") / (F.col("n") - 1).cast("double"),
-            6,
-        ).alias("pct"),
-    )
-
-
-register(
-    "quantile_transform_scalable", q_quantile_transform_scalable, SQL_QUANTILE_TRANSFORM
-)
-
-
-def q_corpus_diversity_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`corpus_diversity` re-planned for the 100-TB point: the plain
-    version pairs consecutive docs with lead() over
-    Window.partitionBy(source) — |sources| reducer tasks, each sorting
-    its whole source. This variant builds the same consecutive pairs
-    with ops.grouped_lead (balanced range partition + rank join; see
-    grouped_rank), then runs the identical ROUGE-2 scoring. Same
-    oracle as corpus_diversity — value-identical, skew-free plan."""
-    from grafink_spark.ops import grouped_lead
-
-    docs = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    pairs = (
-        grouped_lead(
-            docs.select("doc_id", "source"),
-            ["source"],
-            ["doc_id"],
-            lead_cols=["doc_id"],
-        )
-        .where(F.col("doc_id_next").isNotNull())
-        .select(
-            F.col("doc_id").alias("id_a"),
-            F.col("doc_id_next").alias("id_b"),
-            "source",
-        )
-    )
-    scored = tx.rouge_overlap(docs, pairs.select("id_a", "id_b"), n=2).join(
-        pairs, ["id_a", "id_b"]
-    )
-    return (
-        scored.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.array_sort(
-                F.collect_list(F.struct("id_a", "f1"))
-            ).alias("_arr"),
-        )
-        .select(
-            "source",
-            "n_pairs",
-            F.round(
-                F.aggregate(
-                    F.col("_arr"), F.lit(0.0), lambda acc, s: acc + s["f1"]
-                )
-                / F.col("n_pairs"),
-                6,
-            ).alias("mean_rouge2_f1"),
-        )
-    )
-
-
-register("corpus_diversity_scalable", q_corpus_diversity_scalable, SQL_CORPUS_DIVERSITY)
 
 
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:

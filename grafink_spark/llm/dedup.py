@@ -877,18 +877,10 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     threshold: float = 0.95,
     block_by: str | None = None,
-    salt: int | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b) with cosine ≥ threshold. ``block_by`` (e.g. a
     cluster/LSH-bucket column) bounds the pair space; without it this is
-    a documented small-N path.
-
-    ``salt`` > 1 spreads each block's quadratic pair work over that many
-    tasks: the a-side is bucketed by hash(id) % salt, the b-side
-    replicated to every bucket (same output, b-side shuffle volume ×
-    salt). Use when block_by has fewer distinct values than cores —
-    e.g. a small-nlist cluster id — since the pair-condition cost is
-    invisible to AQE's byte-based skew split."""
+    a documented small-N path."""
     v = F.col(vec_col).cast("array<double>")
     # norm staged once per ROW: the pair-condition cosine then reuses it
     # across every pair the row participates in (same expression tree as
@@ -918,14 +910,6 @@ def embedding_near_duplicates(
     cond = F.col("id_a") < F.col("id_b")
     if block_by:
         cond = cond & (F.col("_blk") == F.col("_blk2"))
-    if salt and salt > 1:
-        a = a.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(salt))
-        )
-        b = b.withColumn(
-            "_salt2", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        ).withColumn("_salt2", F.col("_salt2").cast("long"))
-        cond = cond & (F.col("_salt") == F.col("_salt2"))
     dot = F.aggregate(
         F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
         F.lit(0.0),
@@ -969,12 +953,17 @@ def _arrow_within_cluster_dropped(
             return pd.DataFrame({id_col: pdf[id_col].iloc[:0]})
         order = pdf[id_col].to_numpy().argsort(kind="stable")
         ids = pdf[id_col].to_numpy()[order]
+        # vstack refuses vectors of different lengths: a ragged cluster
+        # raises instead of returning survivors
         m = np.vstack(
             [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()[order]]
         )
         norms = np.sqrt((m * m).sum(axis=1))
         norms[norms == 0] = np.inf  # zero vectors: cosine treated as 0
         mn = m / norms[:, None]
+        # strictly lower-id neighbors only: ids is sorted ascending, and
+        # a row repeated under its own id is not its own neighbor
+        first = np.searchsorted(ids, ids, side="left")
         dropped = np.zeros(n, dtype=bool)
         block = 1024
         for lo in range(0, n, block):
@@ -982,8 +971,7 @@ def _arrow_within_cluster_dropped(
             sims = mn[lo:hi] @ mn.T  # (block, n)
             for bi in range(hi - lo):
                 i = lo + bi
-                # lower-id neighbors only: ids is sorted ascending
-                if (sims[bi, :i] >= threshold).any():
+                if (sims[bi, : first[i]] >= threshold).any():
                     dropped[i] = True
         return pd.DataFrame({id_col: ids[dropped]})
 
@@ -1000,7 +988,6 @@ def semantic_dedup(
     iters: int = 1,
     threshold: float = 0.8,
     target_per_list: int = 1024,
-    pair_backend: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style embedding dedup (Abbas et al. 2023): k-means the
     corpus into ``nlist`` clusters (deterministic seeded IVF training),
@@ -1011,12 +998,12 @@ def semantic_dedup(
     Returns the surviving rows with their ``list_id`` cluster column.
 
     At scale the cluster blocking is what makes this tractable: the
-    pair space is Σ cluster², not N², and the within-cluster join is an
-    equi join on list_id (one shuffle each side). The drop rule needs
-    only the qualifying pairs' b-side ids — a distinct + left_anti, no
-    connected components. When nlist is smaller than the shuffle
-    partition count the join is salted so the quadratic pair work still
-    uses every core.
+    pair space is Σ cluster², not N². Each cluster's pairs are one
+    numpy/BLAS gram matrix (applyInPandas over list_id), so the drop
+    rule needs only the dropped ids — an anti join, no connected
+    components. The gram matrix and the SQL replay sum the dot product
+    in different orders, so a cosine landing exactly on the threshold
+    could flip.
 
     ``nlist`` defaults to count-derived: ``max(8, ceil(N /
     target_per_list))``, i.e. ~``target_per_list`` vectors per cluster
@@ -1024,60 +1011,24 @@ def semantic_dedup(
     (total cosine evaluations ≈ N × target_per_list, linear in N). A
     pinned ``nlist`` stays supported for reproducing a fixed blocking,
     but grows quadratically per cluster with corpus size — don't pin it
-    at real scale.
-
-    ``pair_backend``: ``"arrow"`` (default — the production fast path)
-    runs one numpy/BLAS gram matrix per cluster via applyInPandas —
-    ~10× faster per pair on CPU (measured at sf1) and bit-equal to
-    ``"expr"`` on every non-boundary threshold; ``"expr"`` runs the
-    within-cluster cosines as Catalyst higher-order-function folds —
-    oracle-exact and shuffle-salted (dot-product summation ORDER
-    differs between the two, so a cosine landing exactly on the
-    threshold could flip; pin expr for oracle replays).
-
-    .. versionchanged:: round 4
-       The DEFAULT ``pair_backend`` flipped from ``"expr"`` to
-       ``"arrow"``.  Callers that validated against a SQL replay or
-       need run-to-run replayability at exact-threshold boundaries
-       must now pass ``pair_backend="expr"`` explicitly (the in-repo
-       oracle queries already do); all other callers get the ~10×
-       faster backend with identical survivors away from the
-       boundary."""
-    from grafink_spark.util import ensure_min_partitions
-
+    at real scale."""
     from .simsearch import ivf_assign, ivf_train  # local: avoids cycle
 
     if nlist is None:
         n = df.count()
         nlist = max(8, -(-n // target_per_list))
 
-    # the interpreted higher-order cosine work is CPU-bound: fan a
-    # few-split input out to all cores (no-op at real scale, where
-    # inputs have thousands of splits)
-    df = ensure_min_partitions(df)
+    # ivf_assign fans a few-split input out to all cores itself, in the
+    # training passes and the final assignment alike
     centroids = ivf_train(
         df, nlist=nlist, iters=iters, vec_col=vec_col, id_col=id_col
     )
-    # three consumers (both pair sides + the survivor anti-join) reuse
-    # the assignment — localCheckpoint materializes it once and, unlike
-    # .cache(), its blocks are released when the DataFrame is GC'd
-    # (a cache here leaked one pinned corpus copy per call)
+    # two consumers (the per-cluster kernel + the survivor anti-join)
+    # reuse the assignment — localCheckpoint materializes it once and,
+    # unlike .cache(), its blocks are released when the DataFrame is
+    # GC'd (a cache here leaked one pinned corpus copy per call)
     assigned = ivf_assign(df, centroids, vec_col).transform(pin)
-    if pair_backend == "arrow":
-        dropped = _arrow_within_cluster_dropped(
-            assigned, vec_col, id_col, threshold
-        )
-    elif pair_backend == "expr":
-        parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        salt = -(-parts // nlist) if nlist < parts else None
-        pairs = embedding_near_duplicates(
-            assigned, vec_col, id_col, threshold, block_by="list_id", salt=salt
-        )
-        dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    else:
-        raise ValueError(f"pair_backend must be expr|arrow, got {pair_backend!r}")
+    dropped = _arrow_within_cluster_dropped(assigned, vec_col, id_col, threshold)
     return assigned.join(dropped, on=id_col, how="left_anti")
 
 

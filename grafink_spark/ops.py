@@ -978,54 +978,6 @@ def grouped_lead(
     )
 
 
-def adaptive_lead(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    lead_cols: list[str] | None = None,
-    suffix: str = "_next",
-    groups_per_task: float = 4.0,
-) -> DataFrame:
-    """``lead()`` that picks its plan from the MEASURED group
-    cardinality — the probe-and-choose pattern for operators whose
-    right plan depends on a data property the static planner can't see.
-
-    A window ``partitionBy(group)`` hashes the whole table into
-    |groups| reducer tasks: perfect when groups are plentiful (each
-    task gets ~|table|/|groups| rows), catastrophic when they are few
-    (five sources → five tasks sorting billions of rows each).
-    ``grouped_lead`` is skew-free at any cardinality but pays an extra
-    balanced shuffle + join. This helper runs one cheap
-    ``approx_count_distinct`` probe over the group columns (a
-    map-side-partial aggregate, one scan) and routes:
-
-    - ``n_groups >= shuffle_partitions * groups_per_task`` → the plain
-      window (groups spread evenly; no premium).
-    - fewer → :func:`grouped_lead` (range-partitioned, no |groups|-task
-      funnel).
-
-    Same output columns and semantics either way: per-group next-row
-    values in ``order_cols`` order, nulls on each group's last row."""
-    lead_cols = lead_cols or [c for c in df.columns if c not in group_cols]
-    spark = df.sparkSession
-    try:
-        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        shuffle_parts = 200
-    n_groups = int(
-        df.agg(
-            F.approx_count_distinct(F.struct(*group_cols)).alias("n")
-        ).first()["n"]
-    )
-    if n_groups >= shuffle_parts * groups_per_task:
-        w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-        out = df
-        for c in lead_cols:
-            out = out.withColumn(f"{c}{suffix}", F.lead(c).over(w))
-        return out
-    return grouped_lead(df, group_cols, order_cols, lead_cols, suffix)
-
-
 def skew_report(
     df: DataFrame,
     key_cols: list[str],

@@ -58,7 +58,7 @@ COLLECT = {
 }
 NOT_SF1 = {
     "apss_cosine_arrow", "embedding_near_pairs", "label_noise",
-    "semantic_dedup", "semantic_dedup_auto", "similarity_multi",
+    "semantic_dedup", "similarity_multi",
 }
 
 

@@ -449,41 +449,72 @@ def test_semantic_contamination_flags_near_test_vectors(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_semantic_dedup_arrow_backend_matches_expr(spark):
-    """The BLAS pair backend must drop the identical survivor set as
-    the Catalyst-expression backend (non-boundary threshold)."""
+def _semantic_dedup_reference(df, nlist, threshold):
+    """semantic_dedup's survivor rule rebuilt from other operators: the
+    same IVF blocking, Catalyst-expression cosines over every
+    same-cluster pair, then a left-anti join on the dropped b-side ids."""
+    from grafink_spark.llm.simsearch import ivf_assign, ivf_train
+
+    centroids = ivf_train(df, nlist=nlist, iters=1)
+    assigned = ivf_assign(df, centroids)
+    pairs = dd.embedding_near_duplicates(
+        assigned, threshold=threshold, block_by="list_id"
+    )
+    dropped = pairs.select(F.col("id_b").alias("vec_id"))
+    return assigned.join(dropped, "vec_id", "left_anti")
+
+
+def test_semantic_dedup_matches_expression_reference(spark):
+    """The BLAS kernel keeps the same (vec_id, list_id) rows as the
+    expression reference on near-duplicate clusters, repeated rows (same
+    id twice, same vector under a new id), a zero vector, a singleton
+    cluster and an empty frame."""
     import random
 
-    from grafink_spark.llm.dedup import semantic_dedup
-
     rnd = random.Random(11)
-    base = [[rnd.uniform(-1, 1) for _ in range(16)] for _ in range(6)]
+    dim = 17
+    # positive coordinates: every base vector is closer to a base seed
+    # than to the orthogonal vector, which therefore clusters alone
+    base = [[rnd.uniform(0, 1) for _ in range(dim - 1)] + [0.0] for _ in range(6)]
     rows = []
     for i in range(120):
         v = list(base[i % 6])
         v[0] += rnd.uniform(-0.05, 0.05)  # near-dup clusters
         rows.append((i, v))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    rows[2] = (2, [0.0] * (dim - 1) + [1.0])  # an IVF seed, orthogonal to all
+    rows += [rows[5], rows[17], (500, rows[3][1]), (501, [0.0] * dim)]
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame(rows, schema)
 
-    expr = {
-        r.vec_id
-        for r in semantic_dedup(
-            df, nlist=4, iters=1, threshold=0.95, pair_backend="expr"
-        ).collect()
-    }
-    arrow = {
-        r.vec_id
-        for r in semantic_dedup(
-            df, nlist=4, iters=1, threshold=0.95, pair_backend="arrow"
-        ).collect()
-    }
-    assert expr == arrow
-    assert len(expr) < 120  # something was actually deduped
+    def survivors(out):
+        return sorted((r.vec_id, r.list_id) for r in out.collect())
 
-    import pytest
+    got = survivors(dd.semantic_dedup(df, nlist=4, iters=1, threshold=0.95))
+    want = survivors(_semantic_dedup_reference(df, nlist=4, threshold=0.95))
+    assert got == want
+    assert len(got) < len(rows)  # something was actually deduped
+    ids = [v for v, _ in got]
+    assert ids.count(5) == 2  # a survivor repeated under its id stays twice
+    assert 17 not in ids  # both copies of a dropped row go
+    assert 500 not in ids and 501 in ids
+    lists = [lid for _, lid in got]
+    assert lists.count(dict(got)[2]) == 1  # the singleton cluster
 
-    with pytest.raises(ValueError):
-        semantic_dedup(df, nlist=4, pair_backend="nope")
+    empty = spark.createDataFrame([], schema)
+    assert dd.semantic_dedup(empty, iters=1, threshold=0.95).collect() == []
+
+
+def test_semantic_dedup_ragged_cluster_raises(spark):
+    """Vectors of different lengths inside one cluster have no gram
+    matrix: the kernel must fail, not return survivors."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    # iters=0: Lloyd refinement would fail on the ragged rows before
+    # the per-cluster kernel runs
+    with pytest.raises(Exception, match="must match exactly"):
+        dd.semantic_dedup(df, nlist=1, iters=0, threshold=0.5).collect()
 
 
 def test_strip_dup_spans_removes_shared_and_repeated_windows(spark):

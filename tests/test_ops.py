@@ -439,41 +439,10 @@ def test_exact_median_float_resolution_stop(spark):
     assert exact_median(df2, "x", bins=2048, max_pass2=10) == want2
 
 
-def test_adaptive_lead_routes_by_group_cardinality(spark):
-    """The probe must pick grouped_lead for few groups (no
-    Window.partitionBy funnel in the plan) and the plain window for
-    many groups — with identical values either way."""
-    from grafink_spark.ops import adaptive_lead, grouped_lead
-
-    # 3 groups, 300 rows: low cardinality -> grouped_lead (no Window)
-    low = spark.range(300).select(
-        (F.col("id") % 3).alias("g"), F.col("id").alias("t")
-    )
-    out_low = adaptive_lead(low, ["g"], ["t"], lead_cols=["t"])
-    assert "Window" not in out_low._jdf.queryExecution().executedPlan().toString()
-    # 300 distinct groups >= 8 shuffle partitions * 4 -> window path
-    high = spark.range(300).select(
-        F.col("id").alias("g"), F.col("id").alias("t")
-    )
-    out_high = adaptive_lead(high, ["g"], ["t"], lead_cols=["t"])
-    assert "Window" in out_high._jdf.queryExecution().executedPlan().toString()
-    # value parity on the low-card path vs the window definition
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("g").orderBy("t")
-    want = sorted(
-        map(
-            tuple,
-            low.withColumn("t_next", F.lead("t").over(w)).collect(),
-        )
-    )
-    assert sorted(map(tuple, out_low.collect())) == want
-
-
 def test_corpus_diversity_has_no_low_cardinality_window(spark):
     """The registered corpus_diversity query must not funnel fact rows
     through a |sources|-task window — its pairing goes through
-    adaptive_lead, which picks grouped_lead for the 5-source table."""
+    grouped_lead."""
     import os
 
     from grafink_spark.benchqueries import QUERIES
@@ -759,6 +728,42 @@ def test_grouped_lead_matches_window_lead(spark):
     a = sorted([tuple(r) for r in got.collect()], key=key)
     b = sorted([tuple(r) for r in want.collect()], key=key)
     assert a == b
+
+
+def test_grouped_lead_at_low_and_high_group_cardinality(spark):
+    """grouped_lead is the one lead plan for every group cardinality:
+    a few groups (one of them NULL) and one group per row (each a
+    singleton, so every lead is NULL) both match the window lead, and
+    neither plan holds a Window."""
+    from pyspark.sql import Window
+
+    from grafink_spark.ops import grouped_lead
+
+    # 3 groups, 300 rows: id % 3 == 0 forms the NULL group
+    low = spark.range(300).select(
+        F.when(F.col("id") % 3 != 0, F.col("id") % 3).alias("g"),
+        F.col("id").alias("t"),
+    )
+    # 300 distinct groups, one row each
+    high = spark.range(300).select(
+        F.col("id").alias("g"), F.col("id").alias("t")
+    )
+    w = Window.partitionBy("g").orderBy("t")
+
+    def key(r):
+        return (str(r[0]), r[1])
+
+    for df in (low, high):
+        got = grouped_lead(df, ["g"], ["t"], lead_cols=["t"])
+        assert "Window" not in got._jdf.queryExecution().executedPlan().toString()
+        want = df.withColumn("t_next", F.lead("t").over(w))
+        assert sorted(map(tuple, got.collect()), key=key) == sorted(
+            map(tuple, want.collect()), key=key
+        )
+    assert all(
+        r["t_next"] is None
+        for r in grouped_lead(high, ["g"], ["t"], lead_cols=["t"]).collect()
+    )
 
 
 def test_distributed_cumsum_matches_global_window(spark):

@@ -88,7 +88,6 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "bitext_mine_ivf": ({"bnlj"}, _CENTROID + "; candidates via equi join on list_id"),
     "semantic_dedup": ({"bnlj"}, _CENTROID + " (pinned ivf_assign blocking)"),
     "semantic_dedup_auto": ({"bnlj"}, _CENTROID + " (pinned ivf_assign blocking)"),
-    "semantic_dedup_arrow": ({"bnlj"}, _CENTROID + " (pinned ivf_assign blocking)"),
     "mmr_topk": ({"bnlj", "single-part"}, _QUERYK + "; pinned brute top-k + k-bounded selection folds"),
     "hard_triplets": ({"bnlj", "single-part"}, _QUERYK + " (anchors broadcast by mining contract; anchor-bounded folds)"),
     "pagerank": ({"bnlj"}, _EDGEBUILD),

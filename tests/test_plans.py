@@ -154,23 +154,6 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_semantic_dedup_salted_equi_join(spark):
-    rows = [(i, [float(i % 4 == j) for j in range(4)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    plan = physical_plan(
-        dd.semantic_dedup(
-            df, nlist=2, iters=1, threshold=0.9, pair_backend="expr"
-        )
-    )
-    # within-cluster compare is a salted equi join: list_id+salt keys
-    assert "_salt" in plan
-    assert "CartesianProduct" not in plan
-    # the only nested-loop is the 1-row broadcast centroid matrix
-    for ln in plan.splitlines():
-        if "BroadcastNestedLoopJoin" in ln:
-            assert "Cross" in ln
-
-
 def test_bm25_no_wide_shuffle(spark):
     from grafink_spark.llm.search import bm25_search
 
@@ -670,19 +653,6 @@ def test_min_cost_supplier_has_no_window_and_no_nested_loop(spark):
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_grouped_rank_twin_shares_oracle_values(spark):
-    """quantile_transform and its grouped_rank twin must return
-    identical rows — the scalable plan is a pure re-plan."""
-    import grafink_spark.benchqueries as bq
-
-    sf = "/root/testdata/sf0.001"
-    a = sorted(map(tuple, bq.q_quantile_transform(spark, sf).collect()))
-    b = sorted(
-        map(tuple, bq.q_quantile_transform_scalable(spark, sf).collect())
-    )
-    assert a == b
 
 
 def test_nation_volume_shipping_single_fact_exchange(spark):
