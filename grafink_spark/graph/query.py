@@ -15,19 +15,36 @@ Each maps to 1–2 filters/joins/aggregations over the vertices/edges
 parquet tables; edge tables are label-partitioned so ``outE(label)``
 prunes files, and the point lookups push predicates into the scan (the
 engine's answer to JanusGraph composite indexes).
+
+That scan is an Arrow one for a bounded vertex lookup: an equality on
+``id`` or ``objectId`` (:data:`BOUNDED_KEYS`), with any further literal
+equalities. ``GraphStore._lookup`` reads it on the driver with no Spark
+job; ``V`` returns it as a local frame (``LocalTableScan``: collecting
+it runs no job either), and ``value_map``/``vertex_rows`` convert it to
+the Rows Spark's collect would return, with no frame at all. A store
+off the local filesystem, or a lookup matching more than
+``LOOKUP_ROW_CAP`` rows, keeps the Spark plan. Hop reads (``neighbors``,
+``out_e`` from one vertex) stay on Spark: their result has no bound
+(``similarity`` joins every high-``rfscore`` alert into one clique, and
+``satr`` makes each fixed vertex a hub), so they need their own cap and
+their own measurements first.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from grafink_spark.util import pin
 
 from grafink_spark.graph.storage import GraphStore
 from grafink_spark.rules.base import DST, SRC
+
+# an equality on one of these makes a vertex lookup bounded
+BOUNDED_KEYS = frozenset({"id", "objectId"})
 
 
 @dataclass
@@ -37,7 +54,32 @@ class GraphQuery:
     # ------------------------------------------------------ vertex side
 
     def V(self, **has) -> DataFrame:
-        """g.V().has(k, v)... — conjunctive property filter."""
+        """g.V().has(k, v)... — conjunctive property filter. A bounded
+        lookup the Arrow reader serves comes back as a local frame."""
+        hit = self._point(has)
+        if hit is not None:
+            return self.store.spark.createDataFrame(*hit)
+        return self._scan(has)
+
+    def vertex_rows(self, has: dict, limit: int | None = None) -> list[Row]:
+        """``V(**has).collect()``, or ``.take(limit)``; a bounded lookup
+        takes its Rows straight from the Arrow table."""
+        hit = self._point(has)
+        if hit is None:
+            df = self._scan(has)
+            return df.collect() if limit is None else df.take(limit)
+        table, schema = hit
+        if limit is not None:
+            table = table.slice(0, limit)
+        # the Row types Spark's collect returns, bytearray for binary too
+        return ArrowTableToRowsConversion.convert(table, schema, binary_as_bytes=False)
+
+    def _point(self, has: dict):
+        if BOUNDED_KEYS.isdisjoint(has):
+            return None
+        return self.store._lookup(self.store.vertex_path, **has)
+
+    def _scan(self, has: dict) -> DataFrame:
         df = self.store.vertices()
         for k, v in has.items():
             df = df.where(F.col(k) == F.lit(v))
@@ -53,9 +95,10 @@ class GraphQuery:
 
     def value_map(self, vertex_id: int) -> dict:
         """valueMap(true) — all properties of one vertex. Ids are unique,
-        so a plain filtered collect (one job) replaces ``limit(1)``,
-        whose incremental take can run a second job."""
-        rows = self.store.vertices().where(F.col("id") == vertex_id).collect()
+        so where Spark serves it a plain filtered collect (one job)
+        replaces ``limit(1)``, whose incremental take can run a second
+        job."""
+        rows = self.vertex_rows({"id": vertex_id})
         return rows[0].asDict() if rows else {}
 
     # -------------------------------------------------------- edge side

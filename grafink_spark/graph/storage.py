@@ -41,37 +41,68 @@ give the same inference: reads return exactly what
 there is no knob. The memo is process-wide (the job, the shell and the
 API share it), locked for the API's serving thread, and holds at most
 :data:`OPEN_MEMO_ENTRIES` tables, least recently opened evicted first.
+
+Bounded lookups skip Spark altogether. :meth:`GraphStore._lookup` reads
+the rows matching literal equalities with ``pyarrow.dataset``, on the
+driver, with the filter pushed into the scan: no Spark job, where even
+a filtered collect pays a job's fixed cost. It first finishes an
+interrupted swap, as every open does, then lists the table's data files
+locally (the names Spark's file index keeps) and compares them with the
+memo; a difference calls :func:`open_table` once, which refreshes the
+entry. It then reads exactly the memo's files with the memo's Spark
+schema (``to_arrow_schema``, the date directories as a hive
+partitioning), so Arrow and Spark read one snapshot with one set of
+types; a local listing that disagrees with Spark's costs an open, never
+a wrong row. It serves only tables on the local filesystem (a path with
+no scheme or ``file:``; no pyarrow filesystem is wired in for others)
+and at most :data:`LOOKUP_ROW_CAP` rows, so a lookup's driver-side
+result stays bounded: it scans batch by batch and gives up at the first
+row past the cap. In both cases, and for a literal whose type Arrow
+would not compare as Spark does, it returns None and the caller keeps
+its Spark plan.
 """
 
 from __future__ import annotations
 
+import operator
 import os
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
+from urllib.parse import unquote, urlsplit
 
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BooleanType, IntegralType, StringType, StructType
 
 from grafink_spark.graph.sink import GraphSink
 from grafink_spark.rules.base import DST, PROP_VAL, SRC, ClassifierRule
 
 
 OPEN_MEMO_ENTRIES = 64
+# rows one Arrow lookup may bring to the driver; past it, the Spark plan
+LOOKUP_ROW_CAP = 10_000
 _open_memo: OrderedDict[str, tuple[frozenset[str], StructType]] = OrderedDict()
 _open_lock = threading.Lock()
+
+
+def _remembered(path: str) -> tuple[frozenset[str], StructType] | None:
+    with _open_lock:
+        hit = _open_memo.get(path)
+        if hit is not None:
+            _open_memo.move_to_end(path)
+    return hit
 
 
 def open_table(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job
     while the table's files are the ones last inferred from (module
     docstring). Raises what ``spark.read.parquet`` raises."""
-    with _open_lock:
-        hit = _open_memo.get(path)
-        if hit is not None:
-            _open_memo.move_to_end(path)
+    hit = _remembered(path)
     if hit is not None:
         files, schema = hit
         df = spark.read.schema(schema).parquet(path)
@@ -84,6 +115,56 @@ def open_table(spark: SparkSession, path: str) -> DataFrame:
         while len(_open_memo) > OPEN_MEMO_ENTRIES:
             _open_memo.popitem(last=False)
     return df
+
+
+def _local_root(path: str) -> str | None:
+    """The local directory of a table path with no scheme or a ``file``
+    one (Hadoop takes the path part as written, undecoded); None for
+    any other filesystem."""
+    parts = urlsplit(path)
+    if parts.scheme not in ("", "file"):
+        return None
+    return os.path.abspath(parts.path if parts.scheme else path)
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips (InMemoryFileIndex's
+    ``shouldFilterOutPathName``)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_files(root: str) -> frozenset[str]:
+    found = []
+    for parent, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        found += [os.path.join(parent, f) for f in files if not _hidden(f)]
+    return frozenset(found)
+
+
+def _local_paths(uris: frozenset[str]) -> list[str]:
+    """Spark's percent-encoded ``file:`` URIs as local paths, sorted."""
+    return sorted(unquote(urlsplit(u).path) for u in uris)
+
+
+# literal types the Arrow filter compares exactly as Spark's ``col == lit``
+_LOOKUP_LITERALS = ((BooleanType, bool), (IntegralType, int), (StringType, str))
+
+
+def _arrow_comparable(schema: StructType, eq: dict) -> bool:
+    types = {f.name: f.dataType for f in schema.fields}
+    for k, v in eq.items():
+        if not any(
+            isinstance(types.get(k), st) and type(v) is pt
+            for st, pt in _LOOKUP_LITERALS
+        ):
+            return False
+        if type(v) is int and not -(2**63) <= v < 2**63:
+            return False
+    return True
 
 
 @dataclass
@@ -295,6 +376,56 @@ class GraphStore:
 
     def fixed_vertices(self) -> DataFrame:
         return open_table(self.spark, self.fixed_vertex_path)
+
+    def _lookup(self, path: str, **eq) -> tuple[pa.Table, StructType] | None:
+        """The rows of the table at ``path`` where every ``column ==
+        value`` of ``eq`` holds, read on the driver by ``pyarrow.dataset``
+        from ``open_table``'s snapshot, with that snapshot's Spark
+        schema (module docstring). None where the caller keeps its
+        Spark plan: a store off the local filesystem, a value whose type
+        Arrow would not compare as Spark does, or more than
+        :data:`LOOKUP_ROW_CAP` matching rows. ``eq`` is not empty."""
+        root = _local_root(path)
+        if root is None:
+            return None
+        self._recover_swap(path)
+        hit = _remembered(path)
+        if hit is None or frozenset(_local_paths(hit[0])) != _data_files(root):
+            open_table(self.spark, path)  # refreshes the entry
+            hit = _remembered(path)
+        if hit is None:  # evicted by other tables' opens in between
+            return None
+        files, schema = hit
+        if not _arrow_comparable(schema, eq):
+            return None
+        local = _local_paths(files)
+        arrow = to_arrow_schema(schema)
+        keys = [
+            seg.split("=", 1)[0]
+            for seg in os.path.relpath(os.path.dirname(local[0]), root).split(os.sep)
+            if "=" in seg
+        ]
+        data = pads.dataset(
+            local,
+            schema=arrow,
+            format="parquet",
+            partitioning=pads.partitioning(
+                pa.schema([arrow.field(k) for k in keys]), flavor="hive"
+            )
+            if keys
+            else None,
+            partition_base_dir=root,
+        )
+        match = reduce(operator.and_, (pads.field(k) == v for k, v in eq.items()))
+        batches, rows = [], 0
+        for batch in data.to_batches(filter=match):
+            rows += batch.num_rows
+            if rows > LOOKUP_ROW_CAP:
+                return None
+            batches.append(batch)
+        # PySpark 4.1.2's createDataFrame(table) returns no rows when the
+        # table's leading batches are empty; one chunk has none
+        return pa.Table.from_batches(batches, arrow).combine_chunks(), schema
 
     # ----------------------------------------------------------- delete
 

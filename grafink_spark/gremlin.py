@@ -19,7 +19,13 @@ migrating user can paste their queries unchanged:
 Terminal no-ops from the reference transcripts (``.next()``,
 ``.toList()``, ``.asScala``, ``.iterate()``) are accepted; ``next``
 materializes the first row, ``toList`` collects. Everything stays a
-lazy DataFrame plan until one of those terminals (or ``count``) runs.
+lazy DataFrame plan until one of those terminals (or ``count``) runs,
+except a bounded vertex lookup: ``g.V(<id>)``, or ``g.V()``, followed
+by literal ``has``/``hasLabel`` steps that together state an equality
+on ``id`` or ``objectId``. That prefix goes through ``GraphQuery.V``,
+whose Arrow reader reads it at once with no Spark job, and a
+``next``/``toList`` directly on it takes its Rows without building a
+DataFrame (``graph/query.py``).
 
 Scope is the reference's documented query set plus the common next
 steps a migrating TinkerPop user types: ``hasLabel``, ``values``,
@@ -38,7 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grafink_spark.graph.query import GraphQuery
+from grafink_spark.graph.query import BOUNDED_KEYS, GraphQuery
 from grafink_spark.rules.base import DST, SRC
 
 
@@ -206,6 +212,26 @@ _EDGE_PROP = {"value": "propVal"}  # reference edge property → column
 _BY_ID_STEPS = {"valueMap", "out", "in", "both", "outE", "inE", "bothE"}
 
 
+def _literal_prefix(steps: list[Step], vertex_id: int | None) -> tuple[dict, int]:
+    """The equalities ``g.V([<id>])`` and the literal ``has``/
+    ``hasLabel(one)`` steps straight after it state, and the index of
+    the first step past them."""
+    eq = {} if vertex_id is None else {"id": vertex_id}
+    n = 1
+    for step in steps[1:]:
+        if step.name == "has" and len(step.args) == 2 and not isinstance(step.args[1], Pred):
+            k, v = step.args
+        elif step.name == "hasLabel" and len(step.args) == 1:
+            k, v = "label", str(step.args[0])
+        else:
+            break
+        if k in eq:
+            break
+        eq[k] = v
+        n += 1
+    return eq, n
+
+
 class GremlinExecutor:
     """Evaluates a parsed traversal against GraphQuery's tables."""
 
@@ -224,16 +250,31 @@ class GremlinExecutor:
         restricted = bool(ids)
         # single-id fast path (src pushdown, valueMap)
         vertex_id = ids[0] if len(ids) == 1 else None
+        first = 1  # the first step the loop below evaluates
+        done = None  # set once a terminal materializes a python value
+        eq, end = _literal_prefix(steps, vertex_id) if len(ids) <= 1 else ({}, 1)
         if vertex_id is not None and steps[1:2] and steps[1].name in _BY_ID_STEPS:
             df = None  # the next step reads by id alone: skip the open
-        else:
+        elif BOUNDED_KEYS.isdisjoint(eq):
+            # no bounded lookup: the loop below applies every step
             df = self.g.store.vertices()
-            if vertex_id is not None:
-                df = df.where(F.col("id") == vertex_id)
-            elif ids:
+            if ids:
                 df = df.where(F.col("id").isin(ids))
-        done = None  # set once a terminal materializes a python value
-        it = iter(steps[1:])
+        else:
+            # V(<id>) and the literal has/hasLabel steps after it are one
+            # GraphQuery.V lookup; next/toList straight on it take Rows
+            first, restricted = end, True
+            terminal = steps[first].name if first < len(steps) else None
+            if terminal == "next":
+                rows = self.g.vertex_rows(eq, limit=1)
+                if not rows:
+                    return None
+                done, first = rows[0], first + 1
+            elif terminal == "toList":
+                done, first = self.g.vertex_rows(eq), first + 1
+            else:
+                df = self.g.V(**eq)
+        it = iter(steps[first:])
         for step in it:
             if done is not None:
                 # only transcript no-ops may follow a materialized value

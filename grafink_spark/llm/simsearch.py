@@ -249,9 +249,16 @@ def ivf_assign(
     interpreted HOF cosines are CPU-bound, and a small parquet read as
     1-2 splits would run them serially (measured 9 s → <2 s on the
     label-noise twin); no-op at real scale where inputs already carry
-    thousands of splits."""
+    thousands of splits.
+
+    A vector whose length differs from the centroids' raises (``zip_with``
+    would pad it with NULLs and give it a NULL ``list_id``); the check is
+    part of the projection, so it adds no job."""
     from grafink_spark.util import ensure_min_partitions
 
+    dims = {len(c) for _, c in centroids}
+    if len(dims) > 1:
+        raise ValueError(f"ivf_assign: centroids of unequal lengths {sorted(dims)}")
     corpus = ensure_min_partitions(corpus)
     v = F.col(vec_col).cast("array<double>")
     nv = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -267,6 +274,16 @@ def ivf_assign(
 
     sims = F.zip_with(F.col("_cmat"), F.col("_cnorms"), cos_to)
     best = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
+    if dims:
+        (d,) = dims
+        best = F.when(v.isNull() | (F.size(v) == d), best).otherwise(
+            F.raise_error(
+                F.format_string(
+                    f"ivf_assign: vector of length %d against {d}-dimensional centroids",
+                    F.size(v),
+                )
+            )
+        )
     return (
         corpus.crossJoin(F.broadcast(_centroid_matrix(corpus, centroids)))
         .withColumn("_nv", nv)

@@ -505,16 +505,19 @@ def test_semantic_dedup_matches_expression_reference(spark):
 
 
 def test_semantic_dedup_ragged_cluster_raises(spark):
-    """Vectors of different lengths inside one cluster have no gram
-    matrix: the kernel must fail, not return survivors."""
+    """Vectors of different lengths have no gram matrix: semantic_dedup
+    must fail, not return survivors. ``ivf_assign`` refuses them before
+    any cluster forms; the kernel keeps its own check for a ragged
+    cluster handed to it directly."""
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    # iters=0: Lloyd refinement would fail on the ragged rows before
-    # the per-cluster kernel runs
-    with pytest.raises(Exception, match="must match exactly"):
+    with pytest.raises(Exception, match="vector of length 3"):
         dd.semantic_dedup(df, nlist=1, iters=0, threshold=0.5).collect()
+    one_cluster = df.withColumn("list_id", F.lit(0))
+    with pytest.raises(Exception, match="must match exactly"):
+        dd._arrow_within_cluster_dropped(one_cluster, "embedding", "vec_id", 0.5).collect()
 
 
 def test_strip_dup_spans_removes_shared_and_repeated_windows(spark):

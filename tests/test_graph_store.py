@@ -408,3 +408,175 @@ def test_sink_counts_equal_parquet_counts(spark, tmp_path):
     # the sink sees each label with rows once; the empty set sends nothing
     assert sorted(received) == [("exactmatch", 6), ("similarity", 4)]
     assert _parquet_files(str(tmp_path / "s")) == []
+
+
+# ------------------------------------------------- Arrow point reads
+
+
+def _night(spark, night, n=4, schema="id long, objectId string, rfscore double"):
+    """``n`` vertices of one night: ids night*100+i, objectIds o<night>_<i>
+    (``o_shared`` on i == 0, so that key spans every night)."""
+    rows = [
+        (night * 100 + i, "o_shared" if i == 0 else f"o{night}_{i}", i / 7, 2019, 2, night)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, schema + ", year int, month int, day int")
+
+
+_TYPES_SCHEMA = (
+    "id long, objectId string, flag boolean, b byte, sh short, n int, "
+    "mag float, rf double, amount decimal(10,3), raw binary, night date, "
+    "seen timestamp, year int, month int, day int"
+)
+
+
+def _types_store(spark, store):
+    """Every column type a vertex table can hold, null cells included."""
+    import datetime as dt
+    from decimal import Decimal
+
+    full = (
+        1, "oA", True, 7, 300, 70_000, 0.1, 0.95, Decimal("12.345"), b"\x00\xff",
+        dt.date(2019, 2, 1), dt.datetime(2019, 2, 1, 3, 4, 5, 678_000), 2019, 2, 1,
+    )
+    nulls = (2, "oB", *([None] * 10), 2019, 2, 1)
+    store.write_vertices(spark.createDataFrame([full, nulls], _TYPES_SCHEMA))
+    return [{"id": 1}, {"objectId": "oB"}, {"id": 1, "flag": True}, {"objectId": "oA", "n": 70_000}]
+
+
+def _drift_store(spark, store):
+    """Nights whose files differ in columns."""
+    store.write_vertices(_night(spark, 1))
+    store.write_vertices(_night(spark, 2, schema="id long, objectId string, extra string"))
+    store.write_vertices(_night(spark, 3, schema="id long, objectId string, rfscore float"))
+    return [{"id": 101}, {"id": 202}, {"objectId": "o_shared"}, {"objectId": "o3_1"}]
+
+
+def _appended_store(spark, store):
+    """A lookup remembers the table, then a night is appended."""
+    store.write_vertices(_night(spark, 1))
+    GraphQuery(store).V(id=101).collect()
+    store.write_vertices(_night(spark, 2))
+    return [{"id": 201}, {"objectId": "o_shared"}, {"objectId": "o2_3", "label": "alert"}]
+
+
+def _deleted_store(spark, store):
+    store.write_vertices(_night(spark, 1))
+    store.write_vertices(_night(spark, 2))
+    GraphQuery(store).V(id=101).collect()
+    store.delete_vertices(spark.createDataFrame([(101,), (200,)], "id long"))
+    return [{"id": 101}, {"id": 102}, {"objectId": "o_shared"}, {"objectId": "o2_1"}]
+
+
+def _swap_interrupted_store(spark, store):
+    """A delete rewrite whose swap stopped after removing the table:
+    the complete rewrite sits in ``vertices__tmp``."""
+    import os
+
+    store.write_vertices(_night(spark, 1))
+    store.write_vertices(_night(spark, 2))
+    store.delete_vertices(spark.createDataFrame([(102,)], "id long"))
+    os.rename(store.vertex_path, store.vertex_path + "__tmp")
+    return [{"id": 102}, {"id": 201}, {"objectId": "o_shared"}]
+
+
+@pytest.mark.parametrize(
+    "build, root",
+    [
+        (_types_store, "graph"),
+        (_drift_store, "graph"),
+        (_appended_store, "graph"),
+        (_deleted_store, "graph"),
+        (_swap_interrupted_store, "graph"),
+        (_appended_store, "my graph"),
+        (_drift_store, "file-uri"),
+    ],
+    ids=["types", "column-drift", "append", "delete", "interrupted-swap", "space-in-path", "file-uri"],
+)
+def test_arrow_point_reads_equal_spark_reads(spark, tmp_path, build, root):
+    """A bounded lookup served by the Arrow reader returns the Spark
+    plan's rows, column order and types: through ``V``, ``value_map``
+    and Gremlin ``has().next()``/``toList()``."""
+    from grafink_spark.gremlin import gremlin
+
+    path = (tmp_path / root).as_uri() if root == "file-uri" else str(tmp_path / root)
+    store = GraphStore(spark, path)
+    lookups = build(spark, store)
+    g = GraphQuery(store)
+    for has in lookups:
+        assert store._lookup(store.vertex_path, **has) is not None  # Arrow serves it
+        arrow_rows = sorted(g.V(**has).collect(), key=repr)
+        spark_rows = sorted(g._scan(has).collect(), key=repr)
+        assert arrow_rows == spark_rows, has
+        assert [r.asDict() for r in arrow_rows] == [r.asDict() for r in spark_rows]
+        assert g.V(**has).schema == g._scan(has).schema
+        if set(has) == {"id"}:
+            expect = spark_rows[0].asDict() if spark_rows else {}
+            assert g.value_map(has["id"]) == expect
+        if set(has) == {"objectId"}:
+            key = has["objectId"]
+            row = gremlin(g, f'g.V().has("objectId", "{key}").next()')
+            assert (row is None) == (not spark_rows) and (row is None or row in spark_rows)
+            listed = gremlin(g, f'g.V().has("objectId", "{key}").toList()')
+            assert sorted(listed, key=repr) == spark_rows
+
+
+def test_point_reads_find_a_key_in_the_last_of_three_nights(spark, store):
+    """Scanning three night files, the filter leaves the first two
+    files' batches empty; such a table still gives its row to
+    ``createDataFrame`` and to the Row conversion."""
+    from grafink_spark.gremlin import gremlin
+
+    for night in (1, 2, 3):
+        store.write_vertices(_night(spark, night))
+    g = GraphQuery(store)
+    table, _ = store._lookup(store.vertex_path, objectId="o3_2")
+    assert table.num_rows == 1 and table.column("id").num_chunks == 1
+    assert [r.id for r in g.V(objectId="o3_2").collect()] == [302]
+    assert [r.id for r in g.V(id=302).collect()] == [302]
+    assert g.value_map(302)["objectId"] == "o3_2"
+    assert gremlin(g, 'g.V().has("objectId", "o3_2").next()').id == 302
+    assert gremlin(g, "g.V(302).next()").objectId == "o3_2"
+
+
+def test_point_reads_run_no_spark_job(spark, store):
+    from grafink_spark.gremlin import gremlin
+
+    for night in (1, 2):
+        store.write_vertices(_night(spark, night))
+    g = GraphQuery(store)
+    reads = {
+        "value_map": lambda: g.value_map(202)["id"],
+        "has_next": lambda: gremlin(g, 'g.V().has("objectId", "o2_2").next()').id,
+        "valueMap": lambda: gremlin(g, "g.V(202).valueMap(true)")["id"],
+        "V_collect": lambda: g.V(objectId="o2_2").collect()[0].id,
+    }
+    g.value_map(202)  # the first read after a write refreshes the memo
+    for name, read in reads.items():
+        out, jobs = jobs_submitted(spark, read)
+        assert (out, jobs) == (202, 0), name
+
+
+def test_over_cap_and_off_local_lookups_keep_the_spark_plan(spark, store, monkeypatch):
+    from grafink_spark.graph import storage
+    from grafink_spark.gremlin import gremlin
+
+    for night in (1, 2, 3):
+        store.write_vertices(_night(spark, night))
+    g = GraphQuery(store)
+    monkeypatch.setattr(storage, "LOOKUP_ROW_CAP", 2)
+    assert store._lookup(store.vertex_path, objectId="o_shared") is None
+    assert store._lookup(store.vertex_path, objectId="o1_1") is not None
+    over = g.V(objectId="o_shared")
+    assert "LocalTableScan" not in over._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.id for r in over.collect()) == [100, 200, 300]
+    listed = gremlin(g, 'g.V().has("objectId", "o_shared").toList()')
+    assert sorted(r.id for r in listed) == [100, 200, 300]
+    assert gremlin(g, 'g.V().has("objectId", "o_shared").next()').id in (100, 200, 300)
+    # a literal Arrow would not compare as Spark does keeps the plan too
+    assert store._lookup(store.vertex_path, id="101") is None
+    assert [r.objectId for r in g.V(id="101").collect()] == ["o1_1"]
+    # no pyarrow filesystem is wired in for other schemes; the reader
+    # declines before touching the store
+    assert GraphStore(spark, "hdfs://namenode:8020/g")._lookup("hdfs://namenode:8020/g/vertices", id=1) is None
+    assert storage._local_root("file:///data/my graph/v") == "/data/my graph/v"

@@ -371,19 +371,28 @@ def test_gremlin_by_id_steps_skip_vertex_open(spark, tmp_path, monkeypatch):
         _FakeRule(),
     )
     g = GraphQuery(store)
-    opens = []
-    vertices = GraphStore.vertices
+    opens, lookups = [], []
+    vertices, lookup = GraphStore.vertices, GraphStore._lookup
     monkeypatch.setattr(
         GraphStore, "vertices", lambda self: opens.append(1) or vertices(self)
+    )
+    monkeypatch.setattr(
+        GraphStore,
+        "_lookup",
+        lambda self, path, **eq: lookups.append(eq) or lookup(self, path, **eq),
     )
 
     assert gremlin(g, "g.V(11).valueMap(true)")["objectId"] == "ZTFa"
     assert gremlin(g, "g.V(99).valueMap(true)") == {}
-    assert len(opens) == 2  # value_map's own read, once per traversal
-    opens.clear()
+    # value_map's own read, once per traversal, by the Arrow reader
+    assert opens == [] and lookups == [{"id": 11}, {"id": 99}]
+    lookups.clear()
     assert [r.neighbor_id for r in gremlin(g, 'g.V(12).out("similarity")').collect()] == [11]
     assert gremlin(g, "g.V(12).outE().count()") == 1
-    assert opens == []
-    # a step that filters the vertex frame still opens it
+    assert opens == [] and lookups == []
+    # a step that filters the vertex frame still reads it: a bounded one
+    # by lookup, any other by opening the table
     assert gremlin(g, 'g.V(12).has("objectId", "ZTFb").count()') == 1
+    assert opens == [] and lookups == [{"id": 12, "objectId": "ZTFb"}]
+    assert gremlin(g, 'g.V().has("objectId", within("ZTFb")).count()') == 1
     assert opens == [1]

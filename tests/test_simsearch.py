@@ -119,6 +119,36 @@ def test_ivf_dimension_independent_plan(spark):
     assert all(r.rank in (1, 2, 3) for r in got)
 
 
+def _ragged(spark):
+    """Three 3-dimensional vectors and one of length 2, plus a NULL."""
+    return spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0]),
+         (4, [1.0, 1.0]), (5, None)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_ivf_assign_raises_on_unequal_vector_lengths(spark):
+    emb = _ragged(spark)
+    cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
+    with pytest.raises(Exception, match="vector of length 2 against 3-dimensional"):
+        ss.ivf_assign(emb, cents).collect()
+    # equal lengths assign as before, and so does a NULL vector (all
+    # cosines 0, so the first list)
+    got = {r.vec_id: r.list_id for r in ss.ivf_assign(emb.where("vec_id != 4"), cents).collect()}
+    assert got == {1: 0, 2: 1, 3: 0, 5: 0}
+    with pytest.raises(ValueError, match="unequal lengths"):
+        ss.ivf_assign(emb, [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0])])
+
+
+def test_ivf_train_raises_on_unequal_vector_lengths(spark):
+    """The length-2 vector is not among the seeds, so training reaches
+    the Lloyd step's assignment, which refuses it (it used to leave a
+    NULL list_id and fail in int(None))."""
+    with pytest.raises(Exception, match="vector of length 2"):
+        ss.ivf_train(_ragged(spark), nlist=2, iters=1)
+
+
 def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
     """ivf_write_index + ivf_topk_indexed: identical results to the
     inline ivf_topk, and the probed scan reads ONLY the probed

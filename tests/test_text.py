@@ -213,3 +213,34 @@ def test_rouge_overlap_map_clip_backend_identical(spark, monkeypatch):
     # the map path really computed clips (not all-zero degenerate)
     by = {(r.id_a, r.id_b): r for r in map_rows}
     assert by[(1, 2)].clip == 1 and by[(1, 4)].clip == 0
+
+
+def test_rouge_pairs_equal_an_unhashed_oracle(spark):
+    """``rouge_overlap`` keys grams by 60-bit hashes and the registered
+    oracle co-applies the same hash, so a collision would merge counts
+    on both sides and pass that gate. This anchor runs the registered
+    oracle over the raw gram strings instead, at sf0.01: the rows must
+    still be equal."""
+    import duckdb
+
+    from grafink_spark import benchqueries as bq
+    from tests.test_oracle_full import SF_DIR as sf
+
+    hashed = "('0x' || substr(md5(g), 1, 15))::BIGINT AS g"
+    assert hashed in bq.SQL_ROUGE_PAIRS
+    cols = "id_a, id_b, clip, n_ref, n_cand, rouge_p, rouge_r, rouge_f1"
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    raw = con.execute(
+        f"SELECT {cols} FROM ({bq.SQL_ROUGE_PAIRS.replace(hashed, 'g')})"
+    ).fetchall()
+    got = [tuple(r) for r in bq.q_rouge_pairs(spark, sf).selectExpr(*cols.split(", ")).collect()]
+
+    def norm(rows):
+        return sorted(
+            tuple(float(f"{v:.9g}") if isinstance(v, float) else v for v in r)
+            for r in rows
+        )
+
+    assert norm(got) == norm(raw)
+    assert raw and any(r[2] > 0 for r in raw)  # pairs that share grams
