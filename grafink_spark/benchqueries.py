@@ -137,55 +137,6 @@ COSINE_SQL = (
 
 
 # =================================================================
-# §2.2 projections / scalar expressions (P1-P3; Reader pipeline)
-# =================================================================
-
-
-def q_project_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column pruning + derived SQL column (rowkey concat — the
-    reference's canonical newCols example, README.md:50-57)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.selectExpr(
-        "doc_id",
-        "lang",
-        "source || '_' || CAST(doc_id AS STRING) AS rowkey",
-        "n_chars",
-    )
-
-
-SQL_PROJECT_DERIVE = """
-SELECT doc_id, lang, source || '_' || CAST(doc_id AS VARCHAR) AS rowkey, n_chars
-FROM documents
-"""
-
-
-def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-window scan + per-day aggregate (S2 partition pruning as a
-    pushed-down time predicate)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.where(
-            (F.col("ts") >= "2024-01-05") & (F.col("ts") < "2024-01-12")
-        )
-        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
-SQL_PARTITION_PRUNE = """
-SELECT strftime(ts, '%Y-%m-%d') AS day,
-       count(*) AS n_events,
-       round(sum(value), 2) AS sum_value
-FROM events
-WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-12'
-GROUP BY 1
-"""
-
-
-# =================================================================
 # §1.5 id management (zipWithIndex + reserved space)
 # =================================================================
 
@@ -201,17 +152,6 @@ SQL_ASSIGN_IDS = """
 SELECT 200 + ROW_NUMBER() OVER (ORDER BY doc_id) AS id, doc_id
 FROM documents
 """
-
-
-def q_max_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global max — the IDManager offset fetch (A1)."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .agg(F.max("o_orderkey").alias("max_id"))
-    )
-
-
-SQL_MAX_ID = "SELECT max(o_orderkey) AS max_id FROM orders"
 
 
 # =================================================================
@@ -460,190 +400,9 @@ SELECT id, count(*) AS degree FROM both_dirs GROUP BY 1
 """
 
 
-def q_delete_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delete-path semantics (S8): vertices surviving an id anti-join —
-    customers with no finished order."""
-    cust = load_table(spark, sf_dir, "customer")
-    gone = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderstatus") == "F"
-    ).select(F.col("o_custkey").alias("c_custkey"))
-    return cust.join(gone, "c_custkey", "left_anti").select("c_custkey", "c_name")
-
-
-SQL_DELETE_ANTIJOIN = """
-SELECT c_custkey, c_name FROM customer c
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-)
-"""
-
-
 # =================================================================
-# §2.8 read-side query surface
+# general query surface
 # =================================================================
-
-
-def q_count_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label counts (g.V().count() family)."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.col("event_type").alias("label"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-SQL_COUNT_BY_LABEL = "SELECT event_type AS label, count(*) AS n FROM events GROUP BY 1"
-
-
-def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point lookup by property (composite-index path)."""
-    return (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") == 42)
-        .select("doc_id", "lang", "source", "n_chars")
-    )
-
-
-SQL_POINT_LOOKUP = (
-    "SELECT doc_id, lang, source, n_chars FROM documents WHERE doc_id = 42"
-)
-
-
-def q_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort + limit surface: 20 longest documents (deterministic
-    tie-break on doc_id)."""
-    return (
-        load_table(spark, sf_dir, "documents")
-        .orderBy(F.col("n_chars").desc(), F.col("doc_id").asc())
-        .limit(20)
-        .select("doc_id", "n_chars")
-    )
-
-
-SQL_TOP_DOCS = """
-SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 20
-"""
-
-
-# =================================================================
-# general SQL surface (the engine is full Spark SQL — TPC-H-ish checks)
-# =================================================================
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style aggregation over lineitem."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            # decimal addends → order-independent exact sums (the
-            # double-sum form rounds differently between engines when
-            # a group total sits on a cents boundary)
-            F.round(F.sum(F.col("l_quantity").cast("decimal(21,6)")), 2)
-            .cast("double").alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(21,6)")), 2)
-            .cast("double").alias("sum_base_price"),
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(21,6)"
-                    )
-                ),
-                2,
-            ).cast("double").alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity::DECIMAL(21,6)), 2)::DOUBLE AS sum_qty,
-       round(sum(l_extendedprice::DECIMAL(21,6)), 2)::DOUBLE AS sum_base_price,
-       round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)),
-             2)::DOUBLE AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-dim join + aggregate: order revenue per market segment."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        orders.join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(21,6)")), 2)
-            .cast("double").alias("revenue"),
-        )
-    )
-
-
-SQL_SEGMENT_REVENUE = """
-SELECT c_mktsegment, count(*) AS n_orders,
-       round(sum(o_totalprice::DECIMAL(21,6)), 2)::DOUBLE AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY 1
-"""
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style shipping priority: fact×fact shuffle join with a
-    broadcast filtered dim, date-range filters pushed to the scans, top-10
-    by revenue (deterministic tie-break on l_orderkey)."""
-    cust = load_table(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < "1995-03-15"
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1995-03-15")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(21,6)"
-                    )
-                ),
-                2,
-            ).cast("double").alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "o_orderpriority",
-            "revenue",
-        )
-    )
-
-
-SQL_SHIPPING_PRIORITY = """
-SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       o_orderpriority,
-       round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)),
-             2)::DOUBLE AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
 
 
 def q_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2586,65 +2345,6 @@ WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 4))::INT < rate * 65536
 """
 
 
-def q_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-level aggregation: ROLLUP over (returnflag, linestatus)
-    with grouping-id markers — subtotals and grand total in one pass
-    (Expand feeds a single hash aggregation; no per-level rescans)."""
-    li = ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("qty"),
-        )
-        .select("l_returnflag", "l_linestatus", "gid", "n", "qty")
-    )
-
-
-SQL_ROLLUP_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       GROUPING(l_returnflag, l_linestatus)::BIGINT AS gid,
-       count(*) AS n, round(sum(l_quantity), 2) AS qty
-FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-"""
-
-
-def q_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-group p50/p95 (linear interpolation) — the latency-
-    summary aggregation; at 100 TB swap for percentile_approx."""
-    ev = ensure_min_partitions(load_table(spark, sf_dir, "events"))
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
-    )
-
-
-SQL_GROUP_PERCENTILES = """
-SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50,
-       round(quantile_cont(value, 0.95), 6) AS p95
-FROM events GROUP BY 1
-"""
-
-
-def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width binning of lineitem prices — the profiling
-    histogram: one narrow projection + one keyed count."""
-    li = ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
-    return (
-        li.groupBy(
-            F.floor(F.col("l_extendedprice") / 500).cast("long").alias("bin")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-SQL_VALUE_HISTOGRAM = """
-SELECT floor(l_extendedprice / 500)::BIGINT AS bin, count(*) AS n
-FROM lineitem GROUP BY 1
-"""
-
-
 def q_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style compaction: the latest event per (user, event_type) by
     (ts, event_id) — grouped_topk k=1, i.e. upsert-resolution via the
@@ -2742,37 +2442,6 @@ GROUP BY id
 SQL_K_CORE = _kcore_sql()
 
 
-def q_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: parse the events ``props`` JSON
-    column, pull the ``k`` field, and aggregate per event type — the
-    JSON path stays a JVM expression (no Python, no schema inference
-    pass; at scale prefer ``from_json`` with an explicit schema over
-    ``schema_of_json`` sampling)."""
-    ev = load_table(spark, sf_dir, "events")
-    kcol = F.get_json_object("props", "$.k").cast("int")
-    return (
-        ev.select("event_type", kcol.alias("_k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("_k") > 50, 1)).alias("n_high"),
-            F.round(F.avg("_k"), 6).alias("avg_k"),
-            F.max("_k").alias("max_k"),
-        )
-    )
-
-
-SQL_PROPS_EXTRACT = """
-SELECT event_type, count(*) AS n,
-       count(CASE WHEN CAST(json_extract_string(props, '$.k') AS INT) > 50
-                  THEN 1 END) AS n_high,
-       round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 6)
-         AS avg_k,
-       max(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
-FROM events GROUP BY 1
-"""
-
-
 # =================================================================
 # time-series operators (timeseries.py)
 # =================================================================
@@ -2849,52 +2518,6 @@ SELECT user_id,
          INTERVAL '1 day')), '%Y-%m-%d') AS day,
        round(value, 2) AS value
 FROM g
-"""
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences: (event_type, next_event, n, prob) with
-    prob = P(next | current). One window pass (lead over user_id
-    ordered by ts with event_id tie-break) + one count aggregation;
-    the per-row probability divides two exact integers, so round(6)
-    is engine-stable."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("_next", F.lead("event_type").over(w))
-        .where(F.col("_next").isNotNull())
-        .groupBy("event_type", F.col("_next").alias("next_event"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    wt = Window.partitionBy("event_type")
-    return trans.select(
-        "event_type",
-        "next_event",
-        "n",
-        F.round(
-            F.col("n").cast("double") / F.sum("n").over(wt).cast("double"), 6
-        ).alias("prob"),
-    )
-
-
-SQL_EVENT_TRANSITIONS = """
-WITH t AS (
-  SELECT event_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS next_event
-  FROM events
-),
-c AS (
-  SELECT event_type, next_event, count(*) AS n
-  FROM t WHERE next_event IS NOT NULL
-  GROUP BY 1, 2
-)
-SELECT event_type, next_event, n,
-       round(n::DOUBLE / sum(n) OVER (PARTITION BY event_type)::DOUBLE,
-             6) AS prob
-FROM c
 """
 
 
@@ -3165,10 +2788,7 @@ FROM j WHERE edit_ratio <= 0.2
 # registry
 # =================================================================
 
-register("project_derive", q_project_derive, SQL_PROJECT_DERIVE)
-register("partition_prune", q_partition_prune, SQL_PARTITION_PRUNE)
 register("assign_ids", q_assign_ids, SQL_ASSIGN_IDS)
-register("max_id", q_max_id, SQL_MAX_ID)
 register("samevalue_clique", q_samevalue_clique, SQL_SAMEVALUE_CLIQUE)
 register("samevalue_new_old", q_samevalue_new_old, SQL_SAMEVALUE_NEW_OLD)
 register("similarity_edges", q_similarity_edges, SQL_SIMILARITY_EDGES)
@@ -3183,15 +2803,6 @@ register(
 register("twomode_direct", q_twomode_direct, SQL_TWOMODE_DIRECT)
 register("twomode_catalog", q_twomode_catalog, SQL_TWOMODE_CATALOG)
 register("edge_degree", q_edge_degree, SQL_EDGE_DEGREE, drain="collect")
-register("delete_antijoin", q_delete_antijoin, SQL_DELETE_ANTIJOIN)
-register("count_by_label", q_count_by_label, SQL_COUNT_BY_LABEL)
-register("point_lookup", q_point_lookup, SQL_POINT_LOOKUP)
-register("top_docs", q_top_docs, SQL_TOP_DOCS)
-register("pricing_summary", q_pricing_summary, SQL_PRICING_SUMMARY, drain="collect")
-register("segment_revenue", q_segment_revenue, SQL_SEGMENT_REVENUE)
-register(
-    "shipping_priority", q_shipping_priority, SQL_SHIPPING_PRIORITY, drain="collect"
-)
 register("hourly_windows", q_hourly_windows, SQL_HOURLY_WINDOWS, drain="collect")
 register("asof_join", q_asof_join, SQL_ASOF_JOIN)
 register("range_join", q_range_join, SQL_RANGE_JOIN)
@@ -3204,7 +2815,6 @@ register("jaccard_pairs", q_jaccard_pairs, SQL_JACCARD_PAIRS)
 register("containment_pairs", q_containment_pairs, SQL_CONTAINMENT_PAIRS)
 register("minhash_estimate", q_minhash_estimate, SQL_MINHASH_ESTIMATE)
 register("drop_near_dups_best", q_drop_near_dups_best, SQL_DROP_NEAR_DUPS_BEST)
-register("event_transitions", q_event_transitions, SQL_EVENT_TRANSITIONS)
 register("readability", q_readability, SQL_READABILITY)
 register("exact_median", q_exact_median, SQL_EXACT_MEDIAN, drain="collect")
 register("near_dup_components", q_near_dup_components, SQL_NEAR_DUP_COMPONENTS)
@@ -3251,9 +2861,6 @@ register("zscore_outliers", q_zscore_outliers, SQL_ZSCORE_OUTLIERS)
 register("quantile_filter", q_quantile_filter, SQL_QUANTILE_FILTER)
 register("column_profile", q_column_profile, SQL_COLUMN_PROFILE)
 register("mixture_sample", q_mixture_sample, SQL_MIXTURE_SAMPLE)
-register("rollup_summary", q_rollup_summary, SQL_ROLLUP_SUMMARY)
-register("group_percentiles", q_group_percentiles, SQL_GROUP_PERCENTILES)
-register("value_histogram", q_value_histogram, SQL_VALUE_HISTOGRAM)
 register("latest_by_key", q_latest_by_key, SQL_LATEST_BY_KEY)
 register("inverted_index", q_inverted_index, SQL_INVERTED_INDEX)
 register("sliding_windows", q_sliding_windows, SQL_SLIDING_WINDOWS)
@@ -3263,7 +2870,6 @@ register("cohort_retention", q_cohort_retention, SQL_COHORT_RETENTION)
 register("doc_chunks", q_doc_chunks, SQL_DOC_CHUNKS)
 register("edit_distance_pairs", q_edit_distance_pairs, SQL_EDIT_DISTANCE_PAIRS)
 register("k_core", q_k_core, SQL_K_CORE)
-register("props_extract", q_props_extract, SQL_PROPS_EXTRACT)
 register("interval_join", q_interval_join, SQL_INTERVAL_JOIN)
 register("rolling_avg", q_rolling_avg, SQL_ROLLING_AVG)
 register("quality_deciles", q_quality_deciles, SQL_QUALITY_DECILES)
@@ -3538,32 +3144,12 @@ FROM pdh JOIN dph USING (h) GROUP BY 1
 """
 
 
-def q_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY CUBE over (returnflag, linestatus) — all four grouping
-    levels in one partial-aggregated pass (ROLLUP's sibling; the
-    rollup_summary query covers the hierarchical variant)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.round(F.sum("l_extendedprice"), 2).alias("revenue"),
-    )
-
-
-SQL_CUBE_SUMMARY = """
-SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-       round(sum(l_extendedprice), 2) AS revenue
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
 register("merge_upsert", q_merge_upsert, SQL_MERGE_UPSERT)
 register("scd2_ranges", q_scd2_ranges, SQL_SCD2_RANGES)
 register("approx_distinct", q_approx_distinct, SQL_APPROX_DISTINCT, drain="collect")
 register("bfs_distances", q_bfs_distances, SQL_BFS_DISTANCES)
 register("adamic_adar", q_adamic_adar, SQL_ADAMIC_ADAR)
 register("dup_ngram_spans", q_dup_ngram_spans, SQL_DUP_NGRAM_SPANS)
-register("cube_summary", q_cube_summary, SQL_CUBE_SUMMARY)
 
 
 # =================================================================
@@ -3703,116 +3289,8 @@ register("salted_join", q_salted_join, SQL_SALTED_JOIN)
 
 
 # =================================================================
-# round-2 batch 5: six-way join (TPC-H Q5 shape), token-budget
-# corpus sampling
+# round-2 batch 5
 # =================================================================
-
-
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: six-way join (region→nation→{customer, supplier}
-    →orders→lineitem) with the local-supplier co-nation constraint —
-    the plan-audit showcase for dimension broadcasting: region, nation,
-    customer, supplier are all broadcast; only orders⋈lineitem
-    shuffles, on the join key both sides."""
-    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(
-            maybe_broadcast(customer), orders.o_custkey == customer.c_custkey
-        )
-        .join(
-            maybe_broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey
-        )
-        # local-supplier constraint: supplier and customer share a nation
-        .where(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-SQL_LOCAL_SUPPLIER_VOLUME = """
-SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
-GROUP BY n_name
-"""
-
-
-def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget mixture sampling: per-source character budgets
-    (40%/40%/20% of a 100k-char total for src0/src1/src2), filled in
-    deterministic md5(doc_id) order via a running sum — the
-    "sample N tokens at these source weights" step of corpus assembly.
-    One window shuffle on source; the budget comparison uses the
-    cumulative size BEFORE each doc, so the first over-budget doc is
-    still admitted (budgets are soft caps, docs are atomic)."""
-    docs = load_table(spark, sf_dir, "documents")
-    weights = {"src0": 0.4, "src1": 0.4, "src2": 0.2}
-    total = 100000
-    budget = F.when(
-        F.col("source") == "src0", F.lit(int(total * weights["src0"]))
-    ).when(F.col("source") == "src1", F.lit(int(total * weights["src1"]))).when(
-        F.col("source") == "src2", F.lit(int(total * weights["src2"]))
-    )
-    w = Window.partitionBy("source").orderBy(F.md5(F.col("doc_id").cast("string")))
-    return (
-        docs.withColumn("_budget", budget)
-        .where(F.col("_budget").isNotNull())
-        .withColumn(
-            "_before",
-            F.coalesce(
-                F.sum("n_chars").over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .where(F.col("_before") < F.col("_budget"))
-        .select("doc_id", "source", "n_chars")
-    )
-
-
-SQL_TOKEN_BUDGET_SAMPLE = """
-WITH b AS (
-  SELECT doc_id, source, n_chars,
-         CASE source WHEN 'src0' THEN 40000 WHEN 'src1' THEN 40000
-                     WHEN 'src2' THEN 20000 END AS budget,
-         coalesce(sum(n_chars) OVER (
-           PARTITION BY source ORDER BY md5(doc_id::VARCHAR)
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_sum
-  FROM documents
-  WHERE source IN ('src0', 'src1', 'src2')
-)
-SELECT doc_id, source, n_chars FROM b WHERE before_sum < budget
-"""
-
-
-register(
-    "local_supplier_volume",
-    q_local_supplier_volume,
-    SQL_LOCAL_SUPPLIER_VOLUME,
-    drain="collect",
-)
-register("token_budget_sample", q_token_budget_sample, SQL_TOKEN_BUDGET_SAMPLE)
 
 
 def q_zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3915,155 +3393,6 @@ LEFT JOIN (SELECT event_id, user_id, ts FROM events
 """
 
 register("interval_join_left", q_interval_join_left, SQL_INTERVAL_JOIN_LEFT)
-
-
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label mean embedding (class prototypes — the training-data
-    side of centroid classifiers / cluster quality checks): posexplode
-    to (label, pos, val), one partial-aggregated shuffle on
-    (label, pos). Dimension-independent plan (no per-dim columns)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.select(
-            "label",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias(
-                "pos", "_v"
-            ),
-        )
-        .groupBy("label", "pos")
-        .agg(F.round(F.avg("_v"), 6).alias("centroid_val"))
-    )
-
-
-SQL_LABEL_CENTROIDS = """
-WITH px AS (
-  SELECT label, unnest(embedding)::DOUBLE AS v,
-         generate_subscripts(embedding, 1) - 1 AS pos
-  FROM embeddings
-)
-SELECT label, pos, round(avg(v), 6) AS centroid_val
-FROM px GROUP BY 1, 2
-"""
-
-register("label_centroids", q_label_centroids, SQL_LABEL_CENTROIDS)
-
-
-def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT: order counts and revenue share per priority, one column
-    group per order status (explicit value list — deterministic schema,
-    single pass; Spark's two-pass value inference is avoided)."""
-    orders = load_table(spark, sf_dir, "orders")
-    statuses = ["F", "O", "P", "N"]
-    out = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", statuses)
-        .agg(F.count(F.lit(1)))
-    )
-    # null → 0 for absent combos; stable column names
-    return out.select(
-        "o_orderpriority",
-        *[F.coalesce(F.col(s), F.lit(0)).alias(f"n_{s}") for s in statuses],
-    )
-
-
-SQL_PIVOT_STATUS = """
-SELECT o_orderpriority,
-       count(*) FILTER (WHERE o_orderstatus = 'F') AS n_F,
-       count(*) FILTER (WHERE o_orderstatus = 'O') AS n_O,
-       count(*) FILTER (WHERE o_orderstatus = 'P') AS n_P,
-       count(*) FILTER (WHERE o_orderstatus = 'N') AS n_N
-FROM orders GROUP BY 1
-"""
-
-
-def q_unpivot_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT/melt: wide per-nation metrics (customer count, total
-    balance, supplier count) to long (nation, metric, value) rows —
-    the feed shape for metric stores and charting."""
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    c = cust.groupBy(F.col("c_nationkey").alias("nationkey")).agg(
-        F.count(F.lit(1)).cast("double").alias("n_customers"),
-        F.round(F.sum("c_acctbal"), 2).alias("total_balance"),
-    )
-    s = supp.groupBy(F.col("s_nationkey").alias("nationkey")).agg(
-        F.count(F.lit(1)).cast("double").alias("n_suppliers")
-    )
-    wide = c.join(s, "nationkey", "left").select(
-        "nationkey",
-        "n_customers",
-        "total_balance",
-        F.coalesce("n_suppliers", F.lit(0.0)).alias("n_suppliers"),
-    )
-    return wide.unpivot(
-        "nationkey",
-        ["n_customers", "total_balance", "n_suppliers"],
-        "metric",
-        "value",
-    )
-
-
-SQL_UNPIVOT_PROFILE = """
-WITH c AS (
-  SELECT c_nationkey AS nationkey,
-         count(*)::DOUBLE AS n_customers,
-         round(sum(c_acctbal), 2) AS total_balance
-  FROM customer GROUP BY 1
-),
-s AS (
-  SELECT s_nationkey AS nationkey, count(*)::DOUBLE AS n_suppliers
-  FROM supplier GROUP BY 1
-),
-wide AS (
-  SELECT c.nationkey, n_customers, total_balance,
-         coalesce(n_suppliers, 0.0) AS n_suppliers
-  FROM c LEFT JOIN s USING (nationkey)
-)
-SELECT nationkey, 'n_customers' AS metric, n_customers AS value FROM wide
-UNION ALL
-SELECT nationkey, 'total_balance', total_balance FROM wide
-UNION ALL
-SELECT nationkey, 'n_suppliers', n_suppliers FROM wide
-"""
-
-
-def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection: |value − median| > 3 × MAD (median
-    absolute deviation) — immune to the outliers themselves, unlike
-    z-scores (`zscore_outliers` is the non-robust sibling). Two global
-    exact-median aggregations broadcast back as literals; at 100 TB
-    swap percentile for percentile_approx."""
-    ev = load_table(spark, sf_dir, "events")
-    med = ev.agg(F.expr("percentile(value, 0.5)").alias("_med"))
-    with_med = ev.crossJoin(F.broadcast(med))
-    mad = with_med.agg(
-        F.expr("percentile(abs(value - _med), 0.5)").alias("_mad")
-    )
-    return (
-        with_med.crossJoin(F.broadcast(mad))
-        .where(F.abs(F.col("value") - F.col("_med")) > 3 * F.col("_mad"))
-        .select(
-            "event_id",
-            F.round("value", 6).alias("value"),
-            F.round(
-                F.abs(F.col("value") - F.col("_med")) / F.col("_mad"), 6
-            ).alias("mad_score"),
-        )
-    )
-
-
-SQL_MAD_OUTLIERS = """
-WITH m AS (SELECT median(value) AS med FROM events),
-d AS (SELECT median(abs(value - med)) AS mad FROM events, m)
-SELECT event_id, round(value, 6) AS value,
-       round(abs(value - med) / mad, 6) AS mad_score
-FROM events, m, d
-WHERE abs(value - med) > 3 * mad
-"""
-
-register("pivot_status", q_pivot_status, SQL_PIVOT_STATUS)
-register("unpivot_profile", q_unpivot_profile, SQL_UNPIVOT_PROFILE)
-register("mad_outliers", q_mad_outliers, SQL_MAD_OUTLIERS)
 
 
 def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4189,35 +3518,6 @@ FROM ranked WHERE rl = 1 AND rr = 1
 
 register("best_match", q_best_match, SQL_BEST_MATCH)
 register("best_match_pairs", q_best_match_pairs, SQL_BEST_MATCH)
-
-
-def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window distinct users (hourly-active-users shape): 1 h
-    windows hopping every 15 min, exact countDistinct per window —
-    distinct-agg partials keep the shuffle at (window, user) volume."""
-    ev = load_table(spark, sf_dir, "events")
-    fmt = "yyyy-MM-dd HH:mm:ss"
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"))
-        .agg(F.countDistinct("user_id").alias("n_users"))
-        .select(
-            F.date_format("win.start", fmt).alias("window_start"),
-            "n_users",
-        )
-    )
-
-
-SQL_SLIDING_DISTINCT_USERS = """
-WITH x AS (
-  SELECT user_id,
-         time_bucket(INTERVAL '15 minutes', ts)
-           - k * INTERVAL '15 minutes' AS wstart
-  FROM events CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS k)
-)
-SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') AS window_start,
-       count(DISTINCT user_id) AS n_users
-FROM x GROUP BY 1
-"""
 
 
 def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4353,49 +3653,8 @@ WHERE c_ab >= 5
 ORDER BY pmi DESC, gram LIMIT 20
 """
 
-register("sliding_distinct_users", q_sliding_distinct_users, SQL_SLIDING_DISTINCT_USERS)
 register("clustering_coefficient", q_clustering_coefficient, SQL_CLUSTERING_COEFFICIENT)
 register("bigram_pmi", q_bigram_pmi, SQL_BIGRAM_PMI)
-
-
-def q_semi_anti_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The subquery/set-op surface in one audited row: LEFT SEMI (users
-    with purchases), LEFT ANTI (users without), INTERSECT (users with
-    both clicks and purchases), EXCEPT (clickers who never purchased) —
-    the reference has union only (SURVEY §2.6); these four complete the
-    set-operator family."""
-    ev = load_table(spark, sf_dir, "events")
-    users = ev.select("user_id").distinct()
-    buyers = ev.where(F.col("event_type") == "purchase").select("user_id")
-    clickers = ev.where(F.col("event_type") == "click").select("user_id")
-    semi = users.join(buyers, "user_id", "left_semi")
-    anti = users.join(buyers, "user_id", "left_anti")
-    inter = clickers.intersect(buyers)
-    exc = clickers.distinct().exceptAll(buyers.distinct())
-    return (
-        semi.agg(F.count(F.lit(1)).alias("n_semi"))
-        .crossJoin(anti.agg(F.count(F.lit(1)).alias("n_anti")))
-        .crossJoin(inter.agg(F.count(F.lit(1)).alias("n_intersect")))
-        .crossJoin(exc.agg(F.count(F.lit(1)).alias("n_except")))
-    )
-
-
-SQL_SEMI_ANTI_SETS = """
-WITH users AS (SELECT DISTINCT user_id FROM events),
-buyers AS (SELECT user_id FROM events WHERE event_type = 'purchase'),
-clickers AS (SELECT user_id FROM events WHERE event_type = 'click')
-SELECT
-  (SELECT count(*) FROM users u
-   WHERE EXISTS (SELECT 1 FROM buyers b WHERE b.user_id = u.user_id)) AS n_semi,
-  (SELECT count(*) FROM users u
-   WHERE NOT EXISTS (SELECT 1 FROM buyers b WHERE b.user_id = u.user_id)) AS n_anti,
-  (SELECT count(*) FROM (SELECT user_id FROM clickers
-                         INTERSECT SELECT user_id FROM buyers)) AS n_intersect,
-  (SELECT count(*) FROM (SELECT DISTINCT user_id FROM clickers
-                         EXCEPT SELECT DISTINCT user_id FROM buyers)) AS n_except
-"""
-
-register("semi_anti_sets", q_semi_anti_sets, SQL_SEMI_ANTI_SETS)
 
 
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4422,95 +3681,6 @@ FROM events GROUP BY 1
 """
 
 register("incremental_agg", q_incremental_agg, SQL_INCREMENTAL_AGG, drain="collect")
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis
-    exponential keys): inclusion probability ∝ n_chars, deterministic
-    u from md5(doc_id), key = ln(u)/w, global top-50 by key — one
-    TakeOrdered, no per-row state, restartable because nothing is
-    random at runtime."""
-    docs = load_table(spark, sf_dir, "documents")
-    # u ∈ (0,1): 60-bit md5 prefix / 2^60 (never exactly 0 — md5 of a
-    # doc id is never 60 zero bits in practice; guard with +1 anyway)
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("double")
-        + 1.0
-    ) / float(1 << 60)
-    key = F.log(u) / F.col("n_chars").cast("double")
-    return (
-        docs.select("doc_id", "n_chars", key.alias("_k"))
-        .orderBy(F.col("_k").desc(), F.col("doc_id"))
-        .limit(50)
-        .select("doc_id", "n_chars")
-    )
-
-
-SQL_WEIGHTED_SAMPLE = f"""
-SELECT doc_id, n_chars FROM (
-  SELECT doc_id, n_chars,
-         ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT::DOUBLE
-             + 1.0) / {float(1 << 60)!r}) / n_chars::DOUBLE AS k
-  FROM documents
-)
-ORDER BY k DESC, doc_id LIMIT 50
-"""
-
-
-def q_groupwise_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-DataFrame ML: per-event-type ordinary least squares of value
-    against event time (days since epoch) — slope/intercept/r² from
-    the standard moment aggregates, one partial-aggregated shuffle,
-    no Python."""
-    ev = load_table(spark, sf_dir, "events")
-    x = F.col("ts").cast("timestamp").cast("long").cast("double") / 86400.0
-    d = ev.select("event_type", x.alias("x"), F.col("value").alias("y"))
-    agg = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("x").alias("mx"),
-        F.avg("y").alias("my"),
-        F.avg(F.col("x") * F.col("y")).alias("mxy"),
-        F.avg(F.col("x") * F.col("x")).alias("mxx"),
-        F.avg(F.col("y") * F.col("y")).alias("myy"),
-    )
-    slope = (F.col("mxy") - F.col("mx") * F.col("my")) / (
-        F.col("mxx") - F.col("mx") * F.col("mx")
-    )
-    intercept = F.col("my") - slope * F.col("mx")
-    r_num = F.col("mxy") - F.col("mx") * F.col("my")
-    r2 = (r_num * r_num) / (
-        (F.col("mxx") - F.col("mx") * F.col("mx"))
-        * (F.col("myy") - F.col("my") * F.col("my"))
-    )
-    return agg.select(
-        "event_type",
-        "n",
-        F.round(slope, 4).alias("slope"),
-        F.round(intercept, 4).alias("intercept"),
-        F.round(r2, 4).alias("r2"),
-    )
-
-
-SQL_GROUPWISE_REGRESSION = """
-WITH d AS (
-  SELECT event_type, floor(epoch(ts)) / 86400.0 AS x, value AS y FROM events
-),
-agg AS (
-  SELECT event_type, count(*) AS n, avg(x) AS mx, avg(y) AS my,
-         avg(x * y) AS mxy, avg(x * x) AS mxx, avg(y * y) AS myy
-  FROM d GROUP BY 1
-)
-SELECT event_type, n,
-       round((mxy - mx * my) / (mxx - mx * mx), 4) AS slope,
-       round(my - ((mxy - mx * my) / (mxx - mx * mx)) * mx, 4) AS intercept,
-       round(((mxy - mx * my) * (mxy - mx * my))
-             / ((mxx - mx * mx) * (myy - my * my)), 4) AS r2
-FROM agg
-"""
-
-register("weighted_sample", q_weighted_sample, SQL_WEIGHTED_SAMPLE, drain="collect")
-register("groupwise_regression", q_groupwise_regression, SQL_GROUPWISE_REGRESSION)
 
 
 def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4569,48 +3739,6 @@ FROM ranked WHERE rank <= 3
 """
 
 register("doc_keywords", q_doc_keywords, SQL_DOC_KEYWORDS)
-
-
-def q_impute_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Missing-value repair: nulls (synthesized deterministically on
-    event_id % 7 = 0) imputed with the per-group exact median — the
-    groupwise fill pattern via one aggregate broadcast back onto the
-    stream; swap percentile for percentile_approx at 100 TB."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.when(F.col("event_id") % 7 != 0, F.col("value")).alias("value"),
-    )
-    med = ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("_med")
-    )
-    return (
-        ev.join(F.broadcast(med), "event_type")
-        .select(
-            "event_id",
-            "event_type",
-            F.round(F.coalesce(F.col("value"), F.col("_med")), 6).alias(
-                "value_imputed"
-            ),
-            F.col("value").isNull().alias("was_imputed"),
-        )
-    )
-
-
-SQL_IMPUTE_MISSING = """
-WITH ev AS (
-  SELECT event_id, event_type,
-         CASE WHEN event_id % 7 <> 0 THEN value END AS value
-  FROM events
-),
-med AS (SELECT event_type, median(value) AS m FROM ev GROUP BY 1)
-SELECT event_id, ev.event_type,
-       round(coalesce(value, m), 6) AS value_imputed,
-       value IS NULL AS was_imputed
-FROM ev JOIN med USING (event_type)
-"""
-
-register("impute_missing", q_impute_missing, SQL_IMPUTE_MISSING)
 
 
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4949,7 +4077,6 @@ SELECT source, doc_id, rank FROM (
 """
 
 
-
 def q_hilbert_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert curve index over two quantized lineitem dimensions —
     the sort key of `bucketing.hilbert_write`'s layout; bit-exact vs
@@ -5005,149 +4132,6 @@ SQL_HILBERT_CURVE = _hilbert_sql()
 
 register("per_group_cap", q_per_group_cap, SQL_PER_GROUP_CAP)
 register("hilbert_curve", q_hilbert_curve, SQL_HILBERT_CURVE)
-
-
-def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: promo revenue share for one ship month —
-    fact⋈dim broadcast join, conditional aggregation, single row. The
-    month filter prunes at the lineitem scan; part broadcasts."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-03-01") & (F.col("l_shipdate") < "1996-04-01")
-    )
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    # decimal addends: exact order-independent sums (cents-boundary
-    # rule, see q_pricing_summary); the ratio divides the two DOUBLE
-    # casts so no engine-specific decimal-division scale rules apply
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    )
-    zero = F.lit(0).cast("decimal(21,6)")
-    return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                100.0
-                * F.sum(
-                    F.when(F.col("p_type") == "PROMO", rev).otherwise(zero)
-                ).cast("double")
-                / F.sum(rev).cast("double"),
-                4,
-            ).alias("promo_pct")
-        )
-    )
-
-
-SQL_PROMO_REVENUE = """
-SELECT round(
-         100.0 * sum(CASE WHEN p_type = 'PROMO'
-                          THEN (l_extendedprice * (1 - l_discount))::DECIMAL(21,6)
-                          ELSE 0::DECIMAL(21,6) END)::DOUBLE
-         / sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6))::DOUBLE,
-         4) AS promo_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= '1996-03-01' AND l_shipdate < '1996-04-01'
-"""
-
-
-def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: revenue under an OR-of-ANDs predicate mixing
-    both join sides — Catalyst must still extract the p_partkey
-    equi-key (hash join, never BNLJ) and push the single-side
-    conjuncts to the scans."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    )
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & (F.col("p_size") <= 10)
-            & (F.col("l_quantity") >= 1)
-            & (F.col("l_quantity") <= 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & (F.col("p_size") <= 20)
-            & (F.col("l_quantity") >= 10)
-            & (F.col("l_quantity") <= 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & (F.col("p_size") <= 30)
-            & (F.col("l_quantity") >= 20)
-            & (F.col("l_quantity") <= 30)
-        )
-    )
-    return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
-        .where(cond)
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-    )
-
-
-SQL_DISJUNCTIVE_REVENUE = """
-SELECT round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)),
-             2)::DOUBLE AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size <= 10
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#2' AND p_size <= 20
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#3' AND p_size <= 30
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by revenue lost to returns in
-    a quarter — 3-table join (customer broadcast against the
-    orders⋈lineitem fact join), group, TakeOrdered top-k."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    # exact decimal summation: the per-customer sums are large enough
-    # that double addition order flips the cents rounding between
-    # engines — decimal addends make the aggregate order-independent
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "c_name", "c_nationkey")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-SQL_RETURNED_ITEMS = """
-SELECT c_custkey, c_name, c_nationkey,
-       round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)),
-             2)::DOUBLE AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= '1996-01-01' AND o_orderdate < '1996-04-01'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-"""
-
-register("promo_revenue", q_promo_revenue, SQL_PROMO_REVENUE, drain="collect")
-register(
-    "disjunctive_revenue",
-    q_disjunctive_revenue,
-    SQL_DISJUNCTIVE_REVENUE,
-    drain="collect",
-)
-register("returned_items", q_returned_items, SQL_RETURNED_ITEMS, drain="collect")
 
 
 def q_pca_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5634,45 +4618,6 @@ def q_incremental_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 register("incremental_pca", q_incremental_pca, SQL_EMBEDDING_PCA)
-
-
-def q_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: orders per priority having at least one
-    late-shipped lineitem (EXISTS → left-semi join; the distinct-key
-    probe side partial-aggregates before the join)."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-04-01")
-    )
-    late = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(
-            orders.select("o_orderkey", "o_orderdate"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .where(F.col("l_shipdate") > F.expr("o_orderdate + INTERVAL 60 DAYS"))
-        .select("l_orderkey")
-    )
-    return (
-        orders.join(late, orders.o_orderkey == late.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-SQL_PRIORITY_EXISTS = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1996-04-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey
-      AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-  )
-GROUP BY o_orderpriority
-"""
-
-register("priority_exists", q_priority_exists, SQL_PRIORITY_EXISTS, drain="collect")
 
 
 def q_phrase_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6618,69 +5563,6 @@ FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 10
 register("hybrid_rrf", q_hybrid_rrf, SQL_HYBRID_RRF, drain="collect")
 
 
-def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-significant-digit audit of o_totalprice:
-    per-digit observed counts vs the log10(1+1/d) expectation and the
-    chi-square statistic — the classic fabricated-data screen for
-    numeric columns. One count aggregation; the chi-square adds its 9
-    fixed terms in digit order, so the doubles are engine-exact."""
-    orders = load_table(spark, sf_dir, "orders")
-    # first significant digit of a positive double: leading char of the
-    # digits-only string form (avoids log/pow float hazards entirely)
-    digit = F.substring(
-        F.regexp_replace(
-            F.format_number(F.col("o_totalprice").cast("double"), 6),
-            r"[^1-9]",
-            "",
-        ),
-        1,
-        1,
-    ).cast("int")
-    counts = (
-        orders.where(F.col("o_totalprice") > 0)
-        .groupBy(digit.alias("digit"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    import math
-
-    total = F.sum("n").over(Window.partitionBy())
-    expected = F.array(
-        *[F.lit(math.log10(1.0 + 1.0 / d)) for d in range(1, 10)]
-    )
-    exp_n = total.cast("double") * F.element_at(expected, F.col("digit"))
-    return counts.select(
-        "digit",
-        "n",
-        F.round(exp_n, 4).alias("expected_n"),
-        F.round(
-            (F.col("n").cast("double") - exp_n)
-            * (F.col("n").cast("double") - exp_n)
-            / exp_n,
-            6,
-        ).alias("chi2_term"),
-    )
-
-
-SQL_BENFORD_AUDIT = """
-WITH src AS (SELECT o_totalprice FROM orders WHERE o_totalprice > 0),
-d AS (
-  SELECT CAST(substr(regexp_replace(format('{:.6f}', o_totalprice::DOUBLE),
-                                    '[^1-9]', '', 'g'), 1, 1) AS INT) AS digit
-  FROM src
-),
-c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-t AS (SELECT sum(n) AS total FROM c)
-SELECT digit, n,
-       round(total::DOUBLE * log10(1.0 + 1.0 / digit), 4) AS expected_n,
-       round((n::DOUBLE - total::DOUBLE * log10(1.0 + 1.0 / digit))
-             * (n::DOUBLE - total::DOUBLE * log10(1.0 + 1.0 / digit))
-             / (total::DOUBLE * log10(1.0 + 1.0 / digit)), 6) AS chi2_term
-FROM c CROSS JOIN t
-"""
-
-register("benford_audit", q_benford_audit, SQL_BENFORD_AUDIT, drain="collect")
-
-
 def q_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-16-day EWMA (alpha=0.3) of daily event-value sums per
     type — literal weight tables in both engines, so the smoothing is
@@ -7069,49 +5951,6 @@ SQL_LABEL_NOISE_IVF = _label_noise_ivf_sql(
 register("label_noise_ivf", q_label_noise_ivf, SQL_LABEL_NOISE_IVF)
 
 
-def q_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group quantile (rank) normalization of o_totalprice within
-    each customer market segment: value → (rank−1)/(n−1) in [0,1] —
-    the ML-preprocessing transform robust to arbitrary value
-    distributions. Exact integer ranks; WindowGroupLimit does not
-    apply (full output) but the single window shuffle is the floor."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    j = orders.join(maybe_broadcast(cust), "o_custkey")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
-    )
-    n = F.count(F.lit(1)).over(Window.partitionBy("c_mktsegment"))
-    r = F.row_number().over(w)
-    return j.select(
-        "o_orderkey",
-        "c_mktsegment",
-        F.col("o_totalprice").cast("double").alias("price"),
-        F.round(
-            (r - F.lit(1)).cast("double") / (n - F.lit(1)).cast("double"), 6
-        ).alias("pct"),
-    )
-
-
-SQL_QUANTILE_TRANSFORM = """
-WITH j AS (
-  SELECT o.o_orderkey, c.c_mktsegment, o.o_totalprice
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-)
-SELECT o_orderkey, c_mktsegment, o_totalprice::DOUBLE AS price,
-       round((row_number() OVER (PARTITION BY c_mktsegment
-                                 ORDER BY o_totalprice ASC, o_orderkey ASC)
-              - 1)::DOUBLE
-             / (count(*) OVER (PARTITION BY c_mktsegment) - 1)::DOUBLE,
-             6) AS pct
-FROM j
-"""
-
-register("quantile_transform", q_quantile_transform, SQL_QUANTILE_TRANSFORM)
-
-
 def q_vertex_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structural Jaccard link prediction over the similarity graph:
     for wedge-connected vertex pairs, |Γ(u)∩Γ(v)| / |Γ(u)∪Γ(v)| ≥ 0.5
@@ -7214,115 +6053,6 @@ FROM r
 """
 
 register("ewma_recursive", q_ewma_recursive, SQL_EWMA_RECURSIVE)
-
-
-def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out target (mean) encoding of the customer market
-    segment against order value: each order's encoding is its
-    segment's mean o_totalprice EXCLUDING the order itself —
-    (sum − x)/(n − 1) — the leakage-safe categorical encoder for
-    tree/linear models. Decimal segment sums → engine-exact;
-    singleton segments get null (no leave-one-out mean exists)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    j = orders.join(maybe_broadcast(cust), "o_custkey")
-    seg = j.groupBy("c_mktsegment").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(27,6)")).alias("_sum"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    # seg is 5 true rows but Catalyst's post-aggregate estimate inherits
-    # the join product, so a forced hint trips the oversized-broadcast
-    # lint; size-gate it and let AQE broadcast from runtime sizes
-    out = j.join(maybe_broadcast(seg), "c_mktsegment")
-    loo = F.when(
-        F.col("_n") > 1,
-        (F.col("_sum") - F.col("o_totalprice").cast("decimal(27,6)"))
-        .cast("double")
-        / (F.col("_n") - 1).cast("double"),
-    )
-    return out.select(
-        "o_orderkey",
-        "c_mktsegment",
-        F.round(loo, 4).alias("loo_encoding"),
-    )
-
-
-SQL_TARGET_ENCODING = """
-WITH j AS (
-  SELECT o.o_orderkey, c.c_mktsegment, o.o_totalprice
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-),
-seg AS (
-  SELECT c_mktsegment,
-         sum(o_totalprice::DECIMAL(27,6)) AS s,
-         count(*) AS n
-  FROM j GROUP BY 1
-)
-SELECT j.o_orderkey, j.c_mktsegment,
-       round(CASE WHEN seg.n > 1
-                  THEN (seg.s - j.o_totalprice::DECIMAL(27,6))::DOUBLE
-                       / (seg.n - 1)::DOUBLE
-             END, 4) AS loo_encoding
-FROM j JOIN seg USING (c_mktsegment)
-"""
-
-register("target_encoding", q_target_encoding, SQL_TARGET_ENCODING)
-
-
-def q_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of each user's event-type distribution (nats) —
-    the behavioral-diversity profile (bots and single-purpose accounts
-    sit near 0). The −p·ln p terms are folded in CATEGORY-SORTED order
-    over a collected (type, count) list, so the double sum is
-    engine-exact despite float addition being non-associative."""
-    ev = load_table(spark, sf_dir, "events")
-    counts = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    per_user = counts.groupBy("user_id").agg(
-        F.sum("_c").alias("_n"),
-        F.sort_array(
-            F.collect_list(F.struct("event_type", "_c"))
-        ).alias("_cs"),
-    )
-    cs_counts = F.transform(F.col("_cs"), lambda s: s["_c"])
-    ent = F.aggregate(
-        cs_counts,
-        F.lit(0.0),
-        lambda acc, c: acc
-        - (c.cast("double") / F.col("_n").cast("double"))
-        * F.log(c.cast("double") / F.col("_n").cast("double")),
-    )
-    return per_user.select(
-        "user_id",
-        F.col("_n").alias("n_events"),
-        F.size("_cs").alias("n_types"),
-        F.round(ent, 6).alias("entropy"),
-    )
-
-
-SQL_ENTROPY_PROFILE = """
-WITH c AS (
-  SELECT user_id, event_type, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-u AS (
-  SELECT user_id, sum(n) AS total,
-         list(n ORDER BY event_type) AS cs
-  FROM c GROUP BY 1
-)
-SELECT user_id, total AS n_events, len(cs) AS n_types,
-       round(list_reduce(
-           list_prepend(0.0, list_transform(cs,
-               x -> -(x::DOUBLE / total::DOUBLE)
-                    * ln(x::DOUBLE / total::DOUBLE))),
-           (a, b) -> a + b), 6) AS entropy
-FROM u
-"""
-
-register("entropy_profile", q_entropy_profile, SQL_ENTROPY_PROFILE)
 
 
 def q_neighbor_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7849,9 +6579,9 @@ register("pareto_suppliers", q_pareto_suppliers, SQL_PARETO_SUPPLIERS, drain="co
 
 def q_frequent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 consecutive event-type 3-grams across per-user timelines
-    (contiguous sequential-pattern support; extends event_transitions
-    from bigrams to ranked k-grams). One window shuffle on user_id, one
-    gram-count shuffle, TakeOrdered top-N (timeseries.frequent_sequences)."""
+    (contiguous sequential-pattern support over ranked k-grams). One
+    window shuffle on user_id, one gram-count shuffle, TakeOrdered top-N
+    (timeseries.frequent_sequences)."""
     from grafink_spark.timeseries import frequent_sequences
 
     ev = load_table(spark, sf_dir, "events")
@@ -9267,44 +7997,6 @@ FROM f GROUP BY 1
 register("corpus_diversity", q_corpus_diversity, SQL_CORPUS_DIVERSITY, drain="collect")
 
 
-def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: revenue delta from a hypothetical discount change
-    — the pure scan query: every predicate (date band, discount band,
-    quantity cap) pushes to the parquet scan, one decimal sum, zero
-    joins/shuffles beyond the final 1-row agg. The plan IS the
-    predicate-pushdown showcase."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    rev = (F.col("l_extendedprice") * F.col("l_discount")).cast(
-        "decimal(21,6)"
-    )
-    # round(…, 2) not a DECIMAL(21,2) cast: decimal-cast rounding is
-    # HALF_UP in Spark but banker's in DuckDB — one-cent mismatches at
-    # exact half-cents (the same rule every money query here follows)
-    return li.agg(
-        F.round(F.sum(rev), 2).cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-SQL_FORECAST_REVENUE = """
-SELECT round(sum((l_extendedprice * l_discount)::DECIMAL(21,6)),
-             2)::DOUBLE AS revenue,
-       count(*) AS n_rows
-FROM lineitem
-WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07
-  AND l_quantity < 24
-"""
-
-register("forecast_revenue", q_forecast_revenue, SQL_FORECAST_REVENUE, drain="collect")
-
-
 def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Katz centrality (3 rounds, alpha=0.05, beta=1) over the
     undirected similarity graph — attenuated path counts; completes the
@@ -9348,885 +8040,6 @@ SELECT id, round(katz, 6) AS katz FROM k{iters}
 SQL_KATZ_CENTRALITY = _katz_sql()
 
 register("katz_centrality", q_katz_centrality, SQL_KATZ_CENTRALITY, drain="collect")
-
-
-def q_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-of-evidence categorical encoding + per-category
-    information-value terms — the credit-scoring-standard supervised
-    encoder (complements leave-one-out target encoding). Label =
-    high-value event (value > 100); WoE_c = ln(P(c|pos)/P(c|neg)) with
-    +0.5 Laplace smoothing. Two vocabulary-sized aggregates, no
-    pairwise work; ln() outputs rounded to 6 (cross-engine libm ulp
-    convention)."""
-    ev = ensure_min_partitions(load_table(spark, sf_dir, "events"))
-    lab = ev.select(
-        "event_type", (F.col("value") > 100).cast("long").alias("_pos")
-    )
-    per = lab.groupBy("event_type").agg(
-        F.sum("_pos").alias("n_pos"),
-        F.sum(1 - F.col("_pos")).alias("n_neg"),
-    )
-    tot = per.agg(
-        F.sum("n_pos").alias("_tp"), F.sum("n_neg").alias("_tn")
-    )
-    pg = (F.col("n_pos") + 0.5) / (F.col("_tp") + 0.5)
-    pb = (F.col("n_neg") + 0.5) / (F.col("_tn") + 0.5)
-    woe = F.log(pg / pb)
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "event_type",
-            "n_pos",
-            "n_neg",
-            F.round(woe, 6).alias("woe"),
-            F.round((pg - pb) * woe, 6).alias("iv_term"),
-        )
-    )
-
-
-SQL_WOE_ENCODING = """
-WITH lab AS (
-  SELECT event_type, CASE WHEN value > 100 THEN 1 ELSE 0 END AS pos
-  FROM events
-),
-per AS (
-  SELECT event_type, sum(pos) AS n_pos, sum(1 - pos) AS n_neg
-  FROM lab GROUP BY 1
-),
-tot AS (SELECT sum(n_pos) AS tp, sum(n_neg) AS tn FROM per),
-r AS (
-  SELECT event_type, n_pos, n_neg,
-         (n_pos + 0.5::DOUBLE) / (tp + 0.5::DOUBLE) AS pg,
-         (n_neg + 0.5::DOUBLE) / (tn + 0.5::DOUBLE) AS pb
-  FROM per CROSS JOIN tot
-)
-SELECT event_type, n_pos, n_neg,
-       round(ln(pg / pb), 6) AS woe,
-       round((pg - pb) * ln(pg / pb), 6) AS iv_term
-FROM r
-"""
-
-register("woe_encoding", q_woe_encoding, SQL_WOE_ENCODING, drain="collect")
-
-
-def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape (large-volume orders): orders whose total line
-    quantity exceeds 250, with customer and order detail — the
-    HAVING-subquery → left-semi join pattern: the qualifying-key set is
-    computed by one lineitem aggregate, semi-joins orders (map-side
-    prunable at scale via a bloom/DPP filter on o_orderkey), then the
-    detail re-aggregates only surviving orders' lines. Quantity sums in
-    decimal (order-independent exact)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name"
-    )
-    qty = F.col("l_quantity").cast("decimal(21,6)")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(qty).alias("_q"))
-        .where(F.col("_q") > 250)
-        .select("l_orderkey")
-    )
-    return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey, "left_semi")
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy(
-            "c_name",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "o_totalprice",
-        )
-        .agg(
-            F.round(F.sum(qty), 2).cast("double").alias("total_qty")
-        )
-    )
-
-
-SQL_LARGE_ORDERS = """
-SELECT c.c_name, o.o_orderkey,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       o.o_totalprice,
-       round(sum(l.l_quantity::DECIMAL(21,6)), 2)::DOUBLE AS total_qty
-FROM orders o
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-WHERE o.o_orderkey IN (
-  SELECT l_orderkey FROM lineitem
-  GROUP BY 1 HAVING sum(l_quantity::DECIMAL(21,6)) > 250
-)
-GROUP BY 1, 2, 3, 4
-"""
-
-register("large_orders", q_large_orders, SQL_LARGE_ORDERS, drain="collect")
-
-
-def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape (customer distribution): how many customers
-    placed exactly k orders — INCLUDING the zero-order customers the
-    inner-join formulation silently loses. Left outer join + two
-    aggregations; the second groupBy is over the tiny per-customer
-    count table."""
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey"
-    )
-    per = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per.groupBy("c_count").agg(
-        F.count(F.lit(1)).alias("custdist")
-    )
-
-
-SQL_ORDER_COUNT_DISTRIBUTION = """
-SELECT c_count, count(*) AS custdist FROM (
-  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-  FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-  GROUP BY 1
-) GROUP BY 1
-"""
-
-register(
-    "order_count_distribution",
-    q_order_count_distribution,
-    SQL_ORDER_COUNT_DISTRIBUTION,
-    drain="collect",
-)
-
-
-def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape (top supplier): suppliers whose 1996-H1 revenue
-    EQUALS the maximum — the argmax-by-scalar-subquery pattern (returns
-    every tie, unlike a LIMIT 1). Revenue sums in decimal, so the
-    equality compare against the broadcast 1-row max is exact — no
-    float-equality hazard."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1996-07-01")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name"
-    )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    )
-    per = li.groupBy("l_suppkey").agg(F.sum(rev).alias("total_rev"))
-    mx = per.agg(F.max("total_rev").alias("_mx"))
-    return (
-        per.crossJoin(F.broadcast(mx))
-        .where(F.col("total_rev") == F.col("_mx"))
-        .join(maybe_broadcast(supp), per.l_suppkey == supp.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.round("total_rev", 2).cast("double").alias("total_rev"),
-        )
-    )
-
-
-SQL_TOP_SUPPLIER = """
-WITH per AS (
-  SELECT l_suppkey,
-         sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)) AS total_rev
-  FROM lineitem
-  WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-07-01'
-  GROUP BY 1
-)
-SELECT s.s_suppkey, s.s_name, round(p.total_rev, 2)::DOUBLE AS total_rev
-FROM per p JOIN supplier s ON s.s_suppkey = p.l_suppkey
-WHERE p.total_rev = (SELECT max(total_rev) FROM per)
-"""
-
-register("top_supplier", q_top_supplier, SQL_TOP_SUPPLIER, drain="collect")
-
-
-def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape (small-quantity-order revenue): average yearly
-    revenue lost if orders below 20% of a part's average quantity were
-    not taken — the CORRELATED SCALAR SUBQUERY pattern, decorrelated as
-    a per-part aggregate joined back to the fact. The per-part averages
-    are computed only for the brand's parts (semi-join pushdown), and
-    the 20%-of-average compare runs in exact rational arithmetic
-    (5·qty·cnt < Σqty in DECIMAL) so no float boundary can flip a row
-    between engines. At scale: one lineitem aggregate + one equi join,
-    both keyed on l_partkey; the brand part list broadcasts."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    parts = (
-        load_table(spark, sf_dir, "part")
-        .where(F.col("p_brand") == "Brand#1")
-        .select("p_partkey")
-    )
-    qty = F.col("l_quantity").cast("decimal(21,6)")
-    li_b = li.join(
-        maybe_broadcast(parts), li.l_partkey == parts.p_partkey, "left_semi"
-    )
-    per_part = li_b.groupBy("l_partkey").agg(
-        F.sum(qty).alias("_sq"), F.count(F.lit(1)).alias("_c")
-    )
-    return (
-        li_b.alias("l")
-        .join(per_part.alias("pa"), "l_partkey")
-        .where(qty * 5 * F.col("_c") < F.col("_sq"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(21,6)"))
-                .cast("double")
-                / 7.0,
-                2,
-            ).alias("avg_yearly")
-        )
-    )
-
-
-SQL_SMALL_QUANTITY_REVENUE = """
-WITH pa AS (
-  SELECT l_partkey, sum(l_quantity::DECIMAL(21,6)) AS _sq, count(*) AS _c
-  FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#1')
-  GROUP BY 1
-)
-SELECT round(sum(l.l_extendedprice::DECIMAL(21,6))::DOUBLE / 7.0, 2)
-       AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#1'
-JOIN pa ON pa.l_partkey = l.l_partkey
-WHERE 5 * l.l_quantity::DECIMAL(21,6) * pa._c < pa._sq
-"""
-
-register("small_quantity_revenue", q_small_quantity_revenue, SQL_SMALL_QUANTITY_REVENUE)
-
-
-def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (suppliers who kept orders waiting), adapted to
-    this schema (no l_commitdate/l_receiptdate; 'late' = returned line,
-    l_returnflag='R'): for finalized orders ('F'), count per supplier
-    the multi-supplier orders where THIS supplier is the only one with
-    a returned line — the EXISTS + NOT EXISTS ON THE SAME TABLE
-    pattern, decorrelated as a left-semi join (some other supplier
-    shipped a line) plus a left-anti join (no other supplier had a
-    return). Both joins are equi on l_orderkey with a suppkey
-    inequality residual — sort-merge-able, no cartesian; the supplier
-    dim joins size-gated."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_returnflag"
-    )
-    ford = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderstatus") == "F")
-        .select("o_orderkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    pairs = li.select("l_orderkey", "l_suppkey").distinct()
-    r_pairs = (
-        li.where(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    l1 = r_pairs.join(ford, r_pairs.l_orderkey == ford.o_orderkey, "left_semi")
-    l2 = pairs.select(
-        F.col("l_orderkey").alias("_ok2"), F.col("l_suppkey").alias("_sk2")
-    )
-    l3 = r_pairs.select(
-        F.col("l_orderkey").alias("_ok3"), F.col("l_suppkey").alias("_sk3")
-    )
-    return (
-        l1.join(
-            l2,
-            (l1.l_orderkey == l2._ok2) & (l1.l_suppkey != l2._sk2),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (l1.l_orderkey == l3._ok3) & (l1.l_suppkey != l3._sk3),
-            "left_anti",
-        )
-        .join(maybe_broadcast(supp), l1.l_suppkey == supp.s_suppkey)
-        .groupBy("s_suppkey", "s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-SQL_WAITING_SUPPLIERS = """
-SELECT s.s_suppkey, s.s_name, count(*) AS numwait
-FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-      WHERE l_returnflag = 'R') l1
-JOIN orders o ON o.o_orderkey = l1.l_orderkey AND o.o_orderstatus = 'F'
-JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-WHERE EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-GROUP BY 1, 2
-"""
-
-register("waiting_suppliers", q_waiting_suppliers, SQL_WAITING_SUPPLIERS)
-
-
-_Q22_NATIONS = (1, 3, 5, 7, 9, 11, 13)
-
-
-def q_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (global sales opportunity), adapted to this
-    schema (no c_phone → the 'country code' IN-list filters
-    c_nationkey; every customer has at least one order in the
-    synthetic data → 'dormant' = NO ORDER SINCE 2000-01-01): customers
-    in the listed nations with an account balance above the positive
-    average who have gone dormant, counted per nation. Exercises the
-    NOT-EXISTS → left-anti join (date filter pushed into the anti
-    side's scan) plus the scalar-average filter as an exact rational
-    compare (bal·cnt > Σbal in DECIMAL) against a broadcast 1-row
-    aggregate."""
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .where(F.col("c_nationkey").isin(*_Q22_NATIONS))
-        .select("c_custkey", "c_nationkey", "c_acctbal")
-    )
-    recent = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate") >= "2000-01-01")
-        .select("o_custkey")
-    )
-    bal = F.col("c_acctbal").cast("decimal(21,6)")
-    pos = cust.where(F.col("c_acctbal") > 0).agg(
-        F.sum(bal).alias("_sb"), F.count(F.lit(1)).alias("_cb")
-    )
-    return (
-        cust.crossJoin(F.broadcast(pos))
-        .where(bal * F.col("_cb") > F.col("_sb"))
-        .join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum(bal), 2).cast("double").alias("totacctbal"),
-        )
-    )
-
-
-SQL_DORMANT_CUSTOMERS = """
-WITH pos AS (
-  SELECT sum(c_acctbal::DECIMAL(21,6)) AS _sb, count(*) AS _cb
-  FROM customer
-  WHERE c_acctbal > 0 AND c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-)
-SELECT c_nationkey, count(*) AS numcust,
-       round(sum(c_acctbal::DECIMAL(21,6)), 2)::DOUBLE AS totacctbal
-FROM customer, pos
-WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-  AND c_acctbal::DECIMAL(21,6) * _cb > _sb
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= '2000-01-01')
-GROUP BY 1
-"""
-
-register("dormant_customers", q_dormant_customers, SQL_DORMANT_CUSTOMERS)
-
-
-def q_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape (potential part promotion), adapted to this
-    schema (no partsupp → the quantity HAVING runs per supplier over
-    the brand's 1995 shipments; no nation names in the spec → region
-    filter): suppliers in region 2 who shipped more than 75 units of
-    Brand#2 parts during 1995 — the NESTED IN-CHAIN pattern
-    (supplier ← HAVING-aggregate ← part list), decorrelated as two
-    left-semi joins: the part IN-list semi-joins lineitem before the
-    aggregate (broadcast at bench scale, size-gated), and the
-    qualifying supplier-key set semi-joins the supplier dim."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1995-01-01")
-        & (F.col("l_shipdate") < "1996-01-01")
-    )
-    parts = (
-        load_table(spark, sf_dir, "part")
-        .where(F.col("p_brand") == "Brand#2")
-        .select("p_partkey")
-    )
-    nations = (
-        load_table(spark, sf_dir, "nation")
-        .where(F.col("n_regionkey") == 2)
-        .select("n_nationkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier")
-    qty = F.col("l_quantity").cast("decimal(21,6)")
-    heavy = (
-        li.join(maybe_broadcast(parts), li.l_partkey == parts.p_partkey, "left_semi")
-        .groupBy("l_suppkey")
-        .agg(F.sum(qty).alias("_q"))
-        .where(F.col("_q") > 75)
-        .select("l_suppkey")
-    )
-    return (
-        supp.join(heavy, supp.s_suppkey == heavy.l_suppkey, "left_semi")
-        .join(
-            F.broadcast(nations),
-            supp.s_nationkey == nations.n_nationkey,
-            "left_semi",
-        )
-        .select("s_suppkey", "s_name")
-    )
-
-
-SQL_EXCESS_SUPPLIERS = """
-SELECT s_suppkey, s_name
-FROM supplier
-WHERE s_suppkey IN (
-  SELECT l_suppkey FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#2')
-    AND l_shipdate >= '1995-01-01' AND l_shipdate < '1996-01-01'
-  GROUP BY 1
-  HAVING sum(l_quantity::DECIMAL(21,6)) > 75
-)
-AND s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
-"""
-
-register("excess_suppliers", q_excess_suppliers, SQL_EXCESS_SUPPLIERS)
-
-
-# --- round-4 batch: TPC-H family completion (Q2/Q7/Q8/Q9/Q11/Q12/Q16) ---
-#
-# With these seven, every TPC-H query shape (Q1-Q22) has an engine
-# query + DuckDB oracle twin. The testdata schema has no partsupp
-# table, so the part-supplier relation is derived from lineitem
-# (distinct (l_partkey, l_suppkey), unit costs from shipped lines) —
-# same decorrelation patterns, adapted columns.
-
-
-def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (minimum-cost supplier), adapted: the supply
-    relation is derived from lineitem (cost(part, supp) = min shipped
-    l_extendedprice — IEEE min, bit-identical across engines), parts
-    restricted to one size/type, suppliers to one region. The
-    CORRELATED MIN SUBQUERY decorrelates as: per-(part, supp) agg →
-    per-part min → equi join back on (partkey, cost). At scale: two
-    hash aggs and one join, all keyed on l_partkey (no re-shuffle
-    between them); part/supplier dims size-gated."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    parts = (
-        load_table(spark, sf_dir, "part")
-        .where((F.col("p_size") == 25) & (F.col("p_type") == "STANDARD"))
-        .select("p_partkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier")
-    nations = (
-        load_table(spark, sf_dir, "nation")
-        .where(F.col("n_regionkey") == 0)
-        .select("n_nationkey", "n_name")
-    )
-    supp_r = supp.join(
-        F.broadcast(nations), supp.s_nationkey == nations.n_nationkey
-    ).select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    costs = (
-        li.join(maybe_broadcast(parts), li.l_partkey == parts.p_partkey, "left_semi")
-        .join(
-            maybe_broadcast(supp_r.select("s_suppkey")),
-            li.l_suppkey == supp_r.s_suppkey,
-            "left_semi",
-        )
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min("l_extendedprice").alias("cost"))
-        # referenced twice below (join left side + per-part min) — pin so
-        # the semi-reduced fact scan and agg run once, not per branch
-        .transform(pin)
-    )
-    best = costs.groupBy("l_partkey").agg(F.min("cost").alias("best_cost"))
-    best = best.select(F.col("l_partkey").alias("_bpk"), "best_cost")
-    return (
-        costs.join(
-            best,
-            (costs.l_partkey == best._bpk) & (costs.cost == best.best_cost),
-        )
-        .join(supp_r, costs.l_suppkey == supp_r.s_suppkey)
-        .select(
-            "s_acctbal",
-            "s_name",
-            "n_name",
-            costs.l_partkey.alias("p_partkey"),
-            F.round("cost", 2).alias("supply_cost"),
-        )
-    )
-
-
-SQL_MIN_COST_SUPPLIER = """
-WITH supp_r AS (
-  SELECT s_suppkey, s_name, s_acctbal, n_name
-  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-  WHERE n_regionkey = 0
-), costs AS (
-  SELECT l_partkey, l_suppkey, min(l_extendedprice) AS cost
-  FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part
-                      WHERE p_size = 25 AND p_type = 'STANDARD')
-    AND l_suppkey IN (SELECT s_suppkey FROM supp_r)
-  GROUP BY 1, 2
-)
-SELECT s_acctbal, s_name, n_name, c.l_partkey AS p_partkey,
-       round(c.cost, 2) AS supply_cost
-FROM costs c
-JOIN (SELECT l_partkey, min(cost) AS best_cost FROM costs GROUP BY 1) b
-  ON c.l_partkey = b.l_partkey AND c.cost = b.best_cost
-JOIN supp_r s ON c.l_suppkey = s.s_suppkey
-"""
-
-
-def q_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape (volume shipping between two nations): revenue
-    flowing NATION_1↔NATION_2 by ship year. The fact×fact
-    lineitem×orders join shuffles on orderkey; customer/supplier dims
-    are size-gated broadcasts, the 25-row nation table broadcasts
-    unconditionally (joined twice under different aliases). The
-    nation-pair filter applies after the dim joins — at scale the two
-    broadcast nation joins reduce each side to 1/25 before the pair
-    predicate, so no extra shuffle."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    )
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(
-        F.col("n_nationkey").alias("_snk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = nation.select(
-        F.col("n_nationkey").alias("_cnk"), F.col("n_name").alias("cust_nation")
-    )
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("_snk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("_cnk"))
-        .where(
-            (
-                (F.col("supp_nation") == "NATION_1")
-                & (F.col("cust_nation") == "NATION_2")
-            )
-            | (
-                (F.col("supp_nation") == "NATION_2")
-                & (F.col("cust_nation") == "NATION_1")
-            )
-        )
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-        )
-        .agg(F.round(F.sum(vol), 2).cast("double").alias("revenue"))
-    )
-
-
-SQL_NATION_VOLUME_SHIPPING = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l_shipdate)::INT AS l_year,
-       round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)),
-             2)::DOUBLE AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1998-01-01'
-  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-GROUP BY 1, 2, 3
-"""
-
-
-def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape (national market share): NATION_3's share of
-    region-1 customers' ECONOMY-part order volume by order year. The
-    share divides two decimal sums (conditional / total) — division
-    deferred to after the aggregate, double-cast then round(6), so the
-    only float op is one deterministic divide per output row. Part
-    list semi-joins the fact before the orders join (smallest side
-    first); all dims size-gated or fixed-size broadcast."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1995-01-01")
-        & (F.col("o_orderdate") < "1999-01-01")
-    )
-    parts = (
-        load_table(spark, sf_dir, "part")
-        .where(F.col("p_type") == "ECONOMY")
-        .select("p_partkey")
-    )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = load_table(spark, sf_dir, "nation")
-    cn = nation.where(F.col("n_regionkey") == 1).select(
-        F.col("n_nationkey").alias("_cnk")
-    )
-    sn = nation.select(
-        F.col("n_nationkey").alias("_snk"), F.col("n_name").alias("supp_nation")
-    )
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    )
-    j = (
-        li.join(maybe_broadcast(parts), li.l_partkey == parts.p_partkey, "left_semi")
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(cn), cust.c_nationkey == F.col("_cnk"), "left_semi")
-        .join(maybe_broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), supp.s_nationkey == F.col("_snk"))
-    )
-    return (
-        j.groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(
-                    F.lit(0).cast("decimal(21,6)")
-                )
-            ).alias("_nv"),
-            F.sum(vol).alias("_tv"),
-        )
-        .select(
-            "o_year",
-            F.round(
-                F.col("_nv").cast("double") / F.col("_tv").cast("double"), 6
-            ).alias("mkt_share"),
-        )
-    )
-
-
-SQL_MARKET_SHARE = """
-WITH j AS (
-  SELECT year(o_orderdate)::INT AS o_year,
-         (l_extendedprice * (1 - l_discount))::DECIMAL(21,6) AS vol,
-         n2.n_name AS supp_nation
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'ECONOMY')
-    AND c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 1)
-    AND o_orderdate >= TIMESTAMP '1995-01-01'
-    AND o_orderdate <  TIMESTAMP '1999-01-01'
-)
-SELECT o_year,
-       round((sum(CASE WHEN supp_nation = 'NATION_3' THEN vol
-                       ELSE 0::DECIMAL(21,6) END))::DOUBLE
-             / (sum(vol))::DOUBLE, 6) AS mkt_share
-FROM j GROUP BY 1
-"""
-
-
-def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (product-type profit), adapted: no
-    ps_supplycost, so cost-per-unit = 60% of p_retailprice. Profit by
-    supplier nation and order year for parts whose name contains
-    'gear'. amount = (extprice·(1−disc) − 0.6·retail·qty) — both terms
-    double-multiplied (IEEE-deterministic) then decimal-cast before
-    the subtraction and sum, so accumulation order can't shift the
-    result. One fact×fact shuffle (lineitem×orders on orderkey); the
-    part filter semi-reduces lineitem before it."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    parts = (
-        load_table(spark, sf_dir, "part")
-        .where(F.col("p_name").contains("gear"))
-        .select("p_partkey", "p_retailprice")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("_snk"), F.col("n_name").alias("nation")
-    )
-    amount = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(21,6)"
-    ) - (F.col("p_retailprice") * F.lit(0.6) * F.col("l_quantity")).cast(
-        "decimal(21,6)"
-    )
-    return (
-        li.join(maybe_broadcast(parts), li.l_partkey == parts.p_partkey)
-        .join(maybe_broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), supp.s_nationkey == F.col("_snk"))
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("nation", F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(F.round(F.sum(amount), 2).cast("double").alias("sum_profit"))
-    )
-
-
-SQL_PRODUCT_PROFIT = """
-SELECT n_name AS nation, year(o_orderdate)::INT AS o_year,
-       round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(21,6)
-                 - (p_retailprice * 0.6::DOUBLE * l_quantity)::DECIMAL(21,6)),
-             2)::DOUBLE AS sum_profit
-FROM lineitem
-JOIN part     ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN orders   ON l_orderkey = o_orderkey
-WHERE p_name LIKE '%gear%'
-GROUP BY 1, 2
-"""
-
-
-def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (important stock), adapted: per-part "stock
-    value" = Σ l_extendedprice over lines shipped by region-2
-    suppliers; keep parts whose value exceeds 0.1% of the region's
-    total — the SCALAR-SUBQUERY-AS-THRESHOLD pattern. The threshold
-    compare runs in exact decimal (value·1000 > total) against a
-    broadcast 1-row total, so no float boundary can flip a part. At
-    scale: one agg keyed l_partkey + a re-agg of its output (tiny) —
-    the fact is scanned once."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    supp = load_table(spark, sf_dir, "supplier")
-    nations = (
-        load_table(spark, sf_dir, "nation")
-        .where(F.col("n_regionkey") == 2)
-        .select("n_nationkey")
-    )
-    supp_r = supp.join(
-        F.broadcast(nations), supp.s_nationkey == nations.n_nationkey, "left_semi"
-    ).select("s_suppkey")
-    per_part = (
-        li.join(maybe_broadcast(supp_r), li.l_suppkey == supp_r.s_suppkey, "left_semi")
-        .groupBy("l_partkey")
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(21,6)")).alias("_v"))
-    )
-    total = per_part.agg(F.sum("_v").alias("_t"))
-    return (
-        per_part.join(F.broadcast(total))
-        .where(F.col("_v") * 1000 > F.col("_t"))
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            F.round("_v", 2).cast("double").alias("stock_value"),
-        )
-    )
-
-
-SQL_IMPORTANT_STOCK = """
-WITH per_part AS (
-  SELECT l_partkey, sum(l_extendedprice::DECIMAL(21,6)) AS _v
-  FROM lineitem
-  WHERE l_suppkey IN (
-    SELECT s_suppkey FROM supplier
-    WHERE s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2))
-  GROUP BY 1
-)
-SELECT l_partkey AS p_partkey, round(_v, 2)::DOUBLE AS stock_value
-FROM per_part
-WHERE _v * 1000 > (SELECT sum(_v) FROM per_part)
-"""
-
-
-def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (shipping modes / order priority), adapted: no
-    l_shipmode or commit/receipt dates, so lines bucket by ship delay
-    (late = shipped ≥ 60 days after the order date) and the classic
-    CASE-WHEN split counts urgent/high vs other priorities per bucket,
-    for 1996 shipments. One fact×fact shuffle on orderkey; both date
-    filters push to the scans; the aggregate is 2 groups — map-side
-    partials collapse everything before the final exchange."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    late = (
-        F.col("l_shipdate") >= F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    ).cast("int")
-    # null-safe: a NULL priority counts as low (the oracle's CASE ...
-    # ELSE 1 does too); bare isin().cast() would be NULL and sum()
-    # would silently drop the row from BOTH buckets
-    high = (
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .cast("long")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(late.alias("late"))
-        .agg(
-            F.sum(high).alias("high_line_count"),
-            F.sum(1 - high).alias("low_line_count"),
-        )
-    )
-
-
-SQL_LATE_SHIPMENT_PRIORITY = """
-SELECT (l_shipdate >= o_orderdate + INTERVAL 60 DAY)::INT AS late,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS high_line_count,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 0 ELSE 1 END) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-GROUP BY 1
-"""
-
-
-def q_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape (parts/supplier relationship count), adapted:
-    the part-supplier relation is the distinct (l_partkey, l_suppkey)
-    pairs in lineitem; exclude Brand#5, PROMO-type parts and
-    low-balance suppliers (the NOT-IN → broadcast anti-join pattern),
-    then count distinct suppliers per (brand, type, size). The
-    distinct collapses the fact to dim-scale BEFORE the part join; the
-    excluded-supplier list is size-gated."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    parts = load_table(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#5")
-        & (F.col("p_type") != "PROMO")
-        & (F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
-    )
-    bad_supp = (
-        load_table(spark, sf_dir, "supplier")
-        .where(F.col("s_acctbal") < 0)
-        .select("s_suppkey")
-    )
-    pairs = li.distinct()
-    return (
-        pairs.join(maybe_broadcast(bad_supp), pairs.l_suppkey == bad_supp.s_suppkey, "left_anti")
-        .join(maybe_broadcast(parts), pairs.l_partkey == parts.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-SQL_PART_SUPPLIER_COUNTS = """
-SELECT p_brand, p_type, p_size,
-       count(DISTINCT l_suppkey) AS supplier_cnt
-FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY 1, 2, 3
-"""
-
-register("min_cost_supplier", q_min_cost_supplier, SQL_MIN_COST_SUPPLIER)
-register("nation_volume_shipping", q_nation_volume_shipping, SQL_NATION_VOLUME_SHIPPING)
-register("market_share", q_market_share, SQL_MARKET_SHARE)
-register("product_profit", q_product_profit, SQL_PRODUCT_PROFIT)
-register("important_stock", q_important_stock, SQL_IMPORTANT_STOCK)
-register("late_shipment_priority", q_late_shipment_priority, SQL_LATE_SHIPMENT_PRIORITY)
-register("part_supplier_counts", q_part_supplier_counts, SQL_PART_SUPPLIER_COUNTS)
 
 
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10454,98 +8267,6 @@ FROM t GROUP BY 1, 2
 register("behavior_jaccard", q_behavior_jaccard, SQL_BEHAVIOR_JACCARD)
 register("user_overlap", q_user_overlap, SQL_USER_OVERLAP)
 register("segment_deciles", q_segment_deciles, SQL_SEGMENT_DECILES)
-
-
-def q_best_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact single changepoint over the daily revenue series — the
-    core step of binary-segmentation/PELT changepoint detection: the
-    split day maximizing the SSE reduction (equivalently the
-    between-segment variance) of a two-mean fit. All candidate scores
-    come from EXACT decimal prefix sums (count / Σy / Σy²) over the
-    day-ordered daily aggregate — one fact aggregate keyed by day, then
-    window prefix sums over the days-sized table (rows = #days, never
-    fact rows), so the scan is the only corpus-scale work. The gain is
-    evaluated in double from identical decimal inputs in both engines
-    (same expression shape → bit-identical), rounded, and the argmax is
-    tie-broken on the day."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate").isNotNull()  # engines disagree on NULL
-        # ordering in window frames (Spark NULLS FIRST, DuckDB LAST)
-    )
-    y = F.col("o_totalprice").cast("decimal(21,6)")
-    daily = (
-        orders.groupBy(
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(y).alias("_s"),
-        )
-        # referenced by pre (window) AND tot (agg): pin so the fact scan
-        # + group-by run once, not per branch
-        .transform(pin)
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    pre = daily.select(
-        "day",
-        F.sum("_n").over(w).alias("_cn"),
-        F.sum("_s").over(w).alias("_cs"),
-    )
-    # totals from the daily table itself, NOT max(cumulative): the two
-    # agree only while every y is positive
-    tot = daily.agg(
-        F.sum("_n").alias("_N"), F.sum("_s").alias("_S")
-    )
-    j = pre.crossJoin(F.broadcast(tot)).where(
-        (F.col("_cn") > 0) & (F.col("_cn") < F.col("_N"))
-    )
-    s1 = F.col("_cs").cast("double")
-    n1 = F.col("_cn").cast("double")
-    s = F.col("_S").cast("double")
-    n = F.col("_N").cast("double")
-    gain = (
-        s1 * s1 / n1 + (s - s1) * (s - s1) / (n - n1) - s * s / n
-    )
-    scored = j.select(
-        "day",
-        F.round(gain, 6).alias("gain"),
-        F.round(s1 / n1, 6).alias("left_mean"),
-        F.round((s - s1) / (n - n1), 6).alias("right_mean"),
-    )
-    return scored.orderBy(F.col("gain").desc(), F.col("day")).limit(1)
-
-
-SQL_BEST_CHANGEPOINT = """
-WITH daily AS (
-  SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-         count(*) AS _n,
-         sum(o_totalprice::DECIMAL(21,6)) AS _s
-  FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
-),
-pre AS (
-  SELECT day,
-         sum(_n) OVER (ORDER BY day) AS _cn,
-         sum(_s) OVER (ORDER BY day) AS _cs
-  FROM daily
-),
-tot AS (SELECT sum(_n) AS _N, sum(_s) AS _S FROM daily),
-scored AS (
-  SELECT day,
-         round(_cs::DOUBLE * _cs::DOUBLE / _cn::DOUBLE
-               + (_S::DOUBLE - _cs::DOUBLE) * (_S::DOUBLE - _cs::DOUBLE)
-                 / (_N::DOUBLE - _cn::DOUBLE)
-               - _S::DOUBLE * _S::DOUBLE / _N::DOUBLE, 6) AS gain,
-         round(_cs::DOUBLE / _cn::DOUBLE, 6) AS left_mean,
-         round((_S::DOUBLE - _cs::DOUBLE) / (_N::DOUBLE - _cn::DOUBLE),
-               6) AS right_mean
-  FROM pre, tot
-  WHERE _cn > 0 AND _cn < _N
-)
-SELECT day, gain, left_mean, right_mean
-FROM scored ORDER BY gain DESC, day LIMIT 1
-"""
-
-register("best_changepoint", q_best_changepoint, SQL_BEST_CHANGEPOINT)
 
 
 def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -93,15 +93,6 @@ class SameValueRuleConfig:
 
 
 @dataclass
-class EdgePropertyConfig:
-    """Edge label declaration (Config.scala:47-52)."""
-
-    name: str
-    propertyKey: str
-    propertyType: str  # int | long | double | string | bool
-
-
-@dataclass
 class EdgeLoaderConfig:
     """edgeLoader (Config.scala:36-56). ``batchSize``, ``parallelism``
     and ``taskSize`` are parsed so reference configs load, and nothing

@@ -41,12 +41,6 @@ class MissingFixedVertex(GrafinkException):
     exit_code = 5
 
 
-class GraphSchemaError(GrafinkException):
-    """Schema/catalog inconsistency; exit code 6."""
-
-    exit_code = 6
-
-
 class ConvergenceException(GrafinkException):
     """An iterative algorithm (connected components) hit its round cap
     without reaching a fixpoint; exit code 1 (no reference analogue —

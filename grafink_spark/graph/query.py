@@ -85,8 +85,13 @@ class GraphQuery:
             df = df.where(F.col(k) == F.lit(v))
         return df
 
-    def vertex_count(self) -> int:
-        return self.store.vertices().count()
+    def vertex_count(self, **has) -> int:
+        """``V(**has).count()``; a bounded lookup counts the Arrow
+        table's rows, with no Spark job."""
+        hit = self._point(has)
+        if hit is not None:
+            return hit[0].num_rows
+        return self._scan(has).count()
 
     def count_by_label(self) -> DataFrame:
         return self.store.vertices().groupBy("label").agg(

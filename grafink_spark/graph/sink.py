@@ -66,21 +66,3 @@ class ForeachPartitionSink(GraphSink):
 
     @abstractmethod
     def edge_partition(self, rows: Iterator[Row]) -> None: ...
-
-
-class CallbackSink(ForeachPartitionSink):
-    """ForeachPartitionSink from two plain callables — handy when the
-    connector logic is a function rather than a class (tests, notebooks,
-    quick integrations). The callables are shipped to executors via
-    Spark's cloudpickle, so closures work; they must not capture
-    unpicklable state (open sockets, SparkSession)."""
-
-    def __init__(self, vertex_fn, edge_fn):
-        self._vertex_fn = vertex_fn
-        self._edge_fn = edge_fn
-
-    def vertex_partition(self, rows: Iterator[Row]) -> None:
-        self._vertex_fn(rows)
-
-    def edge_partition(self, rows: Iterator[Row]) -> None:
-        self._edge_fn(rows)

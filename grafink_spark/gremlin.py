@@ -232,6 +232,19 @@ def _literal_prefix(steps: list[Step], vertex_id: int | None) -> tuple[dict, int
     return eq, n
 
 
+def _anchored_in(edges: DataFrame, vertices: DataFrame, anchor: list[str]) -> DataFrame:
+    """The edges with an ``anchor`` column among the ids of
+    ``vertices`` (a semi-join per anchor, distinct union of several)."""
+    ids = vertices.select("id")
+    parts = [
+        edges.join(ids.select(F.col("id").alias(c)), c, "left_semi") for c in anchor
+    ]
+    matched = parts[0]
+    for part in parts[1:]:
+        matched = matched.unionByName(part).distinct()
+    return matched
+
+
 class GremlinExecutor:
     """Evaluates a parsed traversal against GraphQuery's tables."""
 
@@ -250,6 +263,9 @@ class GremlinExecutor:
         restricted = bool(ids)
         # single-id fast path (src pushdown, valueMap)
         vertex_id = ids[0] if len(ids) == 1 else None
+        # a vertex filter after g.V(<id>): the vertex frame may no longer
+        # hold vertex_id, so later steps read it instead of the id alone
+        narrowed = False
         first = 1  # the first step the loop below evaluates
         done = None  # set once a terminal materializes a python value
         eq, end = _literal_prefix(steps, vertex_id) if len(ids) <= 1 else ({}, 1)
@@ -263,7 +279,7 @@ class GremlinExecutor:
         else:
             # V(<id>) and the literal has/hasLabel steps after it are one
             # GraphQuery.V lookup; next/toList straight on it take Rows
-            first, restricted = end, True
+            first, restricted, narrowed = end, True, end > 1
             terminal = steps[first].name if first < len(steps) else None
             if terminal == "next":
                 rows = self.g.vertex_rows(eq, limit=1)
@@ -272,6 +288,8 @@ class GremlinExecutor:
                 done, first = rows[0], first + 1
             elif terminal == "toList":
                 done, first = self.g.vertex_rows(eq), first + 1
+            elif terminal == "count":
+                done, first = self.g.vertex_count(**eq), first + 1
             else:
                 df = self.g.V(**eq)
         it = iter(steps[first:])
@@ -306,12 +324,13 @@ class GremlinExecutor:
                     else:
                         df = df.where(F.col(k) == F.lit(v))
                     restricted = True
+                    narrowed = narrowed or mode == "vertices"
             elif step.name == "hasLabel":
                 if not step.args:
                     raise GremlinParseError("hasLabel(label) takes 1+ args")
                 df = df.where(F.col("label").isin([str(a) for a in step.args]))
                 if mode == "vertices":
-                    restricted = True
+                    restricted = narrowed = True
             elif step.name == "values":
                 if len(step.args) != 1:
                     raise GremlinParseError("values(prop) takes 1 arg")
@@ -364,38 +383,36 @@ class GremlinExecutor:
                     step.name
                 ]
                 if vertex_id is not None:
-                    cond = anchor[0]
-                    m = F.col(cond) == vertex_id
+                    m = F.col(anchor[0]) == vertex_id
                     for c in anchor[1:]:
                         m = m | (F.col(c) == vertex_id)
-                    df = edges.where(m)
-                elif restricted:
-                    # semi-join: only edges anchored in the vertex set
-                    ids = df.select("id")
-                    matched = edges.join(
-                        ids.select(F.col("id").alias(anchor[0])),
-                        anchor[0],
-                        "left_semi",
-                    )
-                    for c in anchor[1:]:
-                        matched = matched.unionByName(
-                            edges.join(
-                                ids.select(F.col("id").alias(c)),
-                                c,
-                                "left_semi",
-                            )
-                        ).distinct()
-                    df = matched
-                else:
-                    df = edges
-                mode = "edges"
+                    edges = edges.where(m)
+                if restricted and (vertex_id is None or narrowed):
+                    edges = _anchored_in(edges, df, anchor)
+                df, mode = edges, "edges"
             elif step.name in ("out", "in", "both"):
                 label = step.args[0] if step.args else None
                 if vertex_id is None:
                     raise GremlinParseError(f"{step.name}() needs g.V(<id>)")
                 # both directions are materialized: in == out over the
                 # reverse rows; both == distinct union of the two
-                if step.name == "out":
+                if narrowed:
+                    # hop along the edges anchored in the vertex frame
+                    ends = {
+                        "out": [(SRC, DST)],
+                        "in": [(DST, SRC)],
+                        "both": [(SRC, DST), (DST, SRC)],
+                    }[step.name]
+                    hops = [
+                        _anchored_in(
+                            self.g.out_e(label).where(F.col(a) == vertex_id), df, [a]
+                        ).select(F.col(b).alias("neighbor_id"))
+                        for a, b in ends
+                    ]
+                    df = hops[0]
+                    for hop in hops[1:]:
+                        df = df.unionByName(hop).distinct()
+                elif step.name == "out":
                     df = self.g.neighbors(vertex_id, label)
                 elif step.name == "in":
                     df = (
@@ -427,11 +444,15 @@ class GremlinExecutor:
             elif step.name == "valueMap":
                 if vertex_id is None:
                     raise GremlinParseError("valueMap needs g.V(<id>)")
-                done = self.g.value_map(vertex_id)
+                if narrowed:
+                    rows = df.take(1)
+                    done = rows[0].asDict() if rows else {}
+                else:
+                    done = self.g.value_map(vertex_id)
             elif step.name == "limit":
                 df = df.limit(int(step.args[0]))
                 if mode == "vertices":
-                    restricted = True
+                    restricted = narrowed = True
             elif step.name == "next":
                 rows = df.take(1)
                 done = rows[0] if rows else None

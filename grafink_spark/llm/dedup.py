@@ -659,21 +659,6 @@ def simhash_near_duplicates(
     )
 
 
-def simhash_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Groups of documents with identical SimHash: (simhash, keeper_id,
-    dup_count>1). For Hamming-distance ≤ d matching, band the signature
-    and bucket-join like MinHash LSH."""
-    return (
-        ensure_min_partitions(df)
-        .select(simhash(F.col(text_col), k).alias("simhash"), F.col(id_col))
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("dup_count"))
-        .where(F.col("dup_count") > 1)
-    )
-
-
 # ------------------------------------- near-dup clustering / dropping
 
 

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with a typed metadata
-struct; all heavy per-item work (decode, resize, feature-extract,
+struct; all heavy per-item work (decode, feature-extract,
 frame-sample) runs as Arrow-batched ``mapInPandas`` so bytes stream
 through Python in columnar batches, never row-at-a-time, and the plan
 stays a narrow map (no shuffle).
@@ -872,49 +872,6 @@ def extract_image_features(
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURE_SCHEMA])
 
     return src.mapInPandas(run, IMAGE_FEATURE_SCHEMA)
-
-
-def resize_images(
-    df: DataFrame,
-    target_width: int,
-    target_height: int,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """1→1 mapInPandas resize: returns (doc_id, payload) with payloads
-    at the target dimensions. The fake kernel nearest-neighbor-samples
-    the fake-image body; a real kernel would call PIL — the Spark
-    contract (binary in, binary out, narrow map, no shuffle) is what
-    this pins down."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("_p"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["_p"]):
-                if payload is None or len(payload) < 8:
-                    rows.append({"doc_id": int(doc_id), "payload": None})
-                    continue
-                payload = bytes(payload)
-                w, h = struct.unpack("<ii", payload[:8])
-                body = payload[8:]
-                out = bytearray(struct.pack("<ii", target_width, target_height))
-                for y in range(target_height):
-                    sy = min(int(y * h / target_height), h - 1) if h else 0
-                    for x in range(target_width):
-                        sx = min(int(x * w / target_width), w - 1) if w else 0
-                        idx = sy * w + sx
-                        out.append(body[idx] if idx < len(body) else 0)
-                rows.append({"doc_id": int(doc_id), "payload": bytes(out)})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return src.mapInPandas(run, out_schema)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(

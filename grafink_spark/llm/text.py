@@ -51,13 +51,6 @@ def word_tokens(col_name: str) -> Column:
     )
 
 
-def stopword_hits(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Occurrence count of stopwords among whitespace tokens."""
-    sw = stopwords if stopwords is not None else DEFAULT_STOPWORDS
-    arr = F.array(*[F.lit(w) for w in sw])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(arr, t)))
-
-
 def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features: lengths, token stats, punctuation /
     stopword / digit ratios. Two stacked projections, zero shuffles —

@@ -201,50 +201,3 @@ def psi_drift(
             ).alias("psi"),
         )
     )
-
-
-def psi_from_hist(
-    ref_regs: DataFrame, cur_regs: DataFrame, bins: int
-) -> DataFrame:
-    """One-row PSI from two histogram REGISTER tables (same bin domain,
-    e.g. sketches.hist_registers with fixed lo/hi) — the streaming form
-    of :func:`psi_drift`: keep the reference registers, hist_merge each
-    microbatch into the current registers, and score drift from the ≤
-    2·bins register rows without touching either data set again."""
-    r = ref_regs.select(F.col("_bin"), F.col("_cnt").alias("_cr"))
-    c = cur_regs.select(F.col("_bin"), F.col("_cnt").alias("_cc"))
-    j = (
-        r.join(c, "_bin", "full")
-        .select(
-            "_bin",
-            F.coalesce("_cr", F.lit(0)).alias("_cr"),
-            F.coalesce("_cc", F.lit(0)).alias("_cc"),
-        )
-    )
-    tot = j.agg(
-        F.sum("_cr").alias("_nr"), F.sum("_cc").alias("_nc")
-    )
-    return (
-        j.crossJoin(F.broadcast(tot))
-        .groupBy()
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_bin", "_cr", "_cc", "_nr", "_nc"))
-            ).alias("_arr")
-        )
-        .select(
-            F.aggregate(
-                F.col("_arr"),
-                F.lit(0.0),
-                lambda acc, s: acc
-                + (
-                    (s["_cr"] + 1) / (s["_nr"] + bins)
-                    - (s["_cc"] + 1) / (s["_nc"] + bins)
-                )
-                * F.log(
-                    ((s["_cr"] + 1) / (s["_nr"] + bins))
-                    / ((s["_cc"] + 1) / (s["_nc"] + bins))
-                ),
-            ).alias("psi")
-        )
-    )

@@ -49,12 +49,6 @@ def _supernova_cond() -> Column:
     )
 
 
-def _supernova_old_cond() -> Column:
-    """Old supernova recipe, kept for parity (TwoModeClassifier.scala:30-31,
-    unused by the dispatch map)."""
-    return (F.col("rfscore") > 0.9) & (F.col("snn_snia_vs_nonia") > 0.9)
-
-
 def _microlensing_cond() -> Column:
     return (F.col("mulens_class_1") == "ML") & (F.col("mulens_class_2") == "ML")
 

@@ -258,15 +258,6 @@ def cms_registers(
     )
 
 
-def cms_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge CMS register tables (union + sum per cell) — exact,
-    order-insensitive."""
-    merged = register_tables[0]
-    for t in register_tables[1:]:
-        merged = merged.unionByName(t)
-    return merged.groupBy("_row", "_col").agg(F.sum("_cnt").alias("_cnt"))
-
-
 def cms_point_estimates(
     regs: DataFrame,
     items: DataFrame,

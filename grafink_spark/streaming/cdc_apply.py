@@ -8,7 +8,7 @@ table via an atomic filter-and-swap — the same recipe Delta/Iceberg's
 MERGE INTO implements, expressed with stock Spark + a Hadoop-FS swap.
 
 Exactly-once: a commit marker per ``batch_id`` (beside the table, like
-graph_ingest/corpus_ingest) makes a replayed microbatch a no-op. The
+graph_ingest) makes a replayed microbatch a no-op. The
 merge itself is also idempotent for a given changeset — replaying
 U/I/D on an already-merged table yields the same table — so even a
 crash between swap and marker-touch cannot corrupt state; the marker

@@ -1,8 +1,8 @@
 """Shared crash-replay purge for the foreachBatch exactly-once recipe.
 
-The recipe (corpus_ingest, ann_ingest; graph_ingest carries a
-multi-target variant of the same steps): tag every appended row with
-the microbatch id, touch a commit marker AFTER the append, skip a
+The recipe (graph_ingest carries a multi-target variant of these
+steps): tag every appended row with the microbatch id, touch a commit
+marker AFTER the append, skip a
 replayed batch whose marker exists, and — when the marker is missing
 but tagged rows exist — purge the crashed attempt's rows before
 re-appending. This module holds the purge so the protocol can't drift

@@ -117,25 +117,6 @@ def run_stream_to_parquet(
         writer.trigger(processingTime="10 seconds").start()
 
 
-def dedup_event_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact-dedup stage: drops re-deliveries of the same
-    event (by key columns, default event_id) arriving within the
-    watermark — the streaming twin of batch drop_exact_duplicates, and
-    the standard guard in front of an at-least-once source.
-
-    Uses dropDuplicatesWithinWatermark, so state holds one tuple per
-    key seen in the last watermark window and is evicted as event time
-    advances — bounded state at any throughput (a plain
-    dropDuplicates on a stream retains keys forever)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
-
-
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,

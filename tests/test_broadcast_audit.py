@@ -46,32 +46,14 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "grafink_spark"
 # (file relative to grafink_spark/, enclosing function name, first
 # identifier of the broadcast argument) -> reason.
 AUDIT: dict[tuple[str, str, str], str] = {
-    ("benchqueries.py", "q_best_changepoint", "tot"): "ONE_ROW global total fold",
     ("benchqueries.py", "q_bigram_pmi", "totals"): "ONE_ROW pivoted unigram/bigram corpus totals",
     ("benchqueries.py", "q_community_conductance", "total"): "ONE_ROW total graph volume fold",
     ("benchqueries.py", "q_doc_keywords", "n_docs"): "ONE_ROW corpus document count",
-    ("benchqueries.py", "q_dormant_customers", "pos"): "ONE_ROW positive-balance average fold (Q22)",
-    ("benchqueries.py", "q_excess_suppliers", "nations"): "FIXED TPC-H nation (25 rows)",
-    ("benchqueries.py", "q_important_stock", "nations"): "FIXED TPC-H nation (25 rows)",
-    ("benchqueries.py", "q_important_stock", "total"): "ONE_ROW global total fold (Q11 threshold)",
-    ("benchqueries.py", "q_impute_missing", "med"): "GROUP per-event-type medians (event_type domain)",
     ("benchqueries.py", "q_join_size_estimate", "exact"): "ONE_ROW exact-count fold (estimator comparison)",
     ("benchqueries.py", "q_ks_drift", "tot"): "ONE_ROW global total fold",
-    ("benchqueries.py", "q_local_supplier_volume", "nation"): "FIXED TPC-H nation (25 rows)",
-    ("benchqueries.py", "q_local_supplier_volume", "region"): "FIXED TPC-H region (5 rows)",
-    ("benchqueries.py", "q_mad_outliers", "mad"): "ONE_ROW global MAD scalar",
-    ("benchqueries.py", "q_mad_outliers", "med"): "ONE_ROW global median scalar",
-    ("benchqueries.py", "q_market_share", "cn"): "FIXED nation-key subset (<=25 rows)",
-    ("benchqueries.py", "q_market_share", "sn"): "FIXED named-nation subset of nation (<=25 rows)",
-    ("benchqueries.py", "q_min_cost_supplier", "nations"): "FIXED TPC-H nation (25 rows)",
-    ("benchqueries.py", "q_nation_volume_shipping", "n1"): "FIXED named-nation subset of nation (<=25 rows)",
-    ("benchqueries.py", "q_nation_volume_shipping", "n2"): "FIXED named-nation subset of nation (<=25 rows)",
-    ("benchqueries.py", "q_product_profit", "nation"): "FIXED TPC-H nation (25 rows)",
     ("benchqueries.py", "q_quality_deciles", "n_total"): "ONE_ROW corpus total",
     ("benchqueries.py", "q_seasonal_anomalies", "mom"): "ONE_ROW method-of-moments parameter fold",
-    ("benchqueries.py", "q_top_supplier", "mx"): "ONE_ROW global max fold",
     ("benchqueries.py", "q_user_overlap", "exact"): "ONE_ROW exact-count fold (estimator comparison)",
-    ("benchqueries.py", "q_woe_encoding", "tot"): "ONE_ROW global good/bad totals fold",
     ("cdc.py", "merge_changes", "anti_keys"): "GATED broadcast_keys flag; docstring names broadcast_keys=False for changesets too large",
     ("id_manager.py", "assign_ids", "off_df"): "DRIVER per-partition offset rows (numPartitions rows, just collected)",
     ("llm/classify.py", "nb_classify", "classes"): "GROUP per-class token stats (class-label domain x vocabulary cap)",
@@ -104,7 +86,6 @@ AUDIT: dict[tuple[str, str, str], str] = {
     ("ops.py", "skew_report", "globals_"): "ONE_ROW total/key-count fold (skew_report)",
     ("ops.py", "winsorize", "bounds"): "GROUP per-group percentile band (group domain)",
     ("profile.py", "binned", "bounds"): "GROUP per-group percentile bounds (group domain)",
-    ("profile.py", "psi_from_hist", "tot"): "ONE_ROW profile totals",
     ("rules/similarity.py", "_branch_join", "right"): "GATED behind would_broadcast(autoBroadcastJoinThreshold); over-threshold build sides take hot-key detection + salting instead",
     ("rules/twomode.py", "classify", "dim"): "FIXED fixed-vertex recipe table (CSV of named recipes)",
     ("sketches.py", "cms_point_estimates", "regs"): "SKETCH count-min registers (depth x width, parameter not data)",

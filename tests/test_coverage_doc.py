@@ -34,27 +34,65 @@ def test_readme_counts_match_registry():
         assert int(n) == len(QUERIES), f"README.md says {n}, registry has {len(QUERIES)}"
 
 
-# The 64 queries bench.py drains with collect(); every other one drains
+# Generic plumbing every row calls; reaching only these tests Spark
+# against DuckDB, not this engine.
+PLUMBING = {"load_table", "pin", "maybe_broadcast", "ensure_min_partitions"}
+
+
+def test_every_registered_query_reaches_an_engine_module():
+    """Static walk of benchqueries.py, no Spark session: each register()
+    row's callable must name something imported from grafink_spark
+    (other than PLUMBING), itself or through the module's helper and
+    q_* functions it calls."""
+    import ast
+
+    tree = ast.parse((ROOT / "grafink_spark" / "benchqueries.py").read_text())
+    engine = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("grafink_spark"):
+            engine |= {a.asname or a.name for a in node.names}
+    engine -= PLUMBING
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    calls = {
+        name: {x.id for x in ast.walk(fn) if isinstance(x, ast.Name)}
+        for name, fn in funcs.items()
+    }
+
+    def reaches(name, seen):
+        seen.add(name)
+        return bool(calls[name] & engine) or any(
+            reaches(m, seen) for m in calls[name] & funcs.keys() - seen
+        )
+
+    rows = [
+        (n.value.args[0].value, n.value.args[1].id)
+        for n in tree.body
+        if isinstance(n, ast.Expr)
+        and isinstance(n.value, ast.Call)
+        and getattr(n.value.func, "id", None) == "register"
+    ]
+    assert [q for q, _ in rows] == list(QUERIES)
+    unreached = [q for q, fn in rows if not reaches(fn, set())]
+    assert not unreached, f"rows that reach no engine module: {unreached}"
+
+
+# The 50 queries bench.py drains with collect(); every other one drains
 # through a noop write. Changing a drain mode changes what the bench times.
 COLLECT = {
-    "ann_recall", "approx_distinct", "apss_cosine", "benford_audit",
-    "bitext_mine", "bm25_search", "bpe_apply", "ccnet_bucket_filter",
-    "cms_heavy_hitters", "contamination", "corpus_datasheet",
-    "corpus_diversity", "dataset_split", "disjunctive_revenue",
+    "ann_recall", "approx_distinct", "apss_cosine", "bitext_mine",
+    "bm25_search", "bpe_apply", "ccnet_bucket_filter", "cms_heavy_hitters",
+    "contamination", "corpus_datasheet", "corpus_diversity", "dataset_split",
     "dsir_select", "edge_degree", "embedding_pca", "embedding_topk",
-    "exact_median", "forecast_revenue", "frequent_sequences",
-    "gopher_filter", "graph_modularity", "group_kfold", "hard_triplets",
-    "hist_quantile_sketch", "hits_scores", "holt_trend", "hourly_windows",
-    "hybrid_rrf", "incremental_agg", "join_size_estimate", "k_anonymity",
-    "katz_centrality", "kfold_assign", "large_orders", "length_batching",
-    "linear_attribution", "local_supplier_volume", "mmr_topk",
-    "order_count_distribution", "pareto_parts", "pareto_suppliers",
-    "pca_components", "pricing_summary", "priority_exists", "promo_revenue",
-    "psi_drift", "quantized_topk", "ranking_agreement", "returned_items",
-    "rouge_pairs", "seasonal_decompose", "semantic_contamination",
-    "semantic_contamination_ivf", "shipping_priority", "similarity_histogram",
-    "snapshot_diff", "top_supplier", "variant_dedup", "weighted_sample",
-    "winsorize", "woe_encoding", "zipf_fit",
+    "exact_median", "frequent_sequences", "gopher_filter", "graph_modularity",
+    "group_kfold", "hard_triplets", "hist_quantile_sketch", "hits_scores",
+    "holt_trend", "hourly_windows", "hybrid_rrf", "incremental_agg",
+    "join_size_estimate", "k_anonymity", "katz_centrality", "kfold_assign",
+    "length_batching", "linear_attribution", "mmr_topk", "pareto_parts",
+    "pareto_suppliers", "pca_components", "psi_drift", "quantized_topk",
+    "ranking_agreement", "rouge_pairs", "seasonal_decompose",
+    "semantic_contamination", "semantic_contamination_ivf",
+    "similarity_histogram", "snapshot_diff", "variant_dedup", "winsorize",
+    "zipf_fit",
 }
 NOT_SF1 = {
     "apss_cosine_arrow", "embedding_near_pairs", "label_noise",
@@ -77,12 +115,12 @@ def test_registry_is_the_only_declaration():
     assert {q.drain for q in REGISTRY.values()} == {"noop", "collect"}
     assert {n for n, q in REGISTRY.items() if not q.sf1} == NOT_SF1
 
-    q = REGISTRY["max_id"]
+    q = REGISTRY["assign_ids"]
     with pytest.raises(ValueError, match="twice"):
-        register("max_id", q.fn, q.oracle)
+        register("assign_ids", q.fn, q.oracle)
     with pytest.raises(ValueError, match="drain"):
-        register("max_id_collect_all", q.fn, q.oracle, drain="count")
-    assert "max_id_collect_all" not in REGISTRY
+        register("assign_ids_collect_all", q.fn, q.oracle, drain="count")
+    assert "assign_ids_collect_all" not in REGISTRY
 
 
 def test_bench_artifact_partitions_registry():

@@ -63,11 +63,6 @@ def test_ngram_jaccard_blocked(spark, docs):
     assert {(r.id_a, r.id_b) for r in out.collect()} == {(1, 2)}
 
 
-def test_simhash_identical_for_exact_dups(spark, docs):
-    groups = dd.simhash_duplicates(docs).collect()
-    assert any(g.keeper_id == 1 and g.dup_count >= 2 for g in groups)
-
-
 def test_simhash_is_similarity_preserving(spark, docs):
     sh = {r.doc_id: r.s for r in docs.select("doc_id", dd.simhash("text").alias("s")).collect()}
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731

@@ -5,8 +5,7 @@ from pyspark.sql import functions as F
 
 from grafink_spark.graph.catalog import GraphCatalog, property_class_for
 from grafink_spark.graph.query import GraphQuery
-from grafink_spark.graph.sink import CallbackSink
-from grafink_spark.graph.sink import GraphSink
+from grafink_spark.graph.sink import ForeachPartitionSink, GraphSink
 from grafink_spark.graph.storage import GraphStore
 from grafink_spark.rules.samevalue import SameValueClassifier
 from grafink_spark.rules.similarity import SimilarityClassifier
@@ -60,6 +59,17 @@ def test_delete_vertices(spark, store, alerts_df):
     assert store.edges().count() == 0  # both directions touched id 3
 
 
+def test_count_by_label_counts_each_vertex_label(spark, store, alerts_df):
+    """The shell's ``g.count_by_label()``: one row per vertex label."""
+    _load_graph(store, alerts_df)
+    store.write_vertices(
+        alerts_df([alert(4, "obj4", 0.35, 0.8999, 2, 0.0, "WD*", None, None)]),
+        label="similarity",
+    )
+    got = {r.label: r["count"] for r in GraphQuery(store).count_by_label().collect()}
+    assert got == {"alert": 3, "similarity": 1}
+
+
 def _read_captured(capture_dir, kind):
     import json
     import os
@@ -83,8 +93,9 @@ def test_pluggable_sink_receives_partitions(spark, tmp_path, alerts_df):
 
     # partition callbacks run in executor worker processes, so a driver-
     # side list can't capture — each dumps its rows to a unique JSONL
-    # file in a shared dir. Defined as closures: cloudpickle ships them
-    # by value (a test-module class isn't importable on the workers).
+    # file in a shared dir. Defined in the test body: cloudpickle ships
+    # a local function and class by value (a test-module class isn't
+    # importable on the workers).
     def _dump(kind, rows):
         import json
         import os
@@ -98,9 +109,14 @@ def test_pluggable_sink_receives_partitions(spark, tmp_path, alerts_df):
             for r in rows:
                 f.write(json.dumps(r) + "\n")
 
-    sink = CallbackSink(
-        lambda rows: _dump("v", rows), lambda rows: _dump("e", rows)
-    )
+    class DumpSink(ForeachPartitionSink):
+        def vertex_partition(self, rows):
+            _dump("v", rows)
+
+        def edge_partition(self, rows):
+            _dump("e", rows)
+
+    sink = DumpSink()
     store = GraphStore(spark, str(tmp_path / "graph"), sink=sink)
     _load_graph(store, alerts_df)
 
@@ -555,6 +571,30 @@ def test_point_reads_run_no_spark_job(spark, store):
     for name, read in reads.items():
         out, jobs = jobs_submitted(spark, read)
         assert (out, jobs) == (202, 0), name
+
+
+def test_bounded_count_runs_no_spark_job(spark, store, monkeypatch):
+    """``count()`` straight on a bounded lookup counts the Arrow table's
+    rows; past ``LOOKUP_ROW_CAP`` Spark counts."""
+    from grafink_spark.graph import storage
+    from grafink_spark.gremlin import gremlin
+
+    for night in (1, 2, 3):
+        store.write_vertices(_night(spark, night))
+    g = GraphQuery(store)
+    g.value_map(202)  # the first read after a write refreshes the memo
+    counts = {
+        "by_id": (lambda: gremlin(g, "g.V(202).count()"), 1),
+        "by_id_missing": (lambda: gremlin(g, "g.V(999).count()"), 0),
+        "has": (lambda: gremlin(g, 'g.V().has("objectId", "o2_2").count()'), 1),
+        "shared": (lambda: gremlin(g, 'g.V().has("objectId", "o_shared").count()'), 3),
+        "vertex_count": (lambda: g.vertex_count(objectId="o_shared"), 3),
+    }
+    for name, (read, want) in counts.items():
+        assert jobs_submitted(spark, read) == (want, 0), name
+    monkeypatch.setattr(storage, "LOOKUP_ROW_CAP", 2)
+    out, jobs = jobs_submitted(spark, counts["shared"][0])
+    assert out == 3 and jobs > 0
 
 
 def test_over_cap_and_off_local_lookups_keep_the_spark_plan(spark, store, monkeypatch):

@@ -49,27 +49,6 @@ def test_sample_frames_one_to_many(spark, media):
     assert len(first.frame_bytes) == 32
 
 
-def test_resize_images_contract(spark):
-    from grafink_spark.llm.multimodal import (
-        extract_image_features,
-        make_fake_image,
-        resize_images,
-    )
-
-    df = spark.createDataFrame(
-        [(i, make_fake_image(i, 32, 16)) for i in range(4)],
-        "doc_id long, payload binary",
-    )
-    resized = resize_images(df, 8, 4)
-    feats = extract_image_features(resized)
-    rows = {r.doc_id: r for r in feats.collect()}
-    assert len(rows) == 4
-    for r in rows.values():
-        assert (r.width, r.height) == (8, 4)
-        assert r.n_bytes == 8 + 8 * 4
-        assert r.mean_luma is not None
-
-
 def test_audio_features(spark):
     from grafink_spark.llm.multimodal import (
         extract_audio_features,

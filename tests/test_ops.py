@@ -481,47 +481,6 @@ def test_benford_first_significant_digit_extraction(spark):
     assert got == {1: 2, 2: 9, 3: 5, 4: 2}
 
 
-def test_target_encoding_excludes_self(spark):
-    """LOO encoding of a 3-row segment equals the mean of the OTHER
-    two rows; singleton segments yield null."""
-    import grafink_spark.benchqueries as bq
-    from pyspark.sql import functions as F
-
-    # use the registered query at sf0.001 and re-derive expectations
-    out = bq.QUERIES["target_encoding"](spark, "/root/testdata/sf0.001")
-    orders = bq.load_table(spark, "/root/testdata/sf0.001", "orders")
-    cust = bq.load_table(spark, "/root/testdata/sf0.001", "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    j = orders.join(cust, "o_custkey").select(
-        "o_orderkey", "c_mktsegment", "o_totalprice"
-    ).toPandas()
-    got = {r.o_orderkey: r.loo_encoding for r in out.collect()}
-    import random
-
-    for _, row in j.sample(20, random_state=7).iterrows():
-        seg = j[j.c_mktsegment == row.c_mktsegment]
-        if len(seg) == 1:
-            assert got[row.o_orderkey] is None
-        else:
-            want = (seg.o_totalprice.sum() - row.o_totalprice) / (len(seg) - 1)
-            assert abs(got[row.o_orderkey] - round(want, 4)) < 1e-6
-
-
-def test_entropy_profile_bounds(spark):
-    """Entropy is 0 for single-type users and <= ln(n_types)."""
-    import math
-
-    import grafink_spark.benchqueries as bq
-
-    out = bq.QUERIES["entropy_profile"](spark, "/root/testdata/sf0.001").collect()
-    assert len(out) > 0
-    for r in out:
-        assert -1e-9 <= r.entropy <= math.log(r.n_types) + 1e-9
-        if r.n_types == 1:
-            assert abs(r.entropy) < 1e-12
-
-
 # ------------------------------------------------------- pareto frontier
 
 

@@ -49,8 +49,6 @@ _EDGEBUILD = (
 
 ALLOW: dict[str, tuple[set[str], str]] = {
     "ann_recall": ({"bnlj", "single-part"}, _CENTROID + "; truth side k rows"),
-    "benford_audit": ({"single-part"}, _TOPK + " (9 digit rows)"),
-    "best_changepoint": ({"bnlj", "single-part"}, _SCALAR + " (1-row totals; day-sized prefix table + top-1)"),
     "ks_drift": ({"bnlj", "single-part"}, _SCALAR + " (1-row totals broadcast; global top-1 over distinct values)"),
     "behavior_jaccard": ({"bnlj", "single-part"}, _SCALAR + " (k-row KMV sketches)"),
     "user_overlap": ({"bnlj", "single-part"}, _SCALAR + " (m-row HLL registers + 1-row exact)"),
@@ -60,21 +58,17 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "community_conductance": ({"bnlj", "single-part"}, _SCALAR + " (total volume)"),
     "degree_assortativity": ({"bnlj", "single-part"}, _TOPK + " (1-row correlation); " + _EDGEBUILD),
     "degree_distribution": ({"bnlj"}, _CLIQUE),
-    "disjunctive_revenue": ({"single-part"}, _TOPK + " (1-row revenue)"),
     "doc_keywords": ({"bnlj", "single-part"}, _SCALAR + " (corpus df totals)"),
-    "dormant_customers": ({"bnlj", "single-part"}, _SCALAR + " (Q22 avg balance)"),
     "dsir_select": ({"bnlj", "single-part"}, _SCALAR + " (target distribution)"),
     "embedding_ivf_indexed": ({"bnlj"}, _CENTROID),
     "embedding_ivf_topk": ({"bnlj"}, _CENTROID + "; " + _QUERYK),
     "pq_topk": ({"bnlj"}, "1-row PQ codebook matrix; " + _QUERYK),
     "ivfpq_topk": ({"bnlj"}, _CENTROID + "; 1-row PQ codebook matrix; " + _QUERYK),
     "embedding_topk": ({"bnlj", "single-part"}, _QUERYK),
-    "forecast_revenue": ({"single-part"}, _TOPK + " (1-row Q6 revenue)"),
     "funnel": ({"single-part"}, _TOPK + " (stage fold)"),
     "graph_modularity": ({"bnlj", "single-part"}, _TOPK + " (1-row modularity); " + _EDGEBUILD),
     "hist_quantile_sketch": ({"bnlj", "single-part"}, _SCALAR + " (bounds + registers)"),
     "hybrid_rrf": ({"bnlj", "single-part"}, _SCALAR + " (BM25 stats) + top-k"),
-    "important_stock": ({"bnlj", "single-part"}, _SCALAR + " (Q11 total threshold)"),
     "join_size_estimate": ({"bnlj", "single-part"}, _SCALAR + " (KMV sketches)"),
     "label_noise": ({"bnlj"}, _QUAD + " (label-blocked all-pairs kNN)"),
     "label_noise_ivf": ({"bnlj"}, _CENTROID + "; probe join is a size-gated equi join"),
@@ -106,13 +100,10 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "neighbor_features": ({"bnlj"}, _EDGEBUILD),
     "negative_edges": ({"bnlj"}, _EDGEBUILD),
     "normalized_adjacency": ({"bnlj"}, _EDGEBUILD),
-    "mad_outliers": ({"bnlj", "single-part"}, _SCALAR + " (median/MAD bounds)"),
-    "max_id": ({"single-part"}, _TOPK + " (global max fold)"),
     "mixture_sample": ({"single-part"}, _TOPK + " (per-source rate table)"),
     "nb_classify": ({"bnlj"}, _SCALAR + " (vocabulary-bounded class stats)"),
     "pareto_parts": ({"single-part"}, _TOPK + " (frontier fold)"),
     "pareto_suppliers": ({"bnlj"}, _SCALAR + " (frontier verify join)"),
-    "promo_revenue": ({"single-part"}, _TOPK + " (1-row Q14 share)"),
     "quality_deciles": ({"bnlj", "single-part"}, _SCALAR + " (decile edges)"),
     "quantile_filter": ({"bnlj", "single-part"}, _SCALAR + " (1-row quantile bound)"),
     "quantized_topk": ({"bnlj", "single-part"}, _QUERYK),
@@ -121,7 +112,6 @@ ALLOW: dict[str, tuple[set[str], str]] = {
     "seasonal_decompose": ({"bnlj", "single-part"}, _SCALAR + " (seasonal means)"),
     "semantic_contamination": ({"bnlj"}, _QUERYK + " (benchmark side broadcast)"),
     "semantic_contamination_ivf": ({"bnlj"}, _CENTROID + "; benchmark side broadcast"),
-    "semi_anti_sets": ({"bnlj", "single-part"}, _SCALAR + " (set-op count compare)"),
     "similarity_edges": ({"bnlj"}, _CLIQUE),
     "similarity_histogram": ({"bnlj"}, _CLIQUE),
     "similarity_multi": ({"bnlj"}, _CLIQUE + "; " + _QUAD),
@@ -133,9 +123,6 @@ ALLOW: dict[str, tuple[set[str], str]] = {
         " final top-k LIMIT — the key-cardinality-sized counts table"
         " itself never funnels, see test_skew_report_no_window)",
     ),
-    "small_quantity_revenue": ({"single-part"}, _TOPK + " (1-row Q17 revenue)"),
-    "top_supplier": ({"single-part"}, _TOPK + " (1-row max-revenue bound)"),
-    "woe_encoding": ({"bnlj", "single-part"}, _SCALAR + " (global good/bad totals)"),
 }
 
 

@@ -347,51 +347,6 @@ def test_ngram_span_coverage_reuses_window_aggregate(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_six_way_join_broadcasts_all_dims(spark, tmp_path):
-    """Q5-shape plan at bench scale: every dimension (now size-gated via
-    maybe_broadcast) still joins as broadcast; only the orders⋈lineitem
-    fact join may shuffle."""
-    import grafink_spark.benchqueries as bq
-
-    df = bq.q_local_supplier_volume(spark, "/root/testdata/sf0.001")
-    plan = physical_plan(df)
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # fact-side exchanges: at most the two sides of the fact join plus
-    # the final group-by — no dimension table shuffles
-    exchanges = [
-        l for l in plan.split("\n")
-        if "Exchange hashpartitioning" in l
-    ]
-    assert len(exchanges) <= 3, exchanges
-
-
-def test_six_way_join_dims_not_forced_above_threshold(spark):
-    """The other side of the size gate: when the SF-growing dims
-    (customer/supplier) exceed spark.grafink.broadcastMaxBytes, the
-    hint is withheld — the plan degrades to shuffle joins instead of a
-    forced (OOM-at-scale) broadcast.  nation/region are genuinely fixed
-    size (25/5 rows at every SF) and may keep their unconditional hint."""
-    import grafink_spark.benchqueries as bq
-
-    spark.conf.set("spark.grafink.broadcastMaxBytes", "1")
-    prev_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = bq.q_local_supplier_volume(spark, "/root/testdata/sf0.001")
-        logical = df._jdf.queryExecution().analyzed().toString()
-        # exactly the two fixed-size dims carry a hint; customer and
-        # supplier do not
-        assert logical.count("ResolvedHint") == 2, logical
-        plan = physical_plan(df)
-        # customer and supplier joins fall back to shuffle joins
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.unset("spark.grafink.broadcastMaxBytes")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_auto)
-
-
 def test_maybe_broadcast_gate():
     """maybe_broadcast applies the hint below the byte threshold and
     returns the frame unhinted above it (letting AQE decide)."""
@@ -462,8 +417,6 @@ def test_new_headline_query_plans_stay_narrow(spark):
         "dataset_split": 1,   # the groupBy rollup; the split itself is 0
         "per_group_cap": 1,
         "hilbert_curve": 0,
-        "promo_revenue": 0,   # broadcast dim join + single-group agg
-        "returned_items": 1,  # the fact-fact shuffle join
     }
     for name, max_ex in budgets.items():
         plan = (
@@ -562,11 +515,6 @@ def test_eighth_batch_query_plans_stay_narrow(spark):
         "readability": 0,
         "ewma_daily": 2,
         "cusum_anomalies": 3,
-        "event_transitions": 3,
-        "target_encoding": 1,
-        "entropy_profile": 2,
-        "quantile_transform": 1,
-        "benford_audit": 1,
         "corpus_datasheet": 2,
         "vertex_jaccard": 7,
         "drop_near_dups_best": 9,
@@ -627,48 +575,6 @@ def test_betweenness_layered_joins_no_pairwise(spark):
     plan = physical_plan(betweenness_sampled(edges, [0], max_hops=3))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_late_shipment_priority_pushes_date_filter_to_scan(spark):
-    """Q12 shape: the lineitem ship-date band must reach the parquet
-    scan as PushedFilters (not a post-scan Filter only), and the plan
-    stays a single fact-fact join with no nested loop."""
-    import grafink_spark.benchqueries as bq
-
-    plan = physical_plan(
-        bq.q_late_shipment_priority(spark, "/root/testdata/sf0.001")
-    )
-    assert "PushedFilters: [" in plan
-    assert "GreaterThanOrEqual(l_shipdate" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_min_cost_supplier_has_no_window_and_no_nested_loop(spark):
-    """Q2 shape: the correlated-min decorrelation must stay two hash
-    aggregates + equi joins — no Window over parts, no nested loop."""
-    import grafink_spark.benchqueries as bq
-
-    plan = physical_plan(bq.q_min_cost_supplier(spark, "/root/testdata/sf0.001"))
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_nation_volume_shipping_single_fact_exchange(spark):
-    """Q7 shape: the only hash exchange is the final group-by — dims
-    ride broadcasts, the filtered fact join broadcasts at bench scale
-    (size-gated), and nothing shuffles twice."""
-    import grafink_spark.benchqueries as bq
-
-    plan = physical_plan(
-        bq.q_nation_volume_shipping(spark, "/root/testdata/sf0.001")
-    )
-    exchanges = [
-        l for l in plan.split("\n") if "Exchange hashpartitioning" in l
-    ]
-    assert len(exchanges) <= 2, exchanges
-    assert "CartesianProduct" not in plan
 
 
 def test_maybe_broadcast_proxy_scale_gates_expanded_frames(spark):

@@ -275,6 +275,62 @@ def test_gremlin_in_both_directions(spark, tmp_path):
     assert gremlin(g, 'g.V().has("objectId", "a").bothE().count()') == 2
 
 
+def _narrowing_graph(spark, tmp_path):
+    from grafink_spark.graph.query import GraphQuery
+
+    store = GraphStore(spark, str(tmp_path / "graph"))
+    store.write_vertices(
+        spark.createDataFrame(
+            [(11, "ZTFa", 0.9), (12, "ZTFb", 0.4)],
+            "id long, objectId string, rfscore double",
+        )
+    )
+    store.write_edges(
+        spark.createDataFrame([(12, 11, 2)], "src long, dst long, propVal int"),
+        _FakeRule(),
+    )
+    return GraphQuery(store)
+
+
+def test_gremlin_vertex_filters_narrow_edge_steps(spark, tmp_path):
+    """A has/hasLabel/limit between g.V(<id>) and outE/inE/bothE keeps
+    only the edges of a vertex that passes it."""
+    from grafink_spark.gremlin import gremlin
+
+    g = _narrowing_graph(spark, tmp_path)
+    for step in ("outE", "inE", "bothE"):
+        full = {"outE": 1, "inE": 1, "bothE": 2}[step]
+        assert gremlin(g, f"g.V(12).{step}().count()") == full
+        # a literal has on a bounded key (the lookup) and a predicate
+        assert gremlin(g, f'g.V(12).has("objectId", "nomatch").{step}().count()') == 0
+        assert gremlin(g, f'g.V(12).has("objectId", "ZTFb").{step}().count()') == full
+        assert gremlin(g, f'g.V(12).has("rfscore", gt(0.5)).{step}().count()') == 0
+        assert gremlin(g, f'g.V(12).hasLabel("nolabel").{step}().count()') == 0
+        assert gremlin(g, f"g.V(12).limit(0).{step}().count()") == 0
+        assert gremlin(g, f"g.V(12).limit(1).{step}().count()") == full
+
+
+def test_gremlin_vertex_filters_narrow_neighbour_steps(spark, tmp_path):
+    """The same filters before out/in/both keep only the neighbours of a
+    vertex that passes them."""
+    from grafink_spark.gremlin import gremlin
+
+    g = _narrowing_graph(spark, tmp_path)
+
+    def hop(q):
+        return sorted(r.neighbor_id for r in gremlin(g, q).collect())
+
+    for step in ("out", "in", "both"):
+        assert hop(f'g.V(12).{step}("similarity")') == [11]
+        assert hop(f'g.V(12).has("objectId", "nomatch").{step}("similarity")') == []
+        assert hop(f'g.V(12).has("objectId", "ZTFb").{step}("similarity")') == [11]
+        assert hop(f'g.V(12).has("rfscore", lt(0.5)).{step}()') == [11]
+        assert hop(f'g.V(12).hasLabel("nolabel").{step}()') == []
+        assert hop(f"g.V(12).limit(0).{step}()") == []
+    assert gremlin(g, 'g.V(12).has("objectId", "nomatch").valueMap(true)') == {}
+    assert gremlin(g, 'g.V(12).hasLabel("alert").valueMap(true)')["objectId"] == "ZTFb"
+
+
 def test_gremlin_widened_steps(spark, tmp_path):
     """Round-3 widening: P predicates, hasLabel, values, dedup,
     order().by, id, outV/inV — the common next steps a migrating

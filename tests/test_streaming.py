@@ -76,29 +76,6 @@ def test_stream_matches_batch(spark, tmp_path):
     assert got2.count() > got.count()
 
 
-def test_stream_dedup_drops_redelivery(spark, tmp_path):
-    from grafink_spark.streaming.pipeline import dedup_event_stream
-
-    src_dir = str(tmp_path / "dedup_src")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    base = spark.read.parquet(SRC).limit(200)
-    base.coalesce(1).write.mode("overwrite").parquet(src_dir)
-    # redeliver the same 200 events as a second source file
-    base.coalesce(1).write.mode("append").parquet(src_dir)
-
-    run_stream_to_parquet(
-        dedup_event_stream(read_event_stream(spark, src_dir)),
-        out,
-        ckpt,
-        available_now=True,
-    )
-    got = spark.read.parquet(out)
-    n_unique = base.select("event_id").distinct().count()
-    assert got.count() == n_unique
-    assert got.select("event_id").distinct().count() == n_unique
-
-
 def test_interval_join_streams_matches_batch(spark, tmp_path):
     from grafink_spark.streaming.pipeline import interval_join_streams
 

@@ -3,86 +3,28 @@
 The ``streaming/`` modules run their work inside ``foreachBatch``
 bodies, which never pass through ``lint_registry`` (they are not
 registered queries) — so a scale hazard in a micro-batch plan could
-land unchecked. This test builds ONE representative micro-batch
-transformation per module — the same library calls the body makes on
-its ``batch`` DataFrame, on a static frame — and lints it with the
+land unchecked. This test builds the representative micro-batch
+transformation — the same library call the body makes on its
+``batch`` DataFrame, on a static frame — and lints it with the
 pin-aware linter.
 
-Kept in sync with the bodies by construction: each case calls the
-SAME public building block the body delegates to (``ivf_assign`` via
-ivf_index_append, ``drop_exact_duplicates`` +
-``drop_incremental_near_duplicates``, ``merge_changes``), so a plan
-change in the block is caught here even if the body never changes.
+Kept in sync with the body by construction: the case calls the SAME
+public building block the body delegates to (``merge_changes``), so a
+plan change in the block is caught here even if the body never
+changes.
 """
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 from grafink_spark.planlint import lint_query_build
 
 # module -> (allowed codes, reason)
 ALLOW: dict[str, tuple[set[str], str]] = {
-    "ann_ingest": (
-        {"bnlj"},
-        "1-row centroid-matrix broadcast in ivf_assign (nlist×dim "
-        "parameter, not data)",
-    ),
-    "corpus_ingest": (
-        set(),
-        "banded LSH candidates + equi verify joins: linear shuffles only",
-    ),
     "cdc_apply": (
         set(),
         "anti join on driver-bounded change keys (GATED broadcast)",
     ),
 }
-
-
-def _docs(spark, n=40, start=0):
-    return spark.createDataFrame(
-        [
-            (start + i, f"the quick brown fox {i % 7} jumps over {i % 5}")
-            for i in range(n)
-        ],
-        "doc_id long, text string",
-    )
-
-
-def test_ann_ingest_batch_plan(spark, tmp_path):
-    """ivf_index_append's transformation: assign the batch to the
-    existing centroids (what every microbatch appends)."""
-    from grafink_spark.llm import simsearch as ss
-
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3)]) for i in range(32)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = ss.ivf_train(vecs, nlist=4, iters=1)
-    codes = set(lint_query_build(lambda: ss.ivf_assign(vecs, cents)))
-    allowed, reason = ALLOW["ann_ingest"]
-    assert codes <= allowed, (codes, reason)
-
-
-def test_corpus_ingest_batch_plan(spark):
-    """The dedup pipeline each corpus microbatch runs: exact drop then
-    incremental near-dup drop against the resident corpus."""
-    from grafink_spark.llm.dedup import (
-        drop_exact_duplicates,
-        drop_incremental_near_duplicates,
-    )
-
-    batch = _docs(spark, 30, start=1000)
-    corpus = _docs(spark, 60)
-
-    def build():
-        new = drop_exact_duplicates(batch)
-        return drop_incremental_near_duplicates(new, corpus, threshold=0.5)
-
-    codes = set(lint_query_build(build))
-    allowed, reason = ALLOW["corpus_ingest"]
-    assert codes <= allowed, (codes, reason)
 
 
 def test_cdc_apply_batch_plan(spark):

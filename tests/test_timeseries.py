@@ -246,28 +246,6 @@ def test_linear_attribution_splits_value(spark):
     assert got == {1: (50.0, 1), 2: (50.0, 1), 5: (60.0, 1)}
 
 
-def test_event_transitions_rows_are_proper_distribution(spark):
-    """Per current-event probabilities must sum to ~1 and every
-    consecutive pair must be counted exactly once."""
-    import grafink_spark.benchqueries as bq
-
-    out = bq.QUERIES["event_transitions"](spark, "/root/testdata/sf0.001")
-    rows = out.collect()
-    from collections import defaultdict
-
-    by_cur = defaultdict(float)
-    total_n = 0
-    for r in rows:
-        by_cur[r.event_type] += r.prob
-        total_n += r.n
-    for cur, p in by_cur.items():
-        assert abs(p - 1.0) < 1e-4, (cur, p)
-    ev = bq.load_table(spark, "/root/testdata/sf0.001", "events")
-    n_events = ev.count()
-    n_users = ev.select("user_id").distinct().count()
-    assert total_n == n_events - n_users  # one transition per non-last event
-
-
 def test_cusum_detects_mean_shift(spark):
     """A flat series that jumps mid-way must alarm after the shift and
     match the textbook recursion C_t = max(0, C_{t-1} + d_t) exactly."""

@@ -17,8 +17,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from grafink_spark.benchqueries import QUERIES  # noqa: E402
 from grafink_spark.session import get_spark  # noqa: E402
+from grafink_spark.sources.tables import load_table  # noqa: E402
 
 
 def main() -> int:
@@ -32,7 +35,7 @@ def main() -> int:
     spark = get_spark("grafink-qtime")
     spark.sparkContext.setLogLevel("ERROR")
     # warm JVM + page cache the same way bench.py does
-    QUERIES["max_id"](spark, args.sf).collect()
+    load_table(spark, args.sf, "orders").agg(F.max("o_orderkey")).collect()
     for name in args.names:
         fn = QUERIES[name]
         if args.plan:
