@@ -216,7 +216,7 @@ def _similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     alert-shaped events (current batch = id % 20 == 0). One canonical
     definition — nine graph queries used to inline this block."""
     ev, current = _alertish_events(spark, sf_dir)
-    rule = SimilarityClassifier("rfscore OR objectId", mode="decomposed")
+    rule = SimilarityClassifier("rfscore OR objectId")
     loaded = ev.where(F.col("id") % 20 != 0)
     return rule.classify(loaded, current).select("src", "dst")
 
@@ -240,7 +240,7 @@ def q_similarity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     events: current batch vs all, id1 > id2 dedup, similarity value =
     #matching conditions. Runs the decomposed (equi-join union) path."""
     ev, current = _alertish_events(spark, sf_dir)
-    rule = SimilarityClassifier("rfscore OR objectId", mode="decomposed")
+    rule = SimilarityClassifier("rfscore OR objectId")
     # side 2 = loaded ∪ current; passing loaded = all-minus-current keeps
     # the union equal to `ev` exactly
     loaded = ev.where(F.col("id") % 20 != 0)
@@ -267,7 +267,7 @@ def q_similarity_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     side-separable threshold token, and the 4-column mulens expansion;
     DNF has an AND-branch so the disjoint-residual path is exercised."""
     ev, current = _alertish_events(spark, sf_dir)
-    rule = SimilarityClassifier("cdsxmatch AND roid OR mulens", mode="decomposed")
+    rule = SimilarityClassifier("cdsxmatch AND roid OR mulens")
     loaded = ev.where(F.col("id") % 20 != 0)
     return rule.classify(loaded, current).select(
         "src", "dst", F.col("propVal").alias("prop_val")
@@ -3252,12 +3252,17 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    stats = ev.groupBy("event_type").agg(
+    stats = ev.groupBy(F.col("event_type").alias("stat_type")).agg(
         F.count(F.lit(1)).alias("n_type"),
         F.round(F.avg("value"), 6).alias("type_avg"),
     )
     out = salted_join(
-        ev, stats, "event_type", salt_from=F.col("event_id"), salts=8
+        ev,
+        stats,
+        F.col("event_type") == F.col("stat_type"),
+        ["event_type"],
+        salt_from=F.col("event_id"),
+        salts=8,
     )
     return out.select(
         "event_id",

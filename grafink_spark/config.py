@@ -94,14 +94,11 @@ class SameValueRuleConfig:
 
 @dataclass
 class EdgeLoaderConfig:
-    """edgeLoader (Config.scala:36-56). ``batchSize``, ``parallelism``
-    and ``taskSize`` are parsed so reference configs load, and nothing
-    reads them: they sized the reference's JanusGraph commit batches and
-    loader tasks, while edge files here are sized by AQE."""
+    """edgeLoader (Config.scala:36-56). A reference config's
+    ``batchSize``, ``parallelism`` and ``taskSize`` are ignored: they
+    sized the reference's JanusGraph commit batches and loader tasks,
+    while edge files here are sized by AQE."""
 
-    batchSize: int = 100
-    parallelism: int = 100
-    taskSize: int = 25000
     rulesToApply: list[str] = field(default_factory=list)
     similarityClassifer: SimilarityRuleConfig = field(
         default_factory=SimilarityRuleConfig
@@ -172,9 +169,6 @@ class GrafinkConfig:
         )
         el = d.get("edgeLoader", {})
         ec = EdgeLoaderConfig(
-            batchSize=int(el.get("batchSize", 100)),
-            parallelism=int(el.get("parallelism", 100)),
-            taskSize=int(el.get("taskSize", 25000)),
             rulesToApply=list(el.get("rulesToApply", [])),
             similarityClassifer=SimilarityRuleConfig(
                 similarityExp=el.get("similarityClassifer", {}).get(

@@ -62,11 +62,11 @@ def load_batch(
 ) -> dict:
     """Load one batch into the graph (Job.scala:71-115), shared by the
     daily job and the streaming microbatch: assign ids, write vertices,
-    then create every rule's catalog label, classify and validate, and
-    write all rules' edges in one write (``tags`` go on every edge
-    row). The id-assigned batch stays cached for the rules and is
-    released in the ``finally``, so a long run holds at most one
-    night's batch.
+    then create every rule's catalog label, classify, and write all
+    rules' edges in one write, which validates each rule's columns
+    (``tags`` go on every edge row). The id-assigned batch stays
+    cached for the rules and is released in the ``finally``, so a long
+    run holds at most one night's batch.
 
     Returns the phase record: seconds for id assignment, the vertex
     write and the edges (classify and write), the ids assigned, and
@@ -83,8 +83,7 @@ def load_batch(
         edge_sets = []
         for rule in rules:
             catalog.create_edge_label(rule.edge_label, rule.property_key, "String")
-            edges = ClassifierRule.validate(rule.classify(loaded, current))
-            edge_sets.append((edges, rule))
+            edge_sets.append((rule.classify(loaded, current), rule))
         record["edge_rows"] = store.write_edge_sets(edge_sets, tags=tags)
         record["edges_s"] = _since(t0)
     finally:

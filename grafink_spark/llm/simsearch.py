@@ -22,7 +22,13 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from grafink_spark.util import maybe_broadcast, pin, pin_lazy, would_broadcast
+from grafink_spark.util import (
+    heavy_keys,
+    maybe_broadcast,
+    pin,
+    pin_lazy,
+    would_broadcast,
+)
 
 from grafink_spark.llm.dedup import cosine_similarity
 
@@ -62,9 +68,8 @@ def _salted_list_sides(
     ``ceil(shuffle_partitions / nlist)`` applies when nlist is small
     (free — no extra job); the hot split ``ceil(|list| /
     hot_threshold)`` (capped at the partition count) applies per
-    oversized list and needs one count probe over the corpus side —
-    driver-bounded output (only lists ≥ hot_threshold are collected,
-    ≤ N/hot_threshold rows), the samevalue hot-key pattern. The probe
+    oversized list and needs one ``util.heavy_keys`` probe over the
+    corpus side (at most N/hot_threshold lists collected). The probe
     re-executes the assignment lineage, so ``c`` is pinned first — the
     join consumer reuses the materialized copy."""
     spark = c.sparkSession
@@ -75,13 +80,8 @@ def _salted_list_sides(
     if hot_threshold:
         c = pin(c)
         hot_map = {
-            int(r.list_id): min(parts, -(-int(r._n) // hot_threshold))
-            for r in (
-                c.groupBy("list_id")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") >= hot_threshold)
-                .collect()
-            )
+            int(k): min(parts, -(-n // hot_threshold))
+            for (k,), n in heavy_keys(c.select("list_id"), hot_threshold).items()
         }
         hot_map = {k: v for k, v in hot_map.items() if v > floor_s}
         if hot_map:

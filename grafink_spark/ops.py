@@ -14,7 +14,7 @@ mapPartitions — Catalyst sees everything).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
@@ -236,35 +236,40 @@ def quantile_filter(
 def salted_join(
     left: DataFrame,
     right: DataFrame,
-    key: str,
-    salt_from,
-    salts: int = 16,
-    how: str = "inner",
+    cond: Column,
+    keys: list[str],
+    salt_from: Column,
+    salts: int,
 ) -> DataFrame:
-    """Skew-defeating equi join: the hot-key shuffle partition is split
-    ``salts`` ways by appending a deterministic salt to the join key —
-    the left side computes ``pmod(salt_from, salts)`` per row, the
-    right side is replicated once per salt value, and the join runs on
-    (key, salt).
+    """Skew-defeating inner join on ``cond``, whose equality terms are
+    on ``left``'s ``keys``: left rows take the salt
+    ``pmod(salt_from, salts)`` and are repartitioned on (keys, salt),
+    right rows are replicated once per salt (``explode``), and the join
+    adds salt equality. Each matching pair meets exactly once, in its
+    left row's salt, so the result is row-identical to
+    ``left.join(right, cond)`` while a hot key's work spreads over
+    ``salts`` tasks.
 
-    When to reach for this instead of AQE's skew-join split: AQE splits
-    oversized SORT-MERGE partitions after the map stage, but it cannot
-    split the build side of a shuffled hash join, does nothing for the
-    skewed *aggregation* that often follows, and is capped by
-    spark.sql.adaptive.skewJoin thresholds. Manual salting is the
-    always-works fallback and the only option on engines/stages where
-    AQE can't see the skew. Result is row-identical to the plain join.
+    AQE's skew-join split cannot do this: it splits by INPUT bytes, so
+    it never sees output skew (a g-row key emits g² pairs from a few MB
+    of input). The repartition matters as much as the salt: hot rows
+    arrive clustered in a few input splits, and a broadcast join would
+    probe them all in those few tasks.
 
-    ``salt_from`` must be deterministic (a stable column, not rand():
-    task retries would otherwise re-salt rows and drop/duplicate
-    matches). Cost: right side × salts — use for dimension-sized right
-    sides with hot fact keys.
+    ``salt_from`` must be deterministic (not rand(): a retried task
+    would re-salt rows and drop/duplicate matches); ``cond`` names
+    columns unambiguous across the sides. Cost: right side × salts.
     """
-    salted_l = left.withColumn("_salt", F.pmod(salt_from, F.lit(salts)).cast("int"))
+    # pmod, not abs-mod: abs(hash) = Int.MinValue overflows under ANSI
+    salted_l = left.withColumn(
+        "_salt", F.pmod(salt_from, F.lit(salts)).cast("int")
+    ).repartition(salts, *keys, "_salt")
     salted_r = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
+        "_salt_r", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
     )
-    return salted_l.join(salted_r, on=[key, "_salt"], how=how).drop("_salt")
+    return salted_l.join(
+        salted_r, cond & (F.col("_salt") == F.col("_salt_r")), "inner"
+    ).drop("_salt", "_salt_r")
 
 
 def mutual_best_match(

@@ -19,6 +19,19 @@ PROP_VAL = "propVal"
 
 EDGE_SCHEMA = [SRC, DST, PROP_VAL]
 
+# A join key held by at least this many rows (both join sides counted)
+# takes the salted join in the similarity and same-value rules. A
+# g-row key emits ~g²/2 pairs; at 10k rows that is 50M pairs in one
+# reducer without salting. Read at call time (tests patch it).
+HOT_KEY_ROWS = 10_000
+
+
+def salt_buckets(spark) -> int:
+    """Salt count for a hot key's salted join: several buckets per core
+    so the (key, salt) combos spread evenly over reducers, capped
+    because the replicated side is copied once per bucket."""
+    return max(8, min(4 * spark.sparkContext.defaultParallelism, 256))
+
 
 class ClassifierRule(ABC):
     """A vertex-pair classifier producing edges."""

@@ -24,18 +24,16 @@ and because the skew is in the join's OUTPUT, not its input bytes,
 AQE's skew-join splitting never fires (it triggers on input partition
 size; a 40k-member group is ~1 MB of input but 800M output rows, and
 one task pins the stage — measured 88 s vs 9 s at the skew-stress
-scale, grafink_spark/stress.py). So keys whose group size reaches
-``hot_threshold`` take a salted path: the src side is bucketed by
-``hash(id) % salt_buckets``, the dst side is replicated to every
-bucket, and the join adds the bucket equi-key — each unordered pair is
-still produced exactly once (in src's bucket), but a hot group's pairs
-now spread across ``salt_buckets`` tasks. Hot-key detection is one
-count aggregation (map-side combined) filtered to ``>= hot_threshold``,
-so the collected hot-key list is bounded by (|new|+|old|) / hot_threshold no
-matter how many distinct keys exist, and the hot/cold split is a narrow
-literal predicate (no extra joins). Cold keys keep the plain single-join plan. The same hot set
-salts the new×old join (same quadratic failure mode when a key is hot
-on both sides)."""
+scale, grafink_spark/stress.py). So keys held by at least
+``base.HOT_KEY_ROWS`` rows, new and old counted together, take
+``ops.salted_join``: the src side is bucketed by ``hash(id)`` into
+``base.salt_buckets`` buckets, the dst side is replicated to every
+bucket, and each unordered pair is still produced exactly once (in
+src's bucket). Hot-key detection is one ``util.heavy_keys`` probe per
+column, and the hot/cold split is a narrow literal predicate
+(``util.key_in``, no extra joins). Cold keys keep the plain
+single-join plan. The same hot set salts the new×old join (same
+quadratic failure mode when a key is hot on both sides)."""
 
 from __future__ import annotations
 
@@ -44,22 +42,17 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grafink_spark.ops import salted_join
+from grafink_spark.rules import base
 from grafink_spark.rules.base import DST, PROP_VAL, SRC, ClassifierRule
+from grafink_spark.util import heavy_keys, key_in
 
 
 class SameValueClassifier(ClassifierRule):
-    def __init__(
-        self,
-        cols_to_connect: list[str],
-        hot_threshold: int | None = 10_000,
-        salt_buckets: int | None = None,
-    ):
+    def __init__(self, cols_to_connect: list[str]):
         if not cols_to_connect:
             raise ValueError("sameValueClassifier needs at least one column")
         self.cols_to_connect = list(cols_to_connect)
-        # hot_threshold=None disables skew salting (single-join plan)
-        self.hot_threshold = hot_threshold
-        self.salt_buckets = salt_buckets
 
     @property
     def name(self) -> str:
@@ -79,114 +72,59 @@ class SameValueClassifier(ClassifierRule):
         ]
         return reduce(lambda a, b: a.unionByName(b), outs)
 
-    def _n_buckets(self, df: DataFrame) -> int:
-        if self.salt_buckets:
-            return self.salt_buckets
-        # several buckets per core so the (key, salt) combos spread
-        # evenly over reducers; capped because the dst side is
-        # replicated bucket-count times
-        par = df.sparkSession.sparkContext.defaultParallelism
-        return max(8, min(4 * par, 256))
-
     def _edges_for_column(
         self, loaded: DataFrame, current: DataFrame, column: str
     ) -> DataFrame:
         new = current.select(F.col(column).alias("_k"), F.col("id"))
         old = loaded.select(F.col(column).alias("_k"), F.col("id").alias(DST))
 
-        if self.hot_threshold is None:
-            return self._plain_clique(new, column).unionByName(
-                self._plain_cross(new, old, column)
-            )
-
-        # Hot keys are collected to the driver: the list is bounded by
-        # (|new|+|old|) / hot_threshold (e.g. ≤ 400 keys for 2M rows a
-        # side at the 10k default), and literal isin() filters keep the split NARROW —
-        # a join-based split would re-execute the count-agg subplan once
-        # per semi/anti join (measured 3× on the samevalue bench
-        # queries).
-        # count BOTH sides: a key hot only in the loaded/old table still
-        # produces its whole new x old output in one partition if
-        # routing looks at the new side alone
-        hot_rows = (
-            new.select("_k")
-            .unionByName(old.select("_k"))
-            .groupBy("_k")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") >= self.hot_threshold)
-            .select("_k")
-            .collect()
+        # Hot keys are collected to the driver so literal isin() filters
+        # keep the split NARROW — a join-based split would re-execute
+        # the count-agg subplan once per semi/anti join (measured 3× on
+        # the samevalue bench queries). Count BOTH sides: a key hot only
+        # in the loaded/old table still produces its whole new x old
+        # output in one partition if routing looks at the new side alone
+        hot = heavy_keys(
+            new.select("_k").unionByName(old.select("_k")), base.HOT_KEY_ROWS
         )
-        if not hot_rows:
+        if not hot:
             return self._plain_clique(new, column).unionByName(
                 self._plain_cross(new, old, column)
             )
-        hot_vals = [r._k for r in hot_rows if r._k is not None]
-        null_hot = any(r._k is None for r in hot_rows)
-        is_hot = F.col("_k").isin(hot_vals) if hot_vals else F.lit(False)
-        if null_hot:
-            is_hot = is_hot | F.col("_k").isNull()
-        new_cold = new.where(~F.coalesce(is_hot, F.lit(False)))
+        is_hot = key_in(["_k"], hot)
         new_hot = new.where(is_hot)
-        old_cold = old.where(~F.coalesce(is_hot, F.lit(False)))
         old_hot = old.where(is_hot)
+        n_buckets = base.salt_buckets(current.sparkSession)
 
-        n_buckets = self._n_buckets(current)
-        salts = F.array(*[F.lit(i) for i in range(n_buckets)])
+        def edges(df: DataFrame) -> DataFrame:
+            return df.select(SRC, DST, F.lit(column).alias(PROP_VAL))
 
-        # hot clique: src bucketed, dst replicated to every bucket; pair
-        # (i, j) joins only in i's bucket → produced exactly once.
-        # The explicit repartition on (key, salt) is the point of the
-        # salt: hot rows are typically co-located in a few input splits,
-        # and a broadcast join would otherwise probe them all in those
-        # few tasks regardless of the salt column's existence.
-        a = new_hot.select(
-            "_k",
-            F.col("id").alias(SRC),
-            F.pmod(F.hash("id"), F.lit(n_buckets)).alias("_salt"),
-        ).repartition(n_buckets, "_k", "_salt")
-        b = new_hot.select(
-            F.col("_k").alias("_k2"), F.col("id").alias(DST)
-        ).withColumn("_salt2", F.explode(salts))
-        hot_clique = (
-            a.join(
-                b,
-                F.col("_k").eqNullSafe(F.col("_k2"))
-                & (F.col("_salt") == F.col("_salt2"))
-                & (F.col(SRC) < F.col(DST)),
-                "inner",
-            )
-            .select(SRC, DST, F.lit(column).alias(PROP_VAL))
+        # hot clique: pair (i, j) joins only in i's bucket → produced
+        # exactly once; null keys form a clique, as in the plain join
+        src = new_hot.select("_k", F.col("id").alias(SRC))
+        hot_clique = salted_join(
+            src,
+            new_hot.select(F.col("_k").alias("_k2"), F.col("id").alias(DST)),
+            F.col("_k").eqNullSafe(F.col("_k2")) & (F.col(SRC) < F.col(DST)),
+            ["_k"],
+            F.hash(SRC),
+            n_buckets,
         )
-
-        # hot new×old: same trick (quadratic when a key is hot both sides)
-        an = (
-            new_hot.select(
-                "_k",
-                F.col("id").alias(SRC),
-                F.pmod(F.hash("id"), F.lit(n_buckets)).alias("_salt"),
-            )
-            .where(F.col("_k").isNotNull())
-            .repartition(n_buckets, "_k", "_salt")
+        # hot new×old: quadratic when a key is hot on both sides
+        hot_cross = salted_join(
+            src.where(F.col("_k").isNotNull()),
+            old_hot.select(F.col("_k").alias("_k2"), DST),
+            F.col("_k") == F.col("_k2"),
+            ["_k"],
+            F.hash(SRC),
+            n_buckets,
         )
-        bo = old_hot.select(F.col("_k").alias("_k2"), DST).withColumn(
-            "_salt2", F.explode(salts)
-        )
-        hot_cross = (
-            an.join(
-                bo,
-                (F.col("_k") == F.col("_k2"))
-                & (F.col("_salt") == F.col("_salt2")),
-                "inner",
-            )
-            .select(SRC, DST, F.lit(column).alias(PROP_VAL))
-        )
-
+        new_cold = new.where(~is_hot)
         return (
             self._plain_clique(new_cold, column)
-            .unionByName(hot_clique)
-            .unionByName(self._plain_cross(new_cold, old_cold, column))
-            .unionByName(hot_cross)
+            .unionByName(edges(hot_clique))
+            .unionByName(self._plain_cross(new_cold, old.where(~is_hot), column))
+            .unionByName(edges(hot_cross))
         )
 
     @staticmethod

@@ -21,8 +21,14 @@ to DNF and run **one equi/hash join per OR-branch** (union + pair dedup):
   ``rfscore`` joins two small filtered subsets instead of everything.
 
 At 100 TB this is the difference between O(n·m) nested loops and a few
-shuffled hash joins on pre-filtered inputs. ``mode="reference"`` keeps
-the naive plan for plan-equivalence testing.
+shuffled hash joins on pre-filtered inputs. Every expression takes this
+plan; a single disjunct is one branch. The naive theta join survives
+only in the tests, as the reference they compare against.
+
+Output skew: an equality branch probes its join keys once
+(``util.heavy_keys``, both sides counted) and sends keys held by at
+least ``base.HOT_KEY_ROWS`` rows through a broadcast join when the
+build side is small, else through ``ops.salted_join``.
 """
 
 from __future__ import annotations
@@ -33,10 +39,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from grafink_spark.ops import salted_join
+from grafink_spark.rules import base
 from grafink_spark.rules.base import DST, PROP_VAL, SRC, ClassifierRule
-from grafink_spark.util import autobroadcast_threshold_bytes, would_broadcast
+from grafink_spark.util import (
+    autobroadcast_threshold_bytes,
+    heavy_keys,
+    key_in,
+    would_broadcast,
+)
 from grafink_spark.rules.exp_parser import (
-    Disjunct,
     col_name_to_condition,
     expand_columns,
     parse_similarity_exp,
@@ -63,28 +75,10 @@ def _side_filter(token: str, side: int) -> Column | None:
     return None
 
 
-# tokens WITHOUT a cross-side equality term (side-separable thresholds);
-# every other token's condition contains c1 <=> c2 (default) or c1 == c2
-# (cdsxmatch) and therefore yields a hash-join key that can run hot
-_NON_EQUALITY_TOKENS = {"rfscore", "snn_snia_vs_nonia", "roid", "classtar", "mulens"}
-
-
 class SimilarityClassifier(ClassifierRule):
-    def __init__(
-        self,
-        similarity_exp: str,
-        mode: str = "auto",
-        hot_threshold: int | None = 10_000,
-        salt_buckets: int | None = None,
-    ):
+    def __init__(self, similarity_exp: str):
         self.expression = similarity_exp
         self.parsed = parse_similarity_exp(similarity_exp)
-        if mode not in ("auto", "reference", "decomposed"):
-            raise ValueError(f"unknown mode {mode}")
-        self.mode = mode
-        # output-skew salting for hot equality keys (None disables)
-        self.hot_threshold = hot_threshold
-        self.salt_buckets = salt_buckets
 
     @property
     def name(self) -> str:
@@ -101,9 +95,14 @@ class SimilarityClassifier(ClassifierRule):
     # ------------------------------------------------------------ plan
 
     def classify(self, loaded: DataFrame, current: DataFrame) -> DataFrame:
+        """One join per OR-branch, branches made DISJOINT by adding
+        ``NOT (earlier branch condition is true)`` residuals — the union
+        needs no pair dedup (a dropDuplicates here would shuffle the
+        full edge set, which dwarfs the join cost when the output is
+        large). ``coalesce(cond, false)`` gives exact OR null semantics:
+        a pair lands in the first branch whose condition is TRUE."""
         tokens = self.parsed.columns  # per-occurrence
-        phys = expand_columns(tokens)
-        select_cols = ["id"] + phys
+        select_cols = ["id"] + expand_columns(tokens)
 
         df1 = current.select(
             *[F.col(c).alias(f"{c}1") for c in select_cols]
@@ -116,8 +115,6 @@ class SimilarityClassifier(ClassifierRule):
             .select(*[F.col(c).alias(f"{c}2") for c in select_cols])
         )
 
-        disjuncts = to_dnf(self.parsed.ast)
-
         # similarity value: +1 per token occurrence whose condition holds
         sim = reduce(
             lambda acc, t: acc
@@ -126,36 +123,9 @@ class SimilarityClassifier(ClassifierRule):
             F.lit(0),
         )
 
-        def project(joined: DataFrame) -> DataFrame:
-            return joined.select(
-                F.col("id1").alias(SRC),
-                F.col("id2").alias(DST),
-                sim.cast(T.IntegerType()).alias(PROP_VAL),
-            )
-
-        use_decomposed = self.mode == "decomposed" or (
-            self.mode == "auto" and len(disjuncts) > 1
-        )
-        if use_decomposed:
-            return self._classify_decomposed(df1, df2, disjuncts, project)
-        return project(
-            df1.join(
-                df2,
-                (F.col("id1") > F.col("id2")) & self.parsed.condition,
-                "inner",
-            )
-        )
-
-    def _classify_decomposed(self, df1, df2, disjuncts, project) -> DataFrame:
-        """One join per OR-branch, branches made DISJOINT by adding
-        ``NOT (earlier branch condition is true)`` residuals — the union
-        needs no pair dedup (a dropDuplicates here would shuffle the
-        full edge set, which dwarfs the join cost when the output is
-        large). ``coalesce(cond, false)`` gives exact OR null semantics:
-        a pair lands in the first branch whose condition is TRUE."""
         out = None
         prev_not_true: list = []
-        for d in disjuncts:
+        for d in to_dnf(self.parsed.ast):
             branch_cond = reduce(
                 lambda a, t: a & col_name_to_condition(t), d.tokens, F.lit(True)
             )
@@ -174,30 +144,33 @@ class SimilarityClassifier(ClassifierRule):
             # hash-join keys (ExtractEquiJoinKeys); threshold-only
             # branches join pre-filtered subsets; the NOT-residuals of
             # earlier branches stay post-join filters (no extra shuffle).
-            branch = self._branch_join(left, right, cond, d.tokens, project)
+            branch = self._branch_join(left, right, cond, d.equi_keys).select(
+                F.col("id1").alias(SRC),
+                F.col("id2").alias(DST),
+                sim.cast(T.IntegerType()).alias(PROP_VAL),
+            )
             out = branch if out is None else out.unionByName(branch)
             prev_not_true.append(~F.coalesce(branch_cond, F.lit(False)))
         return out
 
-    def _branch_join(self, left, right, cond, tokens, project) -> DataFrame:
+    def _branch_join(self, left, right, cond, equi_keys) -> DataFrame:
         """One OR-branch join, with output-skew salting for hot equality
         keys. A key with g members emits O(g²) pairs; the skew is in the
         join's OUTPUT, so AQE's (input-bytes-based) skew splitting never
         fires and one reducer pins the stage — measured 78 s for a
-        40k-member objectId on local[32]. Keys whose side-1 group size
-        reaches ``hot_threshold`` (one count aggregation on the already
-        branch-filtered input; the collected list is bounded by
-        |left| / threshold) are joined salted: side 1 bucketed by
-        ``hash(id1) % n``, explicitly repartitioned on (keys, salt),
-        side 2 replicated to every bucket — each qualifying pair joins
-        exactly once, in side 1's bucket. Cold keys (and threshold-only
+        40k-member objectId on local[32]. Keys held by at least
+        ``base.HOT_KEY_ROWS`` rows (one ``heavy_keys`` probe on the
+        already branch-filtered input) are split off: side 1 salted by
+        ``hash(id1)`` and repartitioned on (keys, salt), side 2
+        replicated to every salt — each qualifying pair joins exactly
+        once, in side 1's bucket. Cold keys (and threshold-only
         branches, which have no join key) keep the plain join.
         Routing is consistent by construction: a qualifying pair has
         null-safe-equal key values on both sides, so both land hot or
         both cold."""
-        eq_cols = [t for t in dict.fromkeys(tokens) if t not in _NON_EQUALITY_TOKENS]
-        if not self.hot_threshold or not eq_cols:
-            return project(left.join(right, cond, "inner"))
+        eq_cols = list(dict.fromkeys(equi_keys))
+        if not eq_cols:
+            return left.join(right, cond, "inner")
 
         # count BOTH sides: a key hot only on the loaded/right side
         # (100 left rows x 1M right rows) still produces its whole
@@ -205,14 +178,9 @@ class SimilarityClassifier(ClassifierRule):
         keys_both = left.select(
             *[F.col(f"{c}1").alias(c) for c in eq_cols]
         ).unionByName(right.select(*[F.col(f"{c}2").alias(c) for c in eq_cols]))
-        hot = (
-            keys_both.groupBy(*eq_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") >= self.hot_threshold)
-            .collect()
-        )
+        hot = heavy_keys(keys_both, base.HOT_KEY_ROWS)
         if not hot:
-            return project(left.join(right, cond, "inner"))
+            return left.join(right, cond, "inner")
 
         # Hot keys exist — pick the remedy by the build side's size.
         # Under the session's autoBroadcastJoinThreshold the cheapest
@@ -238,40 +206,20 @@ class SimilarityClassifier(ClassifierRule):
         # regime — the salted shuffle below is the remedy.
         thr = autobroadcast_threshold_bytes(left.sparkSession)
         if thr is not None and would_broadcast(right, max_bytes=thr):
-            return project(
-                left.repartition(F.col("id1")).join(
-                    F.broadcast(right), cond, "inner"
-                )
+            return left.repartition(F.col("id1")).join(
+                F.broadcast(right), cond, "inner"
             )
 
-        def hot_pred(side: int):
-            tuples = []
-            for r in hot:
-                p = F.lit(True)
-                for c in eq_cols:
-                    v = r[c]
-                    col = F.col(f"{c}{side}")
-                    p = p & (col.isNull() if v is None else (col == F.lit(v)))
-                tuples.append(p)
-            return reduce(lambda a, b: a | b, tuples)
-
-        sc = left.sparkSession.sparkContext
-        n_buckets = self.salt_buckets or max(8, min(4 * sc.defaultParallelism, 256))
-        salts = F.array(*[F.lit(i) for i in range(n_buckets)])
-
-        l_cold = left.where(~F.coalesce(hot_pred(1), F.lit(False)))
-        r_cold = right.where(~F.coalesce(hot_pred(2), F.lit(False)))
-        l_hot = (
-            left.where(hot_pred(1))
-            # pmod, not abs-mod: abs(hash)=Int.MinValue overflows under
-            # ANSI (default-on in Spark 4) and goes negative without it
-            .withColumn("_simsalt", F.pmod(F.hash("id1"), F.lit(n_buckets)))
-            .repartition(n_buckets, *[f"{c}1" for c in eq_cols], "_simsalt")
+        keys1 = [f"{c}1" for c in eq_cols]
+        hot1 = key_in(keys1, hot)
+        hot2 = key_in([f"{c}2" for c in eq_cols], hot)
+        cold = left.where(~hot1).join(right.where(~hot2), cond, "inner")
+        salted = salted_join(
+            left.where(hot1),
+            right.where(hot2),
+            cond,
+            keys1,
+            F.hash("id1"),
+            base.salt_buckets(left.sparkSession),
         )
-        r_hot = right.where(hot_pred(2)).withColumn("_simsalt2", F.explode(salts))
-        hot_branch = project(
-            l_hot.join(
-                r_hot, cond & (F.col("_simsalt") == F.col("_simsalt2")), "inner"
-            )
-        )
-        return project(l_cold.join(r_cold, cond, "inner")).unionByName(hot_branch)
+        return cold.unionByName(salted)

@@ -1,20 +1,19 @@
-"""Scale-stress workloads — the SCALE.md A/B experiments as repeatable
+"""Scale-stress workloads — the SCALE.md experiments as repeatable
 bench entries (VERDICT r1 #6), so regressions in the scale story are
 measured per round instead of narrated.
 
-Three workloads, all built from ``spark.range`` with deterministic
-hash-derived columns (no testdata dependency, no RNG):
+Built from ``spark.range`` with deterministic hash-derived columns (no
+testdata dependency, no RNG):
 
 - ``similarity_50m`` — the flagship similarity classifier materializing
   ~50M edges through the DNF-decomposed join (the reference's published
   comparable: 128M edges in 47 min at 100 cores, HBase-commit-bound).
-- ``similarity_ab_decomposed`` / ``similarity_ab_reference`` — the same
-  multi-branch OR expression through both join strategies at a scale
-  where the reference-mode BroadcastNestedLoopJoin is still feasible;
-  their ratio is the decomposition speedup, tracked round over round.
-- ``skew_clique`` — same-value clique join with one pathological hot key
-  (C(hot,2) pairs from a single group); exercises AQE skew-join
-  splitting and the streaming sort-merge clique.
+- ``similarity_skew`` / ``skew_clique`` — the similarity join and the
+  same-value clique join with one pathological hot key (~800M pairs
+  from a single group at scale=1); they exercise the rules' hot-key
+  probe and salted join.
+- ``ann_*`` and ``pagerank_*`` — the vector-search and PageRank pairs
+  documented on their builders below.
 
 Row counts scale with ``SPARK_GRAFT_STRESS_SCALE`` (default 1.0);
 ``SPARK_GRAFT_STRESS=0`` skips the section entirely (bench.py).
@@ -32,10 +31,9 @@ from grafink_spark.rules.similarity import SimilarityClassifier
 def synthetic_alerts(
     spark: SparkSession, n_rows: int, n_keys: int, hot_frac: float = 0.0
 ) -> DataFrame:
-    """Alert-shaped rows: ``objectId`` uniform over ``n_keys`` values,
-    ``rfscore``/``snn_snia_vs_nonia`` deterministic in [0, 1) via hash.
-    With ``hot_frac`` > 0 the first ``n_rows*hot_frac`` rows share ONE
-    objectId (worst-case key skew)."""
+    """Alert-shaped rows ``(id, objectId)``: ``objectId`` uniform over
+    ``n_keys`` values. With ``hot_frac`` > 0 the first
+    ``n_rows*hot_frac`` rows share ONE objectId (worst-case key skew)."""
     base = spark.range(n_rows)
     uniform_key = F.concat(F.lit("k"), F.col("id") % n_keys)
     key = (
@@ -45,42 +43,15 @@ def synthetic_alerts(
         if hot_frac > 0
         else uniform_key
     )
-    return base.select(
-        F.col("id"),
-        key.alias("objectId"),
-        # scaled into [0, 0.91): the rfscore>0.9 threshold branch keeps
-        # ~1% selectivity, so A/B timings measure join strategy, not the
-        # (mode-independent) quadratic threshold-pair output
-        ((F.abs(F.hash(F.col("id") + 7)) % 100000) / 100000.0 * 0.91).alias(
-            "rfscore"
-        ),
-        ((F.abs(F.hash(F.col("id") + 13)) % 100000) / 100000.0).alias(
-            "snn_snia_vs_nonia"
-        ),
-    )
+    return base.select(F.col("id"), key.alias("objectId"))
 
 
 def similarity_50m(spark: SparkSession, scale: float = 1.0) -> DataFrame:
     """~50M similarity edges at scale=1: 1M rows, 10k objectIds →
-    10k groups of ~100 → C(100,2)·10k ≈ 49.5M equality pairs, plus the
-    rfscore>0.9 threshold branch over the hash-uniform scores."""
+    10k groups of ~100 → C(100,2)·10k ≈ 49.5M equality pairs."""
     n = int(1_000_000 * scale)
     rows = synthetic_alerts(spark, n, n_keys=max(1, n // 100))
-    rule = SimilarityClassifier("objectId", mode="decomposed")
-    empty = rows.limit(0)
-    return rule.classify(empty, rows)
-
-
-def similarity_ab(
-    spark: SparkSession, mode: str, scale: float = 1.0
-) -> DataFrame:
-    """Decomposed-vs-reference A/B on a 2-branch OR expression
-    ("objectId OR rfscore"). Sized so reference mode's
-    BroadcastNestedLoopJoin is feasible but clearly quadratic (n²
-    condition evaluations): 80k rows at scale=1."""
-    n = int(80_000 * scale)
-    rows = synthetic_alerts(spark, n, n_keys=max(1, n // 50))
-    rule = SimilarityClassifier("objectId OR rfscore", mode=mode)
+    rule = SimilarityClassifier("objectId")
     empty = rows.limit(0)
     return rule.classify(empty, rows)
 
@@ -92,7 +63,7 @@ def similarity_skew(spark: SparkSession, scale: float = 1.0) -> DataFrame:
     hot-key salting in SimilarityClassifier."""
     n = int(2_000_000 * scale)
     rows = synthetic_alerts(spark, n, n_keys=max(1, n // 10), hot_frac=0.02)
-    rule = SimilarityClassifier("objectId", mode="decomposed")
+    rule = SimilarityClassifier("objectId")
     return rule.classify(rows.limit(0), rows)
 
 
@@ -281,12 +252,6 @@ STRESS = {
     "ann_ivfpq_build": lambda spark, s=1.0: ann_ab(spark, "build", s),
     "ann_ivfpq_200k": lambda spark, s=1.0: ann_ab(spark, "ivfpq", s),
     "similarity_skew": similarity_skew,
-    "similarity_ab_decomposed": lambda spark, s=1.0: similarity_ab(
-        spark, "decomposed", s
-    ),
-    "similarity_ab_reference": lambda spark, s=1.0: similarity_ab(
-        spark, "reference", s
-    ),
     "skew_clique": skew_clique,
     "ann_ivf_skew_plain": lambda spark, s=1.0: ann_ivf_skew(spark, "plain", s),
     "ann_ivf_skew_hot": lambda spark, s=1.0: ann_ivf_skew(spark, "hot", s),

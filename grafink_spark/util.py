@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 # Default ceiling for a size-gated broadcast hint.  Well above Spark's
@@ -78,8 +81,6 @@ def maybe_broadcast(
     earn a forced hint on a frame nprobe× the ceiling.  The proxy
     estimate is multiplied by this factor before the comparison.
     """
-    from pyspark.sql import functions as F
-
     if would_broadcast(df, max_bytes, size_proxy, proxy_scale):
         return F.broadcast(df)
     return df
@@ -125,6 +126,49 @@ def autobroadcast_threshold_bytes(spark) -> int | None:
     except ValueError:
         return None
     return n if n > 0 else None
+
+
+def heavy_keys(keys: DataFrame, threshold: int) -> dict[tuple, int]:
+    """Every key tuple (one value per column of ``keys``) held by at
+    least ``threshold`` rows, mapped to its row count.
+
+    The hot-key probe of a skewed join: one count aggregation, combined
+    map-side, then a collect. The collect is bounded: at most
+    ``rows / threshold`` tuples can reach the threshold, however many
+    distinct keys exist. NULL cells group together (GROUP BY does), so
+    a NULL key can be heavy."""
+    cols = keys.columns
+    rows = (
+        keys.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") >= threshold)
+        .collect()
+    )
+    return {tuple(r[c] for c in cols): r["_n"] for r in rows}
+
+
+def key_in(cols: list[str], keys) -> Column:
+    """Literal membership of the ``cols`` tuple in ``keys`` (tuples as
+    from :func:`heavy_keys`), null-aware: a NULL cell matches a NULL in
+    the key. Never NULL itself, so ``~key_in(...)`` selects exactly the
+    other rows. One column tests ``isin``; several test each tuple."""
+    if len(cols) == 1:
+        c = F.col(cols[0])
+        vals = [k[0] for k in keys if k[0] is not None]
+        p = c.isin(vals) if vals else F.lit(False)
+        if any(k[0] is None for k in keys):
+            p = p | c.isNull()
+    else:
+        p = F.lit(False)
+        for k in keys:
+            p = p | reduce(
+                lambda a, b: a & b,
+                (
+                    F.col(c).isNull() if v is None else F.col(c) == F.lit(v)
+                    for c, v in zip(cols, k)
+                ),
+            )
+    return F.coalesce(p, F.lit(False))
 
 
 CHECKPOINT_DIR_CONF = "spark.grafink.checkpointDir"

@@ -67,6 +67,42 @@ def edge_set(df) -> set[tuple]:
     return {tuple(r) for r in df.select("src", "dst", "propVal").collect()}
 
 
+def similarity_reference(exp: str, loaded, current):
+    """The similarity rule as the reference writes it: one theta join of
+    current (side 1) against loaded ∪ current (side 2) on
+    ``id1 > id2 AND <expression>``, valued by the number of token
+    occurrences whose condition holds (SimilarityClassifer.scala:44-108).
+    The engine's decomposed plan must give the same edges."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from grafink_spark.rules.exp_parser import (
+        col_name_to_condition,
+        expand_columns,
+        parse_similarity_exp,
+    )
+
+    parsed = parse_similarity_exp(exp)
+    cols = ["id"] + expand_columns(parsed.columns)
+    df1 = current.select(*[F.col(c).alias(f"{c}1") for c in cols])
+    df2 = (
+        loaded.select(*cols)
+        .unionByName(current.select(*cols))
+        .select(*[F.col(c).alias(f"{c}2") for c in cols])
+    )
+    sim = reduce(
+        lambda acc, t: acc + F.when(col_name_to_condition(t), 1).otherwise(0),
+        parsed.columns,
+        F.lit(0),
+    )
+    return df1.join(df2, (F.col("id1") > F.col("id2")) & parsed.condition).select(
+        F.col("id1").alias("src"),
+        F.col("id2").alias("dst"),
+        sim.cast("int").alias("propVal"),
+    )
+
+
 def persisted_rdds(spark) -> set[int]:
     """Ids of the RDDs Spark holds persisted right now."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())

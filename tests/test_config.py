@@ -30,8 +30,6 @@ def test_defaults_and_round_trip(tmp_path):
     assert cfg.reader.basePath == "/data/alerts"
     assert cfg.reader.format == "parquet"  # default (Format.scala:23-25)
     assert cfg.idManager.reservedIdSpace == 50
-    assert cfg.edgeLoader.parallelism == 100  # reference defaults
-    assert cfg.edgeLoader.taskSize == 25000
     assert cfg.edgeLoader.similarityClassifer.similarityExp == "rfscore OR objectId"
     assert cfg.graph.vertexLabel == "alert"
 
@@ -179,8 +177,6 @@ def test_reference_hocon_config_loads_unmodified(tmp_path):
     assert cfg.idManager.dataPath == "/test/intermediate/base/path"
     assert cfg.idManager.reservedIdSpace == 200
 
-    assert cfg.edgeLoader.parallelism == 50
-    assert cfg.edgeLoader.taskSize == 25000
     assert cfg.edgeLoader.rulesToApply == [
         "twoModeClassifier", "sameValueClassifier"
     ]

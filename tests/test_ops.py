@@ -114,14 +114,16 @@ def test_salted_join_matches_plain_join(spark):
     )
     right = spark.createDataFrame(
         [("k0", 10.0), ("k1", 20.0), ("k2", 30.0), ("k9", 99.0)],
-        "k string, w double",
+        "rk string, w double",
     )
-    got = sorted(
-        (r.id, r.k, r.v, r.w)
-        for r in salted_join(left, right, "k", salt_from=F.col("id"), salts=4).collect()
+    out = salted_join(
+        left, right, F.col("k") == F.col("rk"), ["k"], salt_from=F.col("id"), salts=4
     )
+    assert out.columns == ["id", "k", "v", "rk", "w"]
+    got = sorted((r.id, r.k, r.v, r.w) for r in out.collect())
     want = sorted(
-        (r.id, r.k, r.v, r.w) for r in left.join(right, "k").collect()
+        (r.id, r.k, r.v, r.w)
+        for r in left.join(right, F.col("k") == F.col("rk")).collect()
     )
     assert got == want
     assert len(got) == 100  # k9 matches nothing
@@ -135,11 +137,15 @@ def test_salted_join_splits_hot_key_across_salts(spark):
     left = spark.createDataFrame(
         [(i, "hot") for i in range(64)], "id long, k string"
     )
-    right = spark.createDataFrame([("hot", 1)], "k string, w int")
-    out = salted_join(left, right, "k", salt_from=F.col("id"), salts=8)
-    # the join key includes the salt: physical join condition mentions _salt
+    right = spark.createDataFrame([("hot", 1)], "rk string, w int")
+    out = salted_join(
+        left, right, F.col("k") == F.col("rk"), ["k"], salt_from=F.col("id"), salts=8
+    )
+    # the join key includes the salt, and the salted side is
+    # repartitioned on (key, salt) into one partition per salt
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "_salt" in plan
+    assert "hashpartitioning(k#" in plan and ", 8)" in plan
     assert out.count() == 64
 
 

@@ -37,7 +37,7 @@ def test_zip_with_index_no_data_shuffle(spark):
 
 
 def test_similarity_decomposed_uses_hash_join_for_equality_branch(spark):
-    rule = SimilarityClassifier("rfscore OR objectId", mode="decomposed")
+    rule = SimilarityClassifier("rfscore OR objectId")
     df = _alerts(spark)
     plan = physical_plan(rule.classify(df.limit(0), df))
     # equality branch must be a real equi join (the threshold branch is

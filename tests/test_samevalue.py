@@ -1,5 +1,6 @@
 """Golden tests from SameValueClassifierSpec.scala:17-213."""
 
+from grafink_spark.rules import base
 from grafink_spark.rules.samevalue import SameValueClassifier
 from tests.conftest import alert, edge_set
 
@@ -63,7 +64,24 @@ def test_empty_loaded_gives_clique_only(spark, alerts_df):
     assert edge_set(edges) == {(1, 3, "objectId")}
 
 
-def test_salted_hot_key_path_equivalence(spark):
+def _plain_and_salted(monkeypatch, old, cur, threshold):
+    """Edge sets of the plain plan (default threshold) and of the
+    salted plan (``threshold`` rows, an odd salt count of 5), after
+    checking the salted join ran."""
+    plain = SameValueClassifier(["objectId"]).classify(old, cur)
+    monkeypatch.setattr(base, "HOT_KEY_ROWS", threshold)
+    monkeypatch.setattr(base, "salt_buckets", lambda spark: 5)
+    salted = SameValueClassifier(["objectId"]).classify(old, cur)
+    # plan stays equi-join everywhere (no BNLJ/cartesian from salting)
+    # and the salts appear in it
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert "pmod" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    return edge_set(plain), edge_set(salted)
+
+
+def test_salted_hot_key_path_equivalence(spark, monkeypatch):
     """Output-skew salting: forcing the hot path (tiny threshold, odd
     bucket count) must produce exactly the plain single-join edge set —
     including null-key cliques and new×old pairs."""
@@ -77,18 +95,11 @@ def test_salted_hot_key_path_equivalence(spark):
     )
     cur = rows.where(F.col("id") % 3 != 0)
     old = rows.where(F.col("id") % 3 == 0)
-    salted = SameValueClassifier(
-        ["objectId"], hot_threshold=3, salt_buckets=5
-    ).classify(old, cur)
-    plain = SameValueClassifier(["objectId"], hot_threshold=None).classify(old, cur)
-    assert edge_set(salted) == edge_set(plain)
-    # plan stays equi-join everywhere (no BNLJ/cartesian from salting)
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    plain, salted = _plain_and_salted(monkeypatch, old, cur, 3)
+    assert salted == plain
 
 
-def test_hot_key_on_loaded_side_still_equivalent(spark):
+def test_hot_key_on_loaded_side_still_equivalent(spark, monkeypatch):
     """Skew routing counts BOTH sides: a key hot only in the loaded/old
     table takes the salted path (r2 review finding) and the edge set is
     unchanged."""
@@ -98,13 +109,5 @@ def test_hot_key_on_loaded_side_still_equivalent(spark):
     old = spark.range(100, 400).select(
         F.col("id"), F.lit("hot").alias("objectId")
     )
-    salted = SameValueClassifier(
-        ["objectId"], hot_threshold=50, salt_buckets=5
-    ).classify(old, cur)
-    plain = SameValueClassifier(["objectId"], hot_threshold=None).classify(
-        old, cur
-    )
-    assert edge_set(salted) == edge_set(plain)
-    # the hot path actually engaged: salts appear in the plan
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "pmod" in plan
+    plain, salted = _plain_and_salted(monkeypatch, old, cur, 50)
+    assert salted == plain
